@@ -11,7 +11,7 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADDOPENS="$ADDOPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-exec java $ADDOPENS -Xmx48g -XX:ReservedCodeCacheSize=1g -Dspark.ui.enabled=false \
+exec java $ADDOPENS -Xmx${SPARK_DRIVER_MEM:-8g} -XX:ReservedCodeCacheSize=1g -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
   graft.Verify "$SF_DIR" "$OUT_DIR"

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
@@ -51,7 +52,7 @@ object Bench {
       only.forall(_.exists(name.matches))
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (selected(name))
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
+        try fn(spark, sfDir).count() catch { case NonFatal(_) => () }
     }
     // free leaked cache/localCheckpoint blocks between queries (outside
     // the timers) so late queries aren't taxed by earlier ones' memory —
@@ -85,7 +86,7 @@ object Bench {
         .map { case (name, fn) =>
           val t0 = System.nanoTime()
           val ok = try { fn(spark, sfDir).count(); true }
-            catch { case _: Throwable => false }
+            catch { case NonFatal(_) => false }
           val dt = (System.nanoTime() - t0) / 1e9
           clearState()
           (name, dt, ok)
@@ -123,22 +124,31 @@ object Bench {
       .mkString("{", ",", "}")
     val fullLine =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$fullQs,"query_mins":$fullMins,"failed":$failed,"sf":"$sfDir","n_queries":${results.size},"repeats":$repeats,"stream_repeats":${repeats + streamExtra},"total_min":${fmt(totalMin)},"total_max":${fmt(totalMax)},"noise_pct":${fmt(noisePct)},"protocol":"per-query median of $repeats interleaved passes (+$streamExtra for streaming); total_min = sum of best samples"}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
-      (fullLine + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    // a failed artifact write is reported and fails the run (exit 1
+    // after the summary line), never silently dropped
+    def write(file: String, line: String,
+        opts: java.nio.file.OpenOption*): Boolean =
+      try {
+        java.nio.file.Files.write(java.nio.file.Paths.get(file),
+          (line + "\n").getBytes("UTF-8"), opts: _*)
+        true
+      } catch { case NonFatal(e) =>
+        System.err.println(s"graft.Bench: writing $file failed: $e")
+        false
+      }
+    val wroteFull = write("BENCH_FULL.json", fullLine)
     // Append-only history of full per-query medians (wall-clock-stamped):
     // BENCH_FULL.json is overwritten per run, so cross-round regression
     // diffs need this retained trail (VERDICT r5 ask #6).
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_HISTORY.jsonl"),
-      (s"""{"wall_ms":${System.currentTimeMillis()},""" + fullLine.drop(1) + "\n")
-        .getBytes("UTF-8"),
+    val wroteHistory = write("BENCH_HISTORY.jsonl",
+      s"""{"wall_ms":${System.currentTimeMillis()},""" + fullLine.drop(1),
       java.nio.file.StandardOpenOption.CREATE,
       java.nio.file.StandardOpenOption.APPEND)
-    catch { case _: Throwable => () }
     val top = results.sortBy(-_._2).take(12)
       .map { case (k, v, _, _, _) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$top,"failed":$failed,"sf":"$sfDir","n_queries":${results.size},"total_min":${fmt(totalMin)},"noise_pct":${fmt(noisePct)},"note":"queries = 12 slowest of n_queries; medians + mins + spread in BENCH_FULL.json"}""")
     spark.stop()
+    if (!(wroteFull && wroteHistory)) sys.exit(1)
   }
 }

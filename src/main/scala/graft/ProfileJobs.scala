@@ -95,7 +95,7 @@ object ProfileJobs {
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       // warm pass: scratch layouts, codegen, JIT — outside the record
-      try fn(spark, sfDir).count() catch { case e: Throwable =>
+      try fn(spark, sfDir).count() catch { case scala.util.control.NonFatal(e) =>
         println(s"warm $name failed: ${e.getMessage}") }
       clearState()
       jobs.clear(); order.clear(); stageToJob.clear()

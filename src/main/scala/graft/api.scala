@@ -109,21 +109,62 @@ private[graft] object SessionConfs {
   }
 }
 
-/** Registry of PROCESS-PINNED localCheckpoint blocks.
+/** Registry of PROCESS-PINNED localCheckpoint blocks, and the one
+  * process cache of pinned checkpoint frames.
   *
-  * Query packs may cache an eagerly-checkpointed frame per source dir
-  * (e.g. Dedup's shingle frame, which five gates share): a truncated
-  * lineage can't be recomputed, so unpersisting its blocks would make
-  * every later reuse fail with missing-block errors. Bench/Verify's
-  * between-query hygiene (unpersist leaked per-query checkpoints so late
-  * queries aren't taxed by earlier ones' memory) therefore exempts ids
-  * registered here — and ONLY these: per-call checkpoints (q115's
-  * per-iteration rank frames, q165's stage pins) still get reclaimed.
-  * Pinned footprint is bounded by design: one small frame per
-  * (pack, source dir).
+  * Query packs cache an eagerly-checkpointed frame per (purpose, source
+  * dir) through [[cached]] (e.g. Dedup's shingle frame, which five gates
+  * share): a truncated lineage can't be recomputed, so unpersisting its
+  * blocks would make every later reuse fail with missing-block errors.
+  * Bench/Verify's between-query hygiene (unpersist leaked per-query
+  * checkpoints so late queries aren't taxed by earlier ones' memory)
+  * therefore exempts ids registered here — and ONLY these: per-call
+  * checkpoints (q115's per-iteration rank frames, q165's stage pins)
+  * still get reclaimed. Pinned footprint is bounded by design: one small
+  * frame per key. Process-local on purpose: a fresh process recomputes,
+  * so a regenerated source table can never be shadowed.
   */
 object PinnedBlocks {
   private val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+  private val entries =
+    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  /** Held on the miss path only. Reentrant because builds nest (q44's
+    * verified pairs build from the shingle frame, the undirected edge
+    * frame from the directed one) — which is also why a miss cannot
+    * build inside `entries.compute`: ConcurrentHashMap forbids updating
+    * other mappings of the same map from within compute. */
+  private val missLock = new java.util.concurrent.locks.ReentrantLock()
+
+  /** The pinned checkpoint of `build` cached under `key`. An entry is
+    * reused only when its blocks live on the CALLER's SparkContext and
+    * that context is still running: checkpoint blocks are context-owned,
+    * so a sibling session of the same context shares the frame (releasing
+    * on mere session mismatch would unpersist truncated-lineage blocks
+    * out from under the sibling's in-flight jobs), while a stopped-and-
+    * recreated context means the blocks are gone. A stale entry is
+    * released when it is replaced, so its ids never stay pinned. Hits are
+    * lock-free. */
+  def cached(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
+    def live(df: DataFrame) = {
+      val sc = df.sparkSession.sparkContext
+      (sc eq s.sparkContext) && !sc.isStopped
+    }
+    val hit = entries.get(key)
+    if (hit != null && live(hit)) hit
+    else {
+      missLock.lock()
+      try {
+        val cur = entries.get(key)
+        if (cur != null && live(cur)) cur
+        else {
+          if (cur != null) { entries.remove(key); release(cur) }
+          val fresh = pinnedCheckpoint(build)
+          entries.put(key, fresh)
+          fresh
+        }
+      } finally missLock.unlock()
+    }
+  }
 
   /** Eagerly localCheckpoint `df` and pin the resulting blocks.
     *
@@ -132,7 +173,7 @@ object PinnedBlocks {
     * of all persistent RDDs, which would permanently pin any concurrent
     * thread's ordinary cache()/localCheckpoint() that lands in the
     * window (and clearUnpinned would then never reclaim it). */
-  def pinnedCheckpoint(df: DataFrame): DataFrame = {
+  private def pinnedCheckpoint(df: DataFrame): DataFrame = {
     val ck = df.localCheckpoint(true)
     ck.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD => ids.add(lr.rdd.id)
@@ -143,13 +184,11 @@ object PinnedBlocks {
 
   def isPinned(id: Int): Boolean = ids.contains(id)
 
-  /** Unpin a previously pinned checkpoint frame and release its blocks —
-    * the counterpart of [[pinnedCheckpoint]] for cache-replacement paths
-    * (a stale entry bound to a stopped session would otherwise leave its
-    * ids pinned forever, invisible to [[clearUnpinned]]). Safe on a dead
-    * SparkContext: unpersist is best-effort, the id removal is what
-    * matters. */
-  def release(df: DataFrame): Unit =
+  /** Unpin a replaced entry and release its blocks (a stale entry bound
+    * to a stopped context would otherwise leave its ids pinned forever,
+    * invisible to [[clearUnpinned]]). Safe on a dead SparkContext:
+    * unpersist is best-effort, the id removal is what matters. */
+  private def release(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         ids.remove(lr.rdd.id)

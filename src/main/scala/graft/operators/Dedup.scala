@@ -56,35 +56,11 @@ object Dedup extends QueryPack {
     * five gates (q42/q43/q44/q96/q97) consume the identical frame, and
     * re-tokenizing + re-materializing it per gate call was the dominant
     * repeated cost (VERDICT r9 #7: q43's probe-table rebuild per bench
-    * pass). Pinned via [[graft.PinnedBlocks]] so Bench/Verify's
+    * pass). Pinned through [[graft.PinnedBlocks.cached]] so Bench/Verify's
     * between-query unpersist hygiene can't strand the truncated lineage;
-    * footprint is one small (doc_id, sh) frame per dir. Process-local on
-    * purpose, same rule as the layout caches: a fresh process recomputes,
-    * so a regenerated source table can never be shadowed. */
-  private val shingleCkCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  /** A cached frame is reusable iff its blocks live on the CALLER's
-    * SparkContext and that context is still running — checkpoint blocks
-    * are context-owned, so a sibling session of the same context can
-    * share the frame (releasing on mere session mismatch would
-    * unpersist truncated-lineage blocks out from under the sibling's
-    * in-flight jobs), while a stopped-and-recreated context means the
-    * blocks are gone and the pinned ids unreclaimable (ADVICE r10). */
-  private def sameLiveContext(cached: DataFrame, s: SparkSession): Boolean =
-    (cached.sparkSession.sparkContext eq s.sparkContext) &&
-      !cached.sparkSession.sparkContext.isStopped
-  private[graft] def docsWithShinglesCk(s: SparkSession, dir: String): DataFrame = {
-    // lock-free fast path on a valid hit; compute() (bin-locked) only
-    // for miss/stale so replacement stays atomic per dir
-    val hit = shingleCkCache.get(dir)
-    if (hit != null && sameLiveContext(hit, s)) hit
-    else shingleCkCache.compute(dir, (_, cached) =>
-      if (cached != null && sameLiveContext(cached, s)) cached
-      else {
-        if (cached != null) graft.PinnedBlocks.release(cached)
-        graft.PinnedBlocks.pinnedCheckpoint(docsWithShingles(s, dir))
-      })
-  }
+    * footprint is one small (doc_id, sh) frame per dir. */
+  private[graft] def docsWithShinglesCk(s: SparkSession, dir: String): DataFrame =
+    graft.PinnedBlocks.cached(s, s"dedup.shingles|$dir")(docsWithShingles(s, dir))
 
   /** Process-cached verified exact-Jaccard pair graph per source dir
     * (r17). The DETECTION stage's output — q44's verified (id_a, id_b,
@@ -96,23 +72,13 @@ object Dedup extends QueryPack {
     * output rather than re-running the full PPJoin pipeline inside
     * every downstream job — five gates were each paying the identical
     * ~1.2 s detection pass + its Catalyst planning per invocation.
-    * Same pinned-checkpoint discipline and live-context validation as
-    * the shingle frame above; footprint is one tiny pair frame per dir.
+    * Same pinned-checkpoint cache as the shingle frame above (whose
+    * entry this build reads); footprint is one tiny pair frame per dir.
     * The detection gates themselves (q44, q97) do NOT read this cache:
     * their bench timings keep measuring the full pipeline from the
     * shingle frame. */
-  private val pairsCkCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private[operators] def verifiedPairsCk(s: SparkSession, dir: String): DataFrame = {
-    val hit = pairsCkCache.get(dir)
-    if (hit != null && sameLiveContext(hit, s)) hit
-    else pairsCkCache.compute(dir, (_, cached) =>
-      if (cached != null && sameLiveContext(cached, s)) cached
-      else {
-        if (cached != null) graft.PinnedBlocks.release(cached)
-        graft.PinnedBlocks.pinnedCheckpoint(q44(s, dir))
-      })
-  }
+  private[operators] def verifiedPairsCk(s: SparkSession, dir: String): DataFrame =
+    graft.PinnedBlocks.cached(s, s"dedup.pairs|$dir")(q44(s, dir))
 
   /** (doc_id, text) → (doc_id, sh) over any corpus frame. */
   private[operators] def shingleDocs(s: SparkSession, docs: DataFrame): DataFrame = {

@@ -1599,10 +1599,18 @@ object FileIO extends QueryPack {
     require(prunedPlan.contains("PushedPartitionFilters"),
       s"q306: string-key equality must prune statically:\n$prunedPlan")
     // gate-side pin 2: a path-hostile key value refuses the WRITE
-    // loudly instead of mangling a directory name
+    // loudly instead of mangling a directory name. Only that refusal
+    // (TsvSource.validateKeyToken's, anywhere in the cause chain) counts;
+    // any other failure propagates
+    def isRefusal(e: Throwable) = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).take(16).exists {
+        case r: IllegalArgumentException =>
+          String.valueOf(r.getMessage).contains("cannot encode as a directory")
+        case _ => false
+      }
     val hostileRefused =
       try { s.sql(s"INSERT INTO $cat.lake.ord306 VALUES (0, 0, 'a/b')"); false }
-      catch { case _: Throwable => true }
+      catch { case e: Throwable if isRefusal(e) => true }
     require(hostileRefused,
       "q306: path-hostile partition value must refuse the write")
     val result = s.sql(

@@ -66,7 +66,7 @@ object GraphOps extends QueryPack {
     * wobble (~1e-15) sits far from every rounding boundary — the same
     * fixed-point discipline as the PQ ADC sums (Similarity q113). */
   private def q115(s: SparkSession, dir: String): DataFrame = {
-    // LONG-keyed shared edge frame (see the node codec and edgesCache
+    // LONG-keyed shared edge frame (see the node codec and edge-frame
     // scaladocs): distinct directed edges, pre-partitioned on src and
     // pinned once per process — the iteration loop never reshuffles
     // them and repeated invocations measure the power iteration, not a
@@ -210,9 +210,8 @@ object GraphOps extends QueryPack {
     * which is what the oracle's explicit 3-level min formulation pins. */
   /** Trade-graph edge frames, hash-partitioned on `src`, LONG-encoded
     * (see the node codec) and checkpointed ONCE PER PROCESS per source
-    * dir — the Dedup shingle-cache pattern, including its live-context
-    * validation (blocks are context-owned; a stopped-and-recreated
-    * context means they are gone). Two entries per dir:
+    * dir through [[graft.PinnedBlocks.cached]], like Dedup's shingle
+    * frame. Two entries per dir:
     *
     *   - "fwd": the DIRECTED distinct supplier → customer edges — the
     *     q115 iteration frame, and the single source of truth the
@@ -230,25 +229,8 @@ object GraphOps extends QueryPack {
     * (and Dedup for its shingle frame): the edge list is the big,
     * static input layout; each gate's measured work is its ITERATION
     * machinery over that layout. */
-  private val edgesCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  private def sameLiveContext(cached: DataFrame, s: SparkSession): Boolean =
-    (cached.sparkSession.sparkContext eq s.sparkContext) &&
-      !cached.sparkSession.sparkContext.isStopped
-  private def cachedPinned(s: SparkSession, dir: String, kind: String)(
-      build: => DataFrame): DataFrame = {
-    val key = (dir, kind)
-    val hit = edgesCache.get(key)
-    if (hit != null && sameLiveContext(hit, s)) hit
-    else edgesCache.compute(key, (_, cached) =>
-      if (cached != null && sameLiveContext(cached, s)) cached
-      else {
-        if (cached != null) graft.PinnedBlocks.release(cached)
-        graft.PinnedBlocks.pinnedCheckpoint(build)
-      })
-  }
   private def tradeEdgesFwd(s: SparkSession, dir: String): DataFrame =
-    cachedPinned(s, dir, "fwd") {
+    graft.PinnedBlocks.cached(s, s"graph.edges.fwd|$dir") {
       val li = Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_suppkey"))
       val ord = Tables.orders(s, dir)
@@ -259,18 +241,12 @@ object GraphOps extends QueryPack {
         .distinct()
         .repartition(col("src"))
     }
-  private def undirectedTradeEdges(s: SparkSession, dir: String): DataFrame = {
-    // resolve the fwd frame BEFORE entering the "undirected" compute:
-    // cachedPinned runs its build inside edgesCache.compute, and
-    // ConcurrentHashMap forbids updating other mappings of the same map
-    // from within compute — a lazily-built fwd would nest the two
-    // computes and can corrupt the bin they share
-    val fwd = tradeEdgesFwd(s, dir)
-    cachedPinned(s, dir, "undirected") {
+  private def undirectedTradeEdges(s: SparkSession, dir: String): DataFrame =
+    graft.PinnedBlocks.cached(s, s"graph.edges.undirected|$dir") {
+      val fwd = tradeEdgesFwd(s, dir)
       fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
         .repartition(col("src"))
     }
-  }
 
   private def q233(s: SparkSession, dir: String): DataFrame = {
     val edges = undirectedTradeEdges(s, dir)

@@ -695,11 +695,11 @@ object ScaleOps extends QueryPack {
     // repartition(n) local-sorts its whole input first
     // (sortBeforeRepartition, SPARK-23207) — measured as the dominant
     // term of the 0.68 s prep job — while hash partitioning skips the
-    // sort and is retry-safe by construction. xxhash64(l_orderkey) mod
-    // 512 spreads the hot jk=0 rows (which come from every orderkey)
-    // across all 8 map outputs exactly like round-robin did, so the
-    // skew reader still has 8 map-output slices of the hot reduce
-    // partition to split, far above the 8 KiB threshold.
+    // sort and is retry-safe by construction. xxhash64(l_orderkey,
+    // l_linenumber) mod 512 spreads the hot jk=0 rows (which come from
+    // every orderkey) across all 8 map outputs exactly like round-robin
+    // did, so the skew reader still has 8 map-output slices of the hot
+    // reduce partition to split, far above the 8 KiB threshold.
     val fact = Tables.lineitem(s, dir).select(
       when(col("l_quantity") <= 25, lit(0L))
         .otherwise(col("l_orderkey") % 25).as("jk"),

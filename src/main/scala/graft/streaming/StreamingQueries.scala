@@ -1,32 +1,30 @@
 package graft.streaming
 
 import graft.{Q, QueryPack}
-import graft.Materialize.MaterializeOps
+import graft.SessionConfs.withConfs
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.streaming.Replay.{drain, eventsStream, nanosAsLong, rmrfAll, run}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Structured Streaming surface (north-star extension — the reference is
-  * explicitly batch-only, mapreduce.py:24). Two shapes:
+  * explicitly batch-only, mapreduce.py:24): 34 gates, each a real
+  * streaming query over a finite replay whose drained result must equal
+  * a batch oracle exactly, plus q71, their batch session_window twin.
   *
-  *   - q70: the flagship month-count (RefWorkload q07) run as a REAL
-  *     streaming query — `readStream` over the events parquet, complete-
-  *     mode aggregation into a memory sink, drained synchronously with
-  *     `processAllAvailable`. Same oracle as the batch query: streaming
-  *     and batch must agree exactly.
-  *   - q71: gap-based session windows via `session_window` — the engine
-  *     primitive behind streaming sessionization — checked against a pure
-  *     SQL gap-merge oracle (new session iff gap ≥ 30 min, matching
-  *     Spark's half-open window-merge semantics).
-  *
-  * Watermark/append-mode late-data semantics (not expressible as a
-  * finite-input oracle query) are pinned in StreamingSpec instead.
+  * Every gate keeps only its own pipeline and read-back; the replay
+  * harness is [[Replay]]. A memory-sink gate calls [[Replay.drain]],
+  * which starts the query under a unique name with the gate's confs
+  * scoped around `start()`, drains it until no input is left (again
+  * after each between-step: sentinel appends, second ingest waves),
+  * records the final `batchId` under the gate's key, stops it, and
+  * collects the read-back of the sink table and its progress into a
+  * local frame before dropping the sink view. File, `foreachBatch` and
+  * `toTable` sinks use the lower-level [[Replay.run]]. Watermark/append-
+  * mode late-data semantics not expressible as a finite-input oracle are
+  * pinned in StreamingSpec instead.
   */
 object StreamingQueries extends QueryPack {
-
-  /** Process-local record of day-shard dumps (see [[dumpDayShards]]). */
-  private val dumped =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Process-local record of bucketed index-table builds: table name →
     * source dir (the FileIO.layoutSource pattern — a fresh process or a
@@ -34,375 +32,49 @@ object StreamingQueries extends QueryPack {
   private val tableSource =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** The three day-shard dump layouts, keyed by scratch-dir name: the
-    * events-table columns each replay family needs (`us` is derived as
-    * `unix_micros(ts)`). Writers ([[dumpDayShards]]) and readers
-    * ([[dayShardSchema]]) both derive from this one table, so the
-    * partitioned-parquet schema can never drift between the gates that
-    * share a dump (q118/q125/q173/q175/q176 share the full layout,
-    * q87/q177 the user layout, q100 the typed layout). */
-  private val dayShardLayouts: Map[String, Seq[(String, String)]] = Map(
-    "events_stream_days_upsert" -> Seq("user_id" -> "long",
-      "event_id" -> "long", "event_type" -> "string", "value" -> "double",
-      "us" -> "long"),
-    "events_stream_days" -> Seq("user_id" -> "long", "us" -> "long"),
-    "events_stream_days_typed" -> Seq("event_type" -> "string", "us" -> "long"),
-    "events_stream_days_pc" -> Seq("user_id" -> "long",
-      "event_id" -> "long", "event_type" -> "string", "us" -> "long"))
+  /** Drain-scoped confs shared by many gates. Stateful-operator
+    * parallelism = shuffle.partitions at stream start, and a finite
+    * replay's per-partition state-store commits dominate at wider
+    * settings; no-data micro-batches are pure per-batch overhead wherever
+    * the gate puts every emission in a REAL data batch. */
+  private val twoParts = "spark.sql.shuffle.partitions" -> "2"
+  private val noDataOff = "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
+  private val rocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Optional corpus ROW filter per dump layout. The stream-stream join
-    * gates (q84-family: q173/q191/q218/q240) all consume exactly the
-    * purchase/click slice of the even-user stratum, but were replaying
-    * the FULL upsert dump and re-filtering ~8× their rows per side per
-    * micro-batch — with two sides × 4 micro-batches × 4 gates, the
-    * discarded-row scan was the single largest shared cost in the
-    * streaming bench. Pre-filtering at dump build time moves it outside
-    * every timer while changing NOTHING semantically: the gates keep
-    * their own filters (now near-no-ops), sentinel rows are appended at
-    * gate time and bypass this build filter (the 'flush' sentinel both
-    * sides drop must still form a real batch), and production ingest
-    * routes event streams by type anyway — this is a source-layout
-    * choice, not a shortcut. */
-  private val dayShardFilters: Map[String, org.apache.spark.sql.Column] = Map(
-    "events_stream_days_pc" ->
-      (col("event_type").isin("purchase", "click") &&
-        pmod(col("user_id"), lit(2)) === 0))
-
-  /** Reader-side schema for a dump layout: the projected columns plus the
-    * `day` partition column. */
-  private def dayShardSchema(layout: String): org.apache.spark.sql.types.StructType =
-    (dayShardLayouts(layout) :+ ("day" -> "string"))
-      .foldLeft(new org.apache.spark.sql.types.StructType()) {
-        case (st, (n, t)) => st.add(n, t)
-      }
-
-  /** Conf scoping (see [[graft.SessionConfs]] — shared with the batch
-    * packs). Streaming queries capture their session confs at `start()`,
-    * so wrapping just the start call scopes a conf to that query. */
-  private def withConfs[T](s: SparkSession, kvs: (String, String)*)(body: => T): T =
-    graft.SessionConfs.withConfs(s, kvs: _*)(body)
-
-  /** Final `batchId` of each multi-batch gate's most recent drain,
-    * keyed by gate prefix (e.g. "q87") — pinned ≥ 2 by MultiBatchSpec so
-    * a trigger-sizing change can never silently collapse a replay into a
-    * single micro-batch (the multi-batch coverage IS what these gates
-    * exist to exercise). */
-  private[graft] val lastBatchId =
-    new java.util.concurrent.ConcurrentHashMap[String, Long]()
-
-  private def recordBatchId(gate: String,
-      query: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    Option(query.lastProgress).foreach(p => lastBatchId.put(gate, p.batchId))
-
-  /** Per-process cache of `max(unix_micros(ts))` over the events table —
-    * four sentinel-flushing gates need it and the scan is pure input
-    * metadata, same reuse contract as the day-shard dumps. */
-  private val maxUsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private def eventsMaxUs(s: SparkSession, dir: String): Long =
-    maxUsCache.computeIfAbsent(dir, _ =>
-      Tables.events(s, dir).agg(max(unix_micros(col("ts")))).head().getLong(0))
-
-  /** Remove every scratch path, attempting EACH delete even when an
-    * earlier one throws (so one failure can't leak the rest). Never
-    * throws: this runs in `finally` blocks, where a rethrow would mask
-    * the drain exception that is the actual root cause (ADVICE r9). The
-    * danger the old rethrow guarded — a silently-leaked sentinel day
-    * corrupting later replays of a SHARED shard dump — is neutralized
-    * structurally instead: any dump root the failed path lives under is
-    * evicted from [[dumped]], so the next gate rewrites the whole dump
-    * (mode overwrite deletes the directory first, leftover included).
-    * Plain scratch dirs (uuid-named sinks/checkpoints) leak at worst a
-    * temp dir; the failure is logged to stderr either way. */
-  private def rmrfAll(s: SparkSession, paths: String*): Unit =
-    paths.foreach { p =>
-      // Hadoop's local delete reports most failures (e.g. EACCES inside
-      // FileUtil.fullyDelete) by returning false, not throwing — so
-      // success is "the path is gone afterwards", not "no exception".
-      val gone = scala.util.Try {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(hp, true)
-        !fs.exists(hp)
-      }
-      if (gone != scala.util.Success(true)) {
-        // Path-boundary match: a failed .../dump_extra must not evict the
-        // sibling dump .../dump (plain prefix would).
-        dumped.removeIf(root => p == root || p.startsWith(root + "/"))
-        System.err.println(s"[graft] scratch cleanup failed for $p " +
-          s"(dump invalidated if shared): " +
-          gone.failed.toOption.getOrElse("delete returned false"))
-      }
-    }
-
-  /** The single part file of a one-file parquet write, asserted (ADVICE
-    * r17): the flatten/rename sites below take "the" part file of a dir
-    * the writer is expected to have emitted exactly one file into; if a
-    * future conf (maxRecordsPerFile, an AQE rebalance split) ever makes
-    * a writer emit several, `.head` would silently drop rows from the
-    * replay corpus — fail loudly instead. */
-  private def theOnePartFile(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path = {
-    val parts = fs.listStatus(dir).map(_.getPath)
-      .filter(_.getName.startsWith("part-"))
-    if (parts.length != 1)
-      sys.error(s"expected exactly one part file in $dir, " +
-        s"found ${parts.length}: a multi-file write here would silently " +
-        "truncate the replay corpus")
-    parts.head
+  /** The join gates' two flush sets: one sentinel per SIDE at the first
+    * flush instant (each side's watermark operator sits behind its
+    * event_type filter and only advances on rows it actually sees), then
+    * a trivial 'flush' row a day later that both sides filter out — it
+    * shifts no watermark but forces one more REAL micro-batch, whose
+    * state eviction emits what the first set closed. */
+  private def joinFlush(s: SparkSession, dir: String): Seq[Seq[Row]] = {
+    val us = Replay.flushUs(s, dir)
+    Seq(Seq(Replay.sentinel(us, -2L, -1L, "purchase"),
+        Replay.sentinel(us, -2L, -2L, "click")),
+      Seq(Replay.sentinel(us + Replay.DayUs, -3L, -3L, "flush")))
   }
 
-  /** Dump the events table once per process into a day-partitioned
-    * scratch dir — one file per day so the file source (with
-    * `maxFilesPerTrigger`) can deliver a genuinely incremental
-    * multi-batch replay. The cache is process-local on purpose: a fresh
-    * process always rewrites, so a regenerated source table can never be
-    * shadowed by a stale on-disk dump from an earlier run. Two gates
-    * (q87, q173) append sentinel day-shards to their dump and restore it
-    * to pristine state in a `finally` — safe only because the gates run
-    * sequentially on the session (see [[withNanosAsLong]]'s note).
-    * Returns the dump path. */
-  private def dumpDayShards(s: SparkSession, dir: String,
-      layout: String): String = {
-    val shards = graft.operators.FileIO.scratch(dir, layout)
-    if (!dumped.contains(shards)) {
-      val cols = dayShardLayouts(layout).map {
-        case ("us", _) => unix_micros(col("ts")).as("us")
-        case (n, _) => col(n)
-      }
-      // FLAT layout (r17, guide §6 file listing): one `<day>.parquet`
-      // FILE per day directly in the dump dir, with `day` as a DATA
-      // column — not `day=<d>/part-*` dirs with day as a partition
-      // column. The file source re-lists the dump on EVERY trigger
-      // (latestOffset), and a 30-subdir partitioned layout paid ~31
-      // readdirs + partition-value inference per poll (measured
-      // 80–100 ms/trigger at sf0.1, × ~4–5 triggers × every replay
-      // gate); a flat dir is one readdir. Readers are unchanged: the
-      // explicit reader schema already listed `day` last, parquet
-      // matches fields by name, and every gate's drain is
-      // order-independent by design (40-day watermark > corpus span),
-      // so file-delivery order — same (mtime, path) rule as before —
-      // is presentation-neutral. Flat file names sort chronologically
-      // exactly like the old `day=<d>` dirs did.
-      val tmp = shards + "_build"
-      dayShardFilters.get(layout).fold(Tables.events(s, dir))(
-          Tables.events(s, dir).filter(_))
-        .select(cols: _*)
-        .withColumn("day", from_unixtime(col("us") / 1000000L, "yyyy-MM-dd"))
-        .withColumn("day_p", col("day"))
-        .repartition(col("day_p"))
-        .write.mode("overwrite").partitionBy("day_p").parquet(tmp)
-      val hp = new org.apache.hadoop.fs.Path(shards)
-      val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(hp, true)
-      fs.mkdirs(hp)
-      fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-        .filter(_.getPath.getName.startsWith("day_p="))
-        .foreach { st =>
-          val day = st.getPath.getName.stripPrefix("day_p=")
-          val part = theOnePartFile(fs, st.getPath)
-          if (!fs.rename(part,
-              new org.apache.hadoop.fs.Path(hp, s"$day.parquet")))
-            sys.error(s"day-shard flatten rename failed for $day")
-        }
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      dumped.add(shards)
-    }
-    shards
-  }
+  /** The join gates' event-time range condition: a purchase matches the
+    * same user's clicks in its preceding hour. */
+  private val withinHour = col("p_user") === col("c_user") &&
+    col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
+    col("c_ts") <= col("p_ts")
 
-  /** Deterministic flush/sentinel files, built ONCE per process per
-    * (dump, content) into a `<dump>_sentlib` sibling dir and served to
-    * every later append as a raw file COPY (r17). The old per-flush
-    * `createDataFrame(rows).write.partitionBy("day").parquet(dump)` ran
-    * a full Spark job + dynamic-partition commit (~90 ms) for 1–2 rows,
-    * twice per gate per bench pass; the rows are a pure function of the
-    * source dir (flushUs derives from the cached corpus max), so after
-    * the first build an append is ~1 ms of filesystem copy. The copy
-    * lands FLAT in the dump as `zz_sentinel_<seq>_<uuid>.parquet` —
-    * fresh mtime and unseen path, so the running file source admits it
-    * as a new file exactly like the old day-dir append. Returns the
-    * created path; callers remove it in their `finally` to restore the
-    * dump pristine (same discipline as the old day-dir cleanup). */
-  private val sentinelLib =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val sentinelSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Write `df` as ONE parquet file under `<base>_sentlib/`, return its
-    * path — the one-time library build behind [[appendRowsFile]] and
-    * [[cachedSliceFile]]. */
-  private def buildOneFileParquet(s: SparkSession, base: String,
-      df: DataFrame): String = {
-    import org.apache.hadoop.fs.Path
-    val conf = s.sparkContext.hadoopConfiguration
-    val fs = new Path(base).getFileSystem(conf)
-    val name = "s" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val tmp = new Path(base + s"_sentlib_tmp_$name")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = theOnePartFile(fs, tmp)
-    val libDir = new Path(base + "_sentlib")
-    fs.mkdirs(libDir)
-    val dest = new Path(libDir, s"$name.parquet")
-    if (!fs.rename(part, dest))
-      sys.error(s"library rename failed: $part -> $dest")
-    fs.delete(tmp, true)
-    dest.toString
-  }
-
-  /** Deterministic DataFrame slice cached as a one-file parquet per
-    * (base, tag) — the heavier sibling of the sentinel library, for
-    * gates that stage corpus SLICES into a per-run source dir (q222's
-    * phased appends): the slice is a pure function of the source dir,
-    * so later runs pay a file copy instead of a Spark write job. */
-  private val sliceLib =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def copySliceInto(s: SparkSession, destDir: String, base: String,
-      tag: String)(build: => DataFrame): String = {
-    import org.apache.hadoop.fs.Path
-    val conf = s.sparkContext.hadoopConfiguration
-    val fs = new Path(destDir).getFileSystem(conf)
-    val lib = sliceLib.computeIfAbsent(base + "|" + tag, _ =>
-      buildOneFileParquet(s, base, build))
-    copyVisible(s, fs, lib, destDir,
-      f"${tag}_${sentinelSeq.incrementAndGet()}%05d.parquet")
-  }
-  private[streaming] def appendRowsFile(s: SparkSession, shards: String,
-      schema: org.apache.spark.sql.types.StructType,
-      rows: Seq[org.apache.spark.sql.Row],
-      libBase: Option[String] = None): String = {
-    import org.apache.hadoop.fs.Path
-    val conf = s.sparkContext.hadoopConfiguration
-    val fs = new Path(shards).getFileSystem(conf)
-    // the library must live under a STABLE path: gates appending into a
-    // per-run scratch dir (q222's phased src) pass a per-dir base so
-    // the one-time build amortizes across runs
-    val base = libBase.getOrElse(shards)
-    // Collision-proof row encoding (ADVICE r17): Row.toString renders
-    // Row("a,b") and Row("a","b") identically ("[a,b]"), so distinct row
-    // sets could collide and serve the wrong cached parquet. Length-
-    // prefixing every rendered field makes boundaries unambiguous, and
-    // the class tag separates values whose toString coincides ("1" the
-    // string vs 1 the long).
-    def encField(v: Any): String = v match {
-      case null => "N"
-      case x =>
-        val r = x.toString
-        s"${x.getClass.getName}#${r.length}:$r"
-    }
-    def encRow(r: org.apache.spark.sql.Row): String =
-      (0 until r.length).map(i => encField(r.get(i))).mkString("|")
-    val key = base + "|" + schema.map(f => f.name + ":" + f.dataType.sql)
-      .mkString(",") + "|" + rows.map(encRow).mkString(";")
-    val lib = sentinelLib.computeIfAbsent(key, _ =>
-      buildOneFileParquet(s, base,
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)))
-    copyVisible(s, fs, lib, shards,
-      f"zz_sentinel_${sentinelSeq.incrementAndGet()}%05d_" +
-        java.util.UUID.randomUUID().toString.replace("-", "") + ".parquet")
-  }
-
-  /** Copy `lib` into the actively-polled `destDir` ATOMICALLY: first to
-    * a dot-prefixed temp name (hidden — Spark's file listing skips
-    * `.`/`_` prefixes, so a half-copied file can never be listed by a
-    * running FileStreamSource), then a same-directory rename (atomic on
-    * a local fs). A failed copy evicts the enclosing dump from the
-    * process cache so a partial file can't poison later gates — the
-    * next consumer rewrites the whole dump. */
-  private def copyVisible(s: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-      lib: String, destDir: String, name: String): String = {
-    import org.apache.hadoop.fs.Path
-    val tmp = new Path(destDir, "." + name + ".tmp")
-    val dest = new Path(destDir, name)
-    try {
-      if (!org.apache.hadoop.fs.FileUtil.copy(fs, new Path(lib), fs, tmp,
-          false, s.sparkContext.hadoopConfiguration))
-        sys.error(s"sentinel copy failed: $lib -> $tmp")
-      if (!fs.rename(tmp, dest))
-        sys.error(s"sentinel publish rename failed: $tmp -> $dest")
-    } catch {
-      case e: Throwable =>
-        try fs.delete(tmp, false)
-        catch { case scala.util.control.NonFatal(_) => () }
-        dumped.removeIf(root => destDir == root ||
-          destDir.startsWith(root + "/"))
-        throw e
-    }
-    dest.toString
-  }
-
-  /** Run `body` with the legacy nanos-as-long parquet conf set (needed
-    * only when the driver-generated events table stores TIMESTAMP(NANOS);
-    * round 7+ data is plain timestamp[us] and ignores the flag), restoring
-    * the caller's value on exit. Every streaming gate drains its query
-    * synchronously and collects the result into a local frame before
-    * returning, so no lazy parquet read escapes the scope — unlike q125's
-    * provider confs this one previously leaked session-wide (VERDICT r6
-    * #5). Conf scoping assumes the gates run SEQUENTIALLY on the session
-    * (true for Verify/Bench); concurrent gates on one SparkSession would
-    * need a cloned `s.newSession()` instead. */
-  private def withNanosAsLong[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    // getOption on a REGISTERED conf key returns its default ("false"),
-    // never None — restoring from it would turn "caller left it unset"
-    // into an explicit set("false"). getAll holds only explicitly-set
-    // entries, so this round-trips unset → unset correctly.
-    val prev = s.conf.getAll.get(key)
-    s.conf.set(key, "true")
-    try body
-    finally prev.fold(s.conf.unset(key))(v => s.conf.set(key, v))
-  }
-
-  /** Schema-adaptive `readStream` over the events table: normalizes `ts`
-    * to a microsecond TimestampType whichever way the driver generated
-    * the parquet (nanos-as-long LongType or native timestamp[us] /
-    * TIMESTAMP_NTZ — see [[graft.sources.Tables.events]] for the full
-    * story). Callers must invoke this INSIDE `withNanosAsLong` and drain
-    * the query within that scope, so a nanos-generation scan still sees
-    * the conf at execution time. */
-  private[graft] def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampType}
-    // raw FILE schema through the Tables relation cache (r17): the bare
-    // re-read paid a ~100 ms schema-inference job on every invocation
-    // of every eventsStream gate. Callers run inside withNanosAsLong,
-    // so a nanos-generation fixture resolves identically whichever
-    // call-site populates the cache first (Tables.events sets the same
-    // conf before ITS first resolution).
-    val schema = graft.sources.Tables(s, dir, "events").schema
-    val raw = s.readStream
-      .schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    schema("ts").dataType match {
-      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampType => raw
-      case _ => raw.withColumn("ts", col("ts").cast(TimestampType))
-    }
-  }
+  /** Purchases joined (`how`) to clicks over the purchase/click dump —
+    * the q173/q191/q218/q240 pipeline head. */
+  private def pcJoin(s: SparkSession, dir: String, how: String): DataFrame =
+    Replay.joinSide(s, dir, "purchase", "p")
+      .join(Replay.joinSide(s, dir, "click", "c"), withinHour, how)
 
   /** q70: month-count as a streaming aggregation. */
-  private def q70(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
+  private def q70(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
     // The file-stream source wants a directory; eventsStream selects just
     // the events table out of the sf dir with a glob filter.
     val agg = eventsStream(s, dir)
       .groupBy(col("event_type"), date_format(col("ts"), "yyyy-MM").as("month"))
       .agg(count(lit(1)).as("n"))
-    val name = "graft_q70_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val query = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try query.processAllAvailable()
-    finally query.stop()
-    // materialize and drop the memory-sink view so repeated invocations
-    // (bench warm + measured passes) don't accumulate driver-side tables
-    val result = s.table(name).orderBy("event_type", "month")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
+    drain(s, "q70", agg, "complete")((t, _) => t.orderBy("event_type", "month"))
   }
 
   /** q78: streaming dedup — `dropDuplicates` keeps first-seen keys in
@@ -412,27 +84,14 @@ object StreamingQueries extends QueryPack {
     * regardless of arrival order. At scale the state store bounds memory;
     * `dropDuplicatesWithinWatermark` is the knob when keys outlive the
     * retention window (pinned in StreamingDedupSpec). */
-  private def q78(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
+  private def q78(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
     val stream = eventsStream(s, dir)
       .select(col("event_type"), col("user_id"))
       .dropDuplicates("event_type", "user_id")
-    val name = "graft_q78_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val query = stream.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try query.processAllAvailable()
-    finally query.stop()
-    val result = s.table(name)
+    drain(s, "q78", stream, "append")((t, _) => t
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_users"))
-      .orderBy("event_type")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
+      .orderBy("event_type"))
   }
 
   /** q106: streaming dedup with BOUNDED state —
@@ -446,33 +105,17 @@ object StreamingQueries extends QueryPack {
     * (40 days) exceeds the corpus span, so on this finite replay the
     * result is exactly global first-seen-per-key and the batch DISTINCT
     * oracle applies. */
-  private def q106(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
+  private def q106(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
     val stream = eventsStream(s, dir)
       .withWatermark("ts", "40 days")
       .select(col("event_type"), col("user_id"), col("ts"))
       .dropDuplicatesWithinWatermark("event_type", "user_id")
-    val name = "graft_q106_" + java.util.UUID.randomUUID().toString.replace("-", "")
     // the watermark only EVICTS dedup state; survivors emit in their own
     // data batch, so no-data batches are pure overhead on a finite replay
-    val query = withConfs(s,
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-      stream.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    }
-    try query.processAllAvailable()
-    finally query.stop()
-    val result = s.table(name)
+    drain(s, "q106", stream, "append", Seq(noDataOff))((t, _) => t
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_users"))
-      .orderBy("event_type")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
+      .orderBy("event_type"))
   }
 
   /** q109: sliding-window streaming aggregation — 2-day windows sliding
@@ -487,7 +130,7 @@ object StreamingQueries extends QueryPack {
     * pattern), where state holds just the open windows per type
     * (windows × types, independent of event volume). Decimal-cast sum
     * keeps the value aggregation order-independent and hash-exact. */
-  private def q109(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
+  private def q109(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
     val agg = eventsStream(s, dir)
       .groupBy(window(col("ts"), "2 days", "1 day"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -495,20 +138,7 @@ object StreamingQueries extends QueryPack {
           .as("sum_value"))
       .select(unix_micros(col("window.start")).as("ws_us"),
         col("event_type"), col("n"), col("sum_value"))
-    val name = "graft_q109_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val query = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try query.processAllAvailable()
-    finally query.stop()
-    val result = s.table(name).orderBy("ws_us", "event_type")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
+    drain(s, "q109", agg, "complete")((t, _) => t.orderBy("ws_us", "event_type"))
   }
 
   /** q84: stream-stream inner join — purchases joined to the same user's
@@ -520,7 +150,7 @@ object StreamingQueries extends QueryPack {
     * precision on both engines (eventsStream normalizes `ts` to µs
     * TimestampType whatever the parquet generation; the oracle compares
     * `epoch_us(ts)`), so boundary rows land identically. */
-  private def q84(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
+  private def q84(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
     def side(eventType: String, prefix: String) = eventsStream(s, dir)
       // deterministic 50% user stratum: the join's state cost grows with
       // Σ_user (purchases × clicks), so the GATE runs a bounded slice —
@@ -531,11 +161,7 @@ object StreamingQueries extends QueryPack {
         col("ts").as(s"${prefix}_ts"),
         col("event_id").as(s"${prefix}_id"))
       .withWatermark(s"${prefix}_ts", "2 hours")
-    val joined = side("purchase", "p").join(side("click", "c"),
-      col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("c_ts") <= col("p_ts"))
-    val name = "graft_q84_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val joined = side("purchase", "p").join(side("click", "c"), withinHour)
     // Stateful-operator parallelism = shuffle.partitions at stream start,
     // and a two-sided join commits FOUR state stores per partition per
     // batch — at 32 partitions the store-commit fsyncs dominate (measured
@@ -544,26 +170,10 @@ object StreamingQueries extends QueryPack {
     // real deployment sizes this to state volume, not core count.
     // inner-join matches emit inside the data batch that completes them,
     // so the post-drain no-data bookkeeping batches add only cost here
-    val query = withConfs(s,
-      "spark.sql.shuffle.partitions" -> "2",
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-      joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    }
-    try query.processAllAvailable()
-    finally query.stop()
-    val result = s.table(name)
+    drain(s, "q84", joined, "append", Seq(twoParts, noDataOff))((t, _) => t
       .select(col("p_id"), col("c_id"),
         (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("gap_us"))
-      .orderBy("p_id", "c_id")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
+      .orderBy("p_id", "c_id"))
   }
 
   /** q173: stream-stream LEFT OUTER join — the surface q84's inner join
@@ -583,82 +193,24 @@ object StreamingQueries extends QueryPack {
     * left rows buffer until the watermark passes their event time, right
     * rows until watermark passes event time + range — bounded by arrival
     * rate × (delay + range), never by history. */
-  private def q173(s: SparkSession, dir: String): DataFrame = {
-    val shards = dumpDayShards(s, dir, "events_stream_days_pc")
-    val schema = dayShardSchema("events_stream_days_pc")
-    def side(eventType: String, prefix: String) = s.readStream.schema(schema)
-      // 2 main-drain batches over 30 day shards; the two sentinel flush
-      // batches keep the gate ≥ 4 micro-batches (pinned by MultiBatchSpec)
-      .option("maxFilesPerTrigger", "15")
-      .parquet(shards)
-      // same bounded 50% user stratum as q84 (sentinel user -2 is even,
-      // so it passes the stratum and reaches the watermark operator)
-      .filter(col("event_type") === eventType && pmod(col("user_id"), lit(2)) === 0)
-      .select(col("user_id").as(s"${prefix}_user"),
-        expr("timestamp_micros(us)").as(s"${prefix}_ts"),
-        col("event_id").as(s"${prefix}_id"))
-      .withWatermark(s"${prefix}_ts", "2 hours")
-    val joined = side("purchase", "p").join(side("click", "c"),
-      col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("c_ts") <= col("p_ts"),
-      "leftOuter")
-    val name = "graft_q173_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    // no-data batches off: the two-sentinel flush discipline makes every
+  private def q173(s: SparkSession, dir: String): DataFrame =
+    // 2 main-drain batches over 30 day shards; the two sentinel flush
+    // batches keep the gate ≥ 4 micro-batches (pinned by MultiBatchSpec).
+    // No-data batches off: the two-sentinel flush discipline makes every
     // eviction happen in a REAL data batch, so the watermark-bookkeeping
-    // batches are pure per-batch overhead here (~0.3-0.5 s each)
-    val query = withConfs(s,
-      "spark.sql.shuffle.partitions" -> "2",
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-      joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
+    // batches are pure per-batch overhead here (~0.3-0.5 s each).
+    // Null-padded outer rows evict in a batch AFTER the one that advanced
+    // the watermark; the second flush set forces that batch rather than
+    // resting on Spark's no-data micro-batch (q87's discipline).
+    Replay.withSentinels(s, dir, "events_stream_days_pc", joinFlush(s, dir): _*) { flush =>
+      drain(s, "q173", pcJoin(s, dir, "leftOuter"), "append",
+          Seq(twoParts, noDataOff), flush)((t, _) => t
+        .filter(col("p_user") >= 0) // drop the sentinels' own emissions
+        .select(col("p_id"), coalesce(col("c_id"), lit(-1L)).as("c_id"),
+          coalesce(unix_micros(col("p_ts")) - unix_micros(col("c_ts")),
+            lit(-1L)).as("gap_us"))
+        .orderBy("p_id", "c_id"))
     }
-    val maxUs = eventsMaxUs(s, dir)
-    val flushUs = maxUs + 42L * 86400L * 1000000L
-    val flush2Us = flushUs + 86400L * 1000000L
-    def dayOf(us: Long): String = java.time.Instant
-      .ofEpochSecond(us / 1000000L).atZone(java.time.ZoneOffset.UTC)
-      .toLocalDate.toString
-    val flushDay = dayOf(flushUs)
-    val flush2Day = dayOf(flush2Us)
-    val sentFiles = scala.collection.mutable.ListBuffer[String]()
-    val outDf =
-      try {
-        try {
-          query.processAllAvailable()
-          // one sentinel per SIDE: each watermark operator sits behind its
-          // event_type filter and only advances on rows it actually sees
-          sentFiles += appendRowsFile(s, shards, schema, Seq(
-            org.apache.spark.sql.Row(-2L, -1L, "purchase", flushUs, flushDay),
-            org.apache.spark.sql.Row(-2L, -2L, "click", flushUs, flushDay)))
-          query.processAllAvailable()
-          // null-padded outer rows evict in a batch AFTER the one that
-          // advanced the watermark; today that is Spark's no-data
-          // micro-batch (noDataMicroBatches.enabled, default on). Don't
-          // rest on that conf: a second trivial flush row (filtered out
-          // by both sides, so it shifts no watermark) forces one more
-          // REAL micro-batch whose state eviction emits any remaining
-          // outer rows — q87's append-drain-append-drain discipline.
-          sentFiles += appendRowsFile(s, shards, schema, Seq(
-            org.apache.spark.sql.Row(-3L, -3L, "flush", flush2Us, flush2Day)))
-          query.processAllAvailable()
-          recordBatchId("q173", query)
-        } finally query.stop()
-        val result = s.table(name)
-          .filter(col("p_user") >= 0) // drop the sentinels' own emissions
-          .select(col("p_id"), coalesce(col("c_id"), lit(-1L)).as("c_id"),
-            coalesce(unix_micros(col("p_ts")) - unix_micros(col("c_ts")),
-              lit(-1L)).as("gap_us"))
-          .orderBy("p_id", "c_id")
-        val rows = result.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-      } finally rmrfAll(s, sentFiles.toSeq: _*)
-    s.catalog.dropTempView(name)
-    outDf
-  }
 
   /** q240: CHAINED stateful operators in one streaming query — a
     * watermarked stream-stream join whose output feeds a downstream
@@ -682,68 +234,20 @@ object StreamingQueries extends QueryPack {
     * scale: join side ∝ rate × (delay + range), agg side ∝ open
     * windows — both watermark-bounded, never history-bounded. */
   private def q240(s: SparkSession, dir: String): DataFrame = {
-    val shards = dumpDayShards(s, dir, "events_stream_days_pc")
-    val schema = dayShardSchema("events_stream_days_pc")
-    def side(eventType: String, prefix: String) = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "15")
-      .parquet(shards)
-      .filter(col("event_type") === eventType && pmod(col("user_id"), lit(2)) === 0)
-      .select(col("user_id").as(s"${prefix}_user"),
-        expr("timestamp_micros(us)").as(s"${prefix}_ts"),
-        col("event_id").as(s"${prefix}_id"))
-      .withWatermark(s"${prefix}_ts", "2 hours")
-    val joined = side("purchase", "p").join(side("click", "c"),
-      col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("c_ts") <= col("p_ts"))
-    val agg = joined
+    val agg = pcJoin(s, dir, "inner")
       .withColumn("gap_us", unix_micros(col("p_ts")) - unix_micros(col("c_ts")))
       .groupBy(window(col("p_ts"), "1 day"))
       .agg(count(lit(1)).as("n_pairs"), sum(col("gap_us")).as("sum_gap_us"))
       .select(unix_micros(col("window.start")).as("ws_us"),
         col("n_pairs"), col("sum_gap_us"))
-    val name = "graft_q240_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val query = withConfs(s,
-      "spark.sql.shuffle.partitions" -> "2",
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-      agg.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
+    val maxUs = Replay.eventsMaxUs(s, dir)
+    // finalized windows evict a batch after the watermark moves — the
+    // second flush set forces that REAL batch
+    Replay.withSentinels(s, dir, "events_stream_days_pc", joinFlush(s, dir): _*) { flush =>
+      drain(s, "q240", agg, "append", Seq(twoParts, noDataOff), flush)((t, _) => t
+        .filter(col("ws_us") <= maxUs) // real corpus windows only
+        .orderBy("ws_us"))
     }
-    val maxUs = eventsMaxUs(s, dir)
-    val flushUs = maxUs + 42L * 86400L * 1000000L
-    val flush2Us = flushUs + 86400L * 1000000L
-    def dayOf(us: Long): String = java.time.Instant
-      .ofEpochSecond(us / 1000000L).atZone(java.time.ZoneOffset.UTC)
-      .toLocalDate.toString
-    val flushDay = dayOf(flushUs)
-    val flush2Day = dayOf(flush2Us)
-    val sentFiles = scala.collection.mutable.ListBuffer[String]()
-    val outDf =
-      try {
-        try {
-          query.processAllAvailable()
-          sentFiles += appendRowsFile(s, shards, schema, Seq(
-            org.apache.spark.sql.Row(-2L, -1L, "purchase", flushUs, flushDay),
-            org.apache.spark.sql.Row(-2L, -2L, "click", flushUs, flushDay)))
-          query.processAllAvailable()
-          // finalized windows evict a batch after the watermark moves —
-          // force that REAL batch with a row both sides filter out
-          sentFiles += appendRowsFile(s, shards, schema, Seq(
-            org.apache.spark.sql.Row(-3L, -3L, "flush", flush2Us, flush2Day)))
-          query.processAllAvailable()
-          recordBatchId("q240", query)
-        } finally query.stop()
-        val result = s.table(name)
-          .filter(col("ws_us") <= maxUs) // real corpus windows only
-          .orderBy("ws_us")
-        val rows = result.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-      } finally rmrfAll(s, sentFiles.toSeq: _*)
-    s.catalog.dropTempView(name)
-    outDf
   }
 
   /** q191: stream-stream FULL OUTER join — completes the streaming join
@@ -760,69 +264,64 @@ object StreamingQueries extends QueryPack {
     * event time + range — never by history. Sentinels are dropped by
     * sign; unmatched sides coalesce to -1 so the presentation sort is
     * engine-neutral. */
-  private def q191(s: SparkSession, dir: String): DataFrame = {
-    val shards = dumpDayShards(s, dir, "events_stream_days_pc")
-    val schema = dayShardSchema("events_stream_days_pc")
-    def side(eventType: String, prefix: String) = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "15")
-      .parquet(shards)
-      .filter(col("event_type") === eventType && pmod(col("user_id"), lit(2)) === 0)
-      .select(col("user_id").as(s"${prefix}_user"),
-        expr("timestamp_micros(us)").as(s"${prefix}_ts"),
-        col("event_id").as(s"${prefix}_id"))
-      .withWatermark(s"${prefix}_ts", "2 hours")
-    val joined = side("purchase", "p").join(side("click", "c"),
-      col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("c_ts") <= col("p_ts"),
-      "fullOuter")
-    val name = "graft_q191_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val query = withConfs(s,
-      "spark.sql.shuffle.partitions" -> "2",
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-      joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
+  private def q191(s: SparkSession, dir: String): DataFrame =
+    Replay.withSentinels(s, dir, "events_stream_days_pc", joinFlush(s, dir): _*) { flush =>
+      drain(s, "q191", pcJoin(s, dir, "fullOuter"), "append",
+          Seq(twoParts, noDataOff), flush)((t, _) => t
+        // drop sentinel emissions on EITHER side (the two sentinels
+        // also match each other); real users are non-negative
+        .filter(coalesce(col("p_user"), lit(0L)) >= 0 &&
+          coalesce(col("c_user"), lit(0L)) >= 0)
+        .select(coalesce(col("p_id"), lit(-1L)).as("p_id"),
+          coalesce(col("c_id"), lit(-1L)).as("c_id"),
+          coalesce(unix_micros(col("p_ts")) - unix_micros(col("c_ts")),
+            lit(-1L)).as("gap_us"))
+        .orderBy("p_id", "c_id"))
     }
-    val maxUs = eventsMaxUs(s, dir)
-    val flushUs = maxUs + 42L * 86400L * 1000000L
-    val flush2Us = flushUs + 86400L * 1000000L
-    def dayOf(us: Long): String = java.time.Instant
-      .ofEpochSecond(us / 1000000L).atZone(java.time.ZoneOffset.UTC)
-      .toLocalDate.toString
-    val flushDay = dayOf(flushUs)
-    val flush2Day = dayOf(flush2Us)
-    val sentFiles = scala.collection.mutable.ListBuffer[String]()
-    val outDf =
-      try {
-        try {
-          query.processAllAvailable()
-          sentFiles += appendRowsFile(s, shards, schema, Seq(
-            org.apache.spark.sql.Row(-2L, -1L, "purchase", flushUs, flushDay),
-            org.apache.spark.sql.Row(-2L, -2L, "click", flushUs, flushDay)))
-          query.processAllAvailable()
-          sentFiles += appendRowsFile(s, shards, schema, Seq(
-            org.apache.spark.sql.Row(-3L, -3L, "flush", flush2Us, flush2Day)))
-          query.processAllAvailable()
-          recordBatchId("q191", query)
-        } finally query.stop()
-        val result = s.table(name)
-          // drop sentinel emissions on EITHER side (the two sentinels
-          // also match each other); real users are non-negative
-          .filter(coalesce(col("p_user"), lit(0L)) >= 0 &&
-            coalesce(col("c_user"), lit(0L)) >= 0)
-          .select(coalesce(col("p_id"), lit(-1L)).as("p_id"),
-            coalesce(col("c_id"), lit(-1L)).as("c_id"),
-            coalesce(unix_micros(col("p_ts")) - unix_micros(col("c_ts")),
-              lit(-1L)).as("gap_us"))
-          .orderBy("p_id", "c_id")
-        val rows = result.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-      } finally rmrfAll(s, sentFiles.toSeq: _*)
-    s.catalog.dropTempView(name)
-    outDf
+
+  /** q254: streaming OBSERVABILITY surface — `StreamingQueryListener`
+    * (the async monitoring bus a production deployment wires to its
+    * metrics system) and `query.recentProgress` (the synchronous
+    * in-process view), gated against each other and against the oracle:
+    * Σ numInputRows over all progress events must equal the exact row
+    * count of the replayed source. The pipeline under observation is a
+    * stateless projection (cheapest possible drain, 2 main batches);
+    * the capability under test is that the metrics REPORT the truth.
+    * Listener delivery is asynchronous, so the gate polls the listener
+    * totals until they match the synchronous recentProgress view
+    * (bounded wait) — the pattern any listener-driven monitor needs. */
+  private def q254(s: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+    import StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
+    // the listener bus is SESSION-global and async: a queued event from
+    // the previous gate's query would otherwise inflate the totals
+    // (flaky, load-dependent) — keep every event, count only OUR run's
+    val heard = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = { heard.add(e.progress); () }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    s.streams.addListener(listener)
+    try {
+      val stream = Replay.replayStream(s, dir, "events_stream_days_upsert", 15)
+        .select(col("event_id"))
+      drain(s, "q254", stream, "append", Seq(twoParts, noDataOff)) { (_, progress) =>
+        val syncRows = progress.map(_.numInputRows).sum
+        val runId = progress.head.runId
+        def ours = heard.toArray(Array.empty[StreamingQueryProgress]).filter(_.runId == runId)
+        // listener events ride an async bus: wait (bounded) until the
+        // listener's total catches the synchronous recentProgress view
+        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+        while (ours.map(_.numInputRows).sum < syncRows && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        val seen = ours
+        val rows = seen.map(_.numInputRows).sum
+        import s.implicits._
+        Seq((rows, syncRows, rows == syncRows, seen.length >= 2))
+          .toDF("listener_rows", "progress_rows", "views_agree", "multi_batch")
+      }
+    } finally s.streams.removeListener(listener)
   }
 
   /** q218: stream-stream LEFT SEMI join — completes the streaming join
@@ -838,114 +337,13 @@ object StreamingQueries extends QueryPack {
     * purchases age out of state silently when the watermark passes).
     * State bounds as q84: each side buffers arrival rate × (delay +
     * range), never history. */
-  /** q254: streaming OBSERVABILITY surface — `StreamingQueryListener`
-    * (the async monitoring bus a production deployment wires to its
-    * metrics system) and `query.recentProgress` (the synchronous
-    * in-process view), gated against each other and against the oracle:
-    * Σ numInputRows over all progress events must equal the exact row
-    * count of the replayed source. The pipeline under observation is a
-    * stateless projection (cheapest possible drain, 2 main batches);
-    * the capability under test is that the metrics REPORT the truth.
-    * Listener delivery is asynchronous, so the gate polls the listener
-    * totals until they match the synchronous recentProgress view
-    * (bounded wait) — the pattern any listener-driven monitor needs. */
-  private def q254(s: SparkSession, dir: String): DataFrame = {
-    val shards = dumpDayShards(s, dir, "events_stream_days_upsert")
-    val schema = dayShardSchema("events_stream_days_upsert")
-    val name = "graft_q254_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val rows = new java.util.concurrent.atomic.AtomicLong(0)
-    val progresses = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-        // the listener bus is SESSION-global and async: a queued event
-        // from the previous gate's query would otherwise inflate the
-        // totals (flaky, load-dependent) — count only OUR query
-        if (e.progress.name == name) {
-          rows.addAndGet(e.progress.numInputRows)
-          progresses.incrementAndGet()
-        }
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    s.streams.addListener(listener)
-    try {
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "15")
-        .parquet(shards)
-        .select(col("event_id"))
-      val query = withConfs(s,
-        "spark.sql.shuffle.partitions" -> "2",
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-        stream.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-      }
-      val syncRows =
-        try {
-          query.processAllAvailable()
-          recordBatchId("q254", query)
-          query.recentProgress.map(_.numInputRows).sum
-        } finally query.stop()
-      // listener events ride an async bus: wait (bounded) until the
-      // listener's total catches the synchronous recentProgress view
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (rows.get() < syncRows && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      import s.implicits._
-      Seq((rows.get(), syncRows, rows.get() == syncRows,
-        progresses.get() >= 2L))
-        .toDF("listener_rows", "progress_rows", "views_agree",
-          "multi_batch")
-    } finally {
-      s.streams.removeListener(listener)
-      s.catalog.dropTempView(name)
-    }
-  }
-
-  private def q218(s: SparkSession, dir: String): DataFrame = {
-    val shards = dumpDayShards(s, dir, "events_stream_days_pc")
-    val schema = dayShardSchema("events_stream_days_pc")
-    def side(eventType: String, prefix: String) = s.readStream.schema(schema)
-      // 2 main-drain batches over 30 day shards: the cross-batch
-      // buffering contract needs >1 data batch
-      .option("maxFilesPerTrigger", "15")
-      .parquet(shards)
-      .filter(col("event_type") === eventType && pmod(col("user_id"), lit(2)) === 0)
-      .select(col("user_id").as(s"${prefix}_user"),
-        expr("timestamp_micros(us)").as(s"${prefix}_ts"),
-        col("event_id").as(s"${prefix}_id"))
-      .withWatermark(s"${prefix}_ts", "2 hours")
-    val joined = side("purchase", "p").join(side("click", "c"),
-      col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("c_ts") <= col("p_ts"),
-      "leftSemi")
-    val name = "graft_q218_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val query = withConfs(s,
-      "spark.sql.shuffle.partitions" -> "2",
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-      joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    }
-    try {
-      query.processAllAvailable()
-      recordBatchId("q218", query)
-    } finally query.stop()
-    val result = s.table(name)
-      .select(col("p_id"), col("p_user"),
-        unix_micros(col("p_ts")).as("p_us"))
-      .orderBy("p_id")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
-  }
+  private def q218(s: SparkSession, dir: String): DataFrame =
+    // 2 main-drain batches over 30 day shards: the cross-batch
+    // buffering contract needs >1 data batch
+    drain(s, "q218", pcJoin(s, dir, "leftSemi"), "append",
+        Seq(twoParts, noDataOff))((t, _) => t
+      .select(col("p_id"), col("p_user"), unix_micros(col("p_ts")).as("p_us"))
+      .orderBy("p_id"))
 
   /** q100: streaming into a REAL file sink — the production shape the
     * memory-sink gates deliberately avoid: `writeStream.format("parquet")`
@@ -969,75 +367,49 @@ object StreamingQueries extends QueryPack {
     * the batch oracle. Scale: state = open windows × event types, file
     * manifest grows with emitted windows only. */
   private def q100(s: SparkSession, dir: String): DataFrame = {
-    // day shards carrying (event_type, us), partitioned by day — richer
-    // than q87's (user_id, us) shards, same dump-once contract
-    val shards = dumpDayShards(s, dir, "events_stream_days_typed")
-    val schema = dayShardSchema("events_stream_days_typed")
     val uid = java.util.UUID.randomUUID().toString.replace("-", "")
     val sinkOut = graft.operators.FileIO.scratch(dir, s"q100_sink_$uid")
     val cp = graft.operators.FileIO.scratch(dir, s"q100_cp_$uid")
-    val agg = s.readStream.schema(schema)
-      // 2 main batches + the sentinel flush batch = 3 micro-batches
-      .option("maxFilesPerTrigger", "15")
-      .parquet(shards)
+    // day shards carrying (event_type, us) — richer than q87's
+    // (user_id, us) shards, same dump-once contract; 2 main batches +
+    // the sentinel flush batches
+    val agg = Replay.replayStream(s, dir, "events_stream_days_typed", 15)
       .select(col("event_type"), expr("timestamp_micros(us)").as("ts"))
       .withWatermark("ts", "40 days") // > corpus span ⇒ order-independent
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-    // scope stateful parallelism down while the finite replay drains —
-    // per-partition state-store + sink-manifest commits dominate
-    // otherwise (same sizing note as q84/q87)
-    // no-data batches off: the two-flush discipline below puts every
-    // window emission in a REAL data batch (q87/q173's discipline)
-    val query = withConfs(s,
-      "spark.sql.shuffle.partitions" -> "2",
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-      agg.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", sinkOut)
-        .option("checkpointLocation", cp)
-        .start()
-    }
     // flush sentinels: the first pushes the watermark beyond every real
     // window (real windows end ≤ maxDay+1; watermark after = maxUs +
     // 2 days); the SECOND forces the data batch in which the append-mode
     // aggregation actually emits those closed windows — the sentinels'
     // own far-future windows never close, so the sink holds exactly the
     // real windows
-    val maxUs = eventsMaxUs(s, dir)
-    val flushUs = maxUs + 42L * 86400L * 1000000L
-    val flush2Us = flushUs + 600L * 1000000L
-    def dayOf(us: Long): String = java.time.Instant
-      .ofEpochSecond(us / 1000000L).atZone(java.time.ZoneOffset.UTC)
-      .toLocalDate.toString
-    // everything past this point cleans up in the finally — especially
-    // the sentinel files, so a failed drain can never leave a stale
-    // sentinel inside the cached shard dump for later runs
-    val sentFiles = scala.collection.mutable.ListBuffer[String]()
+    val flush = Replay.flushUs(s, dir)
     try {
-      try {
-        def appendFlush(us: Long): Unit =
-          sentFiles += appendRowsFile(s, shards, schema, Seq(
-            org.apache.spark.sql.Row("__flush", us, dayOf(us))))
-        query.processAllAvailable()
-        appendFlush(flushUs)
-        query.processAllAvailable()
-        appendFlush(flush2Us)
-        query.processAllAvailable()
-        recordBatchId("q100", query)
-      } finally query.stop()
-      val result = s.read.parquet(sinkOut)
+      Replay.withSentinels(s, dir, "events_stream_days_typed",
+          Seq(Replay.sentinel(flush, "__flush")),
+          Seq(Replay.sentinel(flush + 600L * 1000000L, "__flush"))) { steps =>
+        // scope stateful parallelism down while the finite replay drains —
+        // per-partition state-store + sink-manifest commits dominate
+        // otherwise (same sizing note as q84/q87); no-data batches off:
+        // the two-flush discipline puts every window emission in a REAL
+        // data batch (q87/q173's discipline)
+        run(withConfs(s, twoParts, noDataOff) {
+          agg.writeStream
+            .outputMode("append")
+            .format("parquet")
+            .option("path", sinkOut)
+            .option("checkpointLocation", cp)
+            .start()
+        }, "q100", steps: _*)
+      }
+      // detach from the sink files before the dirs are removed (the dump
+      // stays pristine and cached for repeated passes)
+      Replay.local(s.read.parquet(sinkOut)
         .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
           col("event_type"), col("n"))
-        .orderBy("day", "event_type")
-      val rows = result.collect()
-      // detach from the sink files before the dirs are removed (the rest
-      // of the dump stays pristine and cached for repeated passes — same
-      // reuse contract as the layouts)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-    } finally rmrfAll(s,
-      Seq(sinkOut, cp) ++ sentFiles: _*)
+        .orderBy("day", "event_type"))
+    } finally rmrfAll(s, sinkOut, cp)
   }
 
   /** q222: the watermark's NEGATIVE contract — late data is actually
@@ -1069,7 +441,7 @@ object StreamingQueries extends QueryPack {
     // (4 Spark write jobs per invocation → 4 file copies, r17)
     val libBase = graft.operators.FileIO.scratch(dir, "q222_lib")
     def writeSlice(tag: String, cond: org.apache.spark.sql.Column): Unit =
-      copySliceInto(s, src, libBase, tag)(ev.filter(cond).select("us"))
+      Replay.copySliceInto(s, src, libBase, tag)(ev.filter(cond).select("us"))
     writeSlice("a", col("dom") >= 16) // phase A: on-time
     val schema = new org.apache.spark.sql.types.StructType().add("us", "long")
     val agg = s.readStream.schema(schema).parquet(src)
@@ -1077,27 +449,13 @@ object StreamingQueries extends QueryPack {
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 day"))
       .agg(count(lit(1)).as("n"))
-    val name = "graft_q222_" + uid
-    // NO noDataMicroBatches override here, unlike the flush-sentinel
-    // gates: the late-row filter compares against the watermark COMMITTED
-    // BY THE PREVIOUS BATCH (SPARK-40925's two-watermark design — a batch
-    // that merely computed a new watermark hasn't committed it for late
-    // filtering yet), and it is exactly the engine's no-data micro-batch
-    // after each drain that commits it. Disable them and phase B would be
-    // planned with the pre-A watermark — nothing would drop.
-    val query = withConfs(s, "spark.sql.shuffle.partitions" -> "2") {
-      agg.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    }
     // a batch only FILTERS against a watermark some earlier batch already
     // carried in its metadata, so phase B must wait until one batch has
     // RUN with the post-A watermark (the engine's no-data micro-batch —
-    // processAllAvailable alone does not promise it has fired yet).
+    // a drain alone does not promise it has fired yet).
     // Progress reports the watermark each batch was planned with; poll it.
-    def awaitCommittedWatermark(ms: Long): Unit = {
+    def awaitCommittedWatermark(query: org.apache.spark.sql.streaming.StreamingQuery,
+        ms: Long): Unit = {
       def committed = query.recentProgress.exists(p =>
         Option(p.eventTime.get("watermark"))
           .exists(java.time.Instant.parse(_).toEpochMilli >= ms))
@@ -1112,38 +470,31 @@ object StreamingQueries extends QueryPack {
           "(host overload?) — refusing to write the late phase against " +
           "an unplanned watermark")
     }
-    val maxUs = eventsMaxUs(s, dir)
-    try {
-      try {
-        query.processAllAvailable() // batch 0: wm → max(A) − 1 h
-        awaitCommittedWatermark(maxUs / 1000L - 3600L * 1000) // committed
-        writeSlice("b", col("dom") <= 9) // phase B: all late
-        query.processAllAvailable() // B dropped, counted
-        def sentinel(us: Long): Unit =
-          appendRowsFile(s, src, schema,
-            Seq(org.apache.spark.sql.Row(us)), libBase = Some(libBase))
+    val maxUs = Replay.eventsMaxUs(s, dir)
+    def flushRow(us: Long): Unit = Replay.appendRowsFile(s, src, schema,
+      Seq(Row(us)), libBase = Some(libBase))
+    // NO noDataMicroBatches override here, unlike the flush-sentinel
+    // gates: the late-row filter compares against the watermark COMMITTED
+    // BY THE PREVIOUS BATCH (SPARK-40925's two-watermark design — a batch
+    // that merely computed a new watermark hasn't committed it for late
+    // filtering yet), and it is exactly the engine's no-data micro-batch
+    // after each drain that commits it. Disable them and phase B would be
+    // planned with the pre-A watermark — nothing would drop.
+    try drain(s, "q222", agg, "append", Seq(twoParts), Seq(
+        query => { // batch 0 drained: wm → max(A) − 1 h, once committed
+          awaitCommittedWatermark(query, maxUs / 1000L - 3600L * 1000)
+          writeSlice("b", col("dom") <= 9) // phase B: all late — dropped, counted
+        },
         // two-sentinel flush (q100's discipline): the second sentinel's
         // DATA batch carries the first's watermark, so emission of the
         // real windows never depends on a no-data batch racing stop()
-        sentinel(maxUs + 42L * 86400L * 1000000L)
-        query.processAllAvailable()
-        sentinel(maxUs + 42L * 86400L * 1000000L + 600L * 1000000L)
-        query.processAllAvailable()
-        recordBatchId("q222", query)
-      } finally query.stop()
-      val dropped = query.recentProgress
+        _ => flushRow(Replay.flushUs(s, dir)),
+        _ => flushRow(Replay.flushUs(s, dir) + 600L * 1000000L))) { (t, progress) =>
+      val dropped = progress
         .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
-      val result = s.table(name)
-        .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
-          col("n"))
-        .union(s.range(1).select(lit("DROPPED").as("day"),
-          lit(dropped).as("n")))
+      t.select(date_format(col("window.start"), "yyyy-MM-dd").as("day"), col("n"))
+        .union(s.range(1).select(lit("DROPPED").as("day"), lit(dropped).as("n")))
         .orderBy("day")
-      val rows = result.collect()
-      val out = s.createDataFrame(
-        java.util.Arrays.asList(rows: _*), result.schema)
-      s.catalog.dropTempView(name)
-      out
     } finally rmrfAll(s, src)
   }
 
@@ -1183,18 +534,11 @@ object StreamingQueries extends QueryPack {
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val gapUs = 1800L * 1000000L
-    val dayUs = 86400L * 1000000L
-    // shard by day, one file per day dir, so the file source can deliver
-    // a genuinely incremental replay
-    val out = dumpDayShards(s, dir, "events_stream_days")
-    val schema = dayShardSchema("events_stream_days")
     // the watermarked ts column must ride into the stateful operator's
     // input (the event-time-timeout check reads the watermark metadata
     // off the child's output attributes), so keep it alongside us
-    val stream = s.readStream.schema(schema)
+    val stream = Replay.replayStream(s, dir, "events_stream_days", 15)
       // 2 main batches + 2 sentinel flush batches = 4 micro-batches
-      .option("maxFilesPerTrigger", "15")
-      .parquet(out)
       .withColumn("ts", expr("timestamp_micros(us)"))
       .withWatermark("ts", "40 days") // > corpus span ⇒ order-independent
       .select(col("user_id"), col("us"), col("ts"))
@@ -1227,56 +571,33 @@ object StreamingQueries extends QueryPack {
           } else state.remove()
           closed.iterator.map(m => (user, m._1, m._2, m._3))
       }
-    val name = "graft_q87_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    // scope stateful parallelism down while the finite replay drains —
-    // state-store commits per partition per batch dominate otherwise
-    // (same sizing note as q84)
-    // no-data batches off — the two-sentinel discipline never needs
-    // them (same rationale as q173), so they'd only add per-batch cost
-    val query = withConfs(s,
-      "spark.sql.shuffle.partitions" -> "2",
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-      sessions.toDF("user_id", "start_us", "last_us", "n_events")
-        .writeStream.outputMode("append").format("memory").queryName(name).start()
-    }
-    // flush sentinels (cleaned up in the finally below, so the cached
-    // day-shard dump is always restored to pristine state)
-    val maxUs = eventsMaxUs(s, dir)
-    val flush1Us = maxUs + 42L * dayUs // watermark after = maxUs + 2 days
-    val flush2Us = flush1Us + 600L * 1000000L // merges into the same open session
-    def dayOf(us: Long): String = java.time.Instant
-      .ofEpochSecond(us / 1000000L).atZone(java.time.ZoneOffset.UTC)
-      .toLocalDate.toString
-    val sentFiles = scala.collection.mutable.ListBuffer[String]()
-    val outDf =
-      try {
-        def appendSentinel(us: Long): Unit =
-          sentFiles += appendRowsFile(s, out, schema, Seq(
-            org.apache.spark.sql.Row(-1L, us, dayOf(us))))
-        try {
-          query.processAllAvailable()
-          appendSentinel(flush1Us)
-          query.processAllAvailable()
-          appendSentinel(flush2Us)
-          query.processAllAvailable()
+      .toDF("user_id", "start_us", "last_us", "n_events")
+    // flush sentinels (user −1; removed again after the drain, so the
+    // cached day-shard dump is always restored to pristine state): the
+    // first moves the watermark to maxUs + 2 days, the second merges into
+    // the same open session and forces the batch that fires the timeouts
+    val flush = Replay.flushUs(s, dir)
+    Replay.withSentinels(s, dir, "events_stream_days",
+        Seq(Replay.sentinel(flush, -1L)),
+        Seq(Replay.sentinel(flush + 600L * 1000000L, -1L))) { steps =>
+      // scope stateful parallelism down while the finite replay drains —
+      // state-store commits per partition per batch dominate otherwise
+      // (same sizing note as q84); no-data batches off — the two-sentinel
+      // discipline never needs them (same rationale as q173)
+      drain(s, "q87", sessions, "append", Seq(twoParts, noDataOff), steps) {
+        (t, progress) =>
           // pin material: state rows surviving the full drain (groups
           // still holding open sessions — the sentinel user only)
-          q87FinalStateRows = query.recentProgress.reverseIterator
+          q87FinalStateRows = progress.reverseIterator
             .map(_.stateOperators).collectFirst {
               case ops if ops.nonEmpty => ops.map(_.numRowsTotal).sum
             }.getOrElse(-1L)
-          recordBatchId("q87", query)
-        } finally query.stop()
-        val result = s.table(name)
-          .filter(col("user_id") >= 0) // drop the sentinel's emissions (none)
-          .select(col("user_id"), col("start_us"),
-            (col("last_us") + gapUs).as("end_us"), col("n_events"))
-          .orderBy("user_id", "start_us")
-        val rows = result.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-      } finally rmrfAll(s, sentFiles.toSeq: _*)
-    s.catalog.dropTempView(name)
-    outDf
+          t.filter(col("user_id") >= 0) // drop the sentinel's emissions (none)
+            .select(col("user_id"), col("start_us"),
+              (col("last_us") + gapUs).as("end_us"), col("n_events"))
+            .orderBy("user_id", "start_us")
+      }
+    }
   }
 
   /** q118: streaming MERGE/upsert sink via `foreachBatch` — the CDC
@@ -1309,8 +630,6 @@ object StreamingQueries extends QueryPack {
       col("m.last_value").as("last_value"))
 
   private def q118(s: SparkSession, dir: String): DataFrame = {
-    val shards = dumpDayShards(s, dir, "events_stream_days_upsert")
-    val schema = dayShardSchema("events_stream_days_upsert")
     val uid = java.util.UUID.randomUUID().toString.replace("-", "")
     val target = graft.operators.FileIO.scratch(dir, s"q118_target_$uid")
     val tmp = graft.operators.FileIO.scratch(dir, s"q118_tmp_$uid")
@@ -1319,16 +638,12 @@ object StreamingQueries extends QueryPack {
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     def exists(p: String) = fs.exists(new org.apache.hadoop.fs.Path(p))
     def rmrf(p: String): Unit = fs.delete(new org.apache.hadoop.fs.Path(p), true)
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "12") // several genuine merge batches
-      .parquet(shards)
+    val stream = Replay.replayStream(s, dir, "events_stream_days_upsert", 12) // several genuine merge batches
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("event_type").as("last_event_type"), col("us").as("last_ts_us"),
         col("value").as("last_value"))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val query =
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "2")
+    try {
+      run(withConfs(s, twoParts) {
         stream.writeStream
           .option("checkpointLocation", cp)
           .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -1347,16 +662,11 @@ object StreamingQueries extends QueryPack {
             ()
           }
           .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    try {
-      try { query.processAllAvailable(); recordBatchId("q118", query) }
-      finally query.stop()
-      val result = s.read.parquet(target)
+      }, "q118")
+      Replay.local(s.read.parquet(target)
         .select("user_id", "last_event_id", "last_event_type",
           "last_ts_us", "last_value")
-        .orderBy("user_id")
-      val rows = result.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+        .orderBy("user_id"))
     } finally rmrfAll(s, target, tmp, cp)
   }
 
@@ -1374,8 +684,6 @@ object StreamingQueries extends QueryPack {
   private def q125(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
-    val shards = dumpDayShards(s, dir, "events_stream_days_upsert")
-    val schema = dayShardSchema("events_stream_days_upsert")
     val processor =
       new StatefulProcessor[Long, (Long, Long), (Long, Long, Long, Long, Long)] {
         @transient private var st: ValueState[(Long, Long, Long, Long)] = _
@@ -1394,45 +702,17 @@ object StreamingQueries extends QueryPack {
           Iterator.single((key, n, sum, mn, mx))
         }
       }
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "12")
-      .parquet(shards)
+    val stream = Replay.replayStream(s, dir, "events_stream_days_upsert", 12)
       .select(col("user_id"), col("event_id"))
       .as[(Long, Long)]
       .groupByKey(_._1)
       .transformWithState(processor, TimeMode.None(), OutputMode.Update())
       .toDF("user_id", "n_events", "sum_event_ids", "min_event_id", "max_event_id")
-    val name = "graft_q125_" + java.util.UUID.randomUUID().toString.replace("-", "")
     // transformWithState requires the RocksDB provider; scope it (and the
-    // drain parallelism) to this finite replay and restore after
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    // getAll, not getOption: the provider key is a registered conf, so
-    // getOption returns its DEFAULT and a restore from it would pin the
-    // default as an explicit session entry (same trap as withNanosAsLong)
-    val prevProv = s.conf.getAll.get(provKey)
-    val query =
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "2")
-        s.conf.set(provKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        stream.writeStream
-          .outputMode("update")
-          .format("memory")
-          .queryName(name)
-          .start()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        prevProv match {
-          case Some(p) => s.conf.set(provKey, p)
-          case None => s.conf.unset(provKey)
-        }
-      }
-    try { query.processAllAvailable(); recordBatchId("q125", query) }
-    finally query.stop()
-    // latest snapshot per user: counts strictly increase, so max(n) is
+    // drain parallelism) to this finite replay.
+    // Latest snapshot per user: counts strictly increase, so max(n) is
     // the final state — integer argmax, exact at any batch composition
-    val result = s.table(name)
+    drain(s, "q125", stream, "update", Seq(twoParts, rocksDb))((t, _) => t
       .groupBy("user_id")
       .agg(max(struct(col("n_events"), col("sum_event_ids"),
         col("min_event_id"), col("max_event_id"))).as("m"))
@@ -1440,12 +720,7 @@ object StreamingQueries extends QueryPack {
         col("m.sum_event_ids").as("sum_event_ids"),
         col("m.min_event_id").as("min_event_id"),
         col("m.max_event_id").as("max_event_id"))
-      .orderBy("user_id")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
+      .orderBy("user_id"))
   }
 
   /** q184: TIMER-driven state eviction in `transformWithState` — the
@@ -1475,9 +750,6 @@ object StreamingQueries extends QueryPack {
     import s.implicits._
     import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
     val gapUs = 1800L * 1000000L
-    val dayUs = 86400L * 1000000L
-    val shards = dumpDayShards(s, dir, "events_stream_days")
-    val schema = dayShardSchema("events_stream_days")
     // state type is Seq, NOT List: the value deserializer materializes a
     // List under codegen but a Vector under the interpreted fallback
     // (factoryMode=NO_CODEGEN, [[gateExecConfs]]) — a List-typed state
@@ -1525,10 +797,8 @@ object StreamingQueries extends QueryPack {
           closed.iterator.map(m => (key, m._1, m._2, m._3))
         }
       }
-    val sessions = s.readStream.schema(schema)
+    val sessions = Replay.replayStream(s, dir, "events_stream_days", 15)
       // 2 main batches + 2 sentinel flush batches = 4 micro-batches
-      .option("maxFilesPerTrigger", "15")
-      .parquet(shards)
       .withColumn("ts", expr("timestamp_micros(us)"))
       .withWatermark("ts", "40 days") // > corpus span ⇒ order-independent
       // ts rides into the operator input so the watermark metadata
@@ -1538,48 +808,23 @@ object StreamingQueries extends QueryPack {
       .groupByKey(_._1)
       .transformWithState(processor, TimeMode.EventTime(), OutputMode.Append())
       .toDF("user_id", "start_us", "last_us", "n_events")
-    val name = "graft_q184_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    // RocksDB is transformWithState's required backend; no-data batches
-    // off because timers fire in the second sentinel's REAL batch (the
-    // q173/q87 discipline — never a dependence on bookkeeping batches)
-    val query = withConfs(s,
-      "spark.sql.shuffle.partitions" -> "2",
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
-      sessions.writeStream.outputMode("append").format("memory")
-        .queryName(name).start()
+    // the first sentinel advances the watermark past every close; the
+    // second merges into the open sentinel session and forces the batch
+    // whose timers fire
+    val flush = Replay.flushUs(s, dir)
+    Replay.withSentinels(s, dir, "events_stream_days",
+        Seq(Replay.sentinel(flush, -1L)),
+        Seq(Replay.sentinel(flush + 600L * 1000000L, -1L))) { steps =>
+      // RocksDB is transformWithState's required backend; no-data batches
+      // off because timers fire in the second sentinel's REAL batch (the
+      // q173/q87 discipline — never a dependence on bookkeeping batches)
+      drain(s, "q184", sessions, "append", Seq(twoParts, rocksDb, noDataOff),
+          steps)((t, _) => t
+        .filter(col("user_id") >= 0) // the sentinel session never closes
+        .select(col("user_id"), col("start_us"),
+          (col("last_us") + gapUs).as("end_us"), col("n_events"))
+        .orderBy("user_id", "start_us"))
     }
-    val maxUs = eventsMaxUs(s, dir)
-    val flush1Us = maxUs + 42L * dayUs // watermark after = maxUs + 2 days
-    val flush2Us = flush1Us + 600L * 1000000L // merges into the open sentinel session
-    def dayOf(us: Long): String = java.time.Instant
-      .ofEpochSecond(us / 1000000L).atZone(java.time.ZoneOffset.UTC)
-      .toLocalDate.toString
-    val sentFiles = scala.collection.mutable.ListBuffer[String]()
-    val outDf =
-      try {
-        def appendSentinel(us: Long): Unit =
-          sentFiles += appendRowsFile(s, shards, schema, Seq(
-            org.apache.spark.sql.Row(-1L, us, dayOf(us))))
-        try {
-          query.processAllAvailable()
-          appendSentinel(flush1Us) // advances the watermark past every close
-          query.processAllAvailable()
-          appendSentinel(flush2Us) // forces the batch whose timers fire
-          query.processAllAvailable()
-          recordBatchId("q184", query)
-        } finally query.stop()
-        val result = s.table(name)
-          .filter(col("user_id") >= 0) // the sentinel session never closes
-          .select(col("user_id"), col("start_us"),
-            (col("last_us") + gapUs).as("end_us"), col("n_events"))
-          .orderBy("user_id", "start_us")
-        val rows = result.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-      } finally rmrfAll(s, sentFiles.toSeq: _*)
-    s.catalog.dropTempView(name)
-    outDf
   }
 
   /** q175: streaming restart + exactly-once — the recovery contract every
@@ -1608,14 +853,12 @@ object StreamingQueries extends QueryPack {
         .option("path", sink)
         .option("checkpointLocation", cp)
         .start())
-      val result = s.read.parquet(sink)
+      Replay.local(s.read.parquet(sink)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           countDistinct(col("event_id")).as("n_distinct"),
           sum(col("event_id")).as("id_sum"))
-        .orderBy("event_type")
-      val rows = result.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+        .orderBy("event_type"))
     } finally rmrfAll(s, src, sink, cp)
   }
 
@@ -1624,45 +867,20 @@ object StreamingQueries extends QueryPack {
     * available files at start, consumes it in rate-limited micro-batches
     * (maxFilesPerTrigger still applies, unlike the deprecated Trigger.Once
     * which gulped everything in one batch), and TERMINATES ITSELF. Every
-    * other gate drains via processAllAvailable — a test API that leaves
-    * the query running; this one must come to a clean self-stop, which
+    * other gate drains through a test API that leaves the query
+    * running; this one must come to a clean self-stop, which
     * the gate enforces with a bounded awaitTermination. Aggregation is
     * the exact-DECIMAL per-type stats, oracled against the batch table. */
   private def q176(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Exact.dec
-    val shards = dumpDayShards(s, dir, "events_stream_days_upsert")
-    val schema = dayShardSchema("events_stream_days_upsert")
-    val agg = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "12") // 3 planned batches over 30 shards
-      .parquet(shards)
+    val agg = Replay.replayStream(s, dir, "events_stream_days_upsert", 12) // 3 planned batches over 30 shards
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         round(sum(dec(col("value"))).cast("double"), 2).as("sum_value"))
-    val name = "graft_q176_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val query =
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "2")
-        agg.writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName(name)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    try {
-      // AvailableNow's contract IS self-termination — a hang here is a
-      // correctness failure, not a timing flake, so fail loudly
-      if (!query.awaitTermination(300000L))
-        sys.error("q176: AvailableNow query did not self-terminate")
-      recordBatchId("q176", query)
-    } finally query.stop()
-    val result = s.table(name).orderBy("event_type")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
+    // AvailableNow's contract IS self-termination — a hang here is a
+    // correctness failure, not a timing flake, so the drain fails loudly
+    drain(s, "q176", agg, "complete", Seq(twoParts), availableNowMs = 300000L)(
+      (t, _) => t.orderBy("event_type"))
   }
 
   /** q177: the BUILT-IN session_window running as a STREAM — the third
@@ -1679,11 +897,7 @@ object StreamingQueries extends QueryPack {
     * operator's merge is the engine-maintained version of q87's interval
     * glue. */
   private def q177(s: SparkSession, dir: String): DataFrame = {
-    val shards = dumpDayShards(s, dir, "events_stream_days")
-    val schema = dayShardSchema("events_stream_days")
-    val agg = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "12") // sessions must merge across batches
-      .parquet(shards)
+    val agg = Replay.replayStream(s, dir, "events_stream_days", 12) // sessions must merge across batches
       .withColumn("ts", expr("timestamp_micros(us)"))
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"))
@@ -1691,26 +905,7 @@ object StreamingQueries extends QueryPack {
         unix_micros(col("session_window.start")).as("start_us"),
         unix_micros(col("session_window.end")).as("end_us"),
         col("n_events"))
-    val name = "graft_q177_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val query =
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "2")
-        agg.writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName(name)
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    try query.processAllAvailable()
-    finally query.stop()
-    recordBatchId("q177", query)
-    val result = s.table(name).orderBy("user_id", "start_us")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
+    drain(s, "q177", agg, "complete", Seq(twoParts))((t, _) => t.orderBy("user_id", "start_us"))
   }
 
   /** q180: UNION of two streams — one streaming query over TWO sources
@@ -1721,7 +916,7 @@ object StreamingQueries extends QueryPack {
     * legs deliberately select DIFFERENT slices of the same table so a
     * leg-drop or double-replay of either side breaks a different output
     * row; result ≡ the batch union oracle. */
-  private def q180(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
+  private def q180(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
     import graft.functions.Exact.dec
     def leg(eventType: String, tag: String) = eventsStream(s, dir)
       .filter(col("event_type") === eventType)
@@ -1730,20 +925,7 @@ object StreamingQueries extends QueryPack {
       .groupBy("side")
       .agg(count(lit(1)).as("n"),
         round(sum(dec(col("value"))).cast("double"), 2).as("sum_value"))
-    val name = "graft_q180_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val query = unioned.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try query.processAllAvailable()
-    finally query.stop()
-    val result = s.table(name).orderBy("side")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
+    drain(s, "q180", unioned, "complete")((t, _) => t.orderBy("side"))
   }
 
   /** q71: session_window (30-minute gap) per user. */
@@ -1766,7 +948,7 @@ object StreamingQueries extends QueryPack {
     * aggregates in complete mode. LEFT join + UNKNOWN default keeps
     * the gate deterministic at every scale factor regardless of key
     * coverage. Money sums go through the exact-DECIMAL discipline. */
-  private def q168(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
+  private def q168(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
     import graft.functions.Exact.dec
     val stream = eventsStream(s, dir)
     val dim = Tables.customer(s, dir)
@@ -1778,20 +960,7 @@ object StreamingQueries extends QueryPack {
       .groupBy("segment", "event_type")
       .agg(count(lit(1)).as("n"),
         round(sum(dec(col("value"))).cast("double"), 2).as("total_value"))
-    val name = "graft_q168_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val query = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try query.processAllAvailable()
-    finally query.stop()
-    val result = s.table(name).orderBy("segment", "event_type")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
+    drain(s, "q168", agg, "complete")((t, _) => t.orderBy("segment", "event_type"))
   }
 
   /** q289: STREAMING THE TSV STORE — the reference's native format
@@ -1809,7 +978,7 @@ object StreamingQueries extends QueryPack {
     * input split); complete-mode counts must equal the batch oracle
     * over the full table. This closes the reference's own gap: its TSV
     * front door is batch-only (SURVEY §1), ours streams. */
-  private def q289(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
+  private def q289(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
     val root = graft.operators.FileIO.scratch(dir, "stream_tsv_src")
     rmrfAll(s, root)
     val base = Tables.events(s, dir)
@@ -1826,24 +995,11 @@ object StreamingQueries extends QueryPack {
       .schema(schema).option("path", root).load()
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("g").as("sum_g"))
-    val name = "graft_q289_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val query = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      query.processAllAvailable()
-      dump(col("event_id") % 2 === 1) // second wave: a later micro-batch
-      query.processAllAvailable()
-    } finally query.stop()
-    val result = s.table(name).orderBy("event_type")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    rmrfAll(s, root)
-    out
+    // second wave: a later micro-batch
+    try drain(s, "q289", agg, "complete",
+        between = Seq(_ => dump(col("event_id") % 2 === 1)))(
+      (t, _) => t.orderBy("event_type"))
+    finally rmrfAll(s, root)
   }
 
   /** q303: ADMISSION CONTROL on the TSV micro-batch source
@@ -1864,7 +1020,7 @@ object StreamingQueries extends QueryPack {
     * aggregate must equal the batch oracle. TsvSourceSpec pins the
     * per-batch file cap, the O(1) offset payload, log compaction, and
     * restart recovery at the unit level. */
-  private def q303(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
+  private def q303(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
     val root = graft.operators.FileIO.scratch(dir, "stream_tsv_admit")
     rmrfAll(s, root)
     Tables.events(s, dir)
@@ -1882,29 +1038,14 @@ object StreamingQueries extends QueryPack {
       .load()
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("g").as("sum_g"))
-    val name = "graft_q303_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val query = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try {
-      if (!query.awaitTermination(180000L))
-        sys.error("q303: AvailableNow query did not self-terminate")
-    } finally query.stop()
-    val dataBatches = query.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 5,
-      s"q303: cold start must drain in bounded micro-batches " +
-        s"(expected >= 5 with data, got $dataBatches) — admission " +
-        "control did not bound the drain")
-    val result = s.table(name).orderBy("event_type")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    rmrfAll(s, root)
-    out
+    try drain(s, "q303", agg, "complete", availableNowMs = 180000L) { (t, progress) =>
+      val dataBatches = progress.count(_.numInputRows > 0)
+      require(dataBatches >= 5,
+        s"q303: cold start must drain in bounded micro-batches " +
+          s"(expected >= 5 with data, got $dataBatches) — admission " +
+          "control did not bound the drain")
+      t.orderBy("event_type")
+    } finally rmrfAll(s, root)
   }
 
   /** q308: STREAMING RETENTION HORIZON (`maxFileAgeMs`) — the
@@ -1923,7 +1064,7 @@ object StreamingQueries extends QueryPack {
     * stratum only — physically-present archive shards contribute
     * nothing. TsvSourceSpec pins the mechanics (never-admitted old
     * shard, seen-set expiry in the compact snapshot). */
-  private def q308(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
+  private def q308(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
     val root = graft.operators.FileIO.scratch(dir, "stream_tsv_retention")
     rmrfAll(s, root)
     val fmt = classOf[graft.sources.TsvSourceProvider].getName
@@ -1949,30 +1090,15 @@ object StreamingQueries extends QueryPack {
       .load()
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("cents").as("total_cents"))
-    val name = "graft_q308_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val query = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try {
-      if (!query.awaitTermination(180000L))
-        sys.error("q308: AvailableNow query did not self-terminate")
-    } finally query.stop()
-    // the drain stayed bounded (6 live shards at 2/trigger = 3 data
-    // batches); the VALUE check is the horizon itself — the oracle
-    // excludes the archive stratum the store physically holds
-    val dataBatches = query.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3,
-      s"q308: bounded drain expected >= 3 data batches, got $dataBatches")
-    val result = s.table(name).orderBy("event_type")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    rmrfAll(s, root)
-    out
+    try drain(s, "q308", agg, "complete", availableNowMs = 180000L) { (t, progress) =>
+      // the drain stayed bounded (6 live shards at 2/trigger = 3 data
+      // batches); the VALUE check is the horizon itself — the oracle
+      // excludes the archive stratum the store physically holds
+      val dataBatches = progress.count(_.numInputRows > 0)
+      require(dataBatches >= 3,
+        s"q308: bounded drain expected >= 3 data batches, got $dataBatches")
+      t.orderBy("event_type")
+    } finally rmrfAll(s, root)
   }
 
   /** q293: stream PIT against a BUCKETED interval table — q285's
@@ -1987,7 +1113,7 @@ object StreamingQueries extends QueryPack {
     * and the exchange-free dim branch on the real micro-batch plan.
     * Tier grain deliberately differs from q285 (25k vs 50k) so the two
     * gates state distinct results. */
-  private def q293(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
+  private def q293(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
     import graft.functions.Exact.dec
     ensurePitDim(s, dir)
     val dim = s.table(pitDimTbl).hint("merge")
@@ -2003,20 +1129,7 @@ object StreamingQueries extends QueryPack {
       .groupBy("tier", "event_type")
       .agg(count(lit(1)).as("n"),
         round(sum(dec(col("value"))).cast("double"), 2).as("total_value"))
-    val name = "graft_q293_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val query = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try query.processAllAvailable()
-    finally query.stop()
-    val result = s.table(name).orderBy("tier", "event_type")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
+    drain(s, "q293", agg, "complete")((t, _) => t.orderBy("tier", "event_type"))
   }
 
   private[streaming] val pitDimTbl = "graft_q293_pit_dim"
@@ -2062,7 +1175,7 @@ object StreamingQueries extends QueryPack {
     * nobody passes storage layout around. Second wave arrives as a
     * later micro-batch (same offset contract as q289); complete-mode
     * counts must equal the batch oracle over the full source. */
-  private def q292(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
+  private def q292(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
     val cat = graft.operators.FileIO.ensureCatalog(s, dir)
     s.sql(s"DROP TABLE IF EXISTS $cat.lake.events_t")
     s.sql(s"CREATE TABLE $cat.lake.events_t " +
@@ -2071,31 +1184,21 @@ object StreamingQueries extends QueryPack {
       .select(col("event_id"), col("event_type"),
         pmod(col("user_id"), lit(8)).as("g"))
       .createOrReplaceTempView("graft_src292")
-    s.sql(s"INSERT INTO $cat.lake.events_t " +
-      "SELECT * FROM graft_src292 WHERE event_id % 2 = 0")
+    def insert(pred: String): Unit = {
+      s.sql(s"INSERT INTO $cat.lake.events_t SELECT * FROM graft_src292 WHERE $pred")
+      ()
+    }
+    insert("event_id % 2 = 0")
     val agg = s.readStream.table(s"$cat.lake.events_t")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("g").as("sum_g"))
-    val name = "graft_q292_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val query = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      query.processAllAvailable()
-      s.sql(s"INSERT INTO $cat.lake.events_t " +
-        "SELECT * FROM graft_src292 WHERE event_id % 2 = 1")
-      query.processAllAvailable()
-    } finally query.stop()
-    val result = s.table(name).orderBy("event_type")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    s.catalog.dropTempView("graft_src292")
-    s.sql(s"DROP TABLE $cat.lake.events_t")
-    out
+    try drain(s, "q292", agg, "complete",
+        between = Seq(_ => insert("event_id % 2 = 1")))(
+      (t, _) => t.orderBy("event_type"))
+    finally {
+      s.catalog.dropTempView("graft_src292")
+      s.sql(s"DROP TABLE $cat.lake.events_t")
+    }
   }
 
   /** q295: STREAMING WRITE INTO THE CATALOG BY NAME — the write half of
@@ -2128,8 +1231,8 @@ object StreamingQueries extends QueryPack {
   private def driveRestartHalves(s: SparkSession, dir: String, gate: String,
       src: String, startSink: DataFrame =>
         org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val shards = dumpDayShards(s, dir, "events_stream_days_upsert")
-    val schema = dayShardSchema("events_stream_days_upsert")
+    val shards = Replay.dumpDayShards(s, dir, "events_stream_days_upsert")
+    val schema = Replay.dayShardSchema("events_stream_days_upsert")
     val conf = s.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(shards).getFileSystem(conf)
     // flat dump layout (see dumpDayShards): one <day>.parquet file per
@@ -2141,21 +1244,14 @@ object StreamingQueries extends QueryPack {
       org.apache.hadoop.fs.FileUtil.copy(fs, p,
         fs, new org.apache.hadoop.fs.Path(src, p.getName), false, conf)
     }
-    def runInstance(): Unit = {
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val query =
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "2")
-          startSink(s.readStream.schema(schema)
-            // 2 batches per half-corpus instance; batch numbering
-            // continues across the restart, so the final batchId ≥ 3
-            .option("maxFilesPerTrigger", "8")
-            .parquet(src)
-            .select(col("event_id"), col("user_id"), col("event_type")))
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      try { query.processAllAvailable(); recordBatchId(gate, query) }
-      finally query.stop()
-    }
+    def runInstance(): Unit = run(withConfs(s, twoParts) {
+      startSink(s.readStream.schema(schema)
+        // 2 batches per half-corpus instance; batch numbering
+        // continues across the restart, so the final batchId ≥ 3
+        .option("maxFilesPerTrigger", "8")
+        .parquet(src)
+        .select(col("event_id"), col("user_id"), col("event_type")))
+    }, gate)
     val (firstHalf, secondHalf) = dayDirs.toSeq.splitAt(dayDirs.length / 2)
     stage(firstHalf)
     runInstance() // instance 1: commits the first half, then stops
@@ -2176,14 +1272,12 @@ object StreamingQueries extends QueryPack {
         .writeStream
         .option("checkpointLocation", cp)
         .toTable(s"$cat.lake.events_sink"))
-      val result = s.table(s"$cat.lake.events_sink")
+      Replay.local(s.table(s"$cat.lake.events_sink")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           countDistinct(col("event_id")).as("n_distinct"),
           sum(col("event_id")).as("id_sum"))
-        .orderBy("event_type")
-      val rows = result.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+        .orderBy("event_type"))
     } finally {
       s.sql(s"DROP TABLE IF EXISTS $cat.lake.events_sink")
       rmrfAll(s, src, cp)
@@ -2208,8 +1302,6 @@ object StreamingQueries extends QueryPack {
     * most epochs and the changelog is genuinely multi-version (the
     * sink spec pins that shape; this gate pins the values). */
   private def q298(s: SparkSession, dir: String): DataFrame = {
-    val shards = dumpDayShards(s, dir, "events_stream_days_upsert")
-    val schema = dayShardSchema("events_stream_days_upsert")
     val uid = java.util.UUID.randomUUID().toString.replace("-", "")
     val cp = graft.operators.FileIO.scratch(dir, s"q298_cp_$uid")
     val cat = graft.operators.FileIO.ensureCatalog(s, dir)
@@ -2217,17 +1309,14 @@ object StreamingQueries extends QueryPack {
     s.sql(s"CREATE TABLE $cat.lake.metrics298 " +
       "(event_type STRING, n BIGINT, cents BIGINT)")
     try {
-      val agg = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "8") // ~4 epochs → multi-version log
-        .parquet(shards)
+      val agg = Replay.replayStream(s, dir, "events_stream_days_upsert", 8) // ~4 epochs → multi-version log
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           sum(round(col("value") * 100).cast("long")).as("cents"))
-      val query = agg.writeStream
+      run(agg.writeStream
         .outputMode("update")
         .option("checkpointLocation", cp)
-        .toTable(s"$cat.lake.metrics298")
-      try query.processAllAvailable() finally query.stop()
+        .toTable(s"$cat.lake.metrics298"), "q298")
       // compact-on-read: the count only grows, so max(n) is the latest
       // version and max_by(cents, n) its payload — one pass, no window
       val compacted = s.table(s"$cat.lake.metrics298")
@@ -2249,10 +1338,8 @@ object StreamingQueries extends QueryPack {
         s"q298: ${shape.getLong(0)} changelog rows across " +
           s"${shape.getLong(1)} groups — no group was ever re-emitted, " +
           "so update mode did not produce a multi-version changelog")
-      val result = compacted
-        .select("event_type", "n", "cents").orderBy("event_type")
-      val rows = result.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+      Replay.local(compacted
+        .select("event_type", "n", "cents").orderBy("event_type"))
     } finally {
       s.sql(s"DROP TABLE IF EXISTS $cat.lake.metrics298")
       rmrfAll(s, cp)
@@ -2280,8 +1367,6 @@ object StreamingQueries extends QueryPack {
     * reconstruction, since the maintenance SELECT is exactly the
     * consumer's compact-on-read expression. */
   private def q304(s: SparkSession, dir: String): DataFrame = {
-    val shards = dumpDayShards(s, dir, "events_stream_days_upsert")
-    val schema = dayShardSchema("events_stream_days_upsert")
     val uid = java.util.UUID.randomUUID().toString.replace("-", "")
     val cp = graft.operators.FileIO.scratch(dir, s"q304_cp_$uid")
     val cat = graft.operators.FileIO.ensureCatalog(s, dir)
@@ -2292,18 +1377,15 @@ object StreamingQueries extends QueryPack {
     // maintenance op — REPLACE, not CREATE, is the op under test
     s.sql(s"CREATE TABLE $cat.lake.snap304 (g BIGINT, n BIGINT, cents BIGINT)")
     try {
-      val agg = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "8") // several epochs → multi-version
-        .parquet(shards)
+      val agg = Replay.replayStream(s, dir, "events_stream_days_upsert", 8) // several epochs → multi-version
         .filter(col("user_id").isNotNull)
         .groupBy((col("user_id") % 4).as("g"))
         .agg(count(lit(1)).as("n"),
           sum(round(col("value") * 100).cast("long")).as("cents"))
-      val query = agg.writeStream
+      run(agg.writeStream
         .outputMode("update")
         .option("checkpointLocation", cp)
-        .toTable(s"$cat.lake.chg304")
-      try query.processAllAvailable() finally query.stop()
+        .toTable(s"$cat.lake.chg304"), "q304")
       val chgRows = s.table(s"$cat.lake.chg304").count()
       // THE MAINTENANCE OP: one-shot latest-per-key (the count only
       // grows, so max(n) is the latest version and max_by its payload),
@@ -2317,9 +1399,7 @@ object StreamingQueries extends QueryPack {
       require(chgRows > nKeys,
         s"q304: changelog must be multi-version ($chgRows rows over " +
           s"$nKeys keys) — otherwise the compaction compacted nothing")
-      val result = snap.orderBy("g")
-      val rows = result.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+      Replay.local(snap.orderBy("g"))
     } finally {
       s.sql(s"DROP TABLE IF EXISTS $cat.lake.chg304")
       s.sql(s"DROP TABLE IF EXISTS $cat.lake.snap304")
@@ -2371,23 +1451,16 @@ object StreamingQueries extends QueryPack {
     // cleanup in finally (q175/q295 discipline): a failing drain must
     // not leak the uuid checkpoint dir or the session-wide tables/view
     try {
-      val query = screened.writeStream
+      run(screened.writeStream
         .option("checkpointLocation", cp)
-        .toTable(s"$cat.lake.screened296")
-      try {
-        query.processAllAvailable()
-        ingest("event_id % 2 = 1") // second wave through the LIVE stream
-        query.processAllAvailable()
-        recordBatchId("q296", query)
-      } finally query.stop()
-      val result = s.table(s"$cat.lake.screened296")
+        .toTable(s"$cat.lake.screened296"), "q296",
+        _ => ingest("event_id % 2 = 1")) // second wave through the LIVE stream
+      Replay.local(s.table(s"$cat.lake.screened296")
         .groupBy("g")
         .agg(count(lit(1)).as("n"),
           countDistinct(col("event_id")).as("n_distinct"),
           sum(col("cents")).as("total_cents"))
-        .orderBy("g")
-      val rows = result.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+        .orderBy("g"))
     } finally {
       s.sql(s"DROP TABLE IF EXISTS $cat.lake.raw296")
       s.sql(s"DROP TABLE IF EXISTS $cat.lake.screened296")
@@ -2413,45 +1486,34 @@ object StreamingQueries extends QueryPack {
     * enrich. Batch PIT twin: q232. */
   /** q285's compacted SCD2 tier dimension, pinned once per process per
     * source dir (r17): a pure function of the orders table (the
-    * [[maxUsCache]]/day-shard reuse contract), previously re-computed —
+    * eventsMaxUs/day-shard reuse contract), previously re-computed —
     * window + run-collapse + checkpoint — on EVERY invocation just to
     * feed the same broadcast. */
-  private val scd2DimCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def scd2TierDim(s: SparkSession, dir: String): DataFrame = {
-    def live(df: DataFrame) =
-      (df.sparkSession.sparkContext eq s.sparkContext) &&
-        !df.sparkSession.sparkContext.isStopped
-    val hit = scd2DimCache.get(dir)
-    if (hit != null && live(hit)) hit
-    else scd2DimCache.compute(dir, (_, cached) =>
-      if (cached != null && live(cached)) cached
-      else {
-        if (cached != null) graft.PinnedBlocks.release(cached)
-        val W = org.apache.spark.sql.expressions.Window
-        val w = W.partitionBy("o_custkey").orderBy("vf")
-        graft.PinnedBlocks.pinnedCheckpoint(Tables.orders(s, dir)
-          .groupBy(col("o_custkey"), col("o_orderdate"))
-          .agg(max("o_totalprice").as("px"))
-          .select(col("o_custkey"),
-            unix_micros(col("o_orderdate").cast("timestamp")).as("vf"),
-            floor(col("px") / 50000).cast("long").as("tier"))
-          .withColumn("vt",
-            coalesce(lead(col("vf"), 1).over(w), lit(Long.MaxValue)))
-          .withColumn("chg",
-            when(lag(col("tier"), 1).over(w).isNull ||
-              lag(col("tier"), 1).over(w) =!= col("tier"), lit(1))
-              .otherwise(lit(0)))
-          .withColumn("run",
-            sum(col("chg")).over(w.rowsBetween(W.unboundedPreceding, 0)))
-          .groupBy("o_custkey", "run")
-          .agg(min("vf").as("vf"), max("vt").as("vt"),
-            first("tier").as("tier"))
-          .select("o_custkey", "vf", "vt", "tier"))
-      })
-  }
+  private def scd2TierDim(s: SparkSession, dir: String): DataFrame =
+    graft.PinnedBlocks.cached(s, s"stream.scd2_tier_dim|$dir") {
+      val W = org.apache.spark.sql.expressions.Window
+      val w = W.partitionBy("o_custkey").orderBy("vf")
+      Tables.orders(s, dir)
+        .groupBy(col("o_custkey"), col("o_orderdate"))
+        .agg(max("o_totalprice").as("px"))
+        .select(col("o_custkey"),
+          unix_micros(col("o_orderdate").cast("timestamp")).as("vf"),
+          floor(col("px") / 50000).cast("long").as("tier"))
+        .withColumn("vt",
+          coalesce(lead(col("vf"), 1).over(w), lit(Long.MaxValue)))
+        .withColumn("chg",
+          when(lag(col("tier"), 1).over(w).isNull ||
+            lag(col("tier"), 1).over(w) =!= col("tier"), lit(1))
+            .otherwise(lit(0)))
+        .withColumn("run",
+          sum(col("chg")).over(w.rowsBetween(W.unboundedPreceding, 0)))
+        .groupBy("o_custkey", "run")
+        .agg(min("vf").as("vf"), max("vt").as("vt"),
+          first("tier").as("tier"))
+        .select("o_custkey", "vf", "vt", "tier")
+    }
 
-  private def q285(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
+  private def q285(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
     import graft.functions.Exact.dec
     // SCD2 compaction: adjacent versions with the SAME tier merge into
     // one interval (classic run-collapse). Oracle-neutral — every event
@@ -2476,20 +1538,7 @@ object StreamingQueries extends QueryPack {
       .groupBy("tier", "event_type")
       .agg(count(lit(1)).as("n"),
         round(sum(dec(col("value"))).cast("double"), 2).as("total_value"))
-    val name = "graft_q285_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val query = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try query.processAllAvailable()
-    finally query.stop()
-    val result = s.table(name).orderBy("tier", "event_type")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
+    drain(s, "q285", agg, "complete")((t, _) => t.orderBy("tier", "event_type"))
   }
 
   /** q258: stream-STATIC LEFT ANTI join — the blocklist/compliance
@@ -2502,7 +1551,7 @@ object StreamingQueries extends QueryPack {
     * why Spark permits it in append mode. Blocklist = customers with
     * negative balance; survivors aggregate per type so the output is
     * small and deterministic. */
-  private def q258(s: SparkSession, dir: String): DataFrame = withNanosAsLong(s) {
+  private def q258(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
     import graft.functions.Exact.dec
     val blocked = Tables.customer(s, dir)
       .filter(col("c_acctbal") < 0)
@@ -2513,20 +1562,7 @@ object StreamingQueries extends QueryPack {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         round(sum(dec(col("value"))).cast("double"), 2).as("total_value"))
-    val name = "graft_q258_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val query = surviving.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try query.processAllAvailable()
-    finally query.stop()
-    val result = s.table(name).orderBy("event_type")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
+    drain(s, "q258", surviving, "complete")((t, _) => t.orderBy("event_type"))
   }
 
   /** q260: streaming NEAR-DUP ADMISSION CONTROL — dedup at ingestion,
@@ -2560,12 +1596,11 @@ object StreamingQueries extends QueryPack {
     import s.implicits._
     import graft.functions.TextHash
     val shards = graft.operators.FileIO.scratch(dir, "docs_stream_shards")
-    if (!dumped.contains(shards)) {
+    Replay.dumpOnce(shards) {
       Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
         .select("doc_id", "text")
         .repartition(4) // 4 files at 2/trigger = 2 main micro-batches
         .write.mode("overwrite").parquet(shards)
-      dumped.add(shards)
     }
     // static index side: the process-cached corpus shingle frame (shared
     // with q42/q43/q44/q96/q97), minus the probe split. The band index is
@@ -2629,22 +1664,8 @@ object StreamingQueries extends QueryPack {
         (size(col("sh_a")) + size(col("sh_b")) - col("inter")), 4))
       .filter(col("jaccard") >= 0.7)
       .select("probe_id", "corpus_id", "jaccard")
-    val name = "graft_q260_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val query = verified.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .start()
-    try {
-      query.processAllAvailable()
-      recordBatchId("q260", query)
-    } finally query.stop()
-    val result = s.table(name).distinct().orderBy("probe_id", "corpus_id")
-    val rows = result.collect()
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-    s.catalog.dropTempView(name)
-    out
+    drain(s, "q260", verified, "append")((t, _) =>
+      t.distinct().orderBy("probe_id", "corpus_id"))
   }
 
   /** q261: SEQUENTIAL corpus-build dedup — the self-building half of
@@ -2695,7 +1716,7 @@ object StreamingQueries extends QueryPack {
     val shards = graft.operators.FileIO.scratch(dir, "docs_seq_shards")
     val fs = FileSystem.get(new java.net.URI(shards),
       s.sparkContext.hadoopConfiguration)
-    if (!dumped.contains(shards)) {
+    Replay.dumpOnce(shards) {
       // 4 id-RANGE shard files written smallest-range-first: the file
       // source drains oldest-(mtime,path)-first, so batches are
       // id-ordered — the policy's one-pass precondition
@@ -2711,11 +1732,10 @@ object StreamingQueries extends QueryPack {
           .filter(col("doc_id") >= lo + i * step &&
             col("doc_id") < lo + (i + 1) * step)
           .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = theOnePartFile(fs, new Path(tmp))
+        val part = Replay.theOnePartFile(fs, new Path(tmp))
         fs.rename(part, new Path(shards, f"shard-$i%04d.parquet"))
         fs.delete(new Path(tmp), true)
       }
-      dumped.add(shards)
     }
     val runId = java.util.UUID.randomUUID().toString.replace("-", "")
     val idxShPath = graft.operators.FileIO.scratch(dir, s"seq_idx_sh_$runId")
@@ -2732,6 +1752,13 @@ object StreamingQueries extends QueryPack {
       .toDF("doc_id", "band_idx", "band_val")
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("text", "string")
+    // read-back schemas of the per-batch outputs: each writer projects
+    // through its schema (`to`), so a renamed column fails the write
+    // loudly instead of reading back as silent nulls
+    val idxShSchema = org.apache.spark.sql.types.StructType.fromDDL(
+      "doc_id BIGINT, sh ARRAY<STRING>")
+    val resSchema = org.apache.spark.sql.types.StructType.fromDDL(
+      "doc_id BIGINT, dup_of BIGINT, admitted BOOLEAN")
     // the growing band index: a bucketed table (join-key buckets, one
     // file per bucket per batch partition) created EMPTY before the
     // stream starts so every batch takes the same insert path — plain
@@ -2746,9 +1773,8 @@ object StreamingQueries extends QueryPack {
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "2")
       .parquet(shards)
-    val name = "graft_q261_" + runId
     val query = stream.writeStream
-      .queryName(name)
+      .queryName("graft_q261_" + runId)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         // batch-local pin: sh feeds five consumers (both sides of the
         // local join, the verify join, the result projection, the index
@@ -2792,9 +1818,7 @@ object StreamingQueries extends QueryPack {
           // footer-inference job every micro-batch for a schema the gate
           // itself wrote one line above; bid arrives via partition
           // discovery and is projected away
-          (if (haveIdx) s.read.schema(
-              new org.apache.spark.sql.types.StructType()
-                .add("doc_id", "long").add("sh", "array<string>"))
+          (if (haveIdx) s.read.schema(idxShSchema)
             .parquet(idxShPath).select("doc_id", "sh")
            else sh.limit(0))
             .toDF("prev_id", "sh_p")
@@ -2818,24 +1842,16 @@ object StreamingQueries extends QueryPack {
           .join(dupOf, Seq("doc_id"), "left")
           .select(col("doc_id"), col("dup_of"),
             col("dup_of").isNull.as("admitted"))
+          .to(resSchema)
           .write.mode("overwrite").parquet(s"$resPath/bid=$batchId")
         // index extends with EVERY screened doc (the policy compares
         // against all smaller ids, admitted or not)
-        sh.write.mode("overwrite").parquet(s"$idxShPath/bid=$batchId")
+        sh.to(idxShSchema).write.mode("overwrite").parquet(s"$idxShPath/bid=$batchId")
         // session conf, not a writer option: insertInto's V1 command
         // reads partitionOverwriteMode from SQLConf only — a writer
         // option is silently ignored and STATIC overwrite would wipe
         // every earlier batch's partition.
-        // `graft.q261.append` (EXPERIMENT-ONLY, SCALING.md's q261
-        // manifest-commit A/B): plain append instead of the idempotent
-        // per-partition overwrite — NOT replay-safe, exists solely to
-        // price the idempotence machinery; never set in Verify/driver
-        if (sys.props.get("graft.q261.append").contains("true"))
-          bands.withColumn("bid", lit(batchId))
-            .repartition(4, col("band_idx"), col("band_val"))
-            .write.mode("append")
-            .insertInto(idxTbl)
-        else withConfs(bands.sparkSession,
+        withConfs(bands.sparkSession,
             "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
           bands.withColumn("bid", lit(batchId))
             .repartition(4, col("band_idx"), col("band_val"))
@@ -2847,18 +1863,9 @@ object StreamingQueries extends QueryPack {
       }
       .start()
     try {
-      try {
-        query.processAllAvailable()
-        recordBatchId("q261", query)
-      } finally query.stop()
-      val result = s.read.schema(
-          new org.apache.spark.sql.types.StructType()
-            .add("doc_id", "long").add("dup_of", "long")
-            .add("admitted", "boolean"))
-        .parquet(resPath)
-        .select("doc_id", "dup_of", "admitted").orderBy("doc_id")
-      val rows = result.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+      run(query, "q261")
+      Replay.local(s.read.schema(resSchema).parquet(resPath)
+        .select("doc_id", "dup_of", "admitted").orderBy("doc_id"))
     } finally {
       try s.sql(s"DROP TABLE IF EXISTS $idxTbl")
       catch { case scala.util.control.NonFatal(_) => () }
@@ -2878,7 +1885,7 @@ object StreamingQueries extends QueryPack {
     * Janino) — the gates' warm floor is state-store stage overhead, not
     * codegen. Kept because the direction is strictly right at this
     * batch size and it compounds across 22 gates × 3 bench passes.
-    * Scoped via [[withConfs]] around the gate body (streaming queries
+    * Scoped via `withConfs` around the gate body (streaming queries
     * capture session confs at start), so batch queries in the same
     * session keep whole-stage codegen. This is BATCH-SIZE tuning, not a
     * global recommendation: a production stream at millions of rows per

@@ -16,6 +16,14 @@ class MultiBatchSpec extends AnyFunSuite {
   lazy val spark = graft.TestSpark.spark
   val sf = "/root/testdata/sf0.001"
 
+  /** The gate's recorded final batchId — absent fails loudly here, so
+    * no bound below can pass on a drain that recorded nothing. */
+  private def recorded(gate: String): Long = {
+    val batchId = Replay.lastBatch(gate)
+    assert(batchId.isDefined, s"$gate: no batch recorded")
+    batchId.get
+  }
+
   private val gates = Seq(
     "q87" -> "q87_stateful_sessions",
     "q100" -> "q100_stream_file_sink",
@@ -33,9 +41,9 @@ class MultiBatchSpec extends AnyFunSuite {
     for ((key, name) <- gates) {
       val rows = graft.SparkEntry.queries(name)(spark, sf).count()
       assert(rows > 0, s"$name returned no rows")
-      val batchId = StreamingQueries.lastBatchId.get(key)
-      assert(batchId != null && batchId >= 2L,
-        s"$name drained in ${if (batchId == null) "?" else batchId + 1} " +
+      val batchId = recorded(key)
+      assert(batchId >= 2L,
+        s"$name drained in ${batchId + 1} " +
           "micro-batches; the gate's cross-batch coverage is gone")
     }
   }
@@ -47,9 +55,9 @@ class MultiBatchSpec extends AnyFunSuite {
     // micro-batches) silently stops being exercised
     val rows = graft.SparkEntry.queries("q218_stream_semi_join")(spark, sf).count()
     assert(rows > 0, "q218 returned no rows")
-    val batchId = StreamingQueries.lastBatchId.get("q218")
-    assert(batchId != null && batchId >= 1L,
-      s"q218 drained in ${if (batchId == null) "?" else batchId + 1} " +
+    val batchId = recorded("q218")
+    assert(batchId >= 1L,
+      s"q218 drained in ${batchId + 1} " +
         "micro-batches; cross-batch join buffering is no longer covered")
   }
 
@@ -60,9 +68,9 @@ class MultiBatchSpec extends AnyFunSuite {
     // same static index batch 1's did
     val rows = graft.SparkEntry.queries("q260_stream_dedup_admission")(spark, sf).count()
     assert(rows > 0, "q260 returned no rows")
-    val batchId = StreamingQueries.lastBatchId.get("q260")
-    assert(batchId != null && batchId >= 1L,
-      s"q260 drained in ${if (batchId == null) "?" else batchId + 1} " +
+    val batchId = recorded("q260")
+    assert(batchId >= 1L,
+      s"q260 drained in ${batchId + 1} " +
         "micro-batches; incremental-admission coverage is gone")
   }
 
@@ -75,9 +83,9 @@ class MultiBatchSpec extends AnyFunSuite {
     val out = graft.SparkEntry.queries("q261_sequential_dedup")(spark, sf)
       .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
     assert(out.nonEmpty)
-    val batchId = StreamingQueries.lastBatchId.get("q261")
-    assert(batchId != null && batchId >= 1L,
-      s"q261 drained in ${if (batchId == null) "?" else batchId + 1} micro-batches")
+    val batchId = recorded("q261")
+    assert(batchId >= 1L,
+      s"q261 drained in ${batchId + 1} micro-batches")
     val ids = out.map(_._1)
     val (lo, hi) = (ids.min, ids.max)
     val step = (hi - lo) / 4 + 1
@@ -90,9 +98,9 @@ class MultiBatchSpec extends AnyFunSuite {
   test("q254 listener gate observes >= 2 micro-batches (progress-per-batch coverage)") {
     val rows = graft.SparkEntry.queries("q254_stream_listener")(spark, sf).count()
     assert(rows > 0, "q254 returned no rows")
-    val batchId = StreamingQueries.lastBatchId.get("q254")
-    assert(batchId != null && batchId >= 1L,
-      s"q254 drained in ${if (batchId == null) "?" else batchId + 1} " +
+    val batchId = recorded("q254")
+    assert(batchId >= 1L,
+      s"q254 drained in ${batchId + 1} " +
         "micro-batches; the multi-progress listener contract is no longer covered")
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.TestSpark
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,44 +12,42 @@ class StreamStreamJoinSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sf = "/root/testdata/sf0.001"
 
-  private def eventsStream(): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    StreamingQueries.eventsStream(spark, sf) // schema-adaptive (ns or µs)
-  }
-
   test("purchases⋈clicks within 1h event-time window: stream equals batch") {
-    val purchases = eventsStream().filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("p_id"))
-      .withWatermark("p_ts", "2 hours")
-    val clicks = eventsStream().filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-        col("event_id").as("c_id"))
-      .withWatermark("c_ts", "2 hours")
-    val joined = purchases.join(clicks,
-      col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("c_ts") <= col("p_ts"))
-    val name = "graft_ssj_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    val streamed = spark.table(name).select("p_id", "c_id")
-      .collect().map(_.toString).sorted
-
-    val ev = graft.sources.Tables.events(spark, sf)
-    val bp = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("event_id").as("p_id"))
-    val bc = ev.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"), col("event_id").as("c_id"))
-    val batch = bp.join(bc,
+    graft.SessionConfs.withConfs(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+      // schema-adaptive (ns or µs)
+      val purchases = Replay.eventsStream(spark, sf).filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
+          col("event_id").as("p_id"))
+        .withWatermark("p_ts", "2 hours")
+      val clicks = Replay.eventsStream(spark, sf).filter(col("event_type") === "click")
+        .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
+          col("event_id").as("c_id"))
+        .withWatermark("c_ts", "2 hours")
+      val joined = purchases.join(clicks,
         col("p_user") === col("c_user") &&
           col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
           col("c_ts") <= col("p_ts"))
-      .select("p_id", "c_id").collect().map(_.toString).sorted
+      val name = "graft_ssj_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      val q = joined.writeStream.outputMode("append")
+        .format("memory").queryName(name).start()
+      try q.processAllAvailable() finally q.stop()
+      val streamed = spark.table(name).select("p_id", "c_id")
+        .collect().map(_.toString).sorted
 
-    assert(streamed.nonEmpty)
-    assert(streamed === batch)
+      val ev = graft.sources.Tables.events(spark, sf)
+      val bp = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id").as("p_user"), col("ts").as("p_ts"), col("event_id").as("p_id"))
+      val bc = ev.filter(col("event_type") === "click")
+        .select(col("user_id").as("c_user"), col("ts").as("c_ts"), col("event_id").as("c_id"))
+      val batch = bp.join(bc,
+          col("p_user") === col("c_user") &&
+            col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
+            col("c_ts") <= col("p_ts"))
+        .select("p_id", "c_id").collect().map(_.toString).sorted
+
+      assert(streamed.nonEmpty)
+      assert(streamed === batch)
+    }
   }
 
   test("left-outer stream-stream join emits null-padded rows after watermark flush") {

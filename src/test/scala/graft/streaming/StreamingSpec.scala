@@ -13,6 +13,12 @@ class StreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sf = "/root/testdata/sf0.001"
 
+  /** The legacy nanos conf a TIMESTAMP(NANOS) events generation needs,
+    * scoped to one test so later suites on the shared session never
+    * inherit it. */
+  private def withNanos[T](body: => T): T = graft.SessionConfs.withConfs(spark,
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")(body)
+
   test("q289 TSV stream: file-set offsets deliver later files as later batches") {
     val root = java.nio.file.Files.createTempDirectory("graft_tsv_stream").toString
     def dump(ids: Range): Unit = {
@@ -90,47 +96,48 @@ class StreamingSpec extends AnyFunSuite {
   test("q293 bucketed PIT dim joins with no exchange on the dim side per micro-batch") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     StreamingQueries.ensurePitDim(spark, sf)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.events(spark, sf).schema
-    val joined = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(sf)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"))
-      .join(spark.table(StreamingQueries.pitDimTbl).hint("merge"),
-        col("user_id") === col("o_custkey") &&
-          col("us") >= col("vf") && col("us") < col("vt"), "left")
-      .groupBy("tier").agg(count(lit(1)).as("n"))
-    val name = "graft_pitbkt_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = joined.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    val plan =
-      try {
-        q.processAllAvailable()
-        q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
-          .streamingQuery.lastExecution.executedPlan
-      } finally q.stop()
-    spark.catalog.dropTempView(name)
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: p.children.flatMap(nodes)
-    val dimScan = nodes(plan).collectFirst {
-      case f: FileSourceScanExec if f.tableIdentifier.exists(
-        _.table == StreamingQueries.pitDimTbl) => f
-    }.getOrElse(fail(s"expected the bucketed dim scan:\n$plan"))
-    assert(dimScan.bucketedScan, s"dim scan must stay bucketed:\n$plan")
-    // no Exchange may sit on the join's DIM branch: the interval
-    // table's bytes never move per batch (the aggregate above the join
-    // legitimately exchanges O(joined-batch) rows)
-    val smj = nodes(plan).collectFirst {
-      case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
-    }.getOrElse(fail(
-      s"expected the merge join (broadcast would re-ship per batch):\n$plan"))
-    val dimSide = Seq(smj.left, smj.right).find(side =>
-      nodes(side).exists {
-        case f: FileSourceScanExec =>
-          f.tableIdentifier.exists(_.table == StreamingQueries.pitDimTbl)
-        case _ => false
-      }).getOrElse(fail(s"dim scan not under the join:\n$plan"))
-    assert(!nodes(dimSide).exists(
-        _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]),
-      s"dim side re-exchanged per micro-batch:\n$plan")
+    withNanos {
+      val schema = Tables.events(spark, sf).schema
+      val joined = spark.readStream.schema(schema)
+        .option("pathGlobFilter", "events.parquet").parquet(sf)
+        .select(col("user_id"), unix_micros(col("ts")).as("us"))
+        .join(spark.table(StreamingQueries.pitDimTbl).hint("merge"),
+          col("user_id") === col("o_custkey") &&
+            col("us") >= col("vf") && col("us") < col("vt"), "left")
+        .groupBy("tier").agg(count(lit(1)).as("n"))
+      val name = "graft_pitbkt_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      val q = joined.writeStream.outputMode("complete")
+        .format("memory").queryName(name).start()
+      val plan =
+        try {
+          q.processAllAvailable()
+          q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+            .streamingQuery.lastExecution.executedPlan
+        } finally q.stop()
+      spark.catalog.dropTempView(name)
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p +: p.children.flatMap(nodes)
+      val dimScan = nodes(plan).collectFirst {
+        case f: FileSourceScanExec if f.tableIdentifier.exists(
+          _.table == StreamingQueries.pitDimTbl) => f
+      }.getOrElse(fail(s"expected the bucketed dim scan:\n$plan"))
+      assert(dimScan.bucketedScan, s"dim scan must stay bucketed:\n$plan")
+      // no Exchange may sit on the join's DIM branch: the interval
+      // table's bytes never move per batch (the aggregate above the join
+      // legitimately exchanges O(joined-batch) rows)
+      val smj = nodes(plan).collectFirst {
+        case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
+      }.getOrElse(fail(
+        s"expected the merge join (broadcast would re-ship per batch):\n$plan"))
+      val dimSide = Seq(smj.left, smj.right).find(side =>
+        nodes(side).exists {
+          case f: FileSourceScanExec =>
+            f.tableIdentifier.exists(_.table == StreamingQueries.pitDimTbl)
+          case _ => false
+        }).getOrElse(fail(s"dim scan not under the join:\n$plan"))
+      assert(!nodes(dimSide).exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]),
+        s"dim side re-exchanged per micro-batch:\n$plan")
+    }
   }
 
   test("q285 PIT enrich joins hash-broadcast and stateless per micro-batch") {
@@ -148,65 +155,67 @@ class StreamingSpec extends AnyFunSuite {
         floor(col("px") / 50000).cast("long").as("tier"))
       .withColumn("vt",
         coalesce(lead(col("vf"), 1).over(w), lit(Long.MaxValue)))
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = Tables.events(spark, sf).schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(sf)
-      .select(col("user_id"), unix_micros(col("ts")).as("us"))
-      .join(broadcast(dim),
-        col("user_id") === col("o_custkey") &&
-          col("us") >= col("vf") && col("us") < col("vt"), "left")
-      .groupBy("tier").agg(count(lit(1)).as("n"))
-    val name = "graft_pitpin_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = stream.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    val (planStr, progress) =
-      try {
-        q.processAllAvailable()
-        val p = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
-          .streamingQuery.lastExecution.executedPlan.toString
-        (p, q.lastProgress)
-      } finally q.stop()
-    spark.catalog.dropTempView(name)
-    assert(planStr.contains("BroadcastHashJoin"),
-      s"expected a broadcast HASH join (equi key + range residual):\n$planStr")
-    assert(!planStr.contains("NestedLoop"),
-      s"range conjuncts must ride the hash join as residual:\n$planStr")
-    // exactly ONE stateful operator: the complete-mode aggregate.
-    // The PIT join itself contributes none (no stream-stream join
-    // state, no watermark) — that's the stateless-lookup contract
-    assert(progress.stateOperators.length === 1,
-      s"join must be stateless; state ops: ${progress.stateOperators.mkString(",")}")
+    withNanos {
+      val schema = Tables.events(spark, sf).schema
+      val stream = spark.readStream.schema(schema)
+        .option("pathGlobFilter", "events.parquet").parquet(sf)
+        .select(col("user_id"), unix_micros(col("ts")).as("us"))
+        .join(broadcast(dim),
+          col("user_id") === col("o_custkey") &&
+            col("us") >= col("vf") && col("us") < col("vt"), "left")
+        .groupBy("tier").agg(count(lit(1)).as("n"))
+      val name = "graft_pitpin_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      val q = stream.writeStream.outputMode("complete")
+        .format("memory").queryName(name).start()
+      val (planStr, progress) =
+        try {
+          q.processAllAvailable()
+          val p = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+            .streamingQuery.lastExecution.executedPlan.toString
+          (p, q.lastProgress)
+        } finally q.stop()
+      spark.catalog.dropTempView(name)
+      assert(planStr.contains("BroadcastHashJoin"),
+        s"expected a broadcast HASH join (equi key + range residual):\n$planStr")
+      assert(!planStr.contains("NestedLoop"),
+        s"range conjuncts must ride the hash join as residual:\n$planStr")
+      // exactly ONE stateful operator: the complete-mode aggregate.
+      // The PIT join itself contributes none (no stream-stream join
+      // state, no watermark) — that's the stateless-lookup contract
+      assert(progress.stateOperators.length === 1,
+        s"join must be stateless; state ops: ${progress.stateOperators.mkString(",")}")
+    }
   }
 
   test("append-mode windowed agg emits exactly the watermark-closed windows") {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stream = StreamingQueries.eventsStream(spark, sf) // schema-adaptive
-    val agg = stream
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "7 days"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    val name = "graft_wm_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = agg.writeStream.outputMode(OutputMode.Append)
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    val emitted = spark.table(name)
-      .select(col("window.start").cast("long"), col("event_type"), col("n"))
-      .collect().map(_.toString).sorted
+    withNanos {
+      val stream = Replay.eventsStream(spark, sf) // schema-adaptive
+      val agg = stream
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "7 days"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+      val name = "graft_wm_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      val q = agg.writeStream.outputMode(OutputMode.Append)
+        .format("memory").queryName(name).start()
+      try q.processAllAvailable() finally q.stop()
+      val emitted = spark.table(name)
+        .select(col("window.start").cast("long"), col("event_type"), col("n"))
+        .collect().map(_.toString).sorted
 
-    // batch equivalent, restricted to windows closed by the final watermark
-    val ev = Tables.events(spark, sf)
-    val maxTs = ev.agg(max(unix_micros(col("ts")))).head.getLong(0)
-    val watermarkUs = maxTs - 3600L * 1000000L
-    val closed = ev
-      .groupBy(window(col("ts"), "7 days"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .filter(unix_micros(col("window.end")) <= watermarkUs)
-      .select(col("window.start").cast("long"), col("event_type"), col("n"))
-      .collect().map(_.toString).sorted
+      // batch equivalent, restricted to windows closed by the final watermark
+      val ev = Tables.events(spark, sf)
+      val maxTs = ev.agg(max(unix_micros(col("ts")))).head.getLong(0)
+      val watermarkUs = maxTs - 3600L * 1000000L
+      val closed = ev
+        .groupBy(window(col("ts"), "7 days"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .filter(unix_micros(col("window.end")) <= watermarkUs)
+        .select(col("window.start").cast("long"), col("event_type"), col("n"))
+        .collect().map(_.toString).sorted
 
-    assert(emitted.nonEmpty)
-    assert(emitted === closed)
+      assert(emitted.nonEmpty)
+      assert(emitted === closed)
+    }
   }
 
   test("q87 evicts closed sessions: post-drain state holds only open sessions") {
@@ -232,39 +241,40 @@ class StreamingSpec extends AnyFunSuite {
 
   test("mapGroupsWithState session counting matches the window-based q37") {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stream = StreamingQueries.eventsStream(spark, sf) // ts already µs Timestamp
-      .select(col("user_id"), unix_micros(col("ts")).as("us"))
-      .as[(Long, Long)]
-    val gapUs = 1800L * 1000000L
-    val counted = stream.groupByKey(_._1)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, Long)], state: GroupState[Long]) =>
-          // count gap-separated sessions within this user's events
-          val times = rows.map(_._2).toArray.sorted
-          var sessions = 0L
-          var prev = Long.MinValue
-          times.foreach { t =>
-            if (prev == Long.MinValue || t - prev > gapUs) sessions += 1
-            prev = t
-          }
-          val total = state.getOption.getOrElse(0L) + sessions
-          state.update(total)
-          (user, total)
-      }
-    val name = "graft_st_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = counted.toDF("user_id", "n_sessions").writeStream
-      .outputMode(OutputMode.Update)
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    val got = spark.table(name)
-      .groupBy("user_id").agg(max("n_sessions").as("n_sessions"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    withNanos {
+      val stream = Replay.eventsStream(spark, sf) // ts already µs Timestamp
+        .select(col("user_id"), unix_micros(col("ts")).as("us"))
+        .as[(Long, Long)]
+      val gapUs = 1800L * 1000000L
+      val counted = stream.groupByKey(_._1)
+        .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
+          (user: Long, rows: Iterator[(Long, Long)], state: GroupState[Long]) =>
+            // count gap-separated sessions within this user's events
+            val times = rows.map(_._2).toArray.sorted
+            var sessions = 0L
+            var prev = Long.MinValue
+            times.foreach { t =>
+              if (prev == Long.MinValue || t - prev > gapUs) sessions += 1
+              prev = t
+            }
+            val total = state.getOption.getOrElse(0L) + sessions
+            state.update(total)
+            (user, total)
+        }
+      val name = "graft_st_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      val q = counted.toDF("user_id", "n_sessions").writeStream
+        .outputMode(OutputMode.Update)
+        .format("memory").queryName(name).start()
+      try q.processAllAvailable() finally q.stop()
+      val got = spark.table(name)
+        .groupBy("user_id").agg(max("n_sessions").as("n_sessions"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-    val expected = graft.SparkEntry.queries("q37_sessionize")(spark, sf)
-      .groupBy("user_id").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === expected)
+      val expected = graft.SparkEntry.queries("q37_sessionize")(spark, sf)
+        .groupBy("user_id").agg(count(lit(1)).as("n"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === expected)
+    }
   }
 
   test("streaming gates restore the nanosAsLong conf they set (no session leak)") {
