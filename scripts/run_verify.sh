@@ -1,6 +1,10 @@
 #!/bin/bash
 # Dev helper: compile once, then run graft.Verify fast via plain java.
 set -e
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
+# the Spark jars dir is the one build.sbt compiles against
+JARS=$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' "$ROOT/build.sbt")
+[ -n "$JARS" ] || { echo "no unmanagedBase in $ROOT/build.sbt" >&2; exit 1; }
 SF_DIR=${1:-/root/testdata/sf0.01}
 OUT_DIR=${2:-/tmp/verify_out}
 ADDOPENS=""
@@ -13,5 +17,5 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 exec java $ADDOPENS -Xmx${SPARK_DRIVER_MEM:-8g} -XX:ReservedCodeCacheSize=1g -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:$JARS/*" \
   graft.Verify "$SF_DIR" "$OUT_DIR"

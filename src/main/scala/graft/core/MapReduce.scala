@@ -1,7 +1,15 @@
 package graft.core
 
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, ExpressionEncoder}
+import org.apache.spark.sql.catalyst.encoders.AgnosticEncoders.{IterableEncoder, ProductEncoder}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.util.SizeEstimator
 
 /** The generic user-function-driven MapReduce surface of the reference
   * engine (`/root/reference/mapreduce.py:139-187`), re-expressed on Spark.
@@ -19,14 +27,21 @@ import org.apache.spark.sql.functions.col
   *   - Output order is unspecified, as in the reference
   *     (mapreduce.py:161-163); callers sort when determinism matters.
   *
-  * Scale notes (100 TB): the default path is a single hash-shuffle on the
-  * key with Spark's spillable object-hash aggregation; value groups are
-  * streamed to `reduceFcn` as an `Iterator` (the reference materializes a
-  * list per key in reducer memory, mapreduce.py:118 — callers that need
-  * random access can `.toSeq`, accepting the same memory profile). When
-  * the reduce function is associative+commutative, use [[runAssociative]]
-  * to get map-side partial aggregation (the reference has none —
-  * SURVEY.md §2.1 O8).
+  * Scale notes (100 TB): the default path bundles values map-side, then
+  * runs one sort-based `groupByKey(...).mapGroups` shuffle on the key.
+  * Each map task collects its values per key until their estimated size
+  * reaches a fixed byte budget ([[BundleBytes]]), then emits one
+  * `(k, values)` chunk per key, so the shuffle carries chunks, not one
+  * row per value, and a task's buffer stays bounded whatever the value
+  * sizes. The reduce side still groups by the encoded key and streams
+  * each key's chunks to `reduceFcn` as one lazy `Iterator`, holding one
+  * chunk at a time (the reference materializes a list per key in reducer
+  * memory, mapreduce.py:118 — callers that need random access can
+  * `.toSeq`, accepting the same memory profile). Bundling only decides
+  * which values travel together; `reduceFcn` is still called once per
+  * key with all of its values. When the reduce function is
+  * associative+commutative, use [[runAssociative]] to get map-side
+  * partial aggregation (the reference has none — SURVEY.md §2.1 O8).
   */
 object MapReduce {
 
@@ -46,10 +61,12 @@ object MapReduce {
       kvEnc: Encoder[(K, V)],
       kEnc: Encoder[K],
       rEnc: Encoder[R]): Dataset[R] = {
-    val mapped = ds.flatMap(mapFcn)
     numPartitions match {
       case None =>
-        mapped.groupByKey(_._1).mapGroups((k, it) => reduceFcn(k, it.map(_._2)))
+        val chunkEnc = chunkEncoder(kvEnc)
+        ds.mapPartitions(it => bundle(it.flatMap(mapFcn), BundleBytes))(chunkEnc)
+          .groupByKey(_._1)
+          .mapGroups((k, chunks) => reduceFcn(k, chunks.flatMap(_._2.iterator)))
       case Some(n) =>
         // Exact reference topology: hash-partition by key into n shards
         // (one shuffle — every value of a key co-locates because
@@ -58,7 +75,7 @@ object MapReduce {
         // spills, so a shard larger than executor memory still works —
         // nothing is buffered per key unless reduceFcn itself does.
         // Requires an orderable key type (all atomics and case classes).
-        mapped
+        ds.flatMap(mapFcn)
           .repartition(n, col("_1"))
           .sortWithinPartitions("_1")
           .mapPartitions { it =>
@@ -77,6 +94,79 @@ object MapReduce {
               }
             }
           }
+    }
+  }
+
+  /** Byte budget of one map task's bundling buffer in [[run]]. Spark's
+    * own in-memory shuffle collections first check for a spill at 5 MB
+    * (`spark.shuffle.spill.initialMemoryThreshold`); this stays under it.
+    */
+  private[core] final val BundleBytes: Long = 4L << 20
+
+  /** Estimated bytes a buffered value adds beyond the value itself (its
+    * slot in the key's buffer), and a new key beyond the key itself (the
+    * hash-map entry and an empty buffer). */
+  private val ValueSlotBytes = 8L
+  private val KeyEntryBytes = 96L
+
+  /** Groups one map task's `(k, v)` pairs into `(k, values)` chunks. The
+    * pairs fill a hash map of per-key buffers until their estimated size
+    * reaches `budget`; then every buffer is emitted as one chunk and the
+    * map starts over. So a task emits at most one chunk per key per
+    * flush, and holds at most about `budget` bytes of pairs. */
+  private[core] def bundle[K, V](kvs: Iterator[(K, V)],
+      budget: Long): Iterator[(K, Seq[V])] = {
+    val keySize, valueSize = new SampledSize
+    def flush(): Iterator[(K, Seq[V])] = {
+      val groups = new java.util.HashMap[K, mutable.Builder[V, ArraySeq[V]]]()
+      var bytes = 0L
+      while (bytes < budget && kvs.hasNext) {
+        val (k, v) = kvs.next()
+        var buf = groups.get(k)
+        if (buf == null) {
+          buf = ArraySeq.untagged.newBuilder[V]
+          groups.put(k, buf)
+          bytes += keySize.of(k) + KeyEntryBytes
+        }
+        buf += v
+        bytes += valueSize.of(v) + ValueSlotBytes
+      }
+      groups.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue.result()))
+    }
+    Iterator.continually(flush()).takeWhile(_.hasNext).flatten
+  }
+
+  /** Size of each object of a stream, estimated the way Spark's
+    * `SizeTracker` does: `SizeEstimator` on a sample (the first 16
+    * objects, then every 16th), each sample standing for the objects
+    * after it until the next. */
+  private final class SampledSize {
+    private var seen = 0L
+    private var last = 0L
+    def of(x: Any): Long = {
+      if (seen < 16 || seen % 16 == 0)
+        last = if (x == null) 0L else SizeEstimator.estimate(x.asInstanceOf[AnyRef])
+      seen += 1
+      last
+    }
+  }
+
+  /** The encoder of [[bundle]]'s `(K, Seq[V])` chunks, built from the
+    * caller's two-field product encoder of `(K, V)`. */
+  private def chunkEncoder[K, V](kvEnc: Encoder[(K, V)]): Encoder[(K, Seq[V])] = {
+    val agnostic: Any = kvEnc match {
+      case e: ExpressionEncoder[_] => e.encoder
+      case a => a
+    }
+    agnostic match {
+      case p: ProductEncoder[_] if p.fields.size == 2 =>
+        val k = p.fields(0).enc.asInstanceOf[AgnosticEncoder[K]]
+        val v = p.fields(1).enc.asInstanceOf[AgnosticEncoder[V]]
+        val vs = IterableEncoder[Seq[V], V](
+          ClassTag(classOf[Seq[_]]), v, v.nullable, lenientSerialization = false)
+        Encoders.tuple(k, vs)
+      case _ => throw new IllegalArgumentException(
+        s"MapReduce.run needs a two-field product encoder for its (K, V) pairs, got $kvEnc")
     }
   }
 

@@ -62,6 +62,13 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame = apply(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame = apply(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame = apply(s, d, "lineitem")
+  /** Legacy nanos-as-long parquet conf: needed only when the generated
+    * events table stores TIMESTAMP(NANOS) (round 7+ data is plain
+    * timestamp[us] and ignores it). Gates that read the raw events table
+    * scope it with `withConfs` around their whole body, drain included. */
+  private[graft] val nanosAsLong: (String, String) =
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true"
+
   /** `events.ts` has been generated two ways across driver rounds:
     * TIMESTAMP(NANOS) parquet (rounds ≤6) — which Spark refuses outright
     * ([PARQUET_TYPE_ILLEGAL]) unless the legacy nanos-as-long flag maps it
@@ -73,21 +80,24 @@ object Tables {
     *   - TIMESTAMP_NTZ: cast to TimestampType — the session timezone is
     *     pinned to UTC in every entry point, so NTZ→LTZ is value-identical
     *     and oracle-neutral (DuckDB sees the same wall-clock instants).
-    * The nanos conf is set before the read so a nanos regeneration never
-    * fails analysis; with µs data it is a no-op.
+    * The nanos conf is scoped to the read's analysis, so a nanos
+    * regeneration never fails analysis and the caller's session comes
+    * back unchanged; with µs data it is a no-op. Executing a nanos
+    * regeneration needs the conf too, so its callers run the query inside
+    * `SessionConfs.withConfs(s, nanosAsLong)`, as the streaming gates do.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = apply(s, d, "events")
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts",
-          org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampType => df
-      case _ => // TIMESTAMP_NTZ (or any castable regeneration)
-        df.withColumn("ts", df("ts").cast(org.apache.spark.sql.types.TimestampType))
+  def events(s: SparkSession, d: String): DataFrame =
+    graft.SessionConfs.withConfs(s, nanosAsLong) {
+      val df = apply(s, d, "events")
+      df.schema("ts").dataType match {
+        case org.apache.spark.sql.types.LongType =>
+          df.withColumn("ts",
+            org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
+        case org.apache.spark.sql.types.TimestampType => df
+        case _ => // TIMESTAMP_NTZ (or any castable regeneration)
+          df.withColumn("ts", df("ts").cast(org.apache.spark.sql.types.TimestampType))
+      }
     }
-  }
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 

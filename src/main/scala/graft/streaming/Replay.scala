@@ -25,12 +25,6 @@ import org.apache.spark.sql.types.StructType
   */
 object Replay {
 
-  /** Legacy nanos-as-long parquet conf: needed only when the generated
-    * events table stores TIMESTAMP(NANOS) (round 7+ data is plain
-    * timestamp[us] and ignores it). Gates that read the raw events table
-    * scope it with `withConfs` around their whole body, drain included. */
-  private[streaming] val nanosAsLong: (String, String) = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
-
   private[streaming] val DayUs: Long = 86400L * 1000000L
 
   /** Process-local record of dumps built by [[dumpOnce]]. */
@@ -364,6 +358,35 @@ object Replay {
       f"${tag}_${sentinelSeq.incrementAndGet()}%05d.parquet")
   }
 
+  /** Collision-proof encoding of a row for the sentinel cache key.
+    * Row.toString renders Row("a,b") and Row("a","b") identically
+    * ("[a,b]"), so distinct row sets could collide and serve the wrong
+    * cached parquet. Every scalar is rendered with its class and length
+    * prefixed, so boundaries are unambiguous and values whose toString
+    * coincides ("1" the string vs 1 the long) stay apart. Nested rows,
+    * sequences, arrays and maps are encoded field by field the same way,
+    * never through their own toString (an array's is its identity hash).
+    */
+  private[streaming] def encRow(r: Row): String =
+    (0 until r.length).map(i => encField(r.get(i))).mkString("|")
+
+  private def encField(v: Any): String = v match {
+    case null => "N"
+    case r: Row => nested("Row", encRow(r))
+    case a: Array[_] => nested("Array", a.iterator.map(encField).mkString("|"))
+    case m: scala.collection.Map[_, _] => nested("Map",
+      m.iterator.map { case (k, x) => encField(k) + "|" + encField(x) }.mkString("|"))
+    case xs: Iterable[_] => nested("Seq", xs.iterator.map(encField).mkString("|"))
+    case x =>
+      val r = x.toString
+      s"${x.getClass.getName}#${r.length}:$r"
+  }
+
+  /** `(` cannot occur in a class name, so a nested value never reads as a
+    * scalar. */
+  private def nested(kind: String, body: String): String =
+    s"$kind(${body.length}:$body"
+
   /** Append `rows` to `shards` as one library-cached parquet file;
     * returns the created path, which the caller removes to restore the
     * dir pristine. */
@@ -375,20 +398,6 @@ object Replay {
     // per-run scratch dir (q222's phased src) pass a per-dir base so
     // the one-time build amortizes across runs
     val base = libBase.getOrElse(shards)
-    // Collision-proof row encoding (ADVICE r17): Row.toString renders
-    // Row("a,b") and Row("a","b") identically ("[a,b]"), so distinct row
-    // sets could collide and serve the wrong cached parquet. Length-
-    // prefixing every rendered field makes boundaries unambiguous, and
-    // the class tag separates values whose toString coincides ("1" the
-    // string vs 1 the long).
-    def encField(v: Any): String = v match {
-      case null => "N"
-      case x =>
-        val r = x.toString
-        s"${x.getClass.getName}#${r.length}:$r"
-    }
-    def encRow(r: Row): String =
-      (0 until r.length).map(i => encField(r.get(i))).mkString("|")
     val key = base + "|" + schema.map(f => f.name + ":" + f.dataType.sql)
       .mkString(",") + "|" + rows.map(encRow).mkString(";")
     val lib = sentinelLib.computeIfAbsent(key, _ =>

@@ -3,7 +3,8 @@ package graft.streaming
 import graft.{Q, QueryPack}
 import graft.SessionConfs.withConfs
 import graft.sources.Tables
-import graft.streaming.Replay.{drain, eventsStream, nanosAsLong, rmrfAll, run}
+import graft.sources.Tables.nanosAsLong
+import graft.streaming.Replay.{drain, eventsStream, rmrfAll, run}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 

@@ -89,4 +89,20 @@ class MapReducePropertySpec extends AnyFunSuite {
       }
     }
   }
+
+  test("bundle keeps every pair and emits at most one chunk per key per flush") {
+    val rnd = new Random(11)
+    for (caseNo <- 1 to 8) {
+      val kvs = List.fill(rnd.nextInt(500))((rnd.nextInt(9), rnd.nextLong()))
+      val keys = kvs.map(_._1).distinct.size
+      // budget 1 flushes after every pair; a huge one never flushes early
+      for (budget <- Seq(1L, 1L << 40)) {
+        val chunks = MapReduce.bundle(kvs.iterator, budget).toList
+        assert(chunks.flatMap { case (k, vs) => vs.map((k, _)) }.sorted === kvs.sorted,
+          s"case $caseNo budget=$budget")
+        val expected = if (budget == 1L) kvs.size else keys
+        assert(chunks.size === expected, s"case $caseNo budget=$budget")
+      }
+    }
+  }
 }

@@ -1,7 +1,14 @@
 package graft.core
 
 import graft.TestSpark
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
+
+/** A case-class key for the bundling tests (top level, so Spark can
+  * derive its encoder). */
+case class GridKey(row: Int, side: String)
 
 /** Golden ports of the reference's unit tests (mapreduce_unittest.py:13-70)
   * plus semantics pins the reference leaves implicit (SURVEY.md §5.2).
@@ -87,5 +94,105 @@ class MapReduceSpec extends AnyFunSuite {
       .toSeq.sortBy(_._1)
     assert(assoc === exp)
     assert(holistic.size === 9)
+  }
+
+  /** Collects `ds`, returning its rows and the records its shuffle
+    * exchanges wrote, read off their SQL metrics (final once `collect`
+    * has returned). */
+  private def collectWithShuffleRecords[T](ds: Dataset[T]): (Seq[T], Long) = {
+    val rows = ds.collect().toSeq
+    val written = new AdaptiveSparkPlanHelper {}.collect(ds.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e.metrics("shuffleRecordsWritten").value
+    }
+    assert(written.nonEmpty, "no shuffle exchange in the plan")
+    (rows, written.sum)
+  }
+
+  private def longs(n: Long, tasks: Int) =
+    spark.range(0, n, 1, tasks).map(identity)(Encoders.LONG)
+
+  test("holistic exchange writes one chunk per (map task, key), not one row per value") {
+    import spark.implicits._
+    val (tasks, keys, n) = (4, 5, 20000L)
+    val (rows, written) = collectWithShuffleRecords(
+      MapReduce.run[java.lang.Long, Long, Long, (Long, Long)](
+        longs(n, tasks), x => Iterator((x % keys, x)), (k, vs) => (k, vs.size.toLong)))
+    assert(rows.sortBy(_._1) === (0L until keys).map(_ -> n / keys))
+    // 5,000 longs per task fit one flush, so each task sends one chunk per key
+    assert(written <= tasks * 1 * keys, s"$written shuffle records for $n values")
+  }
+
+  test("values past the bundling byte budget flush several times and match the oracle") {
+    import spark.implicits._
+    val pad = "x" * 1000
+    val (tasks, keys) = (2, 3)
+    // about 1 KB a value: each map task holds three budgets' worth (two
+    // tasks, because one partition would need no exchange at all)
+    val n = 2 * 3 * MapReduce.BundleBytes / 1000
+    val mapF = (i: java.lang.Long) => Iterator(((i % keys).toInt, f"$i%06d" + pad))
+    val (rows, written) = collectWithShuffleRecords(
+      MapReduce.run[java.lang.Long, Int, String, (Int, Int, String)](
+        longs(n, tasks), mapF,
+        (k, vs) => {
+          val ids = vs.map(v => (v.take(6), v.length)).toSeq
+          (k, ids.map(_._2).distinct.sum, ids.map(_._1).sorted.mkString(","))
+        }))
+    val oracle = (0L until n).flatMap(i => mapF(i)).groupBy(_._1).toSeq.map { case (k, kvs) =>
+      (k, pad.length + 6, kvs.map(_._2.take(6)).sorted.mkString(","))
+    }
+    assert(rows.sortBy(_._1) === oracle.sortBy(_._1))
+    // more than one flush per task, yet nowhere near one record per
+    // value: a flush holds at least budget / 2 KB of these values
+    val maxFlushes = 1 + (n / tasks) * 2048L / MapReduce.BundleBytes
+    assert(written > tasks * keys && written <= tasks * maxFlushes * keys,
+      s"$written shuffle records for $n values in $tasks tasks")
+  }
+
+  test("nullable values (String with nulls) survive bundling") {
+    import spark.implicits._
+    val kvs = Seq(("a", "x"), ("a", null), ("b", null), ("b", null), ("c", "y"))
+    val out = MapReduce.run[(String, String), String, String, (String, Int, String)](
+      spark.createDataset(kvs).repartition(3), kv => Iterator(kv),
+      (k, vs) => {
+        val l = vs.toList
+        (k, l.count(_ == null), l.filter(_ != null).sorted.mkString(","))
+      }).collect().toSeq.sortBy(_._1)
+    assert(out === Seq(("a", 1, "x"), ("b", 2, ""), ("c", 0, "y")))
+  }
+
+  test("case-class keys group by value on both paths") {
+    import spark.implicits._
+    val mapF = (x: java.lang.Long) =>
+      Iterator((GridKey((x % 3).toInt, if (x % 2 == 0) "even" else "odd"), x.longValue))
+    val oracle = (0L until 300L).map(x => mapF(x).next()).groupBy(_._1)
+      .map { case (k, kvs) => (k.row, k.side, kvs.map(_._2).sum) }.toSeq.sorted
+    for (parts <- Seq(None, Some(3))) {
+      val got = MapReduce.run[java.lang.Long, GridKey, Long, (Int, String, Long)](
+        longs(300, 4), mapF, (k, vs) => (k.row, k.side, vs.sum), parts)
+        .collect().toSeq.sorted
+      assert(got === oracle, s"parts=$parts")
+    }
+  }
+
+  test("a reduceFcn that under-consumes its values still sees each key once") {
+    import spark.implicits._
+    val keys = 7L
+    val out = MapReduce.run[java.lang.Long, Long, Long, (Long, Long)](
+      longs(1000, 4), x => Iterator((x % keys, x.longValue)),
+      (k, vs) => (k, vs.next())).collect().toSeq.sortBy(_._1)
+    assert(out.map(_._1) === (0L until keys))
+    out.foreach { case (k, v) => assert(v % keys === k) }
+    val none = MapReduce.run[java.lang.Long, Long, Long, Long](
+      longs(1000, 4), x => Iterator((x % keys, x.longValue)), (k, _) => k)
+    assert(none.collect().toSeq.sorted === (0L until keys))
+  }
+
+  test("a (K, V) encoder that is not a two-field product is rejected") {
+    val e = intercept[IllegalArgumentException] {
+      MapReduce.run[java.lang.Long, Int, Long, Int](
+        longs(10, 1), x => Iterator((x.intValue, x.longValue)), (k, _) => k)(
+        Encoders.kryo[(Int, Long)], Encoders.scalaInt, Encoders.scalaInt)
+    }
+    assert(e.getMessage.contains("two-field product encoder"))
   }
 }

@@ -23,6 +23,18 @@ class SourcesSpec extends AnyFunSuite {
       col("o_totalprice"),
       date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_date"))
 
+  test("Tables.events leaves an unset nanosAsLong conf unset") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    // getOption returns a registered key's default; getAll holds set keys only
+    val prev = spark.conf.getAll.get(key)
+    spark.conf.unset(key)
+    try {
+      assert(Tables.events(spark, sf).collect().nonEmpty)
+      assert(!spark.conf.getAll.contains(key),
+        "Tables.events left nanosAsLong explicitly set on the caller's session")
+    } finally prev.foreach(spark.conf.set(key, _))
+  }
+
   test("parquet sink/source round-trip") {
     val dir = Files.createTempDirectory("graft-pq").toString
     orders.write.mode("overwrite").parquet(dir)

@@ -91,4 +91,16 @@ class ReplaySpec extends AnyFunSuite {
       "the sentinel was never appended")
     assert(listing === before)
   }
+
+  test("sentinel cache keys separate rows whose nested fields render alike") {
+    import org.apache.spark.sql.Row
+    assert(Replay.encRow(Row("a,b")) !== Replay.encRow(Row("a", "b")))
+    // nested values render through Row/Seq toString as "[a,b]" / "List(a,b)"
+    assert(Replay.encRow(Row(Row("a,b"))) !== Replay.encRow(Row(Row("a", "b"))))
+    assert(Replay.encRow(Row(Seq("a,b"), 1)) !== Replay.encRow(Row(Seq("a", "b"), 1)))
+    assert(Replay.encRow(Row(Map("a" -> "b,c"))) !== Replay.encRow(Row(Map("a,b" -> "c"))))
+    // an array's toString is its identity hash: equal contents, equal keys
+    assert(Replay.encRow(Row(Array(1L, 2L))) === Replay.encRow(Row(Array(1L, 2L))))
+    assert(Replay.encRow(Row(Array(1L, 2L))) !== Replay.encRow(Row(Array(12L))))
+  }
 }
