@@ -1,36 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
   *
-  * Session mirrors a production deployment shrunk to one node: AQE on
-  * (runtime partition coalescing + skew-join splitting), shuffle
-  * parallelism = cores (not the 200 default), UTC. A short warm-up job
-  * absorbs JIT/codegen/filesystem startup so the first measured query
-  * isn't charged for session spin-up.
+  * Session from [[GraftSession]]. A short warm-up job absorbs
+  * JIT/codegen/filesystem startup so the first measured query isn't
+  * charged for session spin-up.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // default codegen class cache (100 entries) evicts the warm pass's
-      // compiled stages across 66 queries; keep every compilation hot
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse_bench").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench")
     // warm-up: JIT, codegen pipeline, parquet footer reads
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).collect()

@@ -1,33 +1,23 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: per-JOB decomposition of a query invocation (guide §1 —
   * measure first). Registers a listener, runs each named query once
   * warm + once measured, and prints every Spark job's wall time, task
   * count and shuffle bytes with its call site, so "where do the 3 s
-  * go" is answered by data instead of plan-reading. Not part of the
-  * driver contract (same status as [[Profile]]).
+  * go" is answered by data instead of plan-reading. With `--explain`,
+  * each query's formatted physical plan is printed first. Not part of
+  * the driver contract.
   *
-  * Usage: runMain graft.ProfileJobs <sfDir> <query ...>
+  * Usage: runMain graft.ProfileJobs <sfDir> [--explain] <query ...>
   */
 object ProfileJobs {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-profile-jobs")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse_pj").toString)
-      .getOrCreate()
+    val explain = args.contains("--explain")
+    val names = args.drop(1).filterNot(_ == "--explain")
+    val spark = GraftSession("graft-profile-jobs")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000).selectExpr("sum(id)").collect()
 
@@ -94,6 +84,11 @@ object ProfileJobs {
     }
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
+      if (explain) {
+        println(s"==== $name plan ====")
+        println(fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+      }
       // warm pass: scratch layouts, codegen, JIT — outside the record
       try fn(spark, sfDir).count() catch { case scala.util.control.NonFatal(e) =>
         println(s"warm $name failed: ${e.getMessage}") }

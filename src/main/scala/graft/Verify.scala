@@ -1,27 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // static conf — must be set at build; bucketed-table queries
-      // (q77) saveAsTable here rather than into the driver's cwd. Fresh
-      // per run: a REUSED dir + fresh in-memory catalog would make
-      // saveAsTable refuse ("managed table location already exists").
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_warehouse_verify").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-verify")
     new java.io.File(outDir).mkdirs()
     // optional selection (comma-separated regexes) for targeted local
     // re-verification; the driver never sets it → always the full dump

@@ -109,8 +109,8 @@ private[graft] object SessionConfs {
   }
 }
 
-/** Registry of PROCESS-PINNED localCheckpoint blocks, and the one
-  * process cache of pinned checkpoint frames.
+/** Registry of PROCESS-PINNED localCheckpoint blocks, and the pinned
+  * checkpoint frames query packs reuse through [[Memo]].
   *
   * Query packs cache an eagerly-checkpointed frame per (purpose, source
   * dir) through [[cached]] (e.g. Dedup's shingle frame, which five gates
@@ -121,50 +121,18 @@ private[graft] object SessionConfs {
   * therefore exempts ids registered here — and ONLY these: per-call
   * checkpoints (q115's per-iteration rank frames, q165's stage pins)
   * still get reclaimed. Pinned footprint is bounded by design: one small
-  * frame per key. Process-local on purpose: a fresh process recomputes,
-  * so a regenerated source table can never be shadowed.
+  * frame per key.
   */
 object PinnedBlocks {
   private val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-  private val entries =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  /** Held on the miss path only. Reentrant because builds nest (q44's
-    * verified pairs build from the shingle frame, the undirected edge
-    * frame from the directed one) — which is also why a miss cannot
-    * build inside `entries.compute`: ConcurrentHashMap forbids updating
-    * other mappings of the same map from within compute. */
-  private val missLock = new java.util.concurrent.locks.ReentrantLock()
 
-  /** The pinned checkpoint of `build` cached under `key`. An entry is
-    * reused only when its blocks live on the CALLER's SparkContext and
-    * that context is still running: checkpoint blocks are context-owned,
-    * so a sibling session of the same context shares the frame (releasing
-    * on mere session mismatch would unpersist truncated-lineage blocks
-    * out from under the sibling's in-flight jobs), while a stopped-and-
-    * recreated context means the blocks are gone. A stale entry is
-    * released when it is replaced, so its ids never stay pinned. Hits are
-    * lock-free. */
-  def cached(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    def live(df: DataFrame) = {
-      val sc = df.sparkSession.sparkContext
-      (sc eq s.sparkContext) && !sc.isStopped
-    }
-    val hit = entries.get(key)
-    if (hit != null && live(hit)) hit
-    else {
-      missLock.lock()
-      try {
-        val cur = entries.get(key)
-        if (cur != null && live(cur)) cur
-        else {
-          if (cur != null) { entries.remove(key); release(cur) }
-          val fresh = pinnedCheckpoint(build)
-          entries.put(key, fresh)
-          fresh
-        }
-      } finally missLock.unlock()
-    }
-  }
+  /** The pinned checkpoint of `build` cached under `key`, owned by the
+    * caller's SparkContext: checkpoint blocks are context-owned, so a
+    * sibling session of the same context shares the frame, while a
+    * stopped-and-recreated context means the blocks are gone and the
+    * stale entry is released. */
+  def cached(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    Memo.owned(("pinned", key), s.sparkContext, release)(pinnedCheckpoint(build))
 
   /** Eagerly localCheckpoint `df` and pin the resulting blocks.
     *
@@ -184,10 +152,11 @@ object PinnedBlocks {
 
   def isPinned(id: Int): Boolean = ids.contains(id)
 
-  /** Unpin a replaced entry and release its blocks (a stale entry bound
-    * to a stopped context would otherwise leave its ids pinned forever,
-    * invisible to [[clearUnpinned]]). Safe on a dead SparkContext:
-    * unpersist is best-effort, the id removal is what matters. */
+  /** Unpin a swept or replaced entry and release its blocks (a stale
+    * entry bound to a stopped context would otherwise leave its ids
+    * pinned forever, invisible to [[clearUnpinned]]). Safe on a dead
+    * SparkContext: unpersist is best-effort, the id removal is what
+    * matters. */
   private def release(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>

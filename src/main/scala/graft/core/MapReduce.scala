@@ -258,7 +258,7 @@ object MapReduce {
       else {
         // Drop the first line of the (single) file without collecting it:
         // zipWithIndex is a narrow pass over already-ordered text splits.
-        lines0.rdd.zipWithIndex.filter(_._2 > 0L).map(_._1).toDS()
+        lines0.rdd.zipWithIndex().filter(_._2 > 0L).map(_._1).toDS()
       }
     run(lines, mapFcn, reduceFcn, numPartitions)
   }
@@ -279,6 +279,6 @@ object MapReduce {
       rEnc: Encoder[R]): Dataset[R] = {
     val files = spark.read.textFile(indexPath)
       .collect().map(_.trim).filter(_.nonEmpty) // index file is small: file list only
-    run(spark.read.textFile(files: _*), mapFcn, reduceFcn, numPartitions)
+    run(spark.read.textFile(files.toIndexedSeq: _*), mapFcn, reduceFcn, numPartitions)
   }
 }

@@ -54,15 +54,6 @@ object Clustering extends QueryPack {
   private[operators] val MaxIters = 400
   private[operators] val Eps = 1e-9
 
-  /** Process-local model cache keyed by sf dir (same contract as the
-    * FileIO layout cache: a fresh process always refits, so regenerated
-    * source data can never be served a stale model). */
-  private val fitted =
-    new java.util.concurrent.ConcurrentHashMap[String, KmeansFit]()
-
-  /** TEST-ONLY: forget fitted models, simulating a fresh process. */
-  private[operators] def forgetFitsForTest(): Unit = fitted.clear()
-
   /** Corpus with norms (same projection as Similarity/q98). */
   private def corpus(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
@@ -99,9 +90,10 @@ object Clustering extends QueryPack {
     * deterministic `vec_id < K` subset q98 starts from, so the one-step
     * gate and the fixpoint share their first iteration. One Spark action
     * per iteration: a single (cid, pos) aggregation carrying the mean
-    * sums AND (on the pos=0 slice) the per-cid inertia contribution. */
+    * sums AND (on the pos=0 slice) the per-cid inertia contribution.
+    * Fitted once per process per sf dir ([[graft.Memo]]). */
   private[operators] def fit(s: SparkSession, dir: String): KmeansFit =
-    fitted.computeIfAbsent(dir, _ => {
+    graft.Memo(("kmeans", dir)) {
       val e = corpus(s, dir).persist()
       try {
         var cents: Array[Array[Double]] = e.filter(col("vec_id") < K)
@@ -133,7 +125,7 @@ object Clustering extends QueryPack {
         }
         KmeansFit(cents, inertias.reverse, iters, converged)
       } finally e.unpersist()
-    })
+    }
 
   /** q102: the convergence gate — SELF-VERIFYING (centroid values are
     * float-summation-order sensitive, so the gate pins the invariants a

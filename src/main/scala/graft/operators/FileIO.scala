@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryPack}
+import graft.{Memo, Q, QueryPack}
 import graft.core.MapReduce
 import graft.sources.Tables
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -19,10 +19,17 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField
   * through a Spark sink first, then runs the file-based API over the
   * dump and aggregates. The oracle runs against the original table, so
   * the gate covers the whole loop: sink write → text scan → header skip
-  * → parse → shuffle → reduce. Scratch files live under java.io.tmpdir
-  * (never the read-only testdata), addressed per-sfDir so scale factors
-  * don't collide, written through the Hadoop FS API (same code path
-  * works on HDFS/S3 at cluster scale).
+  * → parse → shuffle → reduce. Scratch files live under a per-process
+  * directory in java.io.tmpdir (never the read-only testdata), addressed
+  * per-sfDir so scale factors don't collide, written through the Hadoop
+  * FS API (same code path works on HDFS/S3 at cluster scale).
+  *
+  * Writing a bucketed or partitioned layout is one-time ETL whose cost
+  * amortizes over every later co-located join or pruned scan (that
+  * amortization is the point of the layout), so each gate builds its
+  * input through [[Memo.layout]]: a repeated run against the same source
+  * reuses it and steady-state timings measure the read path, while a
+  * different sfDir or a fresh process rewrites it.
   *
   * Scale notes: the dumps here are small dims by design (the gate is
   * about plumbing, not volume); the file APIs themselves split files
@@ -32,30 +39,21 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField
   */
 object FileIO extends QueryPack {
 
-  /** Per-sfDir scratch root so sf0.001/sf0.01/sf0.1 runs don't collide
+  /** This process's scratch root: unique to the JVM, so two processes on
+    * one fixture never share a layout, and removed at exit. Every layout
+    * is rebuilt by a fresh process anyway ([[Memo.layout]]). */
+  private lazy val scratchRoot: String = {
+    val root = java.nio.file.Files.createTempDirectory("graft_scratch_")
+    sys.addShutdownHook {
+      org.apache.hadoop.fs.FileUtil.fullyDelete(root.toFile); ()
+    }
+    root.toString
+  }
+
+  /** Per-sfDir scratch path so sf0.001/sf0.01/sf0.1 runs don't collide
     * (shared with the streaming pack — one scheme, one place). */
   private[graft] def scratch(dir: String, name: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_fileio_${math.abs(dir.hashCode)}/$name"
-
-  /** Layouts (bucketed tables, partitioned dumps) already written by
-    * THIS process, keyed target → source sfDir. Writing a bucketed or
-    * partitioned layout is one-time ETL whose cost amortizes over every
-    * subsequent co-located join / pruned scan (that amortization is the
-    * entire point of the layout), so a repeated run against the same
-    * source reuses it and steady-state timings measure the read path. A
-    * different sfDir re-writes (the target would otherwise hold the
-    * wrong scale's data), and the cache is process-local on purpose: a
-    * fresh process always rewrites, so a regenerated source table can
-    * never be shadowed by a stale on-disk layout (same rule as the
-    * streaming pack's day shards). */
-  private val layoutSource =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** TEST-ONLY: forget this process's layout writes, simulating a fresh
-    * process. The cache contract above says a fresh process must rewrite
-    * every layout rather than trust what's on disk; FileIOSpec poisons
-    * the on-disk layouts and uses this to prove the rewrite happens. */
-  private[operators] def forgetLayoutsForTest(): Unit = layoutSource.clear()
+    s"$scratchRoot/graft_fileio_${math.abs(dir.hashCode)}/$name"
 
   /** Register (idempotently) the per-sfDir DSv2 TSV catalog and its
     * `lake` namespace; returns the catalog name. One definition for the
@@ -95,13 +93,12 @@ object FileIO extends QueryPack {
     val out = scratch(dir, "customer_tsv")
     // the dump is FIXTURE, not the measured operation (that's the
     // header-skipping text scan) — build once per source dir
-    if (layoutSource.get(out) != dir) {
+    Memo.layout(out, dir) {
       Tables.customer(s, dir)
         .select(col("c_mktsegment"), col("c_name"))
         .coalesce(1) // one part file ⇒ exactly one header line to skip
         .write.mode("overwrite").option("sep", "\t").option("header", "true")
         .csv(out)
-      layoutSource.put(out, dir)
     }
     MapReduce.runOnTextFile[String, String, (String, Long, String)](
       s, s"$out/part-*", // glob part files; skips the _SUCCESS marker
@@ -132,7 +129,7 @@ object FileIO extends QueryPack {
     val indexPath = new Path(scratch(dir, "orders_index.txt"))
     // dump + index file are FIXTURE (the measured operation is the
     // file-index scan) — build once per source dir
-    if (layoutSource.get(out) != dir) {
+    Memo.layout(out, dir) {
       Tables.orders(s, dir)
         .select(col("o_orderpriority"), col("o_orderkey"))
         .repartition(4) // several shards: the index must list more than one
@@ -143,7 +140,6 @@ object FileIO extends QueryPack {
         .sorted
       val os = fs.create(indexPath, true)
       try os.write(shards.mkString("\n").getBytes("UTF-8")) finally os.close()
-      layoutSource.put(out, dir)
     }
     MapReduce.runOnFileIndex[String, Long, (String, Long)](
       s, indexPath.toString,
@@ -199,9 +195,8 @@ object FileIO extends QueryPack {
     * orders and customer bucketBy(16) on the join key, sorted within
     * buckets. Rebuilt only when the source dir changes. */
   private def ensureBucketedTables(s: SparkSession, dir: String): Unit = {
-    if (layoutSource.get("graft_bkt") != dir ||
-        !s.catalog.tableExists("graft_orders_bkt") ||
-        !s.catalog.tableExists("graft_customer_bkt")) {
+    Memo.layout("graft_bkt", dir, s.catalog.tableExists("graft_orders_bkt") &&
+        s.catalog.tableExists("graft_customer_bkt")) {
       Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         .write.mode("overwrite").bucketBy(16, "o_custkey")
@@ -210,7 +205,6 @@ object FileIO extends QueryPack {
         .select(col("c_custkey"), col("c_mktsegment"))
         .write.mode("overwrite").bucketBy(16, "c_custkey")
         .sortBy("c_custkey").saveAsTable("graft_customer_bkt")
-      layoutSource.put("graft_bkt", dir)
     }
   }
 
@@ -269,11 +263,10 @@ object FileIO extends QueryPack {
     * round-trip type mangling (decimal widths, nulls) fails the hash. */
   private def q99(s: SparkSession, dir: String): DataFrame = {
     val out = scratch(dir, "lineitem_orc")
-    if (layoutSource.get(out) != dir) {
+    Memo.layout(out, dir) {
       Tables.lineitem(s, dir)
         .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
         .write.mode("overwrite").orc(out)
-      layoutSource.put(out, dir)
     }
     s.read.orc(out)
       .filter(col("l_quantity") <= 25)
@@ -300,11 +293,10 @@ object FileIO extends QueryPack {
     * fails the hash. */
   private def q101(s: SparkSession, dir: String): DataFrame = {
     val out = scratch(dir, "orders_json")
-    if (layoutSource.get(out) != dir) {
+    Memo.layout(out, dir) {
       Tables.orders(s, dir)
         .select("o_orderkey", "o_orderpriority", "o_totalprice")
         .write.mode("overwrite").json(out)
-      layoutSource.put(out, dir)
     }
     val schema = StructType(Seq(
       StructField("o_orderkey", LongType),
@@ -329,13 +321,12 @@ object FileIO extends QueryPack {
     * the oracle reads the original parquet. */
   private def q131(s: SparkSession, dir: String): DataFrame = {
     val out = scratch(dir, "customer_csv_gz")
-    if (layoutSource.get(out) != dir) {
+    Memo.layout(out, dir) {
       Tables.customer(s, dir)
         .select("c_custkey", "c_mktsegment", "c_nationkey")
         .repartition(4) // shard count = read parallelism for .gz
         .write.mode("overwrite").option("codec", "gzip")
         .csv(out)
-      layoutSource.put(out, dir)
     }
     val schema = StructType(Seq(
       StructField("c_custkey", LongType),
@@ -360,7 +351,7 @@ object FileIO extends QueryPack {
     * mechanism AND its cost. */
   private def q132(s: SparkSession, dir: String): DataFrame = {
     val root = scratch(dir, "orders_evolved")
-    if (layoutSource.get(root) != dir) {
+    Memo.layout(root, dir) {
       val ord = Tables.orders(s, dir)
       ord.filter(col("o_orderkey") % 2 === 0)
         .select("o_orderkey", "o_orderpriority")
@@ -368,7 +359,6 @@ object FileIO extends QueryPack {
       ord.filter(col("o_orderkey") % 2 === 1)
         .select("o_orderkey", "o_orderpriority", "o_totalprice")
         .write.mode("overwrite").parquet(s"$root/drop=new")
-      layoutSource.put(root, dir)
     }
     s.read.option("mergeSchema", "true").parquet(root)
       .groupBy("o_orderpriority")
@@ -387,12 +377,11 @@ object FileIO extends QueryPack {
     * the difference between scanning a day and scanning a year. */
   private def q86(s: SparkSession, dir: String): DataFrame = {
     val out = scratch(dir, "events_by_day")
-    if (layoutSource.get(out) != dir) {
+    Memo.layout(out, dir) {
       Tables.events(s, dir)
         .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
         .drop("ts") // nanos-derived ts not needed downstream; day carries it
         .write.mode("overwrite").partitionBy("day").parquet(out)
-      layoutSource.put(out, dir)
     }
     s.read.parquet(out)
       .filter(col("day") >= "2024-01-08" && col("day") <= "2024-01-14")
@@ -417,14 +406,13 @@ object FileIO extends QueryPack {
     val tricky = concat(col("c_name"), lit(",\""), col("c_mktsegment"),
       lit("\"\n"), col("c_nationkey"))
     val out = scratch(dir, "customer_csv_quoted")
-    if (layoutSource.get(out) != dir) {
+    Memo.layout(out, dir) {
       Tables.customer(s, dir)
         .select(col("c_custkey"), tricky.as("tricky"))
         .repartition(4)
         .write.mode("overwrite")
         .option("escape", "\"").option("multiLine", "true")
         .csv(out)
-      layoutSource.put(out, dir)
     }
     val schema = StructType(Seq(
       StructField("c_custkey", LongType),
@@ -446,8 +434,19 @@ object FileIO extends QueryPack {
     * table). */
   private def q158(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Exact.dec
+    s.read.parquet(dynPartLayout(s, dir))
+      .groupBy("prio")
+      .agg(count(lit(1)).as("n"),
+        round(sum(dec(col("o_totalprice"))).cast("double"), 2).as("total"))
+      .orderBy("prio")
+  }
+
+  /** q158's layout, shared with q163: orders partitioned by priority,
+    * then the 1-URGENT partition reloaded (prices doubled) in dynamic
+    * overwrite mode. */
+  private def dynPartLayout(s: SparkSession, dir: String): String = {
     val root = scratch(dir, "orders_dynpart")
-    if (layoutSource.get(root) != dir) {
+    Memo.layout(root, dir) {
       val ord = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_totalprice"),
           col("o_orderpriority").as("prio"))
@@ -457,13 +456,7 @@ object FileIO extends QueryPack {
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("prio").parquet(root)
-      layoutSource.put(root, dir)
     }
-    s.read.parquet(root)
-      .groupBy("prio")
-      .agg(count(lit(1)).as("n"),
-        round(sum(dec(col("o_totalprice"))).cast("double"), 2).as("total"))
-      .orderBy("prio")
   }
 
   /** q162: PERMISSIVE source-level malformed-record routing — the CSV
@@ -478,7 +471,7 @@ object FileIO extends QueryPack {
     * preserved raw form. */
   private def q162(s: SparkSession, dir: String): DataFrame = {
     val out = scratch(dir, "customer_csv_malformed")
-    if (layoutSource.get(out) != dir) {
+    Memo.layout(out, dir) {
       Tables.customer(s, dir)
         .select(col("c_custkey"),
           when(col("c_custkey") % 7 === 0,
@@ -486,7 +479,6 @@ object FileIO extends QueryPack {
             .otherwise(col("c_nationkey").cast("string")).as("natkey"))
         .repartition(4)
         .write.mode("overwrite").csv(out)
-      layoutSource.put(out, dir)
     }
     val schema = StructType(Seq(
       StructField("c_custkey", LongType),
@@ -512,9 +504,7 @@ object FileIO extends QueryPack {
     * `_metadata.file_path`, verified against the partition values the
     * q86-style layout encoded. */
   private def q163(s: SparkSession, dir: String): DataFrame = {
-    val root = scratch(dir, "orders_dynpart") // q158's partitioned layout
-    if (layoutSource.get(root) != dir) { q158(s, dir).collect(); () }
-    s.read.parquet(root)
+    s.read.parquet(dynPartLayout(s, dir))
       .select(col("prio"),
         // partition values are URL-encoded in paths ("4-NOT%20SPECIFIED")
         url_decode(regexp_extract(col("_metadata.file_path"),
@@ -538,7 +528,7 @@ object FileIO extends QueryPack {
   private def q172(s: SparkSession, dir: String): DataFrame = {
     val db = s"graft_cat_${math.abs(dir.hashCode)}"
     val tbl = s"$db.customer_managed"
-    if (layoutSource.get(tbl) != dir) {
+    Memo.layout(tbl, dir) {
       s.sql(s"CREATE DATABASE IF NOT EXISTS $db")
       s.sql(s"DROP TABLE IF EXISTS $tbl")
       val c = Tables.customer(s, dir)
@@ -547,7 +537,6 @@ object FileIO extends QueryPack {
         .write.saveAsTable(tbl)
       c.filter(col("c_custkey") % 2 === 1)
         .write.insertInto(tbl)
-      layoutSource.put(tbl, dir)
     }
     import graft.functions.Exact.dec
     s.table(tbl)
@@ -571,16 +560,11 @@ object FileIO extends QueryPack {
     * amortizes via the layout cache like the other layout gates. */
   private def q199(s: SparkSession, dir: String): DataFrame = {
     val out = scratch(dir, "nation_with_corrupt")
-    if (layoutSource.get(out) != dir) {
+    Memo.layout(out, dir) {
       Tables.nation(s, dir).write.mode("overwrite").parquet(out)
       val bad = new java.io.FileOutputStream(s"$out/zz_corrupt.parquet")
       try bad.write("this is not a parquet file".getBytes("UTF-8"))
       finally bad.close()
-      // put only after a successful write (same rule as every other layout
-      // gate): a failed write must not mark the layout as built, or later
-      // calls would silently read a partial directory — doubly dangerous
-      // here because ignoreCorruptFiles=true would mask the damage.
-      layoutSource.put(out, dir)
     }
     s.read
       .schema(Tables.nation(s, dir).schema)
@@ -610,7 +594,7 @@ object FileIO extends QueryPack {
     val out = scratch(dir, "customer_uri_shards")
     val indexPath = new Path(scratch(dir, "customer_uri_index.txt"))
     val fs = FileSystem.get(new java.net.URI(out), s.sparkContext.hadoopConfiguration)
-    if (layoutSource.get(out) != dir) {
+    Memo.layout(out, dir) {
       Tables.customer(s, dir)
         .select(concat_ws("\t", col("c_mktsegment"),
           round(col("c_acctbal") * 100).cast("long")).as("value"))
@@ -632,7 +616,6 @@ object FileIO extends QueryPack {
         s"file:$out/part-0000[23]*") // file: glob over the remaining shards
       val os = fs.create(indexPath, true)
       try os.write(lines.mkString("\n").getBytes("UTF-8")) finally os.close()
-      layoutSource.put(out, dir)
     }
     MapReduce.runOnFileIndex[String, Long, (String, Long, Long)](
       s, indexPath.toString,
@@ -668,7 +651,7 @@ object FileIO extends QueryPack {
     val smallDir = scratch(dir, "orders_small_files")
     val bigDir = scratch(dir, "orders_compacted")
     val rowsPerFile = 25000L
-    if (layoutSource.get(bigDir) != dir) {
+    Memo.layout(bigDir, dir) {
       val ord = Tables.orders(s, dir)
         .select("o_orderkey", "o_totalprice", "o_orderpriority")
       ord.repartition(64).write.mode("overwrite").parquet(smallDir)
@@ -677,7 +660,6 @@ object FileIO extends QueryPack {
       s.read.parquet(smallDir)
         .repartition(nTarget)
         .write.mode("overwrite").parquet(bigDir)
-      layoutSource.put(bigDir, dir)
     }
     def dataFiles(p: String): Long = {
       val fs = FileSystem.get(new java.net.URI(p),
@@ -722,13 +704,12 @@ object FileIO extends QueryPack {
     * hash-mismatch). */
   private def q208(s: SparkSession, dir: String): DataFrame = {
     val out = scratch(dir, "orders_zonemap")
-    if (layoutSource.get(out) != dir) {
+    Memo.layout(out, dir) {
       Tables.orders(s, dir)
         .select("o_orderkey", "o_totalprice", "o_orderdate")
         .withColumn("zone", date_format(col("o_orderdate"), "yyyy-MM"))
         .repartition(col("zone")) // one shuffle; each month lands in one task
         .write.mode("overwrite").partitionBy("zone").parquet(out)
-      layoutSource.put(out, dir)
     }
     val lo = "1997-03-01"
     val hiExcl = "1997-06-01"
@@ -744,7 +725,7 @@ object FileIO extends QueryPack {
     val survivors = manifest
       .filter(_.getBoolean(1)).map(_.getString(0)).sorted
     import graft.functions.Exact.dec
-    s.read.parquet(survivors: _*) // pruned scan: only intersecting files
+    s.read.parquet(survivors.toIndexedSeq: _*) // pruned scan: only intersecting files
       .filter(col("o_orderdate") >= lo && col("o_orderdate") < hiExcl)
       .agg(count(lit(1)).as("n_rows"),
         round(sum(dec(col("o_totalprice"))).cast("double"), 2).as("price_sum"))
@@ -770,13 +751,12 @@ object FileIO extends QueryPack {
   private def q209(s: SparkSession, dir: String): DataFrame = {
     val out = scratch(dir, "orders_sorted_export")
     val nShards = 8
-    if (layoutSource.get(out) != dir) {
+    Memo.layout(out, dir) {
       Tables.orders(s, dir)
         .select("o_orderkey", "o_totalprice")
         .repartitionByRange(nShards, col("o_totalprice"), col("o_orderkey"))
         .sortWithinPartitions("o_totalprice", "o_orderkey")
         .write.mode("overwrite").parquet(out)
-      layoutSource.put(out, dir)
     }
     val key = struct(col("o_totalprice"), col("o_orderkey"))
     val manifest = s.read.parquet(out)
@@ -830,12 +810,11 @@ object FileIO extends QueryPack {
     * source, built once per source dir, loaded with its schema. */
   private[graft] def eventsTsvDf(s: SparkSession, dir: String): DataFrame = {
     val out = scratch(dir, "events_tsv_dsv2")
-    if (layoutSource.get(out) != dir) {
+    Memo.layout(out, dir) {
       Tables.events(s, dir)
         .select(eventsTsvLine.as("value"))
         .repartition(8)
         .write.mode("overwrite").text(out)
-      layoutSource.put(out, dir)
     }
     s.read.format(classOf[graft.sources.TsvSourceProvider].getName)
       .schema(org.apache.spark.sql.types.StructType.fromDDL(eventsTsvDdl))
@@ -858,7 +837,7 @@ object FileIO extends QueryPack {
     * one-split-per-gz-file plan and plain≡mixed value identity. */
   private def q300(s: SparkSession, dir: String): DataFrame = {
     val out = scratch(dir, "events_tsv_mixed_gz")
-    if (layoutSource.get(out) != dir) {
+    Memo.layout(out, dir) {
       // same dialect as eventsTsvDf by construction (shared exprs)
       val base = Tables.events(s, dir)
         .select(col("event_id"), eventsTsvLine.as("value"))
@@ -867,7 +846,6 @@ object FileIO extends QueryPack {
       base.filter(col("event_id") % 2 === 1).select("value")
         .repartition(4).write.mode("append")
         .option("compression", "gzip").text(out)
-      layoutSource.put(out, dir)
     }
     s.read.format(classOf[graft.sources.TsvSourceProvider].getName)
       .schema(org.apache.spark.sql.types.StructType.fromDDL(eventsTsvDdl))
@@ -1166,15 +1144,13 @@ object FileIO extends QueryPack {
     * (same amortization contract as every layout here). */
   private[graft] def dppLayout(s: SparkSession, dir: String): String = {
     val out = scratch(dir, "lineitem_by_month")
-    if (layoutSource.get(out) != dir) {
+    Memo.layout(out, dir) {
       Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_extendedprice"), col("l_shipdate"))
         .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
         .repartition(col("ship_month"))
         .write.mode("overwrite").partitionBy("ship_month").parquet(out)
-      layoutSource.put(out, dir)
     }
-    out
   }
 
   /** q268's frame, shared with PlanSpec's dynamicpruning pin. */
@@ -1249,7 +1225,7 @@ object FileIO extends QueryPack {
   private def q269(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Exact.dec
     val out = rebalancedOrdersPath(dir)
-    if (layoutSource.get(out) != dir) {
+    Memo.layout(out, dir) {
       graft.SessionConfs.withConfs(s, rebalanceConfs: _*) {
         Tables.orders(s, dir)
           .select(col("o_orderkey"), col("o_totalprice"), col("o_custkey"))
@@ -1261,7 +1237,6 @@ object FileIO extends QueryPack {
           .hint("rebalance", col("status_class"))
           .write.mode("overwrite").partitionBy("status_class").parquet(out)
       }
-      layoutSource.put(out, dir)
     }
     s.read.parquet(out)
       .groupBy(col("status_class").cast("string").as("status_class"))
@@ -1276,7 +1251,7 @@ object FileIO extends QueryPack {
   private[graft] def spjLayout(s: SparkSession, dir: String): (String, String) = {
     val clicks = scratch(dir, "spj_clicks")
     val purchases = scratch(dir, "spj_purchases")
-    if (layoutSource.get(clicks) != dir) {
+    Memo.layout(clicks, dir) {
       def side(evType: String, out: String): Unit =
         Tables.events(s, dir)
           .filter(col("event_type") === evType)
@@ -1290,8 +1265,6 @@ object FileIO extends QueryPack {
           .option("sep", "\t").csv(out)
       side("click", clicks)
       side("purchase", purchases)
-      layoutSource.put(clicks, dir)
-      layoutSource.put(purchases, dir)
     }
     (clicks, purchases)
   }
@@ -1858,7 +1831,7 @@ object FileIO extends QueryPack {
     * reordering needs. Returns the database name. */
   private[graft] def cboSetup(s: SparkSession, dir: String): String = {
     val db = s"graft_cbo_${math.abs(dir.hashCode)}"
-    if (layoutSource.get(db) != dir) {
+    Memo.layout(db, dir) {
       s.sql(s"CREATE DATABASE IF NOT EXISTS $db")
       Tables.lineitem(s, dir)
         .select("l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice")
@@ -1869,9 +1842,7 @@ object FileIO extends QueryPack {
         .write.mode("overwrite").saveAsTable(s"$db.supplier_cbo")
       Seq("lineitem_cbo", "part_cbo", "supplier_cbo").foreach(t =>
         s.sql(s"ANALYZE TABLE $db.$t COMPUTE STATISTICS FOR ALL COLUMNS"))
-      layoutSource.put(db, dir)
     }
-    db
   }
 
   /** q265's star query, written in the deliberately WORST syntactic

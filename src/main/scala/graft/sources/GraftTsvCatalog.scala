@@ -110,8 +110,6 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
     else None
   private def tableDir(ident: Identifier): java.io.File =
     new java.io.File(nsDir(ident.namespace()), ident.name())
-  private def tableDirOpt(ident: Identifier): Option[java.io.File] =
-    nsDirOpt(ident.namespace()).map(new java.io.File(_, ident.name()))
   private def schemaFile(dir: java.io.File): java.io.File =
     new java.io.File(dir, "_graft_schema")
 

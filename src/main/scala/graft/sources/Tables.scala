@@ -15,45 +15,21 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Resolved-relation cache per (session, dir, table) — METADATA
-    * caching, not data caching (r17, guide §6). Every bare
+  /** The resolved relation of `dir/name.parquet`, memoized per (session,
+    * dir, table) in [[graft.Memo]] with the session's context as owner —
+    * METADATA caching, not data caching (r17, guide §6). Every bare
     * `spark.read.parquet(path)` re-resolves the relation: a fresh
     * InMemoryFileIndex plus parquet schema inference, which runs a
     * Spark JOB to read footers — measured ~100 ms per call at sf0.1 vs
     * ~10 ms reusing the resolved frame, paid by almost every query
     * invocation for every table it touches. A production deployment
-    * reads through a catalog whose table metadata is resolved once;
-    * per-query schema re-inference is a bare-path artifact, and the
-    * fixtures are immutable inputs (the [[cachedCount]] contract), so
-    * the resolved logical relation is a pure function of the path.
-    * Keyed by session (a DataFrame is session-bound); entries are a
-    * handful of tiny logical plans per live session. Execution still
-    * scans parquet from disk on every action — nothing row-level is
-    * cached. */
-  private val relationCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val key = (spark, dir, name)
-    val hit = relationCache.get(key)
-    if (hit != null && !spark.sparkContext.isStopped) hit
-    else {
-      // Sweep entries of STOPPED sessions on the MISS path only (ADVICE
-      // r17: the old every-lookup sweep degenerated to a full keySet scan
-      // per apply() once >64 live entries accumulated). Misses are rare —
-      // one per (session, dir, table) — so the scan amortizes to nothing,
-      // and a dead session's keys can never match a lookup again (each
-      // retains the session through its DataFrame). A hard cap backstops
-      // the live-entry case: this is a metadata cache, so dropping it
-      // wholesale only costs re-resolution, never correctness.
-      if (relationCache.size > 64)
-        relationCache.keySet.removeIf(_._1.sparkContext.isStopped)
-      if (relationCache.size > 512) relationCache.clear()
-      relationCache.compute(key, (_, cached) =>
-        if (cached != null && !spark.sparkContext.isStopped) cached
-        else spark.read.parquet(s"$dir/$name.parquet"))
-    }
-  }
+    * reads through a catalog whose table metadata is resolved once, and
+    * the fixtures are immutable inputs, so the resolved logical relation
+    * is a pure function of the path. Execution still scans parquet from
+    * disk on every action — nothing row-level is cached. */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    graft.Memo(("relation", spark, dir, name), spark.sparkContext)(
+      spark.read.parquet(s"$dir/$name.parquet"))
 
   def region(s: SparkSession, d: String): DataFrame = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = apply(s, d, "nation")
@@ -101,11 +77,8 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = apply(s, d, "embeddings")
 
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
-
-  /** Row count of a source table, memoized per (dir, table) for the
-    * process lifetime — the fixtures are immutable inputs, so the count
+  /** Row count of a source table, memoized per (dir, table) in
+    * [[graft.Memo]] — the fixtures are immutable inputs, so the count
     * is a pure function of the path. Queries that derive a scale
     * constant from corpus size (q190's group modulus, q201's lattice
     * side) read it through here so only the first invocation pays a
@@ -113,5 +86,5 @@ object Tables {
     * repeated metadata scan. Parquet counts are row-group-metadata reads,
     * so even the cold pass is cheap. */
   def cachedCount(s: SparkSession, d: String, name: String): Long =
-    countCache.computeIfAbsent((d, name), _ => apply(s, d, name).count())
+    graft.Memo(("count", d, name))(apply(s, d, name).count())
 }

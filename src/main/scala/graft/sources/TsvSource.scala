@@ -3,7 +3,7 @@ package graft.sources
 import java.util
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -1331,8 +1331,6 @@ final class TsvMicroBatchStream(fullSchema: StructType,
       "latestOffset(start, limit) should be called for admission-" +
         "controlled sources (the Spark contract)")
   override def deserializeOffset(json: String): Offset = {
-    import org.json4s.DefaultFormats
-    implicit val fmt: DefaultFormats = DefaultFormats
     org.json4s.jackson.JsonMethods.parse(json) \ "v" match {
       case org.json4s.JInt(v) => TsvVersionOffset(v.toLong)
       case _ => throw new IllegalStateException(
@@ -2644,7 +2642,7 @@ final class TsvKeyedDataWriter(schema: StructType, path: String,
   // member, which GZIPInputStream reads transparently — it just costs
   // an extra open/close instead of a held fd.
   private val files =
-    scala.collection.mutable.AnyRefMap.empty[String, java.io.File]
+    scala.collection.mutable.HashMap.empty[String, java.io.File]
   private var curKey: String = null
   private var curOut: java.io.OutputStream = null
   private var rows = 0L

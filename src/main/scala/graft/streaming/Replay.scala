@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types.StructType
 
-/** The replay harness behind the streaming gates: the process-cached
-  * inputs a finite replay streams from (day-shard dumps, sentinel and
-  * slice libraries), and the one drain every gate runs its query through.
+/** The replay harness behind the streaming gates: the inputs a finite
+  * replay streams from (day-shard dumps, sentinel and slice libraries,
+  * each built once per process through [[graft.Memo]]), and the one
+  * drain every gate runs its query through.
   *
   * Drain contract ([[drain]] for the memory sink, [[run]] for any other
   * sink): start the query with its confs scoped around `start()`
@@ -26,10 +27,6 @@ import org.apache.spark.sql.types.StructType
 object Replay {
 
   private[streaming] val DayUs: Long = 86400L * 1000000L
-
-  /** Process-local record of dumps built by [[dumpOnce]]. */
-  private val dumped =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** The day-shard dump layouts, keyed by scratch-dir name: the
     * events-table columns each replay family needs (`us` is derived as
@@ -133,14 +130,11 @@ object Replay {
   private[streaming] def local(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
-  /** Per-process cache of `max(unix_micros(ts))` over the events table —
-    * the sentinel-flushing gates need it and the scan is pure input
+  /** `max(unix_micros(ts))` over the events table, once per process per
+    * dir — the sentinel-flushing gates need it and the scan is pure input
     * metadata, same reuse contract as the day-shard dumps. */
-  private val maxUsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   private[streaming] def eventsMaxUs(s: SparkSession, dir: String): Long =
-    maxUsCache.computeIfAbsent(dir, _ =>
+    graft.Memo(("eventsMaxUs", dir))(
       Tables.events(s, dir).agg(max(unix_micros(col("ts")))).head().getLong(0))
 
   /** The first flush instant of the sentinel discipline: 42 days past the
@@ -176,9 +170,10 @@ object Replay {
     * the drain exception that is the actual root cause (ADVICE r9). The
     * danger the old rethrow guarded — a silently-leaked sentinel day
     * corrupting later replays of a SHARED shard dump — is neutralized
-    * structurally instead: any dump root the failed path lives under is
-    * evicted from [[dumped]], so the next gate rewrites the whole dump
-    * (mode overwrite deletes the directory first, leftover included).
+    * structurally instead: any dump the failed path lives under is
+    * forgotten ([[graft.Memo.forgetUnder]]), so the next gate rewrites
+    * the whole dump (mode overwrite deletes the directory first,
+    * leftover included).
     * Plain scratch dirs (uuid-named sinks/checkpoints) leak at worst a
     * temp dir; the failure is logged to stderr either way. */
   private[streaming] def rmrfAll(s: SparkSession, paths: String*): Unit =
@@ -193,9 +188,7 @@ object Replay {
         !fs.exists(hp)
       }
       if (gone != scala.util.Success(true)) {
-        // Path-boundary match: a failed .../dump_extra must not evict the
-        // sibling dump .../dump (plain prefix would).
-        dumped.removeIf(root => p == root || p.startsWith(root + "/"))
+        graft.Memo.forgetUnder(p)
         System.err.println(s"[graft] scratch cleanup failed for $p " +
           s"(dump invalidated if shared): " +
           gone.failed.toOption.getOrElse("delete returned false"))
@@ -218,18 +211,6 @@ object Replay {
     parts.head
   }
 
-  /** Build a replay input at `path` once per process. The record is
-    * process-local on purpose: a fresh process always rewrites, so a
-    * regenerated source table can never be shadowed by a stale on-disk
-    * dump from an earlier run. Returns `path`. */
-  private[streaming] def dumpOnce(path: String)(build: => Unit): String = {
-    if (!dumped.contains(path)) {
-      build
-      dumped.add(path)
-    }
-    path
-  }
-
   /** Dump the events table once per process into a day-sharded scratch
     * dir — one file per day so the file source (with
     * `maxFilesPerTrigger`) can deliver a genuinely incremental
@@ -240,7 +221,7 @@ object Replay {
   private[streaming] def dumpDayShards(s: SparkSession, dir: String,
       layout: String): String = {
     val shards = graft.operators.FileIO.scratch(dir, layout)
-    dumpOnce(shards) {
+    graft.Memo.layout(shards, dir) {
       val cols = dayShardLayouts(layout).map {
         case ("us", _) => unix_micros(col("ts")).as("us")
         case (n, _) => col(n)
@@ -318,8 +299,6 @@ object Replay {
     * lands FLAT in the dump as `zz_sentinel_<seq>_<uuid>.parquet` —
     * fresh mtime and unseen path, so the running file source admits it
     * as a new file exactly like the old day-dir append. */
-  private val sentinelLib =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val sentinelSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** Write `df` as ONE parquet file under `<base>_sentlib/`, return its
@@ -347,13 +326,10 @@ object Replay {
     * gates that stage corpus SLICES into a per-run source dir (q222's
     * phased appends): the slice is a pure function of the source dir,
     * so later runs pay a file copy instead of a Spark write job. */
-  private val sliceLib =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private[streaming] def copySliceInto(s: SparkSession, destDir: String, base: String,
       tag: String)(build: => DataFrame): String = {
     val fs = new Path(destDir).getFileSystem(s.sparkContext.hadoopConfiguration)
-    val lib = sliceLib.computeIfAbsent(base + "|" + tag, _ =>
-      buildOneFileParquet(s, base, build))
+    val lib = graft.Memo(("slice", base, tag))(buildOneFileParquet(s, base, build))
     copyVisible(s, fs, lib, destDir,
       f"${tag}_${sentinelSeq.incrementAndGet()}%05d.parquet")
   }
@@ -400,9 +376,8 @@ object Replay {
     val base = libBase.getOrElse(shards)
     val key = base + "|" + schema.map(f => f.name + ":" + f.dataType.sql)
       .mkString(",") + "|" + rows.map(encRow).mkString(";")
-    val lib = sentinelLib.computeIfAbsent(key, _ =>
-      buildOneFileParquet(s, base,
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)))
+    val lib = graft.Memo(("sentinel", key))(buildOneFileParquet(s, base,
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)))
     copyVisible(s, fs, lib, shards,
       f"zz_sentinel_${sentinelSeq.incrementAndGet()}%05d_" +
         java.util.UUID.randomUUID().toString.replace("-", "") + ".parquet")
@@ -412,9 +387,9 @@ object Replay {
     * a dot-prefixed temp name (hidden — Spark's file listing skips
     * `.`/`_` prefixes, so a half-copied file can never be listed by a
     * running FileStreamSource), then a same-directory rename (atomic on
-    * a local fs). A failed copy evicts the enclosing dump from the
-    * process cache so a partial file can't poison later gates — the
-    * next consumer rewrites the whole dump. */
+    * a local fs). A failed copy forgets the enclosing dump so a partial
+    * file can't poison later gates — the next consumer rewrites the
+    * whole dump. */
   private def copyVisible(s: SparkSession, fs: FileSystem,
       lib: String, destDir: String, name: String): String = {
     val tmp = new Path(destDir, "." + name + ".tmp")
@@ -429,8 +404,7 @@ object Replay {
       case e: Throwable =>
         try fs.delete(tmp, false)
         catch { case scala.util.control.NonFatal(_) => () }
-        dumped.removeIf(root => destDir == root ||
-          destDir.startsWith(root + "/"))
+        graft.Memo.forgetUnder(destDir)
         throw e
     }
     dest.toString

@@ -27,12 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object StreamingQueries extends QueryPack {
 
-  /** Process-local record of bucketed index-table builds: table name →
-    * source dir (the FileIO.layoutSource pattern — a fresh process or a
-    * different sf dir rebuilds, a dropped catalog rebuilds). */
-  private val tableSource =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Drain-scoped confs shared by many gates. Stateful-operator
     * parallelism = shuffle.partitions at stream start, and a finite
     * replay's per-partition state-store commits dominate at wider
@@ -1138,7 +1132,7 @@ object StreamingQueries extends QueryPack {
   /** Build the compacted SCD2 interval dim ONCE per (process, dir) as a
     * bucketed table (see [[q293]]). */
   private[streaming] def ensurePitDim(s: SparkSession, dir: String): Unit = {
-    if (tableSource.get(pitDimTbl) != dir || !s.catalog.tableExists(pitDimTbl)) {
+    graft.Memo.layout(pitDimTbl, dir, s.catalog.tableExists(pitDimTbl)) {
       val W = org.apache.spark.sql.expressions.Window
       val w = W.partitionBy("o_custkey").orderBy("vf")
       Tables.orders(s, dir)
@@ -1161,7 +1155,6 @@ object StreamingQueries extends QueryPack {
         .repartition(16, col("o_custkey"))
         .write.mode("overwrite").bucketBy(16, "o_custkey")
         .sortBy("o_custkey", "vf").saveAsTable(pitDimTbl)
-      tableSource.put(pitDimTbl, dir)
     }
   }
 
@@ -1597,7 +1590,7 @@ object StreamingQueries extends QueryPack {
     import s.implicits._
     import graft.functions.TextHash
     val shards = graft.operators.FileIO.scratch(dir, "docs_stream_shards")
-    Replay.dumpOnce(shards) {
+    graft.Memo.layout(shards, dir) {
       Tables.documents(s, dir).filter(col("doc_id") % 5 === 0)
         .select("doc_id", "text")
         .repartition(4) // 4 files at 2/trigger = 2 main micro-batches
@@ -1620,8 +1613,8 @@ object StreamingQueries extends QueryPack {
     // indexed table, not a frame derived in-line per query.
     val idxTbl = "graft_q260_band_idx"
     val shTbl = "graft_q260_corpus_sh"
-    if (tableSource.get(idxTbl) != dir || !s.catalog.tableExists(idxTbl) ||
-        !s.catalog.tableExists(shTbl)) {
+    graft.Memo.layout(idxTbl, dir,
+        s.catalog.tableExists(idxTbl) && s.catalog.tableExists(shTbl)) {
       val corpus = graft.operators.Dedup.docsWithShinglesCk(s, dir)
         .filter(col("doc_id") % 5 =!= 0)
       corpus.select(col("doc_id"), col("sh"))
@@ -1637,7 +1630,6 @@ object StreamingQueries extends QueryPack {
         .repartition(16, col("corpus_id"))
         .write.mode("overwrite").bucketBy(16, "corpus_id")
         .sortBy("corpus_id").saveAsTable(shTbl)
-      tableSource.put(idxTbl, dir)
     }
     // merge hints: without them a small-at-test-scale index would
     // BROADCAST — re-building and re-shipping the broadcast every
@@ -1717,7 +1709,7 @@ object StreamingQueries extends QueryPack {
     val shards = graft.operators.FileIO.scratch(dir, "docs_seq_shards")
     val fs = FileSystem.get(new java.net.URI(shards),
       s.sparkContext.hadoopConfiguration)
-    Replay.dumpOnce(shards) {
+    graft.Memo.layout(shards, dir) {
       // 4 id-RANGE shard files written smallest-range-first: the file
       // source drains oldest-(mtime,path)-first, so batches are
       // id-ordered — the policy's one-pass precondition

@@ -71,7 +71,7 @@ class ClusteringSpec extends AnyFunSuite {
   test("model cache: same dir reuses the fit; a fresh process refits") {
     val a = Clustering.fit(spark, sf)
     assert(Clustering.fit(spark, sf) eq a, "same-process fit must be cached")
-    Clustering.forgetFitsForTest()
+    graft.Memo.forget(_ == ("kmeans", sf))
     val b = Clustering.fit(spark, sf)
     assert(!(b eq a), "fresh process must refit")
     // deterministic input + deterministic init ⇒ the refit reproduces

@@ -83,7 +83,7 @@ class FileIOSpec extends AnyFunSuite {
     // prove the poison took (a cache-trusting read WOULD see it)
     assert(spark.read.parquet(out).filter(col("event_type") === "poison").count() == 3)
     // fresh process: the cache starts empty
-    FileIO.forgetLayoutsForTest()
+    graft.Memo.forget(_.productElement(0) == "layout")
     assert(SparkEntry.queries("q86_partitioned_scan")(spark, sf)
       .collect().map(_.toString).sorted === good86)
     assert(SparkEntry.queries("q77_bucketed_join")(spark, sf)
@@ -120,7 +120,7 @@ class FileIOSpec extends AnyFunSuite {
     // (4 written) — if the shards collapsed into one partition the whole
     // compressed corpus would decompress on a single task at 100 TB
     SparkEntry.queries("q131_gzip_text_roundtrip")(spark, sf).collect()
-    val out = s"${sys.props("java.io.tmpdir")}/graft_fileio_${math.abs(sf.hashCode)}/customer_csv_gz"
+    val out = FileIO.scratch(sf, "customer_csv_gz")
     // the shards must actually BE gzip: parts >= 4 also holds for plain
     // CSV (4 files -> >= 4 splits), so a silently-dropped codec option
     // would pass both this count and the value-level oracle (ADVICE r6)
@@ -157,8 +157,8 @@ class FileIOSpec extends AnyFunSuite {
     // keep its ORIGINAL files (same paths — dynamic mode never
     // truncates siblings). A static overwrite would have replaced all
     // directories in the second write.
-    FileIO.forgetLayoutsForTest()
-    val root = s"${sys.props("java.io.tmpdir")}/graft_fileio_${math.abs(sf.hashCode)}/orders_dynpart"
+    graft.Memo.forget(_.productElement(0) == "layout")
+    val root = FileIO.scratch(sf, "orders_dynpart")
     SparkEntry.queries("q158_dynamic_overwrite")(spark, sf).collect()
     def files(p: String): Set[String] = {
       val d = new java.io.File(s"$root/prio=$p")
