@@ -1875,9 +1875,13 @@ object StreamingQueries extends QueryPack {
     * microseconds of row work. Honest sizing: interleaved A/B on warm
     * q240 shows ~0.3–0.5 s/invocation (within host noise on single
     * runs; compile cost itself shrinks once the JVM has C2-compiled
-    * Janino) — the gates' warm floor is state-store stage overhead, not
-    * codegen. Kept because the direction is strictly right at this
-    * batch size and it compounds across 22 gates × 3 bench passes.
+    * Janino) — the gates' warm floor was checkpoint file I/O, not
+    * codegen: Hadoop's local filesystem spawned a `chmod` or `readlink`
+    * per checkpoint file, 152 processes per q70 call (SCALING.md). The
+    * last conf below routes them through [[LocalCheckpointFileManager]],
+    * which spawns none. Codegen stays off because the direction is
+    * strictly right at this batch size and it compounds across 22
+    * gates × 3 bench passes.
     * Scoped via `withConfs` around the gate body (streaming queries
     * capture session confs at start), so batch queries in the same
     * session keep whole-stage codegen. This is BATCH-SIZE tuning, not a
@@ -1896,7 +1900,9 @@ object StreamingQueries extends QueryPack {
     // catches the single-operator gates that previously ran at 32.
     // Production sizing is state volume / partition, never core
     // count — same batch-size-honesty argument as the codegen pair.
-    "spark.sql.shuffle.partitions" -> "4")
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[LocalCheckpointFileManager].getName)
 
   /** Queries whose fn is pure batch (streaming-semantics twins gated
     * batch-side) — these keep codegen: they scan the real corpus. */

@@ -46,7 +46,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     graft.functions.VectorFunctions.dot(spark, "x", "x") // triggers registration
     val r = spark.sql(
       "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
-      .head.getDouble(0)
+      .head().getDouble(0)
     assert(r === 11.0)
   }
 
@@ -73,10 +73,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq((Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0))).toDF("a", "b")
     graft.functions.VectorFunctions.dot(spark, "a", "b")
-    val viaSql = df.selectExpr("graft_dot(a, b)").head.getDouble(0)
+    val viaSql = df.selectExpr("graft_dot(a, b)").head().getDouble(0)
     val viaHof = df.select(
       aggregate(zip_with(col("a"), col("b"), (x, y) => x * y),
-        lit(0.0), (acc, z) => acc + z)).head.getDouble(0)
+        lit(0.0), (acc, z) => acc + z)).head().getDouble(0)
     assert(viaSql === viaHof)
     assert(viaSql === 32.0)
   }

@@ -13,8 +13,8 @@ class ComplexTypesSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq((1L, Seq("a", "b"), Seq(10, 20))).toDF("id", "ks", "vs")
       .withColumn("m", map_from_arrays(col("ks"), col("vs")))
-    assert(df.select(element_at(col("m"), "b")).head.getInt(0) === 20)
-    assert(df.select(map_keys(col("m"))).head.getSeq[String](0) === Seq("a", "b"))
+    assert(df.select(element_at(col("m"), "b")).head().getInt(0) === 20)
+    assert(df.select(map_keys(col("m"))).head().getSeq[String](0) === Seq("a", "b"))
     val exploded = df.select(col("id"), explode(col("m")).as(Seq("k", "v")))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2)))
     assert(exploded.toSeq === Seq((1L, "a", 10), (1L, "b", 20)))
@@ -25,9 +25,9 @@ class ComplexTypesSpec extends AnyFunSuite {
     val df = Seq((1L, 2.5, "x")).toDF("id", "v", "s")
       .withColumn("nested", struct(col("v").as("value"),
         struct(col("s").as("tag")).as("meta")))
-    assert(df.select(col("nested.meta.tag")).head.getString(0) === "x")
+    assert(df.select(col("nested.meta.tag")).head().getString(0) === "x")
     val reshaped = df.select(col("id"), col("nested.value"))
-    assert(reshaped.head.getDouble(1) === 2.5)
+    assert(reshaped.head().getDouble(1) === 2.5)
   }
 
   test("cache() reuses the materialized plan (InMemoryTableScan)") {

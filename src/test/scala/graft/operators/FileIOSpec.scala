@@ -241,7 +241,6 @@ class FileIOSpec extends AnyFunSuite {
   }
 
   test("q209 export files are internally sorted and range-disjoint") {
-    import org.apache.spark.sql.functions._
     val row = SparkEntry.queries("q209_sorted_export")(spark, sf)
       .collect().head
     assert(row.getBoolean(3), "per-file ranges must be pairwise disjoint")

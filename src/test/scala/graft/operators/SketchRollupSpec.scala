@@ -22,7 +22,6 @@ class SketchRollupSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("q262 histogram p50/p90/p99 within one bin of the exact order statistic") {
-    import spark.implicits._
     val rnd = new scala.util.Random(7)
     // skewed + heavy ties: the regime where naive midpoint interpolation
     // drifts furthest from the order statistic

@@ -160,7 +160,7 @@ class TsvCatalogSpec extends AnyFunSuite {
       while (!stop && failure == null) {
         try {
           val t = cat.loadTable(ident)
-          assert(t.schema().fieldNames.sameElements(Array("id")))
+          assert(t.columns().map(_.name).sameElements(Array("id")))
         } catch { case e: Throwable => failure = e }
       }
     })

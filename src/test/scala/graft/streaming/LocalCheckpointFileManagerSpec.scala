@@ -1,0 +1,151 @@
+package graft.streaming
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path => NioPath}
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+/** The process-free checkpoint manager: atomic publish semantics on the
+  * file level, exactly-once recovery of a stateful query written through
+  * it, and a guard that a streaming gate starts no `chmod`/`readlink`. */
+class LocalCheckpointFileManagerSpec extends AnyFunSuite {
+  lazy val spark = graft.TestSpark.spark
+  val sf = "/root/testdata/sf0.001"
+
+  private def freshDir(tag: String): NioPath = Files.createTempDirectory(tag)
+
+  private def manager(dir: NioPath) =
+    new LocalCheckpointFileManager(new Path(dir.toUri), new Configuration())
+
+  private def write(m: LocalCheckpointFileManager, f: NioPath, text: String,
+      overwrite: Boolean): Unit = {
+    val out = m.createAtomic(new Path(f.toUri), overwrite)
+    out.write(text.getBytes(UTF_8))
+    out.close()
+  }
+
+  private def read(f: NioPath): String = new String(Files.readAllBytes(f), UTF_8)
+
+  private def names(dir: NioPath): Set[String] =
+    Using.resource(Files.list(dir))(_.iterator().asScala.map(_.getFileName.toString).toSet)
+
+  test("createAtomic without overwrite onto an existing file throws and keeps the old bytes") {
+    val dir = freshDir("lcfm_excl")
+    val m = manager(dir)
+    val f = dir.resolve("0")
+    write(m, f, "first", overwrite = false)
+    intercept[FileAlreadyExistsException](write(m, f, "second", overwrite = false))
+    assert(read(f) === "first")
+    assert(names(dir) === Set("0"), "the losing writer left a temp file behind")
+  }
+
+  test("createAtomic with overwrite replaces the file and its stale Hadoop .crc") {
+    val dir = freshDir("lcfm_over")
+    val m = manager(dir)
+    val f = dir.resolve("1.delta")
+    // written by Hadoop's LocalFileSystem, as Spark's default manager does:
+    // the file gets a `.1.delta.crc` sidecar of the old bytes
+    val old = org.apache.hadoop.fs.FileSystem.getLocal(new Configuration())
+      .create(new Path(f.toUri))
+    old.write("old bytes".getBytes(UTF_8))
+    old.close()
+    assert(names(dir).contains(".1.delta.crc"))
+    write(m, f, "new", overwrite = true)
+    assert(names(dir) === Set("1.delta"))
+    // the checksummed read path would reject the new bytes under the old sums
+    assert(m.open(new Path(f.toUri)).readAllBytes().sameElements("new".getBytes(UTF_8)))
+  }
+
+  test("close leaves no temp sibling; cancel leaves neither target nor temp") {
+    val dir = freshDir("lcfm_tmp")
+    val m = manager(dir)
+    write(m, dir.resolve("done"), "x", overwrite = false)
+    assert(names(dir) === Set("done"))
+    val out = m.createAtomic(new Path(dir.resolve("cancelled").toUri), overwriteIfPossible = true)
+    out.write("partial".getBytes(UTF_8))
+    assert(names(dir).size === 2, "the open stream should write a temp sibling")
+    out.cancel()
+    assert(names(dir) === Set("done"))
+  }
+
+  test("a streaming aggregation under the manager resumes exactly-once after its latest commit is dropped") {
+    import spark.implicits._
+    val src = freshDir("lcfm_src").toString
+    val cp = freshDir("lcfm_cp").toString
+    def wave(from: Int, until: Int): Unit =
+      (from until until).map(i => (i.toLong, s"g${i % 3}")).toDF("id", "grp")
+        .coalesce(1).write.mode("append").parquet(src)
+    // (batchId, sorted complete-mode output) per processed batch
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[String])]()
+    def drain(): Unit = {
+      val schema = new org.apache.spark.sql.types.StructType()
+        .add("id", "long").add("grp", "string")
+      val q = graft.SessionConfs.withConfs(spark,
+          "spark.sql.streaming.checkpointFileManagerClass" ->
+            classOf[LocalCheckpointFileManager].getName) {
+        spark.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1") // one epoch per wave
+          .parquet(src)
+          .groupBy("grp").agg(count(lit(1)).as("n"), sum("id").as("s"))
+          .writeStream.outputMode("complete")
+          .option("checkpointLocation", cp)
+          .foreachBatch { (df: DataFrame, id: Long) =>
+            seen.add((id, df.collect().map(_.toString).toSeq.sorted)); ()
+          }
+          .start()
+      }
+      try q.processAllAvailable() finally q.stop()
+    }
+    wave(0, 30); wave(30, 60)
+    drain()
+    assert(seen.asScala.map(_._1).toSeq === Seq(0L, 1L))
+    // the commit log went through the manager: no Hadoop `.N.crc` sidecars
+    val commits = new java.io.File(cp, "commits")
+    assert(commits.list().sorted.toSeq === Seq("0", "1"))
+    // Spark's checksum layer still wraps every state-store file: its
+    // sidecar is `<file>.crc` (Hadoop's would be the hidden `.<file>.crc`)
+    val stateFiles = Using.resource(Files.walk(java.nio.file.Paths.get(cp, "state")))(
+      _.iterator().asScala.filter(Files.isRegularFile(_)).map(_.getFileName.toString).toList)
+    val deltas = stateFiles.filter(_.endsWith(".delta"))
+    assert(deltas.nonEmpty && deltas.forall(d => stateFiles.contains(d + ".crc")),
+      s"state files without checksum sidecars: ${stateFiles.sorted.mkString(",")}")
+    // "sink committed, commit log did not": the restart must replay batch 1
+    assert(new java.io.File(commits, "1").delete())
+    seen.clear()
+    wave(60, 90)
+    drain()
+    assert(seen.asScala.map(_._1).toSeq === Seq(1L, 2L), "batch 1 was not replayed")
+    val expected = (0 until 90).groupBy(i => s"g${i % 3}").toSeq.map { case (g, ids) =>
+      org.apache.spark.sql.Row(g, ids.size.toLong, ids.map(_.toLong).sum).toString
+    }.sorted
+    assert(seen.asScala.last._2 === expected, "the replayed batch was counted twice")
+  }
+
+  test("a streaming gate drain starts no chmod or readlink process") {
+    val gate = graft.SparkEntry.queries("q70_stream_month_count")
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val dump = Files.createTempFile("lcfm_processes", ".jfr")
+    val commands = try {
+      assert(gate(spark, sf).count() > 0)
+      // positive control: the recording does see a process this thread starts
+      new ProcessBuilder("true").start().waitFor()
+      rec.stop()
+      rec.dump(dump)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+        .map(_.getString("command"))
+    } finally { rec.close(); Files.deleteIfExists(dump) }
+    val programs = commands.map(_.trim.split("\\s+").head.split('/').last)
+    assert(programs.contains("true"), s"recording saw no process start: $commands")
+    val spawned = programs.filter(p => p == "chmod" || p == "readlink")
+    assert(spawned.isEmpty, s"${spawned.size} checkpoint spawns: ${commands.mkString("; ")}")
+  }
+}

@@ -204,7 +204,7 @@ class StreamingSpec extends AnyFunSuite {
 
       // batch equivalent, restricted to windows closed by the final watermark
       val ev = Tables.events(spark, sf)
-      val maxTs = ev.agg(max(unix_micros(col("ts")))).head.getLong(0)
+      val maxTs = ev.agg(max(unix_micros(col("ts")))).head().getLong(0)
       val watermarkUs = maxTs - 3600L * 1000000L
       val closed = ev
         .groupBy(window(col("ts"), "7 days"), col("event_type"))
