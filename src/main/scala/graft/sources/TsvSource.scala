@@ -3,15 +3,44 @@ package graft.sources
 import java.util
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, PhysicalWriteInfo, RequiresDistributionAndOrdering, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+
+/** RECLAIMED-GENERATION failures as a TYPE, not a message substring:
+  * a catalog-resolved table whose directory vanished mid-use (its
+  * generation reclaimed past the snapshot-grace window, or the table
+  * dropped/replaced under churn) is a RETRYABLE condition — the caller
+  * re-resolves the name and retries. Callers (q309's reader, any
+  * serving loop) match on this class through the cause chain; carrying
+  * the contract in the exception type means a rewording of the store's
+  * messages can never silently convert a retryable condition into a
+  * hard failure. */
+class GraftGenerationReclaimedException(msg: String)
+    extends IllegalStateException(msg)
+
+object GraftGenerationReclaimedException {
+  /** Is `t` (or anything in its cause chain — Spark wraps scan-time
+    * failures in SparkException layers) a reclaimed-generation
+    * condition? */
+  def causedBy(t: Throwable): Boolean = {
+    var cur = t
+    var depth = 0
+    while (cur != null && depth < 16) {
+      if (cur.isInstanceOf[GraftGenerationReclaimedException]) return true
+      cur = cur.getCause
+      depth += 1
+    }
+    false
+  }
+}
 
 /** A DataSource V2 TSV reader with COLUMN PRUNING and FILTER PUSHDOWN —
   * the reference's tab-separated front door (`mapreduce.py:91-99`,
@@ -48,34 +77,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * Line terminators: `\n` and `\r\n` (trailing CR stripped); lone-CR
   * files (classic-Mac) are NOT supported — they parse as one line.
   */
-/** RECLAIMED-GENERATION failures as a TYPE, not a message substring:
-  * a catalog-resolved table whose directory vanished mid-use (its
-  * generation reclaimed past the snapshot-grace window, or the table
-  * dropped/replaced under churn) is a RETRYABLE condition — the caller
-  * re-resolves the name and retries. Callers (q309's reader, any
-  * serving loop) match on this class through the cause chain; carrying
-  * the contract in the exception type means a rewording of the store's
-  * messages can never silently convert a retryable condition into a
-  * hard failure. */
-class GraftGenerationReclaimedException(msg: String)
-    extends IllegalStateException(msg)
-
-object GraftGenerationReclaimedException {
-  /** Is `t` (or anything in its cause chain — Spark wraps scan-time
-    * failures in SparkException layers) a reclaimed-generation
-    * condition? */
-  def causedBy(t: Throwable): Boolean = {
-    var cur = t
-    var depth = 0
-    while (cur != null && depth < 16) {
-      if (cur.isInstanceOf[GraftGenerationReclaimedException]) return true
-      cur = cur.getCause
-      depth += 1
-    }
-    false
-  }
-}
-
 class TsvSourceProvider extends TableProvider {
   // schema is caller-provided (the reference's TSVs are headerless).
   // Reads state it via .schema(...); the WRITE path has no .schema()
@@ -106,6 +107,7 @@ final class TsvTable(tableSchema: StructType, path: String,
   require(path != null, "graft tsv source requires option(\"path\", ...)")
 
   private def rootDir = new java.io.File(TsvWritePaths.strip(path))
+  private val writeLayout = TsvWriteLayout.of(tablePartitionCol, bucketSpec)
 
   /** Mutations against a CATALOG-resolved table whose directory is
     * gone (generation reclaimed past the grace window, or table
@@ -123,35 +125,13 @@ final class TsvTable(tableSchema: StructType, path: String,
           "retry")
 
   /** `TRUNCATE TABLE t` ([[TruncatableTable]]): clear the data, keep
-    * the table — key directories drop whole for a partitioned table
-    * (an empty key dir would still list as a partition), data files
-    * (root + hive subdirs) for a flat one. Sidecars survive by the
-    * `_`-prefix rule, same as the sink's overwrite-truncate. */
+    * the table — the same truncate set as the sink's overwrite
+    * ([[TsvWriteLayout.truncateTargets]]); a path surviving its delete
+    * fails the statement. */
   override def truncateTable(): Boolean = {
     requireAliveForMutation("TRUNCATE TABLE")
-    // delete failures must FAIL the statement (the store's fail-loud
-    // convention): an undeletable file silently surviving a TRUNCATE
-    // that reported success is resurrected data on the next scan
-    val survivors: Seq[java.io.File] = tablePartitionCol match {
-      case Some(c) =>
-        val dirs = Option(rootDir.listFiles()).getOrElse(Array.empty)
-          .filter(d => d.isDirectory && d.getName.startsWith(c + "="))
-          .toSeq
-        dirs.foreach(TsvWritePaths.deleteRecursively)
-        dirs.filter(_.exists())
-      case None if bucketSpec.nonEmpty =>
-        val dirs = TsvBuckets.bucketDirs(path).map(_._2)
-        dirs.foreach(TsvWritePaths.deleteRecursively)
-        dirs.filter(_.exists())
-      case None =>
-        if (rootDir.isDirectory)
-          TsvLayout.listDataFiles(rootDir).filterNot(_.delete())
-        else Nil
-    }
-    if (survivors.nonEmpty)
-      throw new java.io.IOException(
-        s"graft tsv: TRUNCATE TABLE ${name()} could not delete " +
-          s"${survivors.size} path(s), e.g. ${survivors.head}")
+    TsvWritePaths.deleteAllOrThrow(writeLayout.truncateTargets(rootDir),
+      s"TRUNCATE TABLE ${name()}")
     true
   }
 
@@ -244,17 +224,6 @@ final class TsvTable(tableSchema: StructType, path: String,
       .toArray
   }
 
-  /** PARTITION-LEVEL DELETE ([[SupportsDelete]]) — the retention /
-    * right-to-be-forgotten primitive at 100 TB: `DELETE FROM t WHERE
-    * <partition-col predicate>` drops whole `<col>=<v>/` directories as
-    * a METADATA operation (no data read, no rewrite). Only predicates
-    * the layout can answer exactly are accepted — equality/IN on the
-    * partition column (and AlwaysTrue = truncate); anything touching a
-    * data column would need a row-level rewrite this source does not
-    * implement, so [[canDeleteWhere]] says no and Spark FAILS the
-    * statement loudly rather than half-applying it. That refusal is
-    * the contract's point: a delete either maps to partition drops or
-    * it is not runnable here. */
   /** Conjunction of the DELETE predicates as partition keys: outer None
     * = some predicate is not answerable from the layout (refuse); inner
     * None = no key constraint (truncate-all); inner Some(keys) = drop
@@ -293,6 +262,17 @@ final class TsvTable(tableSchema: StructType, path: String,
     })
   }
 
+  /** PARTITION-LEVEL DELETE ([[SupportsDelete]]) — the retention /
+    * right-to-be-forgotten primitive at 100 TB: `DELETE FROM t WHERE
+    * <partition-col predicate>` drops whole `<col>=<v>/` directories as
+    * a METADATA operation (no data read, no rewrite). Only predicates
+    * the layout can answer exactly are accepted — equality/IN on the
+    * partition column (and AlwaysTrue = truncate); anything touching a
+    * data column would need a row-level rewrite this source does not
+    * implement, so [[canDeleteWhere]] says no and Spark FAILS the
+    * statement loudly rather than half-applying it. That refusal is
+    * the contract's point: a delete either maps to partition drops or
+    * it is not runnable here. */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     tablePartitionCol.nonEmpty && deleteKeys(filters).nonEmpty
 
@@ -362,23 +342,8 @@ final class TsvTable(tableSchema: StructType, path: String,
       .map(_.toLowerCase(java.util.Locale.ROOT)).getOrElse("none")
     require(codec == "none" || codec == "gzip",
       s"graft tsv sink: compression must be none|gzip, got $codec")
-    tablePartitionCol match {
-      // a PARTITIONED table routes each row into its `<col>=<v>/` dir
-      // (the key rides in the DIRECTORY name, not the file — the keyed
-      // read contract), through the same task-commit protocol
-      case Some(c) => new TsvKeyedWriteBuilder(info.schema(), path, c,
-        gzip = codec == "gzip")
-      case None => bucketSpec match {
-        // a CLUSTERED table routes each row into its hash bucket's
-        // `_graft_bucket=<id>/` dir; lines keep ALL columns (a bucket
-        // holds many key values — nothing could synthesize the column)
-        case Some((c, n)) =>
-          new TsvBucketedWriteBuilder(info.schema(), path, c, n,
-            gzip = codec == "gzip")
-        case None => new TsvWriteBuilder(info.schema(), path,
-          info.queryId(), gzip = codec == "gzip")
-      }
-    }
+    new TsvWriteBuilder(info.schema(), path, writeLayout, info.queryId(),
+      gzip = codec == "gzip")
   }
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val splitBytes = options.getLong("split_bytes", 32L * 1024 * 1024)
@@ -960,7 +925,7 @@ final class TsvScan(fullSchema: StructType, required: StructType,
         partitionDirs.flatMap { case (_, d) => TsvLayout.dataFilesIn(d) }
           .map(sized).sum
       case None =>
-        if (f.isDirectory) listDataFiles(f).map(sized).sum
+        if (f.isDirectory) TsvLayout.listDataFiles(f).map(sized).sum
         else sized(f)
     }
     val fraction =
@@ -974,16 +939,6 @@ final class TsvScan(fullSchema: StructType, required: StructType,
     }
   }
 
-  /** One partition per newline-aligned BYTE RANGE, not per file — the
-    * Hadoop TextInputFormat contract: a 10 GB TSV must parallelize
-    * across the cluster, not become one task. Each split owns exactly
-    * the lines whose FIRST byte falls inside [start, end): a split
-    * starting mid-line discards up to the first newline (the previous
-    * split owns that line) and the last owned line is read to ITS end
-    * even past the split boundary — every line is read exactly once
-    * with no coordination. Split size comes from the `split_bytes`
-    * read option (default 32 MiB; tests shrink it to force many
-    * splits per file). */
   /** A CATALOG-resolved table's directory exists from CREATE until the
     * table dies — so a MISSING directory at read-planning time means
     * the resolved generation was reclaimed (a reader that outlived the
@@ -1003,6 +958,16 @@ final class TsvScan(fullSchema: StructType, required: StructType,
             "re-resolve the table name and retry")
     }
 
+  /** One partition per newline-aligned BYTE RANGE, not per file — the
+    * Hadoop TextInputFormat contract: a 10 GB TSV must parallelize
+    * across the cluster, not become one task. Each split owns exactly
+    * the lines whose FIRST byte falls inside [start, end): a split
+    * starting mid-line discards up to the first newline (the previous
+    * split owns that line) and the last owned line is read to ITS end
+    * even past the split boundary — every line is read exactly once
+    * with no coordination. Split size comes from the `split_bytes`
+    * read option (default 32 MiB; tests shrink it to force many
+    * splits per file). */
   override def planInputPartitions(): Array[InputPartition] = {
     requireDirAlive()
     partitionCol match {
@@ -1014,11 +979,11 @@ final class TsvScan(fullSchema: StructType, required: StructType,
         partitionDirs
           .filter { case (t, _) => runtimeKeys.forall(_.contains(t)) }
           .flatMap { case (token, d) =>
-            dataFilesIn(d).flatMap(file => byteSplits(file).map {
-              case (start, end) =>
+            TsvLayout.dataFilesIn(d).flatMap(file =>
+              TsvLayout.byteSplits(file, splitBytes).map { case (start, end) =>
                 TsvKeyedInputPartition(file.getPath, start, end, token,
                   stringKey = keyIsString)
-            })
+              })
           }.map(p => p: InputPartition).toArray
       case None if bucketSpec.nonEmpty =>
         // bucket layout: splits carry their bucket id so Spark groups
@@ -1027,28 +992,19 @@ final class TsvScan(fullSchema: StructType, required: StructType,
         bucketDirs
           .filter { case (b, _) => runtimeBuckets.forall(_.contains(b)) }
           .flatMap { case (b, d) =>
-            dataFilesIn(d).flatMap(file => byteSplits(file).map {
-              case (start, end) =>
+            TsvLayout.dataFilesIn(d).flatMap(file =>
+              TsvLayout.byteSplits(file, splitBytes).map { case (start, end) =>
                 TsvBucketInputPartition(file.getPath, start, end, b)
-            })
+              })
           }.map(p => p: InputPartition).toArray
       case None =>
         val f = new java.io.File(TsvWritePaths.strip(path))
         val files = if (f.isDirectory) TsvLayout.listDataFiles(f) else Seq(f)
-        files.flatMap(file => byteSplits(file).map {
+        files.flatMap(file => TsvLayout.byteSplits(file, splitBytes).map {
           case (start, end) => TsvInputPartition(file.getPath, start, end)
         }).map(p => p: InputPartition).toArray
     }
   }
-
-  private def byteSplits(file: java.io.File): Seq[(Long, Long)] =
-    TsvLayout.byteSplits(file, splitBytes)
-
-  private def dataFilesIn(d: java.io.File): Seq[java.io.File] =
-    TsvLayout.dataFilesIn(d)
-
-  private def listDataFiles(f: java.io.File): Seq[java.io.File] =
-    TsvLayout.listDataFiles(f)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new TsvReaderFactory(fullSchema, required, pushed, limit, partitionCol,
@@ -1806,23 +1762,34 @@ final class TsvPartitionReader(fullSchema: StructType, required: StructType,
   override def close(): Unit = in.close()
 }
 
-/** TSV WRITE path ([[SupportsWrite]], BATCH_WRITE + TRUNCATE): the
-  * reference emits its results as TSV lines (mapreduce.py writes
-  * tab-joined fields); this is that sink as a first-class DSv2 write
-  * with a real TASK-COMMIT protocol:
+/** TSV WRITE path ([[SupportsWrite]]: BATCH_WRITE, STREAMING_WRITE,
+  * TRUNCATE): the reference emits its results as TSV lines
+  * (mapreduce.py writes tab-joined fields); this is that sink as a
+  * first-class DSv2 write with ONE task-commit protocol and three
+  * routings of a row to its directory ([[TsvWriteLayout]]):
   *
-  *   - every task writes to `_temporary/<jobUuid>/` under the target,
-  *     named by (partitionId, taskId) — SPECULATIVE or retried attempts
-  *     write distinct files and nothing under `_temporary` is ever
-  *     visible to readers;
-  *   - [[TsvDataWriter.commit]] returns the temp path as the task's
-  *     commit message — only messages from attempts Spark COMMITTED
-  *     reach the driver;
-  *   - [[TsvBatchWrite.commit]] renames exactly those files into the
-  *     target dir (and first clears old data files iff the write
-  *     TRUNCATEs, i.e. SaveMode.Overwrite) then deletes `_temporary` —
-  *     losers of speculative races vanish with it;
-  *   - [[TsvBatchWrite.abort]] deletes the whole temp dir, leaving the
+  *   - flat: every task writes one file into the table root;
+  *   - keyed (`PARTITIONED BY identity(col)`, or the path API's
+  *     `partition_col`): each row goes to its `<col>=<v>/` directory,
+  *     the key moved out of the line into the directory name;
+  *   - bucketed (`PARTITIONED BY bucket(n, col)`): each row goes to its
+  *     hash bucket's `_graft_bucket=<id>/` directory, full lines.
+  *
+  * The protocol is the same for all three:
+  *
+  *   - every task writes under `_temporary/<job>/` in the target, named
+  *     by (partitionId, taskId, job uuid, directory tag) — SPECULATIVE
+  *     or retried attempts write distinct files, a fresh job's files
+  *     never collide with an earlier job's, and nothing under
+  *     `_temporary` is ever visible to readers;
+  *   - [[TsvDataWriter.commit]] returns the task's (token, temp file)
+  *     pairs as its [[TsvTaskCommit]] — only messages from attempts
+  *     Spark COMMITTED reach the driver;
+  *   - [[TsvBatchWrite.commit]] first drops the layout's truncate set
+  *     iff the write TRUNCATEs (SaveMode.Overwrite), renames exactly
+  *     the committed files into their tokens' directories, then deletes
+  *     `_temporary/<job>` — losers of speculative races vanish with it;
+  *   - [[TsvBatchWrite.abort]] deletes the job's temp dir, leaving the
   *     target untouched.
   *
   * At 100 TB this protocol is why a thousand-task write survives task
@@ -1835,7 +1802,7 @@ final class TsvPartitionReader(fullSchema: StructType, required: StructType,
   * FAILS the task instead (fail-fast beats torn rows). BIGINT/DOUBLE/
   * STRING columns only, like the read side. */
 final class TsvWriteBuilder(schema: StructType, path: String,
-    queryId: String, gzip: Boolean = false)
+    layout: TsvWriteLayout, queryId: String, gzip: Boolean = false)
     extends WriteBuilder with SupportsTruncate
     // UPDATE output mode lands as per-epoch APPENDS of the changed rows
     // (the Kafka/console sink contract): the table is then a CHANGELOG —
@@ -1848,58 +1815,201 @@ final class TsvWriteBuilder(schema: StructType, path: String,
     with org.apache.spark.sql.internal.connector.SupportsStreamingUpdateAsAppend {
   private var truncateFirst = false
   override def truncate(): WriteBuilder = { truncateFirst = true; this }
-  override def build(): Write = new Write {
+  override def build(): Write = new Write with RequiresDistributionAndOrdering {
+    override def requiredDistribution(): Distribution = layout.distribution
+    override def requiredOrdering(): Array[SortOrder] = layout.ordering
     override def toBatch: BatchWrite =
-      new TsvBatchWrite(schema, path, truncateFirst, gzip)
-    override def toStreaming: StreamingWrite =
-      new TsvStreamingWrite(schema, path, queryId, truncateFirst, gzip)
+      new TsvBatchWrite(schema, path, layout, truncateFirst, gzip)
+    // the epoch ledger and replay sweep are built around flat root-level
+    // names; a silent flat fallback would write a key INTO the lines and
+    // corrupt the layout contract, so routed layouts refuse loudly
+    override def toStreaming: StreamingWrite = layout match {
+      case TsvWriteLayout.Flat =>
+        new TsvStreamingWrite(schema, path, queryId, truncateFirst, gzip)
+      case _: TsvWriteLayout.Keyed => refuseStreaming("PARTITIONED")
+      case _: TsvWriteLayout.Bucketed => refuseStreaming("CLUSTERED")
+    }
+  }
+  private def refuseStreaming(kind: String): Nothing =
+    throw new UnsupportedOperationException(
+      s"graft tsv sink: streaming writes to a $kind table are not " +
+        "supported — stream into a plain table and rewrite it into this " +
+        "layout with a periodic batch job (q118/q304 shape)")
+}
+
+/** Where a TSV write puts each row — the ONE place that knows the
+  * on-disk layout of a write: the row → directory-token routing, the
+  * fields a line carries, the directory of a token and the token's tag
+  * in a file name, the distribution and ordering the write requires,
+  * and what a truncate drops. Tokens are strings: `""` (flat), the
+  * canonical key value (keyed), the bucket id (bucketed). */
+sealed trait TsvWriteLayout extends Product with Serializable {
+  /** The per-task row → token router; None for the flat layout, whose
+    * one route is constant (no per-row dispatch). Checks the routing
+    * column's type when the task starts. */
+  def router(schema: StructType): Option[InternalRow => String]
+  /** (ordinal, type) of the fields a line carries, in schema order. */
+  def fileFields(schema: StructType): Array[(Int, DataType)] =
+    schema.fields.map(_.dataType).zipWithIndex.map { case (t, i) => (i, t) }
+  def dirOf(root: java.io.File, token: String): java.io.File
+  /** The token's tag in a file name, before the suffix. */
+  def tag(token: String): String
+  def distribution: Distribution
+  def ordering: Array[SortOrder]
+  /** What an overwrite or TRUNCATE drops: exactly what a read of the
+    * layout would see, sidecars (`_`/`.` names) kept. */
+  def truncateTargets(root: java.io.File): Seq[java.io.File]
+}
+
+object TsvWriteLayout {
+  /** A table's layout: its identity partition column, else its bucket
+    * spec, else flat. */
+  def of(partitionCol: Option[String],
+      bucketSpec: Option[(String, Int)]): TsvWriteLayout =
+    partitionCol.map(Keyed(_))
+      .orElse(bucketSpec.map { case (c, n) => Bucketed(c, n) })
+      .getOrElse(Flat)
+
+  /** One file per task in the table root — written even when the task
+    * has no rows. */
+  case object Flat extends TsvWriteLayout {
+    override def router(schema: StructType): Option[InternalRow => String] =
+      None
+    override def dirOf(root: java.io.File, token: String): java.io.File = root
+    override def tag(token: String): String = ""
+    override def distribution: Distribution = Distributions.unspecified()
+    override def ordering: Array[SortOrder] = Array.empty
+    // the unkeyed read view: root files plus one level of `name=value/`
+    // dirs — deleting only root files would leave rows an overwrite
+    // still reads back
+    override def truncateTargets(root: java.io.File): Seq[java.io.File] =
+      TsvLayout.listDataFiles(root)
+  }
+
+  /** `<col>=<v>/` directories; lines carry the schema MINUS the key,
+    * exactly how the keyed read indexes raw fields
+    * (TsvPartitionReader.fullIdx), and the read synthesizes the key
+    * back from the directory name. The write is clustered by key (every
+    * key lands in one task → one file per key per job, no producer
+    * REPARTITION hint; Spark plans the exchange only when the child
+    * isn't already clustered) and sorted by key within the task (the
+    * writer streams one key at a time → one open fd per task regardless
+    * of key cardinality). */
+  final case class Keyed(col: String) extends TsvWriteLayout {
+    override def router(schema: StructType): Option[InternalRow => String] = {
+      val i = schema.fieldIndex(col)
+      val token: InternalRow => String = schema.fields(i).dataType match {
+        case StringType => r => r.getUTF8String(i).toString
+        case LongType => r => r.getLong(i).toString
+        case other => throw new IllegalArgumentException(
+          s"graft tsv sink: partition column $col must be BIGINT or " +
+            s"STRING, got $other")
+      }
+      Some { r =>
+        if (r.isNullAt(i))
+          throw new IllegalArgumentException(
+            s"graft tsv sink: partition column $col is NULL — the keyed " +
+              "layout has no null-key directory; filter or default the " +
+              "key before writing")
+        token(r)
+      }
+    }
+    override def fileFields(schema: StructType): Array[(Int, DataType)] = {
+      val k = schema.fieldIndex(col)
+      super.fileFields(schema).filter(_._1 != k)
+    }
+    override def dirOf(root: java.io.File, token: String): java.io.File =
+      new java.io.File(root, s"$col=$token")
+    // a token becomes a directory name: checked path-safe once per key,
+    // when the writer opens the key's file (BIGINT tokens are canonical
+    // decimal and always pass)
+    override def tag(token: String): String =
+      "-k" + TsvLayout.validateKeyToken(token)
+    override def distribution: Distribution =
+      Distributions.clustered(Array(Expressions.column(col)))
+    override def ordering: Array[SortOrder] =
+      Array(Expressions.sort(Expressions.column(col), SortDirection.ASCENDING))
+    // whole key directories: an empty key dir would still list as a
+    // live partition
+    override def truncateTargets(root: java.io.File): Seq[java.io.File] =
+      Option(root.listFiles()).getOrElse(Array.empty)
+        .filter(d => d.isDirectory && d.getName.startsWith(col + "="))
+        .toSeq
+  }
+
+  /** `_graft_bucket=<id>/` directories holding FULL lines (a bucket
+    * holds many key values, so nothing could synthesize the column).
+    * The write is clustered and sorted on the `bucket(n, col)` transform
+    * itself: Spark resolves it through the catalog's function, so every
+    * bucket lands as ONE file per job and the writer streams one bucket
+    * at a time. */
+  final case class Bucketed(col: String, n: Int) extends TsvWriteLayout {
+    override def router(schema: StructType): Option[InternalRow => String] = {
+      val i = schema.fieldIndex(col)
+      require(schema.fields(i).dataType == LongType,
+        s"graft tsv sink: bucket column $col must be BIGINT, got " +
+          schema.fields(i).dataType)
+      val tokens = Array.tabulate(n)(_.toString)
+      Some { r =>
+        if (r.isNullAt(i))
+          throw new IllegalArgumentException(
+            s"graft tsv sink: cluster column $col is NULL — the bucket " +
+              "hash has no null lane; filter or default the key before " +
+              "writing")
+        tokens(TsvBuckets.bucketOf(r.getLong(i), n))
+      }
+    }
+    override def dirOf(root: java.io.File, token: String): java.io.File =
+      TsvBuckets.dirOf(root, token.toInt)
+    override def tag(token: String): String = "-b" + token
+    private def bucketExpr = Expressions.bucket(n, col)
+    override def distribution: Distribution =
+      Distributions.clustered(Array(bucketExpr))
+    override def ordering: Array[SortOrder] =
+      Array(Expressions.sort(bucketExpr, SortDirection.ASCENDING))
+    override def truncateTargets(root: java.io.File): Seq[java.io.File] =
+      TsvBuckets.bucketDirs(root.getPath).map(_._2)
   }
 }
 
-final case class TsvTaskCommit(tempFile: String, rows: Long,
+/** A committed task's temp files as (directory token, temp path) — one
+  * per token the task saw; exactly one (token `""`) for a flat task. */
+final case class TsvTaskCommit(files: Seq[(String, String)],
     partitionId: Int) extends WriterCommitMessage
 
 final class TsvBatchWrite(schema: StructType, path: String,
-    truncateFirst: Boolean, gzip: Boolean = false) extends BatchWrite {
+    layout: TsvWriteLayout, truncateFirst: Boolean, gzip: Boolean = false)
+    extends BatchWrite {
   private val jobUuid = java.util.UUID.randomUUID().toString
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =
-    new TsvWriterFactory(schema, path, jobUuid, gzip)
+    new TsvWriterFactory(schema, path, layout, jobUuid, gzip)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val root = new java.io.File(TsvWritePaths.strip(path))
     if (truncateFirst)
-      TsvWritePaths.deleteAllOrThrow(
-        Option(root.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile && !f.getName.startsWith("_") &&
-            !f.getName.startsWith(".")).toSeq,
+      TsvWritePaths.deleteAllOrThrow(layout.truncateTargets(root),
         "overwrite-truncate")
     root.mkdirs()
-    messages.foreach { case TsvTaskCommit(tmp, _, _) =>
-      val src = new java.io.File(tmp)
-      val dst = new java.io.File(root, src.getName)
-      if (!src.renameTo(dst))
-        throw new java.io.IOException(s"graft tsv sink: rename failed: $tmp")
+    messages.foreach { case TsvTaskCommit(files, _) =>
+      files.foreach { case (token, tmp) =>
+        val src = new java.io.File(tmp)
+        val dir = layout.dirOf(root, token)
+        dir.mkdirs()
+        TsvWritePaths.publish(src, new java.io.File(dir, src.getName))
+      }
     }
-    dropTemp(root)
+    TsvWritePaths.dropTemp(root, jobUuid)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    dropTemp(new java.io.File(TsvWritePaths.strip(path)))
-
-  /** Delete this job's temp dir; drop the shared `_temporary` parent
-    * too once empty (a concurrent job's subdir keeps it alive). */
-  private def dropTemp(root: java.io.File): Unit = {
-    val tempRoot = new java.io.File(root, "_temporary")
-    TsvWritePaths.deleteRecursively(new java.io.File(tempRoot, jobUuid))
-    tempRoot.delete()
-    ()
-  }
+    TsvWritePaths.dropTemp(new java.io.File(TsvWritePaths.strip(path)),
+      jobUuid)
 }
 
 /** STREAMING_WRITE: `writeStream.toTable`/`.format("graft_tsv")` lands
-  * micro-batches in the TSV store with EXACTLY-ONCE visibility — the
+  * micro-batches in a flat TSV store with EXACTLY-ONCE visibility — the
   * batch sink's task-commit protocol (temp files → driver-side rename
   * of committed attempts only) plus two epoch-level guards that make a
   * REPLAYED batch (Spark's at-least-once epoch redelivery after a
@@ -1914,10 +2024,10 @@ final class TsvBatchWrite(schema: StructType, path: String,
   *     — replacing, not duplicating (same offsets → same rows).
   *
   * Append mode adds each epoch's files; complete mode (truncate) clears
-  * data files then lands the epoch, same replay guards. At 100 TB this
-  * is the ingestion edge: a restart may re-run work, but the TABLE
-  * never shows a row twice — readers (batch or q289's tailing stream)
-  * only ever see whole committed epochs. */
+  * the flat layout's truncate set then lands the epoch, same replay
+  * guards. At 100 TB this is the ingestion edge: a restart may re-run
+  * work, but the TABLE never shows a row twice — readers (batch or
+  * q289's tailing stream) only ever see whole committed epochs. */
 final class TsvStreamingWrite(schema: StructType, path: String,
     queryId: String, truncateEachEpoch: Boolean, gzip: Boolean = false)
     extends StreamingWrite {
@@ -1926,19 +2036,18 @@ final class TsvStreamingWrite(schema: StructType, path: String,
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : StreamingDataWriterFactory =
-    new TsvStreamingWriterFactory(schema, path, qid, gzip)
+    new TsvWriterFactory(schema, path, TsvWriteLayout.Flat, qid, gzip)
 
   private def root = new java.io.File(TsvWritePaths.strip(path))
   private def ledgerDir = new java.io.File(root, s"_streaming_commits/$qid")
-  private def tempDir(epochId: Long) =
-    new java.io.File(root, s"_temporary/$qid-e$epochId")
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val marker = new java.io.File(ledgerDir, epochId.toString)
     if (marker.isFile) { dropTemp(epochId); return } // replayed epoch
     root.mkdirs()
     if (truncateEachEpoch)
-      TsvLayout.listDataFiles(root).foreach(_.delete())
+      TsvWritePaths.deleteAllOrThrow(
+        TsvWriteLayout.Flat.truncateTargets(root), "complete-mode truncate")
     // crash-window replay sweep: remove EVERY file this epoch landed in
     // the crashed attempt, not just the names the replay re-uses — a
     // replay planned with FEWER partitions (changed shuffle conf, AQE
@@ -1951,11 +2060,11 @@ final class TsvStreamingWrite(schema: StructType, path: String,
         (f.getName.endsWith(s"-$qid-e$epochId.txt") ||
           f.getName.endsWith(s"-$qid-e$epochId.txt.gz")))
       .foreach(_.delete())
-    messages.foreach { case TsvTaskCommit(tmp, _, partitionId) =>
-      val src = new java.io.File(tmp)
-      val dst = new java.io.File(root, f"part-$partitionId%05d-$qid-e$epochId$suffix")
-      if (!src.renameTo(dst))
-        throw new java.io.IOException(s"graft tsv sink: rename failed: $tmp")
+    messages.foreach { case TsvTaskCommit(files, partitionId) =>
+      files.foreach { case (_, tmp) =>
+        TsvWritePaths.publish(new java.io.File(tmp), new java.io.File(root,
+          f"part-$partitionId%05d-$qid-e$epochId$suffix"))
+      }
     }
     ledgerDir.mkdirs()
     java.nio.file.Files.write(marker.toPath,
@@ -1975,25 +2084,92 @@ final class TsvStreamingWrite(schema: StructType, path: String,
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     dropTemp(epochId)
 
-  private def dropTemp(epochId: Long): Unit = {
-    val tempRoot = new java.io.File(root, "_temporary")
-    TsvWritePaths.deleteRecursively(tempDir(epochId))
-    tempRoot.delete()
-    ()
-  }
+  private def dropTemp(epochId: Long): Unit =
+    TsvWritePaths.dropTemp(root, s"$qid-e$epochId")
 }
 
-final class TsvStreamingWriterFactory(schema: StructType, path: String,
-    qid: String, gzip: Boolean = false) extends StreamingDataWriterFactory {
+/** One writer factory for batch jobs and streaming epochs: a batch job's
+  * tag is its uuid, an epoch's is `<qid8>-e<epoch>`. */
+final class TsvWriterFactory(schema: StructType, path: String,
+    layout: TsvWriteLayout, jobTag: String, gzip: Boolean)
+    extends DataWriterFactory with StreamingDataWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long)
+      : DataWriter[InternalRow] =
+    new TsvDataWriter(schema, path, layout, jobTag, partitionId, taskId, gzip)
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : DataWriter[InternalRow] =
-    new TsvDataWriter(schema, path, s"$qid-e$epochId", partitionId, taskId,
-      gzip)
+    new TsvDataWriter(schema, path, layout, s"$jobTag-e$epochId",
+      partitionId, taskId, gzip)
 }
 
-/** Path helpers shared by the scan and the sink — ONE copy of the
-  * file:-scheme normalization so read and write always resolve the
-  * same `path` option to the same directory. */
+/** One task's writer for every layout: ONE open stream at a time. A
+  * flat task opens its single file up front and never routes; a routed
+  * task opens a token's file when the token changes. Rows arrive sorted
+  * by token (the write's requiredOrdering), so each token streams
+  * contiguously; a revisit of an earlier token (a direct DSv2 caller
+  * bypassing the ordering) stays CORRECT via append-reopen — for gzip
+  * that writes a second member, which GZIPInputStream reads
+  * transparently — it just costs an extra open/close. */
+final class TsvDataWriter(schema: StructType, path: String,
+    layout: TsvWriteLayout, jobTag: String, partitionId: Int, taskId: Long,
+    gzip: Boolean) extends DataWriter[InternalRow] {
+  private val tempDir =
+    new java.io.File(TsvWritePaths.strip(path), s"_temporary/$jobTag")
+  tempDir.mkdirs()
+  private val suffix = if (gzip) ".txt.gz" else ".txt"
+  private val fields = layout.fileFields(schema)
+  private val route: InternalRow => String = layout.router(schema).orNull
+  private val files =
+    scala.collection.mutable.LinkedHashMap.empty[String, java.io.File]
+  private var token: String = null
+  private var out: java.io.OutputStream = null
+  if (route == null) open("")
+
+  private def open(t: String): Unit = {
+    if (out != null) out.close()
+    val reopen = files.contains(t)
+    // taskId in the name: a retried/speculative attempt of the same
+    // partition writes a DIFFERENT file; only the committed one is
+    // renamed. The job tag is in the FINAL name too: taskIds restart at
+    // 0 in a new SparkContext, so an APPEND from a fresh session would
+    // otherwise collide with an earlier job's part-00000-0 and renameTo
+    // would silently replace it — losing the earlier write. The codec
+    // is in the SUFFIX: readers detect gzip by extension
+    // (TsvLayout.isGzip), so the temp name must already carry it.
+    val f = files.getOrElseUpdate(t, new java.io.File(tempDir,
+      f"part-$partitionId%05d-$taskId-${jobTag.take(8)}${layout.tag(t)}$suffix"))
+    val buffered = new java.io.BufferedOutputStream(
+      new java.io.FileOutputStream(f, reopen), 1 << 16)
+    out =
+      if (gzip) new java.util.zip.GZIPOutputStream(buffered, 1 << 16)
+      else buffered
+    token = t
+  }
+
+  override def write(r: InternalRow): Unit = {
+    if (route != null) {
+      val t = route(r)
+      if (t != token) open(t)
+    }
+    out.write(TsvLineFormat.line(r, fields)
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  override def commit(): WriterCommitMessage = {
+    close()
+    TsvTaskCommit(files.toSeq.map { case (t, f) => (t, f.getPath) },
+      partitionId)
+  }
+
+  override def abort(): Unit = {
+    close()
+    files.values.foreach(_.delete())
+  }
+
+  override def close(): Unit =
+    if (out != null) { out.close(); out = null }
+}
+
 /** The layout contract shared by the BATCH scan and the MICRO-BATCH
   * stream — one definition of "what is a data file", "which dirs are
   * key partitions", and "how does a file byte-split", so the two read
@@ -2028,15 +2204,14 @@ private[sources] object TsvLayout {
       .filter(d => d.isDirectory && d.getName.contains("=")).sortBy(_.getPath)
       .flatMap(dataFilesIn)
 
-  /** Keyed subdirectories of a hive-style layout, sorted by key value.
-    * `strict` (the batch contract) fails loudly on a missing layout or
-    * zero key dirs; the stream passes false — an empty store before
-    * the first sink commit is a legitimate stream state, not an error. */
-  /** Keyed subdirectories as (directory TOKEN, dir). BIGINT layouts
-    * (`numericKey`) canonicalize tokens through Long (so `shard=007`
-    * and a runtime key 7 agree, exactly as the old Long-typed path
-    * did) and sort numerically for deterministic planning; STRING
-    * layouts keep tokens verbatim, sorted lexicographically. */
+  /** Keyed subdirectories of a hive-style layout as (directory TOKEN,
+    * dir). BIGINT layouts (`numericKey`) canonicalize tokens through
+    * Long (so `shard=007` and a runtime key 7 agree) and sort
+    * numerically for deterministic planning; STRING layouts keep tokens
+    * verbatim, sorted lexicographically. `strict` (the batch contract)
+    * fails loudly on a missing layout or zero key dirs; the stream
+    * passes false — an empty store before the first sink commit is a
+    * legitimate stream state, not an error. */
   def partitionDirs(path: String, c: String, strict: Boolean,
       numericKey: Boolean = true): Seq[(String, java.io.File)] = {
     val root = new java.io.File(TsvWritePaths.strip(path))
@@ -2186,7 +2361,19 @@ private[sources] object TsvBucketFunction
   }
 }
 
+/** Path helpers shared by the scan and the sink — ONE copy of the
+  * file:-scheme normalization so read and write always resolve the
+  * same `path` option to the same directory, and one copy of the
+  * sink's rename, temp-dir and delete steps. */
 private[sources] object TsvWritePaths {
+  /** Remote filesystem schemes refused even WITHOUT the `//` (an
+    * `hdfs:/x` single-slash URI is legal and would silently go local
+    * otherwise). Kept to schemes that are unambiguously remote so a
+    * legal POSIX filename with a colon in its first segment
+    * (`out:v2/data`) keeps resolving locally. */
+  private val RemoteSchemes = Set("hdfs", "webhdfs", "viewfs", "s3",
+    "s3a", "s3n", "gs", "abfs", "abfss", "wasb", "wasbs", "oss", "cos",
+    "ftp", "sftp", "http", "https")
   /** Resolve a store/checkpoint path to a LOCAL filesystem path —
     * loudly. The TSV store and its seen-files checkpoint log do
     * java.io/java.nio I/O, so a remote-scheme path (`s3a://bucket/tbl`
@@ -2197,14 +2384,6 @@ private[sources] object TsvWritePaths {
     * state, the silent-no-op failure class. Every path the store
     * touches funnels through here, so the refusal covers tables,
     * sinks, catalogs, and the stream log in one place. */
-  /** Remote filesystem schemes refused even WITHOUT the `//` (an
-    * `hdfs:/x` single-slash URI is legal and would silently go local
-    * otherwise). Kept to schemes that are unambiguously remote so a
-    * legal POSIX filename with a colon in its first segment
-    * (`out:v2/data`) keeps resolving locally. */
-  private val RemoteSchemes = Set("hdfs", "webhdfs", "viewfs", "s3",
-    "s3a", "s3n", "gs", "abfs", "abfss", "wasb", "wasbs", "oss", "cos",
-    "ftp", "sftp", "http", "https")
   def strip(p: String): String =
     if (p.startsWith("file:")) p.stripPrefix("file:")
     else {
@@ -2235,77 +2414,36 @@ private[sources] object TsvWritePaths {
   }
   /** Truncation that cannot lie: paths surviving their delete FAIL the
     * statement (an undeletable file silently surviving a truncate that
-    * reported success is resurrected data on the next scan — the same
-    * convention as TsvTable.truncateTable). */
+    * reported success is resurrected data on the next scan). Every
+    * truncate — sink overwrite, streaming complete mode, `TRUNCATE
+    * TABLE` — goes through here. */
   def deleteAllOrThrow(paths: Seq[java.io.File], what: String): Unit = {
     paths.foreach(deleteRecursively)
     val survivors = paths.filter(_.exists())
     if (survivors.nonEmpty)
       throw new java.io.IOException(
-        s"graft tsv sink: $what could not delete ${survivors.size} " +
+        s"graft tsv: $what could not delete ${survivors.size} " +
           s"path(s), e.g. ${survivors.head}")
   }
-}
-
-final class TsvWriterFactory(schema: StructType, path: String,
-    jobUuid: String, gzip: Boolean = false) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : DataWriter[InternalRow] =
-    new TsvDataWriter(schema, path, jobUuid, partitionId, taskId, gzip)
-}
-
-final class TsvDataWriter(schema: StructType, path: String, jobUuid: String,
-    partitionId: Int, taskId: Long, gzip: Boolean = false)
-    extends DataWriter[InternalRow] {
-  private val tempDir =
-    new java.io.File(TsvWritePaths.strip(path), s"_temporary/$jobUuid")
-  tempDir.mkdirs()
-  // taskId in the name: a retried/speculative attempt of the same
-  // partition writes a DIFFERENT file; only the committed one is renamed.
-  // The job uuid is in the FINAL name too: taskIds restart at 0 in a new
-  // SparkContext, so an APPEND from a fresh session would otherwise
-  // collide with an earlier job's part-00000-0 and renameTo would
-  // silently replace it — losing the earlier write.
-  // The codec is in the SUFFIX: readers detect gzip by extension
-  // (TsvLayout.isGzip), so the temp name must already carry it — the
-  // commit renames preserve (batch) or re-derive (streaming) it.
-  private val tempFile = new java.io.File(tempDir,
-    f"part-$partitionId%05d-$taskId-${jobUuid.take(8)}" +
-      (if (gzip) ".txt.gz" else ".txt"))
-  private val out: java.io.OutputStream = {
-    val buffered = new java.io.BufferedOutputStream(
-      new java.io.FileOutputStream(tempFile), 1 << 16)
-    if (gzip) new java.util.zip.GZIPOutputStream(buffered, 1 << 16)
-    else buffered
-  }
-  private var rows = 0L
-  private val fields = schema.fields.map(_.dataType).zipWithIndex
-    .map { case (t, i) => (i, t) }
-
-  override def write(r: InternalRow): Unit = {
-    out.write(TsvLineFormat.line(r, fields)
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    rows += 1
-  }
-
-  override def commit(): WriterCommitMessage = {
-    out.close()
-    TsvTaskCommit(tempFile.getPath, rows, partitionId)
-  }
-
-  override def abort(): Unit = {
-    out.close()
-    tempFile.delete()
+  /** Make one committed temp file visible. */
+  def publish(src: java.io.File, dst: java.io.File): Unit =
+    if (!src.renameTo(dst))
+      throw new java.io.IOException(
+        s"graft tsv sink: rename failed: $src -> $dst")
+  /** Delete a job's temp dir; drop the shared `_temporary` parent too
+    * once empty (a concurrent job's subdir keeps it alive). */
+  def dropTemp(root: java.io.File, jobTag: String): Unit = {
+    val tempRoot = new java.io.File(root, "_temporary")
+    deleteRecursively(new java.io.File(tempRoot, jobTag))
+    tempRoot.delete()
     ()
   }
-
-  override def close(): Unit = out.close()
 }
 
-/** ONE definition of "a row as a TSV line", shared by the flat and the
-  * keyed writer (the keyed writer serializes schema-minus-key — the
-  * read side's file-field contract — so the two writers must agree on
-  * everything else byte-for-byte). NULL → empty field; framing bytes
+/** ONE definition of "a row as a TSV line" for every write layout (a
+  * keyed line serializes schema-minus-key — the read side's file-field
+  * contract — and agrees with the others on everything else
+  * byte-for-byte). NULL → empty field; framing bytes
   * in strings refuse the row (fail-fast beats a torn line). */
 private[sources] object TsvLineFormat {
   def line(r: InternalRow, fields: Array[(Int, DataType)]): String = {
@@ -2334,366 +2472,4 @@ private[sources] object TsvLineFormat {
     sb.append('\n')
     sb.toString
   }
-}
-
-/** The write half of a PARTITIONED table (catalog `PARTITIONED BY
-  * identity(col)` / the keyed `<col>=<v>/` layout the path API reads):
-  * each task routes rows by key into per-key temp files, the driver
-  * renames committed attempts into their key directories — the same
-  * two-phase protocol as the flat sink, with the key moved from the
-  * line into the DIRECTORY name (the keyed read synthesizes it back).
-  * The WRITE declares its own requirements
-  * ([[org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering]]):
-  * clustered by key (every key lands in one task → one file per key
-  * per job, no producer REPARTITION hint) and sorted by key within the
-  * task (the writer streams one key at a time → one open fd per task
-  * regardless of key cardinality). Streaming epochs are refused loudly: the epoch
-  * ledger/replay sweep is built around flat root-level names, and a
-  * silent flat fallback would write the key INTO the lines and corrupt
-  * the layout contract. */
-final class TsvKeyedWriteBuilder(schema: StructType, path: String,
-    keyCol: String, gzip: Boolean = false)
-    extends WriteBuilder with SupportsTruncate {
-  private var truncateFirst = false
-  override def truncate(): WriteBuilder = { truncateFirst = true; this }
-  override def build(): Write = new Write
-      with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-    // the SINK declares its distribution ([[RequiresDistributionAndOrdering]]):
-    // cluster incoming rows by the partition key, so every key's rows
-    // land in ONE task and the layout gets exactly one file per key
-    // per job — without it, an unclustered INSERT writes tasks×keys
-    // small files and every producer has to remember a REPARTITION
-    // hint. Spark plans the exchange only when the child's
-    // partitioning doesn't already satisfy it (an already-clustered
-    // pipeline inserts exchange-free), which is the right 100 TB
-    // default: the small-files discipline lives in the table, not in
-    // every writer's query text.
-    override def requiredDistribution()
-        : org.apache.spark.sql.connector.distributions.Distribution =
-      org.apache.spark.sql.connector.distributions.Distributions.clustered(
-        Array(org.apache.spark.sql.connector.expressions.Expressions
-          .column(keyCol)))
-    // sort each task's rows by key so the writer streams ONE key at a
-    // time: open-file handles stay at 1 per task regardless of key
-    // cardinality (an unsorted writer holding a stream + 64 KiB buffer
-    // + gzip deflater per DISTINCT KEY would exhaust fds on a
-    // high-cardinality partition column)
-    override def requiredOrdering()
-        : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-      Array(org.apache.spark.sql.connector.expressions.Expressions.sort(
-        org.apache.spark.sql.connector.expressions.Expressions
-          .column(keyCol),
-        org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
-    override def toBatch: BatchWrite =
-      new TsvKeyedBatchWrite(schema, path, keyCol, truncateFirst, gzip)
-    override def toStreaming: StreamingWrite =
-      throw new UnsupportedOperationException(
-        "graft tsv sink: streaming writes to a PARTITIONED table are " +
-          "not supported — stream into an unpartitioned table and " +
-          "compact/re-key it with a periodic batch job (q118/q304 shape)")
-  }
-}
-
-/** The write half of a CLUSTERED (bucketed) table: each task routes
-  * rows by `bucketOf(col)` into per-bucket temp files, the driver
-  * renames committed attempts into `_graft_bucket=<id>/` — the keyed
-  * writer's two-phase protocol with the hash bucket in place of the
-  * key, and with the cluster column kept IN the lines. The write
-  * declares clustered+sorted distribution ON THE BUCKET TRANSFORM
-  * itself ([[org.apache.spark.sql.connector.write
-  * .RequiresDistributionAndOrdering]]): Spark resolves `bucket(n,
-  * col)` through the catalog's function and plans the exchange, so
-  * every bucket lands as ONE file per job and the writer streams one
-  * bucket at a time (one open fd per task). Streaming epochs refuse
-  * loudly, same as the keyed sink. */
-final class TsvBucketedWriteBuilder(schema: StructType, path: String,
-    clusterCol: String, numBuckets: Int, gzip: Boolean = false)
-    extends WriteBuilder with SupportsTruncate {
-  private var truncateFirst = false
-  override def truncate(): WriteBuilder = { truncateFirst = true; this }
-  override def build(): Write = new Write
-      with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-    private def bucketExpr =
-      org.apache.spark.sql.connector.expressions.Expressions
-        .bucket(numBuckets, clusterCol)
-    override def requiredDistribution()
-        : org.apache.spark.sql.connector.distributions.Distribution =
-      org.apache.spark.sql.connector.distributions.Distributions
-        .clustered(Array(bucketExpr))
-    override def requiredOrdering()
-        : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-      Array(org.apache.spark.sql.connector.expressions.Expressions.sort(
-        bucketExpr,
-        org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
-    override def toBatch: BatchWrite =
-      new TsvBucketedBatchWrite(schema, path, clusterCol, numBuckets,
-        truncateFirst, gzip)
-    override def toStreaming: StreamingWrite =
-      throw new UnsupportedOperationException(
-        "graft tsv sink: streaming writes to a CLUSTERED table are " +
-          "not supported — stream into an unclustered table and " +
-          "re-bucket it with a periodic batch job (q118/q304 shape)")
-  }
-}
-
-final class TsvBucketedBatchWrite(schema: StructType, path: String,
-    clusterCol: String, numBuckets: Int, truncateFirst: Boolean,
-    gzip: Boolean) extends BatchWrite {
-  private val jobUuid = java.util.UUID.randomUUID().toString
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory =
-    new TsvBucketedWriterFactory(schema, path, clusterCol, numBuckets,
-      jobUuid, gzip)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new java.io.File(TsvWritePaths.strip(path))
-    if (truncateFirst)
-      TsvWritePaths.deleteAllOrThrow(TsvBuckets.bucketDirs(path).map(_._2),
-        "bucketed overwrite-truncate")
-    root.mkdirs()
-    messages.foreach { case TsvKeyedTaskCommit(files, _, _) =>
-      files.foreach { case (token, tmp) =>
-        val src = new java.io.File(tmp)
-        val dir = TsvBuckets.dirOf(root, token.toInt)
-        dir.mkdirs()
-        val dst = new java.io.File(dir, src.getName)
-        if (!src.renameTo(dst))
-          throw new java.io.IOException(
-            s"graft tsv sink: rename failed: $tmp -> $dst")
-      }
-    }
-    dropTemp(root)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    dropTemp(new java.io.File(TsvWritePaths.strip(path)))
-
-  private def dropTemp(root: java.io.File): Unit = {
-    val tempRoot = new java.io.File(root, "_temporary")
-    TsvWritePaths.deleteRecursively(new java.io.File(tempRoot, jobUuid))
-    tempRoot.delete()
-    ()
-  }
-}
-
-final class TsvBucketedWriterFactory(schema: StructType, path: String,
-    clusterCol: String, numBuckets: Int, jobUuid: String, gzip: Boolean)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : DataWriter[InternalRow] =
-    new TsvBucketedDataWriter(schema, path, clusterCol, numBuckets,
-      jobUuid, partitionId, taskId, gzip)
-}
-
-/** Per-row: hash the cluster column to its bucket, stream into that
-  * bucket's temp file. Rows arrive bucket-sorted (the write's
-  * requiredOrdering on the transform), so one stream is open at a
-  * time; a revisit stays correct via append-reopen, same as the keyed
-  * writer. Lines serialize ALL columns — the read side parses the
-  * cluster column from the data, not the directory. */
-final class TsvBucketedDataWriter(schema: StructType, path: String,
-    clusterCol: String, numBuckets: Int, jobUuid: String,
-    partitionId: Int, taskId: Long, gzip: Boolean)
-    extends DataWriter[InternalRow] {
-  private val colIdx = schema.fieldIndex(clusterCol)
-  require(schema.fields(colIdx).dataType == LongType,
-    s"graft tsv sink: bucket column $clusterCol must be BIGINT, got " +
-      schema.fields(colIdx).dataType)
-  private val fields = schema.fields.map(_.dataType).zipWithIndex
-    .map { case (t, i) => (i, t) }
-  private val tempDir =
-    new java.io.File(TsvWritePaths.strip(path), s"_temporary/$jobUuid")
-  tempDir.mkdirs()
-  private val suffix = if (gzip) ".txt.gz" else ".txt"
-
-  private val files = scala.collection.mutable.LongMap.empty[java.io.File]
-  private var curBucket = -1
-  private var curOut: java.io.OutputStream = null
-  private var rows = 0L
-
-  private def openFor(b: Int): java.io.OutputStream = {
-    val f = files.getOrElseUpdate(b.toLong, new java.io.File(tempDir,
-      f"part-$partitionId%05d-$taskId-${jobUuid.take(8)}-b$b$suffix"))
-    val buffered = new java.io.BufferedOutputStream(
-      new java.io.FileOutputStream(f, true), 1 << 16)
-    if (gzip) new java.util.zip.GZIPOutputStream(buffered, 1 << 16)
-    else buffered
-  }
-
-  override def write(r: InternalRow): Unit = {
-    if (r.isNullAt(colIdx))
-      throw new IllegalArgumentException(
-        s"graft tsv sink: cluster column $clusterCol is NULL — the " +
-          "bucket hash has no null lane; filter or default the key " +
-          "before writing")
-    val b = TsvBuckets.bucketOf(r.getLong(colIdx), numBuckets)
-    if (curOut == null || b != curBucket) {
-      if (curOut != null) curOut.close()
-      curOut = openFor(b)
-      curBucket = b
-    }
-    curOut.write(TsvLineFormat.line(r, fields)
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    rows += 1
-  }
-
-  override def commit(): WriterCommitMessage = {
-    if (curOut != null) { curOut.close(); curOut = null }
-    TsvKeyedTaskCommit(
-      files.toSeq.map { case (b, f) => (b.toString, f.getPath) },
-      rows, partitionId)
-  }
-
-  override def abort(): Unit = {
-    if (curOut != null) { curOut.close(); curOut = null }
-    files.values.foreach(_.delete())
-    ()
-  }
-
-  override def close(): Unit =
-    if (curOut != null) { curOut.close(); curOut = null }
-}
-
-/** Per-task commit for the keyed writer: (key TOKEN, tempFile) pairs —
-  * one temp file per key value this task saw. */
-final case class TsvKeyedTaskCommit(files: Seq[(String, String)], rows: Long,
-    partitionId: Int) extends WriterCommitMessage
-
-final class TsvKeyedBatchWrite(schema: StructType, path: String,
-    keyCol: String, truncateFirst: Boolean, gzip: Boolean)
-    extends BatchWrite {
-  private val jobUuid = java.util.UUID.randomUUID().toString
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory =
-    new TsvKeyedWriterFactory(schema, path, keyCol, jobUuid, gzip)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val root = new java.io.File(TsvWritePaths.strip(path))
-    // truncate = drop whole key directories (an empty key dir would
-    // still be listed as a live partition by the keyed read)
-    if (truncateFirst)
-      TsvWritePaths.deleteAllOrThrow(
-        Option(root.listFiles()).getOrElse(Array.empty)
-          .filter(d => d.isDirectory && d.getName.startsWith(keyCol + "="))
-          .toSeq,
-        "keyed overwrite-truncate")
-    root.mkdirs()
-    messages.foreach { case TsvKeyedTaskCommit(files, _, _) =>
-      files.foreach { case (token, tmp) =>
-        val src = new java.io.File(tmp)
-        val dir = new java.io.File(root, s"$keyCol=$token")
-        dir.mkdirs()
-        val dst = new java.io.File(dir, src.getName)
-        if (!src.renameTo(dst))
-          throw new java.io.IOException(
-            s"graft tsv sink: rename failed: $tmp -> $dst")
-      }
-    }
-    dropTemp(root)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    dropTemp(new java.io.File(TsvWritePaths.strip(path)))
-
-  private def dropTemp(root: java.io.File): Unit = {
-    val tempRoot = new java.io.File(root, "_temporary")
-    TsvWritePaths.deleteRecursively(new java.io.File(tempRoot, jobUuid))
-    tempRoot.delete()
-    ()
-  }
-}
-
-final class TsvKeyedWriterFactory(schema: StructType, path: String,
-    keyCol: String, jobUuid: String, gzip: Boolean)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : DataWriter[InternalRow] =
-    new TsvKeyedDataWriter(schema, path, keyCol, jobUuid, partitionId,
-      taskId, gzip)
-}
-
-final class TsvKeyedDataWriter(schema: StructType, path: String,
-    keyCol: String, jobUuid: String, partitionId: Int, taskId: Long,
-    gzip: Boolean) extends DataWriter[InternalRow] {
-  private val keyIdx = schema.fieldIndex(keyCol)
-  private val keyIsString = schema.fields(keyIdx).dataType match {
-    case StringType => true
-    case LongType => false
-    case other => throw new IllegalArgumentException(
-      s"graft tsv sink: partition column $keyCol must be BIGINT or " +
-        s"STRING, got $other")
-  }
-  // file fields = schema MINUS the key, in schema order — exactly how
-  // the keyed read indexes raw fields (TsvPartitionReader.fullIdx)
-  private val fileFields = schema.fields.map(_.dataType).zipWithIndex
-    .collect { case (t, i) if i != keyIdx => (i, t) }
-  private val tempDir =
-    new java.io.File(TsvWritePaths.strip(path), s"_temporary/$jobUuid")
-  tempDir.mkdirs()
-  private val suffix = if (gzip) ".txt.gz" else ".txt"
-
-  // ONE open stream at a time: rows arrive sorted by key (the write's
-  // requiredOrdering), so each key streams contiguously and the writer
-  // closes the previous key's file before opening the next. A revisit
-  // of an earlier key (a direct DSv2 caller bypassing the ordering)
-  // stays CORRECT via append-reopen — for gzip that writes a second
-  // member, which GZIPInputStream reads transparently — it just costs
-  // an extra open/close instead of a held fd.
-  private val files =
-    scala.collection.mutable.HashMap.empty[String, java.io.File]
-  private var curKey: String = null
-  private var curOut: java.io.OutputStream = null
-  private var rows = 0L
-
-  private def openFor(token: String): java.io.OutputStream = {
-    // same naming contract as the flat writer (taskId for speculative
-    // attempts, uuid against cross-job collisions) plus the key token
-    val f = files.getOrElseUpdate(token, new java.io.File(tempDir,
-      f"part-$partitionId%05d-$taskId-${jobUuid.take(8)}-k$token$suffix"))
-    val buffered = new java.io.BufferedOutputStream(
-      new java.io.FileOutputStream(f, true), 1 << 16)
-    if (gzip) new java.util.zip.GZIPOutputStream(buffered, 1 << 16)
-    else buffered
-  }
-
-  override def write(r: InternalRow): Unit = {
-    if (r.isNullAt(keyIdx))
-      throw new IllegalArgumentException(
-        s"graft tsv sink: partition column $keyCol is NULL — the keyed " +
-          "layout has no null-key directory; filter or default the key " +
-          "before writing")
-    // STRING keys validate path-safety per distinct key (on the key
-    // CHANGE, not per row — rows arrive key-sorted); BIGINT tokens are
-    // canonical decimal, path-safe by construction
-    val k =
-      if (keyIsString) r.getUTF8String(keyIdx).toString
-      else r.getLong(keyIdx).toString
-    if (curOut == null || k != curKey) {
-      if (curOut != null) curOut.close()
-      if (keyIsString) TsvLayout.validateKeyToken(k)
-      curOut = openFor(k)
-      curKey = k
-    }
-    curOut.write(TsvLineFormat.line(r, fileFields)
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    rows += 1
-  }
-
-  override def commit(): WriterCommitMessage = {
-    if (curOut != null) { curOut.close(); curOut = null }
-    TsvKeyedTaskCommit(
-      files.toSeq.map { case (k, f) => (k, f.getPath) },
-      rows, partitionId)
-  }
-
-  override def abort(): Unit = {
-    if (curOut != null) { curOut.close(); curOut = null }
-    files.values.foreach(_.delete())
-    ()
-  }
-
-  override def close(): Unit =
-    if (curOut != null) { curOut.close(); curOut = null }
 }

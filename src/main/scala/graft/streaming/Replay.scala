@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SessionConfs.withConfs
 import graft.sources.Tables
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress, Trigger}
@@ -330,7 +330,7 @@ object Replay {
       tag: String)(build: => DataFrame): String = {
     val fs = new Path(destDir).getFileSystem(s.sparkContext.hadoopConfiguration)
     val lib = graft.Memo(("slice", base, tag))(buildOneFileParquet(s, base, build))
-    copyVisible(s, fs, lib, destDir,
+    copyVisible(fs, lib, destDir,
       f"${tag}_${sentinelSeq.incrementAndGet()}%05d.parquet")
   }
 
@@ -378,7 +378,7 @@ object Replay {
       .mkString(",") + "|" + rows.map(encRow).mkString(";")
     val lib = graft.Memo(("sentinel", key))(buildOneFileParquet(s, base,
       s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)))
-    copyVisible(s, fs, lib, shards,
+    copyVisible(fs, lib, shards,
       f"zz_sentinel_${sentinelSeq.incrementAndGet()}%05d_" +
         java.util.UUID.randomUUID().toString.replace("-", "") + ".parquet")
   }
@@ -386,23 +386,26 @@ object Replay {
   /** Copy `lib` into the actively-polled `destDir` ATOMICALLY: first to
     * a dot-prefixed temp name (hidden — Spark's file listing skips
     * `.`/`_` prefixes, so a half-copied file can never be listed by a
-    * running FileStreamSource), then a same-directory rename (atomic on
-    * a local fs). A failed copy forgets the enclosing dump so a partial
-    * file can't poison later gates — the next consumer rewrites the
-    * whole dump. */
-  private def copyVisible(s: SparkSession, fs: FileSystem,
-      lib: String, destDir: String, name: String): String = {
-    val tmp = new Path(destDir, "." + name + ".tmp")
+    * running FileStreamSource), then a same-directory atomic rename.
+    * Both steps are `java.nio` calls on the local file, so publishing
+    * starts no process (Hadoop's local `FileSystem` spawns a `chmod`
+    * per created file without libhadoop) and writes no `.crc`. A failed
+    * copy forgets the enclosing dump so a partial file can't poison
+    * later gates — the next consumer rewrites the whole dump. */
+  private def copyVisible(fs: FileSystem, lib: String, destDir: String,
+      name: String): String = {
+    def local(p: Path) = java.nio.file.Paths.get(fs.makeQualified(p).toUri)
     val dest = new Path(destDir, name)
+    val tmp = local(new Path(destDir, "." + name + ".tmp"))
     try {
-      if (!FileUtil.copy(fs, new Path(lib), fs, tmp,
-          false, s.sparkContext.hadoopConfiguration))
-        sys.error(s"sentinel copy failed: $lib -> $tmp")
-      if (!fs.rename(tmp, dest))
-        sys.error(s"sentinel publish rename failed: $tmp -> $dest")
+      java.nio.file.Files.createDirectories(tmp.getParent)
+      java.nio.file.Files.copy(local(new Path(lib)), tmp,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      java.nio.file.Files.move(tmp, local(dest),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     } catch {
       case e: Throwable =>
-        try fs.delete(tmp, false)
+        try java.nio.file.Files.deleteIfExists(tmp)
         catch { case scala.util.control.NonFatal(_) => () }
         graft.Memo.forgetUnder(destDir)
         throw e

@@ -605,9 +605,10 @@ class TsvCatalogSpec extends AnyFunSuite {
   }
 
   test("streaming writes to a partitioned table refuse loudly") {
-    val b = new TsvKeyedWriteBuilder(
+    val b = new TsvWriteBuilder(
       org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, shard BIGINT"),
-      java.nio.file.Files.createTempDirectory("graft_kw").toString, "shard")
+      java.nio.file.Files.createTempDirectory("graft_kw").toString,
+      TsvWriteLayout.Keyed("shard"), java.util.UUID.randomUUID().toString)
     val e = intercept[UnsupportedOperationException] {
       b.build().toStreaming
     }

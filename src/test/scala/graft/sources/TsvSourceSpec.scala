@@ -947,54 +947,145 @@ class TsvSourceSpec extends AnyFunSuite {
   }
 
   test("sink overwrite truncates previous data; append adds to it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tsv_sink").toString
-    sinkTo(writeFrame(Seq((1L, "a", 1.0, "x"), (2L, "b", 2.0, "y"))),
-      dir, "overwrite")
-    sinkTo(writeFrame(Seq((3L, "c", 3.0, "z"))), dir, "overwrite")
-    assert(readTsv(dir).collect().map(_.getLong(0)).toSeq == Seq(3L),
-      "overwrite must clear the previous write's files")
-    sinkTo(writeFrame(Seq((4L, "d", 4.0, "w"))), dir, "append")
-    assert(readTsv(dir).orderBy("id").collect().map(_.getLong(0)).toSeq ==
-      Seq(3L, 4L), "append must keep the previous write's files")
+    // two starting stores: empty, and one already holding a data file in
+    // a `shard=1/` subdir — the flat read returns it, so a flat
+    // overwrite must drop it too
+    for (nested <- Seq(false, true)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_tsv_sink").toString
+      if (nested) {
+        val d = java.nio.file.Files.createDirectories(
+          java.nio.file.Paths.get(dir, "shard=1"))
+        java.nio.file.Files.write(d.resolve("part-00000.txt"),
+          "5\te\t5.0\tv\n".getBytes("UTF-8"))
+        assert(readTsv(dir).collect().map(_.getLong(0)).toSeq == Seq(5L))
+      }
+      sinkTo(writeFrame(Seq((1L, "a", 1.0, "x"), (2L, "b", 2.0, "y"))),
+        dir, "overwrite")
+      sinkTo(writeFrame(Seq((3L, "c", 3.0, "z"))), dir, "overwrite")
+      assert(readTsv(dir).collect().map(_.getLong(0)).toSeq == Seq(3L),
+        s"overwrite must clear the previous data files (nested=$nested)")
+      sinkTo(writeFrame(Seq((4L, "d", 4.0, "w"))), dir, "append")
+      assert(readTsv(dir).orderBy("id").collect().map(_.getLong(0)).toSeq ==
+        Seq(3L, 4L), "append must keep the previous write's files")
+    }
   }
 
+  /** A sink target for each write layout: flat, and keyed on `id` (the
+    * path API's `partition_col`), through the path API; bucketed on `id`
+    * through a catalog table, the only way to declare one. */
+  private final class SinkTarget(val layout: String, val dir: String,
+      val write: (org.apache.spark.sql.DataFrame, String) => Unit,
+      val read: () => org.apache.spark.sql.DataFrame)
+
+  /** A fresh graft catalog with one namespace `ns`: (name, root dir). */
+  private def freshCatalog(): (String, String) = {
+    val cat = "graft_sink_" + java.util.UUID.randomUUID().toString
+      .replace("-", "").take(10)
+    val root = java.nio.file.Files.createTempDirectory("graft_tsv_cat").toString
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftTsvCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    spark.sql(s"CREATE NAMESPACE $cat.ns")
+    (cat, root)
+  }
+
+  private def sinkTargets(): Seq[SinkTarget] = {
+    def tmp() = java.nio.file.Files.createTempDirectory("graft_tsv_sink").toString
+    val flat = tmp()
+    val keyed = tmp()
+    val (cat, root) = freshCatalog()
+    val bucketed = s"$cat.ns.t"
+    spark.sql(s"CREATE TABLE $bucketed ($writeDdl) PARTITIONED BY (bucket(4, id))")
+    Seq(
+      new SinkTarget("flat", flat, (df, mode) => sinkTo(df, flat, mode),
+        () => readTsv(flat)),
+      new SinkTarget("keyed", keyed,
+        (df, mode) => df.write.format(classOf[TsvSourceProvider].getName)
+          .option("path", keyed).option("write_schema", writeDdl)
+          .option("partition_col", "id").mode(mode).save(),
+        () => readKeyed(keyed, "id")),
+      new SinkTarget("bucketed", s"$root/ns/t",
+        (df, mode) =>
+          if (mode == "overwrite") df.writeTo(bucketed).overwrite(lit(true))
+          else df.writeTo(bucketed).append(),
+        () => spark.table(bucketed)))
+  }
+
+  private def readKeyed(dir: String, keyCol: String) =
+    spark.read.format(classOf[TsvSourceProvider].getName)
+      .schema(schema).option("path", dir).option("partition_col", keyCol)
+      .load()
+
   test("sink refuses framing bytes in strings and leaves the target clean") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tsv_sink").toString
-    sinkTo(writeFrame(Seq((1L, "keep", 1.0, "x"))), dir, "overwrite")
-    val bad = writeFrame(Seq((2L, "tab\there", 2.0, "y")))
-    val e = intercept[Exception] { sinkTo(bad, dir, "append") }
     def causes(t: Throwable): Seq[Throwable] =
       if (t == null) Nil else t +: causes(t.getCause)
-    assert(causes(e).exists(_.getMessage != null) &&
-      causes(e).exists(c => c.getMessage != null &&
-        c.getMessage.contains("framing byte")),
-      s"expected the framing-byte refusal, got: $e")
-    // the failed job aborted: original data intact, no new rows, no temp
-    assert(readTsv(dir).collect().map(_.getLong(0)).toSeq == Seq(1L))
-    assert(!new java.io.File(dir).listFiles()
-      .exists(_.getName.startsWith("_temporary")),
-      "abort must remove the temp dir")
+    for (t <- sinkTargets()) {
+      t.write(writeFrame(Seq((1L, "keep", 1.0, "x"))), "overwrite")
+      val bad = writeFrame(Seq((2L, "tab\there", 2.0, "y")))
+      val e = intercept[Exception] { t.write(bad, "append") }
+      assert(causes(e).exists(_.getMessage != null) &&
+        causes(e).exists(c => c.getMessage != null &&
+          c.getMessage.contains("framing byte")),
+        s"${t.layout}: expected the framing-byte refusal, got: $e")
+      // the failed job aborted: original data intact, no new rows, no temp
+      assert(t.read().collect().map(_.getLong(0)).toSeq == Seq(1L),
+        s"${t.layout}: the aborted job must land no rows")
+      assert(!new java.io.File(t.dir).listFiles()
+        .exists(_.getName.startsWith("_temporary")),
+        s"${t.layout}: abort must remove the temp dir")
+    }
   }
 
   test("sink append from a fresh job never collides with an earlier job's files") {
     // taskIds restart at 0 in a new SparkContext: two jobs with the
     // SAME (partitionId, taskId) must still land as distinct files —
     // a shared name would make renameTo silently replace the first
-    // job's data. Drive the write contract directly to pin it.
+    // job's data. Drive the write contract directly to pin it, for
+    // every layout, each routing both jobs' rows into ONE directory
+    // (keyed on the shared name, a single bucket).
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.unsafe.types.UTF8String
-    val dir = java.nio.file.Files.createTempDirectory("graft_tsv_sink").toString
-    def writeJob(id: Long): Unit = {
-      val bw = new TsvBatchWrite(schema, dir, truncateFirst = false)
-      val w = bw.createBatchWriterFactory(null).createWriter(0, 0L)
-      w.write(InternalRow(id, UTF8String.fromString(s"n$id"), 1.5, null))
-      val msg = w.commit()
-      bw.commit(Array(msg))
+    for (layout <- Seq(TsvWriteLayout.Flat, TsvWriteLayout.Keyed("name"),
+        TsvWriteLayout.Bucketed("id", 1))) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_tsv_sink").toString
+      def writeJob(id: Long): Unit = {
+        val bw = new TsvBatchWrite(schema, dir, layout, truncateFirst = false)
+        val w = bw.createBatchWriterFactory(null).createWriter(0, 0L)
+        w.write(InternalRow(id, UTF8String.fromString("n"), 1.5, null))
+        val msg = w.commit()
+        bw.commit(Array(msg))
+      }
+      writeJob(1L)
+      writeJob(2L)
+      val back = layout match {
+        case TsvWriteLayout.Keyed(c) => readKeyed(dir, c)
+        case _ => readTsv(dir)
+      }
+      assert(back.orderBy("id").collect().map(_.getLong(0)).toSeq ==
+        Seq(1L, 2L), s"$layout: the second job must not replace the first job's file")
     }
-    writeJob(1L)
-    writeJob(2L)
-    assert(readTsv(dir).orderBy("id").collect().map(_.getLong(0)).toSeq ==
-      Seq(1L, 2L), "the second job must not replace the first job's file")
+  }
+
+  test("sink write plans: flat adds no exchange or sort; keyed and bucketed cluster and sort") {
+    val (cat, _) = freshCatalog()
+    spark.sql(s"CREATE TABLE $cat.ns.flat ($writeDdl)")
+    spark.sql(s"CREATE TABLE $cat.ns.keyed ($writeDdl) PARTITIONED BY (id)")
+    spark.sql(s"CREATE TABLE $cat.ns.bucketed ($writeDdl) " +
+      "PARTITIONED BY (bucket(4, id))")
+    spark.range(20).selectExpr("id", "CAST(id AS STRING) AS name",
+        "id * 0.5 AS score", "'x' AS note")
+      .createOrReplaceTempView("graft_sink_plan_src")
+    def plan(t: String) = spark.sql(
+      s"EXPLAIN INSERT INTO $cat.ns.$t SELECT * FROM graft_sink_plan_src")
+      .collect().head.getString(0)
+    val flat = plan("flat")
+    assert(flat.contains("AppendData") && !flat.contains("Exchange") &&
+      !flat.contains("Sort"),
+      s"a flat write must plan no exchange or sort:\n$flat")
+    for (t <- Seq("keyed", "bucketed")) {
+      val p = plan(t)
+      assert(p.contains("Exchange hashpartitioning") && p.contains("Sort ["),
+        s"a $t write must plan its clustered and sorted exchange:\n$p")
+    }
   }
 
   // ---- runtime filtering (SupportsRuntimeFiltering contract) ----

@@ -128,15 +128,16 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     assert(seen.asScala.last._2 === expected, "the replayed batch was counted twice")
   }
 
-  test("a streaming gate drain starts no chmod or readlink process") {
-    val gate = graft.SparkEntry.queries("q70_stream_month_count")
+  /** The programs started while `body` runs, as a JFR recording of
+    * `jdk.ProcessStart` sees them (by file name). A positive control
+    * proves the recording sees a process this thread starts. */
+  private def programsStartedDuring(body: => Unit): Seq[String] = {
     val rec = new jdk.jfr.Recording()
     rec.enable("jdk.ProcessStart")
     rec.start()
     val dump = Files.createTempFile("lcfm_processes", ".jfr")
     val commands = try {
-      assert(gate(spark, sf).count() > 0)
-      // positive control: the recording does see a process this thread starts
+      body
       new ProcessBuilder("true").start().waitFor()
       rec.stop()
       rec.dump(dump)
@@ -145,7 +146,23 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     } finally { rec.close(); Files.deleteIfExists(dump) }
     val programs = commands.map(_.trim.split("\\s+").head.split('/').last)
     assert(programs.contains("true"), s"recording saw no process start: $commands")
-    val spawned = programs.filter(p => p == "chmod" || p == "readlink")
-    assert(spawned.isEmpty, s"${spawned.size} checkpoint spawns: ${commands.mkString("; ")}")
+    programs.filter(_ != "true")
+  }
+
+  test("a streaming gate drain starts no chmod or readlink process") {
+    val gate = graft.SparkEntry.queries("q70_stream_month_count")
+    val spawned = programsStartedDuring(assert(gate(spark, sf).count() > 0))
+      .filter(p => p == "chmod" || p == "readlink")
+    assert(spawned.isEmpty, s"${spawned.size} checkpoint spawns: ${spawned.mkString("; ")}")
+  }
+
+  test("publishing cached sentinel files starts no chmod or readlink process") {
+    // the first call builds q222's slice and sentinel library (Spark
+    // write jobs); a later call only copies library files into its source
+    val gate = graft.SparkEntry.queries("q222_stream_late_drop")
+    assert(gate(spark, sf).count() > 0)
+    val spawned = programsStartedDuring(assert(gate(spark, sf).count() > 0))
+      .filter(p => p == "chmod" || p == "readlink")
+    assert(spawned.isEmpty, s"${spawned.size} publish spawns: ${spawned.mkString("; ")}")
   }
 }
