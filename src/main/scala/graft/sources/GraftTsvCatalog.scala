@@ -41,15 +41,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * evolving the table is a one-file metadata write, never a rewrite.
   *
   * Partitioning: `PARTITIONED BY (<one BIGINT or STRING column>)`
-  * (identity transform only) creates the keyed `<col>=<v>/` layout by
-  * name —
-  * recorded in a `_graft_partition` sidecar, INSERTs route rows into
-  * key directories, scans prune/key-group/runtime-filter on it, and
-  * `DELETE FROM t WHERE <key predicate>` drops whole directories —
+  * creates the keyed `<col>=<v>/` layout by name, `PARTITIONED BY
+  * (bucket(n, <BIGINT column>))` the bucketed one — the [[TsvLayout]]
+  * recorded in a `_graft_partition` sidecar. INSERTs route rows into
+  * its directories, scans prune/key-group/runtime-filter on it, and
+  * `DELETE FROM t WHERE <key predicate>` drops whole key directories —
   * the path API's entire governance surface, addressable by
-  * identifier. Every other transform (bucket/time/multi-column/
-  * non-BIGINT) is refused loudly: each would promise a layout this
-  * store does not have.
+  * identifier. Every other transform (time/multi-column/other key
+  * types) is refused loudly: each would promise a layout this store
+  * does not have.
   *
   * Deliberately unsupported, loudly: every other ALTER TABLE change
   * (drops/renames/type-changes would silently re-map existing TSV
@@ -206,9 +206,9 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
       try {
         val ddl = new String(
           java.nio.file.Files.readAllBytes(schemaFile(dir).toPath), "UTF-8")
-        val (pcol, bspec) = GraftTsvCatalog.readLayoutSidecar(dir)
-        return new TsvTable(StructType.fromDDL(ddl), dir.getPath,
-          pcol, bspec, requireDir = true)
+        val schema = StructType.fromDDL(ddl)
+        return new TsvTable(schema, dir.getPath,
+          GraftTsvCatalog.readLayoutSidecar(dir, schema), requireDir = true)
       } catch {
         case _: java.nio.file.NoSuchFileException |
              _: java.io.FileNotFoundException =>
@@ -223,17 +223,17 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
   }
 
   /** `PARTITIONED BY` at create time: exactly ONE single-column
-    * IDENTITY transform over a BIGINT column — the keyed `<col>=<v>/`
-    * layout the path API reads/deletes, now creatable by name, which
-    * is what lets the whole governance surface (pruned scans,
-    * storage-partitioned joins, runtime filtering, partition DELETE)
-    * compose with catalog identifiers instead of paths. Anything else
-    * (bucket/time transforms, nested or multi-column keys, non-BIGINT)
-    * is refused loudly: each would promise a layout this store does
-    * not have. Returns the partition column, recorded in the
-    * `_graft_partition` sidecar. */
+    * IDENTITY transform over a BIGINT or STRING column — the keyed
+    * `<col>=<v>/` layout the path API reads/deletes, now creatable by
+    * name, which is what lets the whole governance surface (pruned
+    * scans, storage-partitioned joins, runtime filtering, partition
+    * DELETE) compose with catalog identifiers instead of paths — or ONE
+    * `bucket(n, <BIGINT col>)`. Anything else (time transforms, nested
+    * or multi-column keys, other key types) is refused loudly: each
+    * would promise a layout this store does not have. Returns the
+    * layout, recorded in the `_graft_partition` sidecar. */
   private def layoutOf(partitions: Array[Transform], schema: StructType)
-      : (Option[String], Option[(String, Int)]) = partitions.toSeq match {
+      : TsvLayout = partitions.toSeq match {
     case Seq(t) if t.name() == "bucket" &&
         t.references().length == 1 &&
         t.references()(0).fieldNames().length == 1 =>
@@ -259,8 +259,8 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
         s"graft tsv catalog: bucket count must be in (1, 4096], got $n " +
           "— each bucket is a directory, and a write task holds one " +
           "open stream per bucket it touches")
-      (None, Some((col, n)))
-    case other => (partitionColOf0(other, schema), None)
+      TsvLayout.Bucketed(col, n)
+    case other => TsvLayout.of(schema, partitionColOf0(other, schema))
   }
 
   private def partitionColOf0(partitions: Seq[Transform],
@@ -325,7 +325,7 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
 
   override def createTable(ident: Identifier, schema: StructType,
       partitions: Array[Transform], properties: util.Map[String, String]): Table = {
-    val (pcol, bspec) = layoutOf(partitions, schema)
+    val layout = layoutOf(partitions, schema)
     validateCreate(properties)
     require(!internalName(ident.name()),
       s"graft tsv catalog: table names may not start with '_' " +
@@ -347,9 +347,9 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
     // non-table dir, and a later FLAT create of the same name must not
     // silently inherit it (accidentally-keyed writes, or a bricked
     // table if the new schema lacks the old key column).
-    GraftTsvCatalog.writeLayoutSidecar(dir, pcol, bspec)
+    GraftTsvCatalog.writeLayoutSidecar(dir, layout)
     writeSidecarAtomic(dir, schema)
-    new TsvTable(schema, dir.getPath, pcol, bspec, requireDir = true)
+    new TsvTable(schema, dir.getPath, layout, requireDir = true)
   }
 
   // ---- atomic CTAS / RTAS ([[StagingTableCatalog]]) ----
@@ -381,7 +381,7 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
 
   private def stage(ident: Identifier, info: TableInfo,
       replace: Boolean, mustExist: Boolean): StagedTable = {
-    val (pcol, bspec) = layoutOf(info.partitions(), info.schema())
+    val layout = layoutOf(info.partitions(), info.schema())
     validateCreate(info.properties())
     // Defense-in-depth, NOT the SQL front door's check: Spark's own
     // analyzer already rejects constraint-bearing DDL for catalogs
@@ -448,7 +448,7 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
       s"_staging_${ident.name()}_" + java.util.UUID.randomUUID()
         .toString.replace("-", "").take(8))
     staging.mkdirs()
-    new TsvStagedTable(info.schema(), staging, dir, replace, pcol, bspec)
+    new TsvStagedTable(info.schema(), staging, dir, replace, layout)
   }
 
   /** ADD COLUMN only: append a nullable trailing column to the schema
@@ -503,8 +503,8 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
             "existing bytes. Evolve by recreate.")
     }
     writeSidecarAtomic(dir, schema)
-    val (pcol, bspec) = GraftTsvCatalog.readLayoutSidecar(dir)
-    new TsvTable(schema, dir.getPath, pcol, bspec, requireDir = true)
+    new TsvTable(schema, dir.getPath,
+      GraftTsvCatalog.readLayoutSidecar(dir, schema), requireDir = true)
   }
 
   override def dropTable(ident: Identifier): Boolean =
@@ -631,16 +631,13 @@ object GraftTsvCatalog {
     * written for back-compat), `bucket\t<n>\t<col>` for the hash
     * layout, absent for a flat table. Same atomic-flip discipline as
     * the schema sidecar. */
-  private[sources] def writePartitionSidecar(dir: java.io.File,
-      col: String): Unit = writeLayoutSidecar(dir, Some(col), None)
-
   private[sources] def writeLayoutSidecar(dir: java.io.File,
-      identityCol: Option[String], bucket: Option[(String, Int)]): Unit = {
+      layout: TsvLayout): Unit = {
     val f = new java.io.File(dir, "_graft_partition")
-    val content: Option[String] = (identityCol, bucket) match {
-      case (Some(c), _) => Some(c)
-      case (None, Some((c, n))) => Some(s"bucket\t$n\t$c")
-      case (None, None) => None
+    val content: Option[String] = layout match {
+      case TsvLayout.Keyed(c, _) => Some(c)
+      case TsvLayout.Bucketed(c, n) => Some(s"bucket\t$n\t$c")
+      case TsvLayout.Flat => None
     }
     content match {
       case Some(text) =>
@@ -657,22 +654,20 @@ object GraftTsvCatalog {
     }
   }
 
-  private[sources] def readPartitionSidecar(dir: java.io.File)
-      : Option[String] = readLayoutSidecar(dir)._1
-
-  /** (identity col, bucket spec) from the layout sidecar. */
-  private[sources] def readLayoutSidecar(dir: java.io.File)
-      : (Option[String], Option[(String, Int)]) = {
+  /** The table's layout from its sidecar; a keyed layout takes its key
+    * type from `schema`. */
+  private[sources] def readLayoutSidecar(dir: java.io.File,
+      schema: StructType): TsvLayout = {
     val f = new java.io.File(dir, "_graft_partition")
-    if (!f.isFile) (None, None)
+    if (!f.isFile) TsvLayout.Flat
     else new String(
       java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim match {
       case s if s.startsWith("bucket\t") =>
         val parts = s.split("\t")
         require(parts.length == 3,
           s"graft tsv catalog: malformed bucket layout sidecar: $s")
-        (None, Some((parts(2), parts(1).toInt)))
-      case c => (Some(c), None)
+        TsvLayout.Bucketed(parts(2), parts(1).toInt)
+      case c => TsvLayout.of(schema, Some(c))
     }
   }
 
@@ -751,16 +746,14 @@ object GraftTsvCatalog {
   * untouched in every failure mode. */
 final class TsvStagedTable(tableSchema: StructType,
     stagingDir: java.io.File, finalDir: java.io.File, replace: Boolean,
-    partitionCol: Option[String] = None,
-    bucketSpec: Option[(String, Int)] = None)
+    layout: TsvLayout = TsvLayout.Flat)
     extends StagedTable
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsRead {
   // the staged inner table carries the layout, so a partitioned or
   // bucketed CTAS's SELECT lands correctly-shaped data in the staging
   // dir — the layout is complete before the visibility flip
-  private val inner = new TsvTable(tableSchema, stagingDir.getPath,
-    partitionCol, bucketSpec)
+  private val inner = new TsvTable(tableSchema, stagingDir.getPath, layout)
 
   override def name(): String = s"graft_tsv(${finalDir.getPath}) [staged]"
   override def schema(): StructType = tableSchema
@@ -776,9 +769,7 @@ final class TsvStagedTable(tableSchema: StructType,
     inner.newScanBuilder(options)
 
   override def commitStagedChanges(): Unit = {
-    if (partitionCol.nonEmpty || bucketSpec.nonEmpty)
-      GraftTsvCatalog.writeLayoutSidecar(stagingDir, partitionCol,
-        bucketSpec)
+    GraftTsvCatalog.writeLayoutSidecar(stagingDir, layout)
     GraftTsvCatalog.writeSidecarAtomic(stagingDir, tableSchema)
     val ns = finalDir.getParentFile
     val table = finalDir.getName

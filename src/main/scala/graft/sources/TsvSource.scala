@@ -92,12 +92,11 @@ class TsvSourceProvider extends TableProvider {
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
     new TsvTable(schema, properties.get("path"),
-      Option(properties.get("partition_col")))
+      TsvLayout.of(schema, Option(properties.get("partition_col"))))
 }
 
 final class TsvTable(tableSchema: StructType, path: String,
-    tablePartitionCol: Option[String] = None,
-    bucketSpec: Option[(String, Int)] = None,
+    layout: TsvLayout = TsvLayout.Flat,
     requireDir: Boolean = false)
     extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
@@ -107,7 +106,6 @@ final class TsvTable(tableSchema: StructType, path: String,
   require(path != null, "graft tsv source requires option(\"path\", ...)")
 
   private def rootDir = new java.io.File(TsvWritePaths.strip(path))
-  private val writeLayout = TsvWriteLayout.of(tablePartitionCol, bucketSpec)
 
   /** Mutations against a CATALOG-resolved table whose directory is
     * gone (generation reclaimed past the grace window, or table
@@ -126,11 +124,11 @@ final class TsvTable(tableSchema: StructType, path: String,
 
   /** `TRUNCATE TABLE t` ([[TruncatableTable]]): clear the data, keep
     * the table — the same truncate set as the sink's overwrite
-    * ([[TsvWriteLayout.truncateTargets]]); a path surviving its delete
+    * ([[TsvLayout.truncateTargets]]); a path surviving its delete
     * fails the statement. */
   override def truncateTable(): Boolean = {
     requireAliveForMutation("TRUNCATE TABLE")
-    TsvWritePaths.deleteAllOrThrow(writeLayout.truncateTargets(rootDir),
+    TsvWritePaths.deleteAllOrThrow(layout.truncateTargets(rootDir),
       s"TRUNCATE TABLE ${name()}")
     true
   }
@@ -145,29 +143,28 @@ final class TsvTable(tableSchema: StructType, path: String,
   // refused, not silently dropped. Flat tables refuse partition DDL
   // with a clear message (partitionSchema stays honest: empty).
 
-  private def requireKeyed(): String = tablePartitionCol.getOrElse(
+  private def keyed: Option[TsvLayout.Keyed] = layout match {
+    case k: TsvLayout.Keyed => Some(k)
+    case _ => None
+  }
+  private def requireKeyed(): TsvLayout.Keyed = keyed.getOrElse(
     throw new UnsupportedOperationException(
       s"graft tsv: ${name()} is not partitioned — partition DDL needs " +
         "a PARTITIONED BY identity(col) table"))
-  /** Key DIRECTORY TOKENS are strings everywhere inside the store; the
-    * key TYPE (BIGINT or STRING, from the table schema) decides how
-    * tokens parse, compare, and synthesize back into rows. */
-  private def keyType: DataType = tablePartitionCol
-    .flatMap(c => tableSchema.fields.find(_.name == c).map(_.dataType))
-    .getOrElse(LongType)
-  private def keyIsString: Boolean = keyType == StringType
   /** The directory token of a partition-DDL ident, canonicalized
     * (BIGINT) or validated path-safe (STRING). */
-  private def keyToken(ident: InternalRow): String =
-    if (keyIsString)
-      TsvLayout.validateKeyToken(ident.getUTF8String(0).toString)
-    else ident.getLong(0).toString
-  private def partDir(token: String) =
-    new java.io.File(rootDir, s"${requireKeyed()}=$token")
+  private def keyToken(ident: InternalRow): String = {
+    val k = requireKeyed()
+    val v = ident.get(0, k.keyType)
+    TsvLayout.validateKeyToken(k.tokenOf(v).getOrElse(
+      throw new IllegalArgumentException(
+        s"graft tsv: partition value $v is not a ${k.keyType.sql} key")))
+  }
+  private def partDir(token: String) = requireKeyed().dirOf(rootDir, token)
 
   override def partitionSchema(): StructType =
-    tablePartitionCol.fold(new StructType())(c =>
-      new StructType().add(c, keyType, nullable = false))
+    keyed.fold(new StructType())(k =>
+      new StructType().add(k.col, k.keyType, nullable = false))
 
   override def createPartition(ident: InternalRow,
       properties: util.Map[String, String]): Unit = {
@@ -209,54 +206,33 @@ final class TsvTable(tableSchema: StructType, path: String,
 
   override def listPartitionIdentifiers(names: Array[String],
       ident: InternalRow): Array[InternalRow] = {
-    val c = requireKeyed()
-    require(names.forall(_ == c),
+    val k = requireKeyed()
+    require(names.forall(_ == k.col),
       s"graft tsv: unknown partition column(s) ${names.mkString(", ")}")
     val want: Option[String] =
       if (names.isEmpty) None else Some(keyToken(ident))
-    TsvLayout.partitionDirs(path, c, strict = false,
-        numericKey = !keyIsString)
+    k.keyDirs(rootDir, strict = false)
       .map(_._1)
       .filter(t => want.forall(_ == t))
-      .map(t => InternalRow(
-        if (keyIsString) UTF8String.fromString(t) else t.toLong)
-        : InternalRow)
+      .map(t => InternalRow(k.keyValue(t)))
       .toArray
   }
 
   /** Conjunction of the DELETE predicates as partition keys: outer None
     * = some predicate is not answerable from the layout (refuse); inner
     * None = no key constraint (truncate-all); inner Some(keys) = drop
-    * exactly those (an empty set deletes nothing — e.g. IN ()). */
+    * exactly those (an empty set deletes nothing — e.g. IN ()). A
+    * literal that is no key token ([[TsvLayout.tokenOf]]) refuses the
+    * whole DELETE rather than matching nothing silently. */
   private def deleteKeys(filters: Array[Filter])
-      : Option[Option[Set[String]]] = {
-    // literal -> directory token, honoring the key TYPE: BIGINT keys
-    // take integral literals (canonical decimal token), STRING keys
-    // take string literals verbatim — a mistyped literal refuses the
-    // whole DELETE rather than matching nothing silently
-    def tokenOf(v: Any): Option[String] = v match {
-      // INTEGRAL literals only for BIGINT keys: truncating 7.5 through
-      // longValue would delete shard=7 although no row matches key=7.5
-      case n @ (_: java.lang.Long | _: java.lang.Integer |
-          _: java.lang.Short | _: java.lang.Byte) if !keyIsString =>
-        Some(n.asInstanceOf[java.lang.Number].longValue.toString)
-      case s: String if keyIsString => Some(s)
-      case u: UTF8String if keyIsString => Some(u.toString)
-      case _ => None
-    }
-    def keysOf(f: Filter): Option[Option[Set[String]]] = f match {
-      case EqualTo(a, v) if tablePartitionCol.contains(a) =>
-        tokenOf(v).map(t => Some(Set(t)))
-      case In(a, vs) if tablePartitionCol.contains(a) =>
-        val ts = vs.toSeq.map(tokenOf)
-        if (ts.exists(_.isEmpty)) None else Some(Some(ts.flatten.toSet))
+      : Option[Option[Set[String]]] = keyed.flatMap { k =>
+    val per = filters.toSeq.map {
       case AlwaysTrue() => Some(None)
-      case _ => None
+      case f => k.tokensOf(f).map(Some(_))
     }
-    val per = filters.toSeq.map(keysOf)
     if (per.exists(_.isEmpty)) None
     else Some(per.flatten.foldLeft(Option.empty[Set[String]]) {
-      case (None, k) => k
+      case (None, ks) => ks
       case (acc, None) => acc
       case (Some(a), Some(b)) => Some(a.intersect(b))
     })
@@ -274,38 +250,26 @@ final class TsvTable(tableSchema: StructType, path: String,
     * the contract's point: a delete either maps to partition drops or
     * it is not runnable here. */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    tablePartitionCol.nonEmpty && deleteKeys(filters).nonEmpty
+    deleteKeys(filters).nonEmpty
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     requireAliveForMutation("DELETE")
     val keys = deleteKeys(filters).getOrElse(
       throw new IllegalArgumentException(
-        s"graft tsv source: DELETE supports only ${tablePartitionCol
-            .getOrElse("<partition_col>")} equality/IN predicates, got " +
+        s"graft tsv source: DELETE supports only ${keyed.fold(
+            "<partition_col>")(_.col)} equality/IN predicates, got " +
           filters.mkString(", ")))
-    val c = tablePartitionCol.get
-    val root = new java.io.File(TsvWritePaths.strip(path))
-    Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith(c + "="))
-      .filter { d =>
-        val raw = d.getName.stripPrefix(c + "=")
-        val token = if (keyIsString) raw else raw.toLong.toString
-        keys.forall(_.contains(token))
-      }
-      .foreach(TsvWritePaths.deleteRecursively)
+    layout.keyDirs(rootDir, strict = false)
+      .filter { case (t, _) => keys.forall(_.contains(t)) }
+      .foreach { case (_, d) => TsvWritePaths.deleteRecursively(d) }
   }
   override def name(): String = s"graft_tsv($path)"
   override def schema(): StructType = tableSchema
-  /** A table-level partition column (catalog `PARTITIONED BY identity`)
-    * is REPORTED partitioning: DESCRIBE shows it, and the scan/write
-    * paths below pick it up without any per-query option. */
-  override def partitioning(): Array[Transform] =
-    tablePartitionCol.map(c =>
-      org.apache.spark.sql.connector.expressions.Expressions.identity(c))
-      .orElse(bucketSpec.map { case (c, n) =>
-        org.apache.spark.sql.connector.expressions.Expressions.bucket(n, c)
-      })
-      .toArray
+  /** A table-level layout (catalog `PARTITIONED BY identity(col)` or
+    * `bucket(n, col)`) is REPORTED partitioning: DESCRIBE shows it, and
+    * the scan/write paths below pick it up without any per-query
+    * option. */
+  override def partitioning(): Array[Transform] = layout.transform.toArray
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ,
@@ -342,7 +306,7 @@ final class TsvTable(tableSchema: StructType, path: String,
       .map(_.toLowerCase(java.util.Locale.ROOT)).getOrElse("none")
     require(codec == "none" || codec == "gzip",
       s"graft tsv sink: compression must be none|gzip, got $codec")
-    new TsvWriteBuilder(info.schema(), path, writeLayout, info.queryId(),
+    new TsvWriteBuilder(info.schema(), path, layout, info.queryId(),
       gzip = codec == "gzip")
   }
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
@@ -354,21 +318,14 @@ final class TsvTable(tableSchema: StructType, path: String,
     // `partition_col`: the source reads a hive-style layout
     // (<col>=<value>/ subdirectories) and REPORTS the key-grouped
     // partitioning to the planner — see TsvScan.outputPartitioning.
-    // A catalog table's own partition column is the default; the
-    // explicit option keeps the path API's contract. The difference is
-    // STRICTNESS: a path told to be keyed must have key dirs (a typo'd
-    // path failing loudly beats scanning nothing), but a freshly
-    // created partitioned catalog table is legitimately empty.
+    // A catalog table's own layout is the default; the explicit option
+    // keeps the path API's contract. The difference is STRICTNESS: a
+    // path told to be keyed must have key dirs (a typo'd path failing
+    // loudly beats scanning nothing), but a freshly created partitioned
+    // catalog table is legitimately empty.
     val optionCol = Option(options.get("partition_col"))
-    val partitionCol = optionCol.orElse(tablePartitionCol)
-    partitionCol.foreach { c =>
-      val field = tableSchema.fields.find(_.name == c).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft tsv source: partition_col '$c' not in schema"))
-      require(field.dataType == LongType || field.dataType == StringType,
-        s"graft tsv source: partition_col must be BIGINT or STRING, " +
-          s"got ${field.dataType}")
-    }
+    val scanLayout =
+      if (optionCol.isEmpty) layout else TsvLayout.of(tableSchema, optionCol)
     // streaming admission control (micro-batch read path only):
     // maxFilesPerTrigger / maxBytesPerTrigger bound each micro-batch,
     // FileStreamSource's option names on the DSv2 contract
@@ -390,10 +347,10 @@ final class TsvTable(tableSchema: StructType, path: String,
         s"positive, got $n")
       n
     }
-    new TsvScanBuilder(tableSchema, path, splitBytes, partitionCol,
+    new TsvScanBuilder(tableSchema, path, splitBytes, scanLayout,
       strictLayout = optionCol.nonEmpty,
       streamLimits = TsvStreamLimits(maxFiles, maxBytes, maxFileAge),
-      bucketSpec = bucketSpec, requireDir = requireDir)
+      requireDir = requireDir)
   }
 }
 
@@ -437,10 +394,9 @@ object TsvStreamLimits {
 }
 
 final class TsvScanBuilder(fullSchema: StructType, path: String,
-    splitBytes: Long, partitionCol: Option[String] = None,
+    splitBytes: Long, layout: TsvLayout = TsvLayout.Flat,
     strictLayout: Boolean = true,
     streamLimits: TsvStreamLimits = TsvStreamLimits.none,
-    bucketSpec: Option[(String, Int)] = None,
     requireDir: Boolean = false)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters
@@ -610,7 +566,7 @@ final class TsvScanBuilder(fullSchema: StructType, path: String,
     // shard = 7 lists one directory" and "reads the table to drop
     // 15/16ths of it". Shapes dir-name evaluation can't answer exactly
     // stay Spark's job on the synthesized column.
-    def inFile(a: String): Boolean = !partitionCol.contains(a)
+    def inFile(a: String): Boolean = !layout.synthCol.contains(a)
     def numeric(a: String): Boolean = inFile(a) &&
       fullSchema.fields.find(_.name == a).exists(_.dataType match {
         case LongType | IntegerType | DoubleType | FloatType => true
@@ -618,38 +574,15 @@ final class TsvScanBuilder(fullSchema: StructType, path: String,
       })
     def known(a: String): Boolean =
       inFile(a) && fullSchema.fieldNames.contains(a)
-    def onKey(a: String): Boolean = partitionCol.contains(a)
-    val keyIsString = partitionCol.exists(c =>
-      fullSchema.fields.find(_.name == c).exists(_.dataType == StringType))
-    // INTEGRAL literals only: the key parses as BIGINT, and truncating
-    // a fractional literal through longValue would change the predicate
-    // (k > 1.5 is not k > 1)
-    def integral(v: Any): Boolean = v match {
-      case _: java.lang.Long | _: java.lang.Integer |
-           _: java.lang.Short | _: java.lang.Byte => true
-      case _ => false
-    }
-    def str(v: Any): Boolean = v.isInstanceOf[String]
     // null-check shapes on the key are deliberately DECLINED, not
     // pruned: IsNotNull prunes nothing (dir keys are never null) but
     // accepting it erases the join-inferred not-null Filter above the
     // scan and with it the plan shape the storage-partitioned join
     // pins (q287) — zero pruning value is not worth a plan regression.
-    // STRING keys accept equality/IN only — dir-name range comparison
-    // would need Spark's UTF8 binary collation, which Java's UTF-16
-    // compareTo diverges from outside ASCII (the same refusal as the
-    // file-field string contract); range shapes stay Spark's job on
-    // the synthesized column.
-    val (keyOk, rest) = filters.partition {
-      case EqualTo(a, v) =>
-        onKey(a) && (if (keyIsString) str(v) else integral(v))
-      case In(a, vs) =>
-        onKey(a) && (if (keyIsString) vs.forall(str) else vs.forall(integral))
-      case GreaterThan(a, v) => onKey(a) && !keyIsString && integral(v)
-      case GreaterThanOrEqual(a, v) => onKey(a) && !keyIsString && integral(v)
-      case LessThan(a, v) => onKey(a) && !keyIsString && integral(v)
-      case LessThanOrEqual(a, v) => onKey(a) && !keyIsString && integral(v)
-      case _ => false
+    // The accepted shapes are the layout's ([[TsvLayout.Keyed.prunes]]).
+    val (keyOk, rest) = layout match {
+      case k: TsvLayout.Keyed => filters.partition(k.prunes)
+      case _ => (Array.empty[Filter], filters)
     }
     keyFilters = keyOk
     val (ok, residual) = rest.partition {
@@ -678,26 +611,25 @@ final class TsvScanBuilder(fullSchema: StructType, path: String,
   override def build(): Scan = aggSpec match {
     case Some(spec) =>
       new TsvScan(fullSchema, aggSchema(spec), pushed, path, splitBytes,
-        limit, partitionCol, Some(spec), strictLayout = strictLayout,
+        limit, layout, Some(spec), strictLayout = strictLayout,
         keyFilters = keyFilters, streamLimits = streamLimits,
-        bucketSpec = bucketSpec, requireDir = requireDir)
+        requireDir = requireDir)
     case None =>
       new TsvScan(fullSchema, required, pushed, path, splitBytes, limit,
-        partitionCol, None, topN, strictLayout = strictLayout,
+        layout, None, topN, strictLayout = strictLayout,
         keyFilters = keyFilters, streamLimits = streamLimits,
-        bucketSpec = bucketSpec, requireDir = requireDir)
+        requireDir = requireDir)
   }
 }
 
 final class TsvScan(fullSchema: StructType, required: StructType,
     pushed: Array[Filter], path: String, splitBytes: Long, limit: Int,
-    partitionCol: Option[String] = None,
+    layout: TsvLayout = TsvLayout.Flat,
     aggSpec: Option[TsvAggSpec] = None,
     topN: Option[TsvTopNSpec] = None,
     strictLayout: Boolean = true,
     keyFilters: Array[Filter] = Array.empty,
     streamLimits: TsvStreamLimits = TsvStreamLimits.none,
-    bucketSpec: Option[(String, Int)] = None,
     requireDir: Boolean = false)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsReportPartitioning with SupportsRuntimeFiltering
@@ -718,22 +650,20 @@ final class TsvScan(fullSchema: StructType, required: StructType,
     * group rows, not key-constant rows). */
   override def outputOrdering()
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    partitionCol match {
-      case Some(c) if aggSpec.isEmpty =>
-        Array(org.apache.spark.sql.connector.expressions.Expressions.sort(
-          org.apache.spark.sql.connector.expressions.Expressions.column(c),
-          org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
-      case _ => Array.empty
-    }
+    layout.synthCol.filter(_ => aggSpec.isEmpty).map(c =>
+      org.apache.spark.sql.connector.expressions.Expressions.sort(
+        org.apache.spark.sql.connector.expressions.Expressions.column(c),
+        org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
+      .toArray
 
   /** RUNTIME FILTERING ([[SupportsRuntimeFiltering]]) — the DSv2 analog
-    * of dynamic partition pruning (q268): when a keyed layout's
-    * partition column is a join key against a filtered dimension,
+    * of dynamic partition pruning (q268): when a keyed or bucketed
+    * layout's key column is a join key against a filtered dimension,
     * Spark plants a `dynamicpruning` subquery on this scan; at
     * execution it calls [[filter]] with the dim's surviving key set
-    * and THEN [[planInputPartitions]], so pruned `shard=<v>/` dirs are
-    * never listed, split, or read. Only the partition column is
-    * offered ([[filterAttributes]]): its predicate evaluates on the
+    * and THEN [[planInputPartitions]], so pruned `shard=<v>/` (or
+    * bucket) dirs are never listed, split, or read. Only the key column
+    * is offered ([[filterAttributes]]): its predicate evaluates on the
     * DIRECTORY NAME — zero data bytes per pruned partition. A runtime
     * predicate on a data column would have to parse every line to
     * evaluate (no skip possible in headerless TSV), so the source
@@ -742,59 +672,22 @@ final class TsvScan(fullSchema: StructType, required: StructType,
     * reads the joined-to shards, not the table. */
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    partitionCol.orElse(bucketSpec.map(_._1)).map(c =>
+    layout.keyCol.map(c =>
       org.apache.spark.sql.connector.expressions.Expressions.column(c)).toArray
 
-  // the key TYPE decides token parsing/sorting/synthesis (BIGINT
-  // canonical-decimal vs STRING verbatim) — one flag, derived once
-  private val keyIsString: Boolean = partitionCol.exists(c =>
-    fullSchema.fields.find(_.name == c).exists(_.dataType == StringType))
-
-  // driver-side runtime state: the surviving partition keys as
-  // directory TOKENS (None = no runtime filter delivered)
+  // driver-side runtime state: the surviving directory TOKENS (None =
+  // no runtime filter delivered). A bucket holds many key values, so
+  // for a bucketed layout this is a superset filter — Spark's own join
+  // still decides rows.
   private var runtimeKeys: Option[Set[String]] = None
 
-  private def runtimeToken(v: Any): Option[String] = v match {
-    case n: java.lang.Number if !keyIsString => Some(n.longValue.toString)
-    case st: String if keyIsString => Some(st)
-    case u: UTF8String if keyIsString => Some(u.toString)
-    case _ => None
-  }
-
-  // bucket layout: runtime join keys prune whole BUCKET dirs (the
-  // key set maps through the shared hash; like static bucket pruning
-  // this is a superset filter — Spark's own join still decides rows)
-  private var runtimeBuckets: Option[Set[Int]] = None
-  private def onBucketCol(a: String): Boolean = bucketSpec.exists(_._1 == a)
-  // ALL values must convert or the filter is declined entirely: a
-  // partial keep-set would prune buckets an unconvertible value (null,
-  // non-numeric) might still need — Spark keeps its own join filter
-  // either way, so declining only costs the pruning
-  private def keepBuckets(vs: Seq[Any]): Option[Set[Int]] =
-    if (vs.nonEmpty && vs.forall(_.isInstanceOf[java.lang.Number]))
-      Some(vs.map(v => TsvBuckets.bucketOf(
-        v.asInstanceOf[java.lang.Number].longValue, bucketSpec.get._2))
-        .toSet)
-    else None
-
+  // a filter with any value that is no token is declined whole
+  // (TsvLayout.tokensOf): a partial keep-set would prune dirs the
+  // unconvertible value might still need, and Spark keeps its own join
+  // filter either way, so declining only costs the pruning
   override def filter(filters: Array[Filter]): Unit =
-    filters.foreach {
-      case In(a, vs) if partitionCol.contains(a) =>
-        val keep = vs.toSeq.flatMap(runtimeToken).toSet
-        runtimeKeys = Some(runtimeKeys.fold(keep)(_ intersect keep))
-      case EqualTo(a, v) if partitionCol.contains(a) &&
-          runtimeToken(v).nonEmpty =>
-        val keep = runtimeToken(v).toSet
-        runtimeKeys = Some(runtimeKeys.fold(keep)(_ intersect keep))
-      case In(a, vs) if onBucketCol(a) =>
-        keepBuckets(vs.toSeq).foreach { keep =>
-          runtimeBuckets = Some(runtimeBuckets.fold(keep)(_ intersect keep))
-        }
-      case EqualTo(a, v) if onBucketCol(a) =>
-        keepBuckets(Seq(v)).foreach { keep =>
-          runtimeBuckets = Some(runtimeBuckets.fold(keep)(_ intersect keep))
-        }
-      case _ => () // unsupported shape: Spark keeps its own filter
+    filters.flatMap(layout.tokensOf).foreach { keep =>
+      runtimeKeys = Some(runtimeKeys.fold(keep)(_ intersect keep))
     }
 
   override def readSchema(): StructType = required
@@ -806,7 +699,7 @@ final class TsvScan(fullSchema: StructType, required: StructType,
       topN.fold("")(t => s", PushedTopN: ORDER BY [${t.keys.map(k =>
         s"${k.name} ${if (k.asc) "ASC" else "DESC"} NULLS ${
           if (k.nullsFirst) "FIRST" else "LAST"}").mkString(", ")}] LIMIT ${t.n}") +
-      partitionCol.fold("")(c => s", KeyGroupedBy: $c") +
+      layout.synthCol.fold("")(c => s", KeyGroupedBy: $c") +
       (if (keyFilters.nonEmpty)
         s", PushedPartitionFilters: [${keyFilters.mkString(", ")}]"
       else "") +
@@ -817,82 +710,61 @@ final class TsvScan(fullSchema: StructType, required: StructType,
 
   /** STORAGE-PARTITIONED JOIN support ([[SupportsReportPartitioning]]).
     *
-    * When the layout is keyed (hive-style `<col>=<value>/` dirs), the
-    * scan reports [[KeyGroupedPartitioning]] on the identity transform
-    * of the partition column, and every split carries its key
-    * ([[TsvKeyedInputPartition.partitionKey]]). Under
+    * A keyed layout (hive-style `<col>=<value>/` dirs) reports
+    * [[KeyGroupedPartitioning]] on the identity transform of the
+    * partition column; a BUCKETED layout reports the bucket TRANSFORM,
+    * which the planner resolves through the catalog's `bucket`
+    * function. Every split carries its key
+    * ([[TsvKeyedInputPartition.partitionKey]]), so under
     * `spark.sql.sources.v2.bucketing.enabled` Spark groups the splits
-    * by key and an equi-join of two co-keyed sources plans with NO
-    * Exchange on either side — the DSv2-native analog of the repo's
-    * bucketed-table joins (q77), and what turns a 100 TB fact-fact
-    * join from two full shuffles into a zip of co-located key groups.
-    * Unkeyed layouts report [[UnknownPartitioning]] (the DSv2
-    * default). */
+    * by key and an equi-join of two co-keyed (or co-bucketed: same
+    * canonicalName, same n) sources plans with NO Exchange on either
+    * side — the DSv2-native analog of the repo's bucketed-table joins
+    * (q77), and what turns a 100 TB fact-fact join from two full
+    * shuffles into a zip of co-located key groups. With a pushed
+    * aggregation the split output is group rows, not key rows, so only
+    * the raw scan reports the grouping; flat layouts report
+    * [[UnknownPartitioning]] (the DSv2 default). */
   override def outputPartitioning():
       org.apache.spark.sql.connector.read.partitioning.Partitioning =
-    partitionCol match {
-      // with a pushed aggregation the split output is group rows, not
-      // key rows — only the raw keyed scan reports the key grouping
-      case Some(c) if aggSpec.isEmpty =>
+    layout.transform.filter(_ => aggSpec.isEmpty) match {
+      case Some(t) =>
         new org.apache.spark.sql.connector.read.partitioning
-          .KeyGroupedPartitioning(
-            Array(org.apache.spark.sql.connector.expressions.Expressions
-              .identity(c)),
-            partitionDirs.size)
-      // a BUCKETED layout reports the bucket TRANSFORM — the planner
-      // resolves it through the catalog's `bucket` function, and two
-      // co-bucketed tables (same canonicalName, same n) join with no
-      // exchange on either side
-      case None if bucketSpec.nonEmpty && aggSpec.isEmpty =>
-        val (c, n) = bucketSpec.get
-        new org.apache.spark.sql.connector.read.partitioning
-          .KeyGroupedPartitioning(
-            Array(org.apache.spark.sql.connector.expressions.Expressions
-              .bucket(n, c)),
-            bucketDirs.size)
-      case _ =>
+          .KeyGroupedPartitioning(Array(t), keyDirs.size)
+      case None =>
         new org.apache.spark.sql.connector.read.partitioning
           .UnknownPartitioning(0)
     }
 
-  /** Keyed subdirectories of a hive-style layout, sorted by key value
-    * for deterministic planning (shared contract: [[TsvLayout]]).
-    * Strict (the path-API default) fails loudly on a missing/empty
-    * layout; a CATALOG table's own partitioning passes strict=false —
-    * a freshly created partitioned table is legitimately empty and
-    * scans as zero rows, not an error. */
-  private lazy val partitionDirs: Seq[(String, java.io.File)] = {
-    // static partition pruning happens HERE, at listing time: a pruned
-    // `<col>=<v>/` dir is never split, never counted in the reported
-    // key grouping, never sized into the stats estimate — the planner
-    // sees only the directories the accepted key predicates keep
-    val keep = TsvLayout.keyPredicate(keyFilters, numeric = !keyIsString)
-    TsvLayout.partitionDirs(path, partitionCol.get, strict = strictLayout,
-        numericKey = !keyIsString)
+  private def root = new java.io.File(TsvWritePaths.strip(path))
+
+  /** Key directories of a keyed or bucketed layout surviving STATIC
+    * pruning, sorted by key for deterministic planning
+    * ([[TsvLayout.keyDirs]]). Pruning happens HERE, at listing time: a
+    * pruned dir is never split, never counted in the reported key
+    * grouping, never sized into the stats estimate. Keyed layouts prune
+    * exactly on the accepted key predicates; bucketed layouts map an
+    * equality/IN on the cluster column to its buckets — the predicate
+    * itself still runs in the reader (a bucket holds many values;
+    * pruning is a superset filter, never the answer). Strict (the
+    * path-API default) fails loudly on a missing/empty layout; a
+    * CATALOG table's own layout passes strict=false — a freshly created
+    * partitioned table is legitimately empty and scans as zero rows,
+    * not an error. */
+  private lazy val keyDirs: Seq[(String, java.io.File)] = {
+    val keep = layout.keep(keyFilters ++ pushed)
+    layout.keyDirs(root, strict = strictLayout)
       .filter { case (t, _) => keep(t) }
   }
 
-  /** Bucket subdirectories surviving STATIC bucket pruning: an
-    * equality/IN predicate on the cluster column maps to exact bucket
-    * ids through the shared hash — the predicate itself still runs in
-    * the reader (a bucket holds many values; pruning is a superset
-    * filter, never the answer), but pruned bucket dirs are never
-    * listed, split, or sized. Runtime-filter keys prune here too. */
-  private lazy val bucketDirs: Seq[(Int, java.io.File)] = {
-    val (bcol, n) = bucketSpec.get
-    val statically: Option[Set[Int]] = {
-      val sets = pushed.toSeq.collect {
-        case EqualTo(a, v: java.lang.Number) if a == bcol =>
-          Set(TsvBuckets.bucketOf(v.longValue, n))
-        case In(a, vs) if a == bcol &&
-            vs.forall(_.isInstanceOf[java.lang.Number]) =>
-          vs.map(v => TsvBuckets.bucketOf(
-            v.asInstanceOf[java.lang.Number].longValue, n)).toSet
-      }
-      sets.reduceOption(_ intersect _)
-    }
-    TsvBuckets.bucketDirs(path)
-      .filter { case (b, _) => statically.forall(_.contains(b)) }
+  /** The data files this scan reads, with their directory tokens: the
+    * flat view, or the surviving key dirs' files (runtime-filtered
+    * when a runtime filter was delivered). */
+  private def dataFiles: Seq[(String, java.io.File)] = layout match {
+    case TsvLayout.Flat => TsvLayout.flatFiles(root).map("" -> _)
+    case _ =>
+      keyDirs.filter { case (t, _) => runtimeKeys.forall(_.contains(t)) }
+        .flatMap { case (t, d) => TsvLayout.dataFilesIn(d).map(t -> _) }
   }
 
   /** Size estimate for the planner ([[SupportsReportStatistics]]):
@@ -904,11 +776,12 @@ final class TsvScan(fullSchema: StructType, required: StructType,
     * count, and what reaches the join is the pruned row), so AQE /
     * autoBroadcastJoinThreshold decisions see the post-pruning
     * payload. File lengths come from the same listing the partition
-    * planner uses — metadata only, no data read at plan time.
+    * planner uses — metadata only, no data read at plan time; a keyed
+    * or bucketed scan sizes only its SURVIVING dirs, or a side pruned
+    * to one shard still looks too big to broadcast.
     * numRows stays empty: estimating it would need a byte sample, and
     * sizeInBytes alone drives the broadcast decision. */
   override def estimateStatistics(): Statistics = {
-    val f = new java.io.File(TsvWritePaths.strip(path))
     // gz shards report DECOMPRESSED-ish bytes (compressed length ×
     // a conservative expansion): the estimate exists to protect the
     // broadcast decision, and under-estimating a gz side by the
@@ -917,17 +790,7 @@ final class TsvScan(fullSchema: StructType, required: StructType,
       if (TsvLayout.isGzip(file.getName))
         file.length() * TsvLayout.GzExpansion
       else file.length()
-    // a keyed scan sizes only the SURVIVING key dirs — the estimate
-    // must reflect static pruning or a pruned-to-one-shard side still
-    // looks too big to broadcast
-    val totalBytes = partitionCol match {
-      case Some(_) =>
-        partitionDirs.flatMap { case (_, d) => TsvLayout.dataFilesIn(d) }
-          .map(sized).sum
-      case None =>
-        if (f.isDirectory) TsvLayout.listDataFiles(f).map(sized).sum
-        else sized(f)
-    }
+    val totalBytes = dataFiles.map { case (_, f) => sized(f) }.sum
     val fraction =
       math.max(1, required.size).toDouble / math.max(1, fullSchema.size)
     val estimate = math.max(1L, math.ceil(totalBytes * fraction).toLong)
@@ -948,15 +811,12 @@ final class TsvScan(fullSchema: StructType, required: StructType,
     * tables keep the lenient view (requireDir=false): a path is just a
     * path, and empty/missing distinguishes nothing there. */
   private def requireDirAlive(): Unit =
-    if (requireDir) {
-      val root = new java.io.File(TsvWritePaths.strip(path))
-      if (!root.isDirectory)
-        throw new GraftGenerationReclaimedException(
-          s"graft tsv: table directory $path no longer exists — the " +
-            "resolved generation was reclaimed (reader outlived the " +
-            "snapshot-grace window) or the table was dropped; " +
-            "re-resolve the table name and retry")
-    }
+    if (requireDir && !root.isDirectory)
+      throw new GraftGenerationReclaimedException(
+        s"graft tsv: table directory $path no longer exists — the " +
+          "resolved generation was reclaimed (reader outlived the " +
+          "snapshot-grace window) or the table was dropped; " +
+          "re-resolve the table name and retry")
 
   /** One partition per newline-aligned BYTE RANGE, not per file — the
     * Hadoop TextInputFormat contract: a 10 GB TSV must parallelize
@@ -967,47 +827,20 @@ final class TsvScan(fullSchema: StructType, required: StructType,
     * even past the split boundary — every line is read exactly once
     * with no coordination. Split size comes from the `split_bytes`
     * read option (default 32 MiB; tests shrink it to force many
-    * splits per file). */
+    * splits per file). A keyed or bucketed split carries its key so
+    * Spark can group them; a delivered runtime filter has already
+    * pruned whole dirs before any file is listed for splitting. */
   override def planInputPartitions(): Array[InputPartition] = {
     requireDirAlive()
-    partitionCol match {
-      case Some(_) =>
-        // keyed layout: byte-range splits within each key directory's
-        // files; every split carries its key so Spark can group them.
-        // A delivered runtime filter prunes whole key dirs HERE — before
-        // any file is listed for splitting.
-        partitionDirs
-          .filter { case (t, _) => runtimeKeys.forall(_.contains(t)) }
-          .flatMap { case (token, d) =>
-            TsvLayout.dataFilesIn(d).flatMap(file =>
-              TsvLayout.byteSplits(file, splitBytes).map { case (start, end) =>
-                TsvKeyedInputPartition(file.getPath, start, end, token,
-                  stringKey = keyIsString)
-              })
-          }.map(p => p: InputPartition).toArray
-      case None if bucketSpec.nonEmpty =>
-        // bucket layout: splits carry their bucket id so Spark groups
-        // them per bucket; a delivered runtime filter prunes whole
-        // bucket dirs here, before any file is listed for splitting
-        bucketDirs
-          .filter { case (b, _) => runtimeBuckets.forall(_.contains(b)) }
-          .flatMap { case (b, d) =>
-            TsvLayout.dataFilesIn(d).flatMap(file =>
-              TsvLayout.byteSplits(file, splitBytes).map { case (start, end) =>
-                TsvBucketInputPartition(file.getPath, start, end, b)
-              })
-          }.map(p => p: InputPartition).toArray
-      case None =>
-        val f = new java.io.File(TsvWritePaths.strip(path))
-        val files = if (f.isDirectory) TsvLayout.listDataFiles(f) else Seq(f)
-        files.flatMap(file => TsvLayout.byteSplits(file, splitBytes).map {
-          case (start, end) => TsvInputPartition(file.getPath, start, end)
-        }).map(p => p: InputPartition).toArray
-    }
+    dataFiles.flatMap { case (token, file) =>
+      TsvLayout.byteSplits(file, splitBytes).map { case (start, end) =>
+        layout.split(file.getPath, start, end, token): InputPartition
+      }
+    }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new TsvReaderFactory(fullSchema, required, pushed, limit, partitionCol,
+    new TsvReaderFactory(fullSchema, required, pushed, limit, layout,
       aggSpec, topN)
 
   /** STREAMING front door ([[TableCapability.MICRO_BATCH_READ]]): the
@@ -1025,7 +858,7 @@ final class TsvScan(fullSchema: StructType, required: StructType,
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new TsvMicroBatchStream(fullSchema, required, pushed, path,
-      splitBytes, partitionCol, keyFilters, streamLimits,
+      splitBytes, layout, keyFilters, streamLimits,
       checkpointLocation, requireDir = requireDir)
 }
 
@@ -1063,16 +896,16 @@ final case class TsvVersionOffset(v: Long)
   * native — no wrapper needed).
   *
   * The file view is the SAME as the batch scan's ([[TsvLayout]]): a
-  * keyed store lists only `<col>=<v>/` dirs (static key pruning
+  * keyed or bucketed store lists only its key dirs (static pruning
   * applies to the stream too — a pruned dir's files never enter an
-  * offset), an unkeyed store lists root files plus hive-style subdirs;
-  * an EMPTY keyed store is a legitimate pre-first-commit stream state
+  * offset), a flat store lists root files plus hive-style subdirs; an
+  * EMPTY keyed store is a legitimate pre-first-commit stream state
   * (strict = false). Keyed splits re-derive their key from the logged
-  * path's parent directory — the same `<col>=<v>` parse the listing
-  * itself uses, so the two can never disagree. */
+  * path's parent directory through the same [[TsvLayout.dirToken]] the
+  * listing itself uses, so the two can never disagree. */
 final class TsvMicroBatchStream(fullSchema: StructType,
     required: StructType, pushed: Array[Filter], path: String,
-    splitBytes: Long, partitionCol: Option[String],
+    splitBytes: Long, layout: TsvLayout,
     keyFilters: Array[Filter] = Array.empty,
     streamLimits: TsvStreamLimits = TsvStreamLimits.none,
     checkpointLocation: String = "",
@@ -1083,38 +916,25 @@ final class TsvMicroBatchStream(fullSchema: StructType,
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
   import TsvMicroBatchStream.CompactInterval
 
-  private val keyIsString: Boolean = partitionCol.exists(c =>
-    fullSchema.fields.find(_.name == c).exists(_.dataType == StringType))
-  private val keepKey =
-    TsvLayout.keyPredicate(keyFilters, numeric = !keyIsString)
+  private val keep = layout.keep(keyFilters ++ pushed)
 
-  private def currentKeyedFiles: Seq[(String, Option[String])] = {
-    if (requireDir) {
-      val root = new java.io.File(TsvWritePaths.strip(path))
-      if (!root.isDirectory)
-        throw new GraftGenerationReclaimedException(
-          s"graft tsv stream: table directory $path no longer exists — " +
-            "the table was REPLACEd past the snapshot-grace window or " +
-            "dropped while this query ran; restart the query to resolve " +
-            "the current generation (schema/layout changes ride the " +
-            "restart boundary)")
+  private def currentFiles: Seq[String] = {
+    val root = new java.io.File(TsvWritePaths.strip(path))
+    if (requireDir && !root.isDirectory)
+      throw new GraftGenerationReclaimedException(
+        s"graft tsv stream: table directory $path no longer exists — " +
+          "the table was REPLACEd past the snapshot-grace window or " +
+          "dropped while this query ran; restart the query to resolve " +
+          "the current generation (schema/layout changes ride the " +
+          "restart boundary)")
+    val files = layout match {
+      case TsvLayout.Flat => TsvLayout.flatFiles(root)
+      case _ =>
+        layout.keyDirs(root, strict = false)
+          .filter { case (t, _) => keep(t) }
+          .flatMap { case (_, d) => TsvLayout.dataFilesIn(d) }
     }
-    partitionCol match {
-      case Some(c) =>
-        TsvLayout.partitionDirs(path, c, strict = false,
-            numericKey = !keyIsString)
-          .filter { case (t, _) => keepKey(t) }
-          .flatMap {
-            case (t, d) => TsvLayout.dataFilesIn(d)
-              .map(f => f.getPath -> Some(t))
-          }
-      case None =>
-        val root = new java.io.File(TsvWritePaths.strip(path))
-        val files =
-          if (root.isDirectory) TsvLayout.listDataFiles(root)
-          else Seq(root).filter(_.isFile)
-        files.map(f => f.getPath -> None)
-    }
+    files.map(_.getPath)
   }
 
   // ---- the seen-files log ----
@@ -1168,7 +988,7 @@ final class TsvMicroBatchStream(fullSchema: StructType,
   // Trigger.AvailableNow: the drain frontier, pinned at prepare time
   private var preparedTarget: Option[Set[String]] = None
   override def prepareForTriggerAvailableNow(): Unit =
-    preparedTarget = Some(currentKeyedFiles.map(_._1).toSet)
+    preparedTarget = Some(currentFiles.toSet)
 
   override def getDefaultReadLimit: ReadLimit = {
     val limits: Seq[ReadLimit] =
@@ -1224,7 +1044,7 @@ final class TsvMicroBatchStream(fullSchema: StructType,
     // bounded batch first; the next call resumes normal admission.
     if (latestVersion > start.asInstanceOf[TsvVersionOffset].v)
       return TsvVersionOffset(latestVersion)
-    val allFiles = currentKeyedFiles.map(_._1)
+    val allFiles = currentFiles
     // retention horizon (maxFileAgeMs): newest mtime anchors the
     // cutoff, so the horizon advances with the data, never the wall
     // clock — an idle store expires nothing. One stat pass: mtimes are
@@ -1320,26 +1140,21 @@ final class TsvMicroBatchStream(fullSchema: StructType,
         throw new IllegalStateException(
           "graft tsv stream: offset range names a file no longer in " +
             s"the store — replay cannot be exactly-once. Missing: $p")
-      val key = partitionCol.map { c =>
-        val parent = file.getParentFile.getName
-        require(parent.startsWith(c + "="),
-          s"graft tsv stream: logged file $p is not under a $c=<v>/ " +
-            "directory but the scan is keyed")
-        val raw = parent.stripPrefix(c + "=")
-        if (keyIsString) raw else raw.toLong.toString
+      val token = layout match {
+        case TsvLayout.Flat => ""
+        case _ => layout.dirToken(file.getParentFile).getOrElse(
+          throw new IllegalArgumentException(
+            s"graft tsv stream: logged file $p is not under a key " +
+              s"directory of the $layout layout"))
       }
       TsvLayout.byteSplits(file, splitBytes).map {
-        case (s0, e0) => key match {
-          case Some(t) => TsvKeyedInputPartition(p, s0, e0, t,
-            stringKey = keyIsString): InputPartition
-          case None => TsvInputPartition(p, s0, e0): InputPartition
-        }
+        case (s0, e0) => layout.split(p, s0, e0, token): InputPartition
       }
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new TsvReaderFactory(fullSchema, required, pushed, -1, partitionCol)
+    new TsvReaderFactory(fullSchema, required, pushed, -1, layout)
 }
 
 object TsvMicroBatchStream {
@@ -1349,31 +1164,30 @@ object TsvMicroBatchStream {
   val CompactInterval: Int = 10
 }
 
-final case class TsvInputPartition(file: String, start: Long, end: Long)
-    extends InputPartition
-
-/** A split of a keyed (hive-style) layout: [[HasPartitionKey]] hands the
-  * key to Spark so splits group into key-partitions for
-  * storage-partitioned joins. */
-final case class TsvKeyedInputPartition(file: String, start: Long, end: Long,
-    value: String, stringKey: Boolean = false)
-    extends InputPartition with HasPartitionKey {
-  // the key rides as its directory TOKEN; the reported grouping key is
-  // the TYPED value (BIGINT layouts keep grouping/joining numerically)
-  override def partitionKey(): InternalRow =
-    InternalRow(if (stringKey) UTF8String.fromString(value) else value.toLong)
+/** An unkeyed split: the newline-aligned byte range [start, end) of
+  * one data file ([[TsvScan.planInputPartitions]]). */
+case class TsvInputPartition(file: String, start: Long, end: Long)
+    extends InputPartition {
+  /** The split's typed key; None for an unkeyed split. */
+  def key: Option[Any] = None
 }
 
-/** A split of a bucketed layout: [[HasPartitionKey]] hands the bucket
-  * id to Spark so splits group per bucket for storage-partitioned
-  * joins. The lines carry every column — no synthesis. */
-final case class TsvBucketInputPartition(file: String, start: Long,
-    end: Long, bucket: Int) extends InputPartition with HasPartitionKey {
-  override def partitionKey(): InternalRow = InternalRow(bucket)
+/** A split of a keyed or bucketed layout: `value` is its directory
+  * token, `typedKey` the key it reports through [[HasPartitionKey]] —
+  * the BIGINT or STRING key value, or the bucket id
+  * ([[TsvLayout.keyValue]]) — so Spark groups splits into
+  * key-partitions for storage-partitioned joins. */
+final class TsvKeyedInputPartition(file: String, start: Long, end: Long,
+    val value: String, typedKey: Any)
+    extends TsvInputPartition(file, start, end) with HasPartitionKey {
+  override def key: Option[Any] = Some(typedKey)
+  override def partitionKey(): InternalRow = InternalRow(typedKey)
+  override def toString: String =
+    s"TsvKeyedInputPartition($file,$start,$end,$value)"
 }
 
 final class TsvReaderFactory(fullSchema: StructType, required: StructType,
-    pushed: Array[Filter], limit: Int, partitionCol: Option[String] = None,
+    pushed: Array[Filter], limit: Int, layout: TsvLayout = TsvLayout.Flat,
     aggSpec: Option[TsvAggSpec] = None,
     topN: Option[TsvTopNSpec] = None)
     extends PartitionReaderFactory {
@@ -1384,30 +1198,14 @@ final class TsvReaderFactory(fullSchema: StructType, required: StructType,
       val need = (sp.groupCols ++ sp.fns.flatMap(_.col)).distinct
       StructType(need.map(n => fullSchema(n)).toArray)
     }
-    def raw(file: String, start: Long, end: Long,
-        pv: Option[(String, Any)]): TsvPartitionReader =
-      new TsvPartitionReader(fullSchema, rawSchema, pushed, limit,
-        file, start, end, pv)
-    def wrap(r: TsvPartitionReader): PartitionReader[InternalRow] =
-      aggSpec.map(sp => new TsvAggregatingReader(r, rawSchema, sp)
-          : PartitionReader[InternalRow])
-        .orElse(topN.map(t => new TsvTopNReader(r, required, t)
-          : PartitionReader[InternalRow]))
-        .getOrElse(r)
-    partition match {
-      case p: TsvBucketInputPartition =>
-        wrap(raw(p.file, p.start, p.end, None))
-      case p: TsvKeyedInputPartition =>
-        // synthesize the key column as its INTERNAL value (UTF8String
-        // for STRING keys, Long for BIGINT) — the reader drops it into
-        // rows verbatim
-        val typed: Any =
-          if (p.stringKey) UTF8String.fromString(p.value) else p.value.toLong
-        wrap(raw(p.file, p.start, p.end, partitionCol.map(_ -> typed)))
-      case _ =>
-        val p = partition.asInstanceOf[TsvInputPartition]
-        wrap(raw(p.file, p.start, p.end, None))
-    }
+    val p = partition.asInstanceOf[TsvInputPartition]
+    val r = new TsvPartitionReader(fullSchema, rawSchema, pushed, limit,
+      p.file, p.start, p.end, layout.synthesized(p.key))
+    aggSpec.map(sp => new TsvAggregatingReader(r, rawSchema, sp)
+        : PartitionReader[InternalRow])
+      .orElse(topN.map(t => new TsvTopNReader(r, required, t)
+        : PartitionReader[InternalRow]))
+      .getOrElse(r)
   }
 }
 
@@ -1766,7 +1564,7 @@ final class TsvPartitionReader(fullSchema: StructType, required: StructType,
   * TRUNCATE): the reference emits its results as TSV lines
   * (mapreduce.py writes tab-joined fields); this is that sink as a
   * first-class DSv2 write with ONE task-commit protocol and three
-  * routings of a row to its directory ([[TsvWriteLayout]]):
+  * routings of a row to its directory ([[TsvLayout]]):
   *
   *   - flat: every task writes one file into the table root;
   *   - keyed (`PARTITIONED BY identity(col)`, or the path API's
@@ -1802,7 +1600,7 @@ final class TsvPartitionReader(fullSchema: StructType, required: StructType,
   * FAILS the task instead (fail-fast beats torn rows). BIGINT/DOUBLE/
   * STRING columns only, like the read side. */
 final class TsvWriteBuilder(schema: StructType, path: String,
-    layout: TsvWriteLayout, queryId: String, gzip: Boolean = false)
+    layout: TsvLayout, queryId: String, gzip: Boolean = false)
     extends WriteBuilder with SupportsTruncate
     // UPDATE output mode lands as per-epoch APPENDS of the changed rows
     // (the Kafka/console sink contract): the table is then a CHANGELOG —
@@ -1824,10 +1622,10 @@ final class TsvWriteBuilder(schema: StructType, path: String,
     // names; a silent flat fallback would write a key INTO the lines and
     // corrupt the layout contract, so routed layouts refuse loudly
     override def toStreaming: StreamingWrite = layout match {
-      case TsvWriteLayout.Flat =>
+      case TsvLayout.Flat =>
         new TsvStreamingWrite(schema, path, queryId, truncateFirst, gzip)
-      case _: TsvWriteLayout.Keyed => refuseStreaming("PARTITIONED")
-      case _: TsvWriteLayout.Bucketed => refuseStreaming("CLUSTERED")
+      case _: TsvLayout.Keyed => refuseStreaming("PARTITIONED")
+      case _: TsvLayout.Bucketed => refuseStreaming("CLUSTERED")
     }
   }
   private def refuseStreaming(kind: String): Nothing =
@@ -1837,148 +1635,13 @@ final class TsvWriteBuilder(schema: StructType, path: String,
         "layout with a periodic batch job (q118/q304 shape)")
 }
 
-/** Where a TSV write puts each row — the ONE place that knows the
-  * on-disk layout of a write: the row → directory-token routing, the
-  * fields a line carries, the directory of a token and the token's tag
-  * in a file name, the distribution and ordering the write requires,
-  * and what a truncate drops. Tokens are strings: `""` (flat), the
-  * canonical key value (keyed), the bucket id (bucketed). */
-sealed trait TsvWriteLayout extends Product with Serializable {
-  /** The per-task row → token router; None for the flat layout, whose
-    * one route is constant (no per-row dispatch). Checks the routing
-    * column's type when the task starts. */
-  def router(schema: StructType): Option[InternalRow => String]
-  /** (ordinal, type) of the fields a line carries, in schema order. */
-  def fileFields(schema: StructType): Array[(Int, DataType)] =
-    schema.fields.map(_.dataType).zipWithIndex.map { case (t, i) => (i, t) }
-  def dirOf(root: java.io.File, token: String): java.io.File
-  /** The token's tag in a file name, before the suffix. */
-  def tag(token: String): String
-  def distribution: Distribution
-  def ordering: Array[SortOrder]
-  /** What an overwrite or TRUNCATE drops: exactly what a read of the
-    * layout would see, sidecars (`_`/`.` names) kept. */
-  def truncateTargets(root: java.io.File): Seq[java.io.File]
-}
-
-object TsvWriteLayout {
-  /** A table's layout: its identity partition column, else its bucket
-    * spec, else flat. */
-  def of(partitionCol: Option[String],
-      bucketSpec: Option[(String, Int)]): TsvWriteLayout =
-    partitionCol.map(Keyed(_))
-      .orElse(bucketSpec.map { case (c, n) => Bucketed(c, n) })
-      .getOrElse(Flat)
-
-  /** One file per task in the table root — written even when the task
-    * has no rows. */
-  case object Flat extends TsvWriteLayout {
-    override def router(schema: StructType): Option[InternalRow => String] =
-      None
-    override def dirOf(root: java.io.File, token: String): java.io.File = root
-    override def tag(token: String): String = ""
-    override def distribution: Distribution = Distributions.unspecified()
-    override def ordering: Array[SortOrder] = Array.empty
-    // the unkeyed read view: root files plus one level of `name=value/`
-    // dirs — deleting only root files would leave rows an overwrite
-    // still reads back
-    override def truncateTargets(root: java.io.File): Seq[java.io.File] =
-      TsvLayout.listDataFiles(root)
-  }
-
-  /** `<col>=<v>/` directories; lines carry the schema MINUS the key,
-    * exactly how the keyed read indexes raw fields
-    * (TsvPartitionReader.fullIdx), and the read synthesizes the key
-    * back from the directory name. The write is clustered by key (every
-    * key lands in one task → one file per key per job, no producer
-    * REPARTITION hint; Spark plans the exchange only when the child
-    * isn't already clustered) and sorted by key within the task (the
-    * writer streams one key at a time → one open fd per task regardless
-    * of key cardinality). */
-  final case class Keyed(col: String) extends TsvWriteLayout {
-    override def router(schema: StructType): Option[InternalRow => String] = {
-      val i = schema.fieldIndex(col)
-      val token: InternalRow => String = schema.fields(i).dataType match {
-        case StringType => r => r.getUTF8String(i).toString
-        case LongType => r => r.getLong(i).toString
-        case other => throw new IllegalArgumentException(
-          s"graft tsv sink: partition column $col must be BIGINT or " +
-            s"STRING, got $other")
-      }
-      Some { r =>
-        if (r.isNullAt(i))
-          throw new IllegalArgumentException(
-            s"graft tsv sink: partition column $col is NULL — the keyed " +
-              "layout has no null-key directory; filter or default the " +
-              "key before writing")
-        token(r)
-      }
-    }
-    override def fileFields(schema: StructType): Array[(Int, DataType)] = {
-      val k = schema.fieldIndex(col)
-      super.fileFields(schema).filter(_._1 != k)
-    }
-    override def dirOf(root: java.io.File, token: String): java.io.File =
-      new java.io.File(root, s"$col=$token")
-    // a token becomes a directory name: checked path-safe once per key,
-    // when the writer opens the key's file (BIGINT tokens are canonical
-    // decimal and always pass)
-    override def tag(token: String): String =
-      "-k" + TsvLayout.validateKeyToken(token)
-    override def distribution: Distribution =
-      Distributions.clustered(Array(Expressions.column(col)))
-    override def ordering: Array[SortOrder] =
-      Array(Expressions.sort(Expressions.column(col), SortDirection.ASCENDING))
-    // whole key directories: an empty key dir would still list as a
-    // live partition
-    override def truncateTargets(root: java.io.File): Seq[java.io.File] =
-      Option(root.listFiles()).getOrElse(Array.empty)
-        .filter(d => d.isDirectory && d.getName.startsWith(col + "="))
-        .toSeq
-  }
-
-  /** `_graft_bucket=<id>/` directories holding FULL lines (a bucket
-    * holds many key values, so nothing could synthesize the column).
-    * The write is clustered and sorted on the `bucket(n, col)` transform
-    * itself: Spark resolves it through the catalog's function, so every
-    * bucket lands as ONE file per job and the writer streams one bucket
-    * at a time. */
-  final case class Bucketed(col: String, n: Int) extends TsvWriteLayout {
-    override def router(schema: StructType): Option[InternalRow => String] = {
-      val i = schema.fieldIndex(col)
-      require(schema.fields(i).dataType == LongType,
-        s"graft tsv sink: bucket column $col must be BIGINT, got " +
-          schema.fields(i).dataType)
-      val tokens = Array.tabulate(n)(_.toString)
-      Some { r =>
-        if (r.isNullAt(i))
-          throw new IllegalArgumentException(
-            s"graft tsv sink: cluster column $col is NULL — the bucket " +
-              "hash has no null lane; filter or default the key before " +
-              "writing")
-        tokens(TsvBuckets.bucketOf(r.getLong(i), n))
-      }
-    }
-    override def dirOf(root: java.io.File, token: String): java.io.File =
-      TsvBuckets.dirOf(root, token.toInt)
-    override def tag(token: String): String = "-b" + token
-    private def bucketExpr = Expressions.bucket(n, col)
-    override def distribution: Distribution =
-      Distributions.clustered(Array(bucketExpr))
-    override def ordering: Array[SortOrder] =
-      Array(Expressions.sort(bucketExpr, SortDirection.ASCENDING))
-    override def truncateTargets(root: java.io.File): Seq[java.io.File] =
-      TsvBuckets.bucketDirs(root.getPath).map(_._2)
-  }
-}
-
 /** A committed task's temp files as (directory token, temp path) — one
   * per token the task saw; exactly one (token `""`) for a flat task. */
 final case class TsvTaskCommit(files: Seq[(String, String)],
     partitionId: Int) extends WriterCommitMessage
 
 final class TsvBatchWrite(schema: StructType, path: String,
-    layout: TsvWriteLayout, truncateFirst: Boolean, gzip: Boolean = false)
+    layout: TsvLayout, truncateFirst: Boolean, gzip: Boolean = false)
     extends BatchWrite {
   private val jobUuid = java.util.UUID.randomUUID().toString
 
@@ -2036,7 +1699,7 @@ final class TsvStreamingWrite(schema: StructType, path: String,
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : StreamingDataWriterFactory =
-    new TsvWriterFactory(schema, path, TsvWriteLayout.Flat, qid, gzip)
+    new TsvWriterFactory(schema, path, TsvLayout.Flat, qid, gzip)
 
   private def root = new java.io.File(TsvWritePaths.strip(path))
   private def ledgerDir = new java.io.File(root, s"_streaming_commits/$qid")
@@ -2047,7 +1710,7 @@ final class TsvStreamingWrite(schema: StructType, path: String,
     root.mkdirs()
     if (truncateEachEpoch)
       TsvWritePaths.deleteAllOrThrow(
-        TsvWriteLayout.Flat.truncateTargets(root), "complete-mode truncate")
+        TsvLayout.Flat.truncateTargets(root), "complete-mode truncate")
     // crash-window replay sweep: remove EVERY file this epoch landed in
     // the crashed attempt, not just the names the replay re-uses — a
     // replay planned with FEWER partitions (changed shuffle conf, AQE
@@ -2091,7 +1754,7 @@ final class TsvStreamingWrite(schema: StructType, path: String,
 /** One writer factory for batch jobs and streaming epochs: a batch job's
   * tag is its uuid, an epoch's is `<qid8>-e<epoch>`. */
 final class TsvWriterFactory(schema: StructType, path: String,
-    layout: TsvWriteLayout, jobTag: String, gzip: Boolean)
+    layout: TsvLayout, jobTag: String, gzip: Boolean)
     extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
@@ -2111,7 +1774,7 @@ final class TsvWriterFactory(schema: StructType, path: String,
   * that writes a second member, which GZIPInputStream reads
   * transparently — it just costs an extra open/close. */
 final class TsvDataWriter(schema: StructType, path: String,
-    layout: TsvWriteLayout, jobTag: String, partitionId: Int, taskId: Long,
+    layout: TsvLayout, jobTag: String, partitionId: Int, taskId: Long,
     gzip: Boolean) extends DataWriter[InternalRow] {
   private val tempDir =
     new java.io.File(TsvWritePaths.strip(path), s"_temporary/$jobTag")
@@ -2170,17 +1833,336 @@ final class TsvDataWriter(schema: StructType, path: String,
     if (out != null) { out.close(); out = null }
 }
 
-/** The layout contract shared by the BATCH scan and the MICRO-BATCH
-  * stream — one definition of "what is a data file", "which dirs are
-  * key partitions", and "how does a file byte-split", so the two read
-  * paths can never drift (they previously each had a copy). */
-private[sources] object TsvLayout {
+/** The on-disk LAYOUT of a TSV table — the ONE place that knows it, for
+  * reads and writes alike:
+  *
+  *   - [[TsvLayout.Flat]]: data files in the table root (a read also
+  *     takes one level of hive-style `name=value/` subdirectories);
+  *   - [[TsvLayout.Keyed]] (`PARTITIONED BY identity(col)`, or the path
+  *     API's `partition_col`): `<col>=<v>/` directories, the key moved
+  *     out of the lines into the directory name;
+  *   - [[TsvLayout.Bucketed]] (`PARTITIONED BY bucket(n, col)`):
+  *     `_graft_bucket=<id>/` directories of full lines, routed by a
+  *     hash of a BIGINT column.
+  *
+  * Key directories are named by TOKENS: the canonical key value
+  * (keyed) or the bucket id (bucketed); a flat file's token is `""`.
+  * On the read side the layout lists its directories ([[keyDirs]]),
+  * turns literals into tokens for static pruning, runtime filtering and
+  * DELETE ([[tokenOf]]), reports the partitioning ([[transform]]),
+  * makes each split with its key ([[split]]) and names the column a
+  * reader synthesizes ([[synthCol]]). On the write side it routes a row
+  * to its token, picks the fields a line carries, names a token's
+  * directory and file tag, declares the distribution and ordering the
+  * write requires, and says what a truncate drops. */
+sealed trait TsvLayout extends Product with Serializable {
+  /** The key column: the identity partition column or the bucket
+    * column; None for flat. */
+  def keyCol: Option[String] = None
+  /** The column that lives in directory names, not in lines: a keyed
+    * read synthesizes it from the split's key. */
+  def synthCol: Option[String] = None
+  /** The partitioning a table of this layout, and a raw scan of it,
+    * reports: `identity(col)` or `bucket(n, col)`. */
+  def transform: Option[Transform] = None
+
+  // ---- read side ----
+
+  /** The name prefix of a key directory: `<col>=` or `_graft_bucket=`. */
+  protected def dirPrefix: String = ""
+  /** A key directory's value as its canonical token (a BIGINT
+    * `shard=007` reads as `7`, so it agrees with a literal 7); throws
+    * NumberFormatException when the value does not parse. */
+  protected def canonical(value: String): String = value
+
+  /** The token of `d` when it is one of this layout's key directories;
+    * a key directory whose value does not parse fails loudly, naming
+    * the directory, the column and the path. */
+  final def dirToken(d: java.io.File): Option[String] = {
+    val name = d.getName
+    if (keyCol.isEmpty || !name.startsWith(dirPrefix)) None
+    else try Some(canonical(name.stripPrefix(dirPrefix)))
+    catch {
+      case _: NumberFormatException =>
+        throw new IllegalArgumentException(
+          s"graft tsv: key directory '$name' under ${d.getParent} does " +
+            s"not parse as a key of partition column ${keyCol.get} " +
+            s"($this) — move it out of the table directory or rename it")
+    }
+  }
+  /** A literal as a token; None when it does not convert. */
+  def tokenOf(v: Any): Option[String] = None
+  /** The typed key of a token: what its splits report to Spark and what
+    * a keyed read synthesizes. */
+  def keyValue(token: String): Any = token
+  protected def tokenOrdering: Ordering[String] = Ordering.String
+
+  /** Key directories under `root` as (token, dir), sorted by key for
+    * deterministic planning — the one listing of a keyed or bucketed
+    * store, for scans, streams, partition DDL, DELETE and truncate.
+    * `strict` (the path API's `partition_col` contract) fails loudly on
+    * a missing layout or zero key dirs; everything else passes false —
+    * a freshly created partitioned table, or a store before its first
+    * sink commit, is legitimately empty. */
+  final def keyDirs(root: java.io.File,
+      strict: Boolean): Seq[(String, java.io.File)] = {
+    if (strict) require(root.isDirectory,
+      s"graft tsv source: partition_col layout needs a directory: $root")
+    val dirs = Option(root.listFiles()).getOrElse(Array.empty).toSeq
+      .filter(_.isDirectory).flatMap(d => dirToken(d).map(_ -> d))
+    if (strict) require(dirs.nonEmpty,
+      s"graft tsv source: no $dirPrefix<value> subdirectories under $root")
+    dirs.sortBy(_._1)(tokenOrdering)
+  }
+
+  /** The tokens an equality/IN on the key column admits; None for any
+    * other shape or column, or when some value is no token — the
+    * filter is then declined whole, never narrowed to the values that
+    * convert. */
+  final def tokensOf(f: Filter): Option[Set[String]] = f match {
+    case EqualTo(a, v) if keyCol.contains(a) => tokenOf(v).map(Set(_))
+    case In(a, vs) if keyCol.contains(a) =>
+      val ts = vs.toSeq.map(tokenOf)
+      if (ts.forall(_.nonEmpty)) Some(ts.flatten.toSet) else None
+    case _ => None
+  }
+
+  /** STATIC pruning: the token predicate of a scan's pushed filters.
+    * Exact for a keyed layout (the key is constant per directory); a
+    * superset filter for a bucketed one (a bucket holds many values —
+    * the reader still evaluates the predicate). */
+  def keep(filters: Array[Filter]): String => Boolean = {
+    val sets = filters.flatMap(tokensOf)
+    t => sets.forall(_.contains(t))
+  }
+
+  /** A split of `file` (in the directory of `token`), carrying its key. */
+  def split(file: String, start: Long, end: Long,
+      token: String): TsvInputPartition =
+    new TsvKeyedInputPartition(file, start, end, token, keyValue(token))
+
+  /** The (column, value) a reader synthesizes from a split's key. */
+  final def synthesized(key: Option[Any]): Option[(String, Any)] =
+    synthCol.flatMap(c => key.map(c -> _))
+
+  // ---- write side ----
+
+  /** The per-task row → token router; None for the flat layout, whose
+    * one route is constant (no per-row dispatch). Checks the routing
+    * column's type when the task starts. */
+  def router(schema: StructType): Option[InternalRow => String]
+  /** (ordinal, type) of the fields a line carries, in schema order. */
+  def fileFields(schema: StructType): Array[(Int, DataType)] =
+    schema.fields.map(_.dataType).zipWithIndex.map { case (t, i) => (i, t) }
+  def dirOf(root: java.io.File, token: String): java.io.File =
+    new java.io.File(root, dirPrefix + token)
+  /** The token's tag in a file name, before the suffix. */
+  def tag(token: String): String
+  def distribution: Distribution
+  def ordering: Array[SortOrder]
+  /** What an overwrite or TRUNCATE drops: exactly what a read of the
+    * layout would see, sidecars (`_`/`.` names) kept. Whole key
+    * directories: an empty key dir would still list as a live
+    * partition. */
+  def truncateTargets(root: java.io.File): Seq[java.io.File] =
+    keyDirs(root, strict = false).map(_._2)
+}
+
+object TsvLayout {
+  /** A table's layout from its `partition_col` (the path API's option,
+    * or a catalog table's identity partition column). The key TYPE,
+    * BIGINT or STRING, is read from the schema here and nowhere else;
+    * it decides how tokens parse, compare and synthesize back into
+    * rows. */
+  def of(schema: StructType, partitionCol: Option[String]): TsvLayout =
+    partitionCol.fold(Flat: TsvLayout) { c =>
+      val field = schema.fields.find(_.name == c).getOrElse(
+        throw new IllegalArgumentException(
+          s"graft tsv source: partition_col '$c' not in schema"))
+      require(field.dataType == LongType || field.dataType == StringType,
+        s"graft tsv source: partition_col must be BIGINT or STRING, " +
+          s"got ${field.dataType}")
+      Keyed(c, field.dataType)
+    }
+
+  /** One file per task in the table root — written even when the task
+    * has no rows. */
+  case object Flat extends TsvLayout {
+    override def split(file: String, start: Long, end: Long,
+        token: String): TsvInputPartition =
+      TsvInputPartition(file, start, end)
+    override def router(schema: StructType): Option[InternalRow => String] =
+      None
+    override def dirOf(root: java.io.File, token: String): java.io.File = root
+    override def tag(token: String): String = ""
+    override def distribution: Distribution = Distributions.unspecified()
+    override def ordering: Array[SortOrder] = Array.empty
+    // the unkeyed read view: root files plus one level of `name=value/`
+    // dirs — deleting only root files would leave rows an overwrite
+    // still reads back
+    override def truncateTargets(root: java.io.File): Seq[java.io.File] =
+      listDataFiles(root)
+  }
+
+  /** `<col>=<v>/` directories of a BIGINT or STRING key; lines carry the
+    * schema MINUS the key, exactly how the keyed read indexes raw
+    * fields (TsvPartitionReader.fullIdx), and the read synthesizes the
+    * key back from the directory name. BIGINT tokens are canonical
+    * decimal and sort numerically; STRING tokens are verbatim and sort
+    * lexicographically. The write is clustered by key (every key lands
+    * in one task → one file per key per job, no producer REPARTITION
+    * hint; Spark plans the exchange only when the child isn't already
+    * clustered) and sorted by key within the task (the writer streams
+    * one key at a time → one open fd per task regardless of key
+    * cardinality). */
+  final case class Keyed(col: String, keyType: DataType) extends TsvLayout {
+    private def numeric: Boolean = keyType == LongType
+    override def keyCol: Option[String] = Some(col)
+    override def synthCol: Option[String] = Some(col)
+    override def transform: Option[Transform] =
+      Some(Expressions.identity(col))
+
+    override protected def dirPrefix: String = col + "="
+    override protected def canonical(value: String): String =
+      if (numeric) value.toLong.toString else value
+    override def tokenOf(v: Any): Option[String] = v match {
+      case s: String if !numeric => Some(s)
+      case u: UTF8String if !numeric => Some(u.toString)
+      case _ if numeric => integral(v).map(_.toString)
+      case _ => None
+    }
+    override def keyValue(token: String): Any =
+      if (numeric) token.toLong else UTF8String.fromString(token)
+    override protected def tokenOrdering: Ordering[String] =
+      if (numeric) Ordering.by[String, Long](_.toLong) else Ordering.String
+
+    private def range(f: Filter): Option[Long => Boolean] = {
+      def bound(v: Any) = if (numeric) tokenOf(v).map(_.toLong) else None
+      f match {
+        case GreaterThan(a, v) if a == col => bound(v).map(b => _ > b)
+        case GreaterThanOrEqual(a, v) if a == col => bound(v).map(b => _ >= b)
+        case LessThan(a, v) if a == col => bound(v).map(b => _ < b)
+        case LessThanOrEqual(a, v) if a == col => bound(v).map(b => _ <= b)
+        case _ => None
+      }
+    }
+    /** Does `f` prune exactly at listing time? Equality/IN whose values
+      * all convert, and — BIGINT keys only — range comparisons. STRING
+      * ranges stay Spark's job on the synthesized column: dir-name
+      * comparison would need Spark's UTF8 binary collation, which
+      * Java's UTF-16 compareTo diverges from outside ASCII. */
+    def prunes(f: Filter): Boolean = tokensOf(f).nonEmpty || range(f).nonEmpty
+    override def keep(filters: Array[Filter]): String => Boolean = {
+      val byTokens = super.keep(filters)
+      val ranges = filters.flatMap(range)
+      if (ranges.isEmpty) byTokens
+      else t => byTokens(t) && { val k = t.toLong; ranges.forall(_(k)) }
+    }
+
+    override def router(schema: StructType): Option[InternalRow => String] = {
+      val i = schema.fieldIndex(col)
+      require(schema.fields(i).dataType == keyType,
+        s"graft tsv sink: partition column $col must be ${keyType.sql}, " +
+          s"got ${schema.fields(i).dataType.sql}")
+      val token: InternalRow => String =
+        if (numeric) r => r.getLong(i).toString
+        else r => r.getUTF8String(i).toString
+      Some { r =>
+        if (r.isNullAt(i))
+          throw new IllegalArgumentException(
+            s"graft tsv sink: partition column $col is NULL — the keyed " +
+              "layout has no null-key directory; filter or default the " +
+              "key before writing")
+        token(r)
+      }
+    }
+    override def fileFields(schema: StructType): Array[(Int, DataType)] = {
+      val k = schema.fieldIndex(col)
+      super.fileFields(schema).filter(_._1 != k)
+    }
+    // a token becomes a directory name: checked path-safe once per key,
+    // when the writer opens the key's file (BIGINT tokens are canonical
+    // decimal and always pass)
+    override def tag(token: String): String = "-k" + validateKeyToken(token)
+    override def distribution: Distribution =
+      Distributions.clustered(Array(Expressions.column(col)))
+    override def ordering: Array[SortOrder] =
+      Array(Expressions.sort(Expressions.column(col), SortDirection.ASCENDING))
+  }
+
+  /** `_graft_bucket=<id>/` directories holding FULL lines (a bucket
+    * holds many key values, so nothing could synthesize the column).
+    * One hash ([[bucketOf]]) is shared by the writer, the scan's
+    * static/runtime bucket pruning, and the catalog-exposed V2 `bucket`
+    * function, so the reported KeyGroupedPartitioning can never
+    * disagree with the bytes on disk. The write is clustered and sorted
+    * on the `bucket(n, col)` transform itself: Spark resolves it
+    * through the catalog's function, so every bucket lands as ONE file
+    * per job and the writer streams one bucket at a time. */
+  final case class Bucketed(col: String, n: Int) extends TsvLayout {
+    override def keyCol: Option[String] = Some(col)
+    override def transform: Option[Transform] =
+      Some(Expressions.bucket(n, col))
+
+    override protected def dirPrefix: String = "_graft_bucket="
+    override protected def canonical(value: String): String =
+      value.toInt.toString
+    override def tokenOf(v: Any): Option[String] =
+      integral(v).map(bucketOf(_, n).toString)
+    override def keyValue(token: String): Any = token.toInt
+    override protected def tokenOrdering: Ordering[String] =
+      Ordering.by[String, Int](_.toInt)
+
+    override def router(schema: StructType): Option[InternalRow => String] = {
+      val i = schema.fieldIndex(col)
+      require(schema.fields(i).dataType == LongType,
+        s"graft tsv sink: bucket column $col must be BIGINT, got " +
+          schema.fields(i).dataType)
+      val tokens = Array.tabulate(n)(_.toString)
+      Some { r =>
+        if (r.isNullAt(i))
+          throw new IllegalArgumentException(
+            s"graft tsv sink: cluster column $col is NULL — the bucket " +
+              "hash has no null lane; filter or default the key before " +
+              "writing")
+        tokens(bucketOf(r.getLong(i), n))
+      }
+    }
+    override def tag(token: String): String = "-b" + token
+    private def bucketExpr = Expressions.bucket(n, col)
+    override def distribution: Distribution =
+      Distributions.clustered(Array(bucketExpr))
+    override def ordering: Array[SortOrder] =
+      Array(Expressions.sort(bucketExpr, SortDirection.ASCENDING))
+  }
+
+  /** An INTEGRAL literal's value: a BIGINT key or bucket column takes
+    * no other (truncating 7.5 through longValue would select shard=7
+    * although no row has key 7.5). */
+  private def integral(v: Any): Option[Long] = v match {
+    case n @ (_: java.lang.Long | _: java.lang.Integer |
+        _: java.lang.Short | _: java.lang.Byte) =>
+      Some(n.asInstanceOf[java.lang.Number].longValue)
+    case _ => None
+  }
+
+  /** fmix64 avalanche (the MurmurHash3 finalizer) then floorMod:
+    * bucket ids must not correlate with monotone keys, or range-ish
+    * workloads hammer one bucket. */
+  private[sources] def bucketOf(v: Long, n: Int): Int = {
+    var h = v
+    h ^= h >>> 33; h *= 0xff51afd7ed558ccdL
+    h ^= h >>> 33; h *= 0xc4ceb9fe1a85ec53L
+    h ^= h >>> 33
+    java.lang.Math.floorMod(h, n.toLong).toInt
+  }
+
   /** ONE definition of "is this shard gzipped" — splittability
     * (byteSplits), codec choice (TsvPartitionReader), and the size
     * estimate (estimateStatistics) must agree or a gz file could get
     * byte-range splits whose compressed offsets the decompressed-space
     * reader would silently misinterpret. */
-  def isGzip(path: String): Boolean =
+  private[sources] def isGzip(path: String): Boolean =
     path.toLowerCase(java.util.Locale.ROOT).endsWith(".gz")
 
   /** Conservative decompressed-size multiplier for gz TSV shards in
@@ -2188,75 +2170,26 @@ private[sources] object TsvLayout {
     * is the dangerous direction (a "small" side gets broadcast and
     * materializes 10× larger than planned), so the estimate errs
     * high. */
-  val GzExpansion = 8L
+  private[sources] val GzExpansion = 8L
 
   /** Data files directly in `d`: `_`/`.`-prefixed names are sidecars
     * and temp markers, invisible to every reader. */
-  def dataFilesIn(d: java.io.File): Seq[java.io.File] =
+  private[sources] def dataFilesIn(d: java.io.File): Seq[java.io.File] =
     Option(d.listFiles()).getOrElse(Array.empty)
       .filter(x => x.isFile && !x.getName.startsWith("_")
         && !x.getName.startsWith(".")).sortBy(_.getPath).toSeq
 
   /** Data files directly under `f`, plus those one level down inside
     * hive-style `name=value` subdirectories (the UNKEYED read view). */
-  def listDataFiles(f: java.io.File): Seq[java.io.File] =
+  private[sources] def listDataFiles(f: java.io.File): Seq[java.io.File] =
     dataFilesIn(f) ++ Option(f.listFiles()).getOrElse(Array.empty)
       .filter(d => d.isDirectory && d.getName.contains("=")).sortBy(_.getPath)
       .flatMap(dataFilesIn)
 
-  /** Keyed subdirectories of a hive-style layout as (directory TOKEN,
-    * dir). BIGINT layouts (`numericKey`) canonicalize tokens through
-    * Long (so `shard=007` and a runtime key 7 agree) and sort
-    * numerically for deterministic planning; STRING layouts keep tokens
-    * verbatim, sorted lexicographically. `strict` (the batch contract)
-    * fails loudly on a missing layout or zero key dirs; the stream
-    * passes false — an empty store before the first sink commit is a
-    * legitimate stream state, not an error. */
-  def partitionDirs(path: String, c: String, strict: Boolean,
-      numericKey: Boolean = true): Seq[(String, java.io.File)] = {
-    val root = new java.io.File(TsvWritePaths.strip(path))
-    if (strict) require(root.isDirectory,
-      s"graft tsv source: partition_col layout needs a directory: $path")
-    val dirs = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith(c + "="))
-      .toSeq
-    if (strict) require(dirs.nonEmpty,
-      s"graft tsv source: no $c=<value> subdirectories under $path")
-    if (numericKey)
-      dirs.map(d => d.getName.stripPrefix(c + "=").toLong -> d)
-        .sortBy(_._1).map { case (k, d) => k.toString -> d }
-    else
-      dirs.map(d => d.getName.stripPrefix(c + "=") -> d).sortBy(_._1)
-  }
-
-  /** Compile the scan builder's accepted partition-key filters into one
-    * dir-TOKEN predicate — exact by construction (the key is constant
-    * per directory), shared by the batch scan and the micro-batch
-    * stream so static pruning can never drift between the two read
-    * paths. BIGINT keys compare numerically (full range shapes);
-    * STRING keys compare by equality only (the builder accepts nothing
-    * else for them). */
-  def keyPredicate(filters: Array[Filter],
-      numeric: Boolean = true): String => Boolean =
-    if (numeric) { t =>
-      val k = t.toLong
-      filters.forall {
-        case EqualTo(_, v: java.lang.Number) => k == v.longValue
-        case In(_, vs) =>
-          vs.exists(v => v.asInstanceOf[java.lang.Number].longValue == k)
-        case GreaterThan(_, v: java.lang.Number) => k > v.longValue
-        case GreaterThanOrEqual(_, v: java.lang.Number) => k >= v.longValue
-        case LessThan(_, v: java.lang.Number) => k < v.longValue
-        case LessThanOrEqual(_, v: java.lang.Number) => k <= v.longValue
-        case _ => true // unreachable: the builder only accepts the above
-      }
-    } else { t =>
-      filters.forall {
-        case EqualTo(_, v) => v != null && v.toString == t
-        case In(_, vs) => vs.exists(v => v != null && v.toString == t)
-        case _ => true // unreachable for string keys
-      }
-    }
+  /** What a flat read of `root` sees: [[listDataFiles]] of a directory;
+    * a file path reads as itself. */
+  private[sources] def flatFiles(root: java.io.File): Seq[java.io.File] =
+    if (root.isDirectory) listDataFiles(root) else Seq(root).filter(_.isFile)
 
   /** Path-safety gate for STRING partition values: the identity layout
     * encodes the key in a DIRECTORY NAME, so separators, traversal
@@ -2265,7 +2198,7 @@ private[sources] object TsvLayout {
     * construction). Everything else (spaces, '=', unicode) passes
     * verbatim: refusal beats silent escaping, which would make the
     * dir name disagree with the value it answers for. */
-  def validateKeyToken(t: String): String = {
+  private[sources] def validateKeyToken(t: String): String = {
     require(t.nonEmpty && t != "." && t != ".." &&
       !t.exists(ch => ch == '/' || ch == '\\' || ch == '\u0000' ||
         ch == '\n' || ch == '\r' || ch == '\t'),
@@ -2284,47 +2217,13 @@ private[sources] object TsvLayout {
     * `.tsv.gz` transparently via smart_open; this is that front door
     * at the DSv2 contract, mixed freely with plain shards in one
     * store.) */
-  def byteSplits(file: java.io.File, splitBytes: Long): Seq[(Long, Long)] = {
+  private[sources] def byteSplits(file: java.io.File,
+      splitBytes: Long): Seq[(Long, Long)] = {
     val len = file.length()
     if (len == 0) Nil
     else if (isGzip(file.getName)) Seq((0L, Long.MaxValue))
     else (0L until len by splitBytes)
       .map(start => (start, math.min(start + splitBytes, len)))
-  }
-}
-
-/** The BUCKET layout: `_graft_bucket=<id>/` directories holding full
-  * rows (unlike the identity layout, the cluster column stays IN the
-  * lines — a bucket holds many values, so nothing can synthesize it).
-  * One hash function shared by the writer, the scan's static/runtime
-  * bucket pruning, and the catalog-exposed V2 `bucket` function, so
-  * the reported [[org.apache.spark.sql.connector.read.partitioning
-  * .KeyGroupedPartitioning]] can never disagree with the bytes on
-  * disk. */
-private[sources] object TsvBuckets {
-  val DirPrefix = "_graft_bucket="
-
-  /** fmix64 avalanche (the MurmurHash3 finalizer) then floorMod:
-    * bucket ids must not correlate with monotone keys, or range-ish
-    * workloads hammer one bucket. */
-  def bucketOf(v: Long, n: Int): Int = {
-    var h = v
-    h ^= h >>> 33; h *= 0xff51afd7ed558ccdL
-    h ^= h >>> 33; h *= 0xc4ceb9fe1a85ec53L
-    h ^= h >>> 33
-    java.lang.Math.floorMod(h, n.toLong).toInt
-  }
-
-  def dirOf(root: java.io.File, b: Int): java.io.File =
-    new java.io.File(root, s"$DirPrefix$b")
-
-  /** Bucket subdirectories as (id, dir), ascending. */
-  def bucketDirs(path: String): Seq[(Int, java.io.File)] = {
-    val root = new java.io.File(TsvWritePaths.strip(path))
-    Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.startsWith(DirPrefix))
-      .map(d => d.getName.stripPrefix(DirPrefix).toInt -> d)
-      .sortBy(_._1).toSeq
   }
 }
 
@@ -2357,7 +2256,7 @@ private[sources] object TsvBucketFunction
     override def canonicalName(): String = "graft.bucket"
     override def isResultNullable: Boolean = false
     override def produceResult(input: InternalRow): Integer =
-      TsvBuckets.bucketOf(input.getLong(1), input.getInt(0))
+      TsvLayout.bucketOf(input.getLong(1), input.getInt(0))
   }
 }
 

@@ -608,7 +608,8 @@ class TsvCatalogSpec extends AnyFunSuite {
     val b = new TsvWriteBuilder(
       org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, shard BIGINT"),
       java.nio.file.Files.createTempDirectory("graft_kw").toString,
-      TsvWriteLayout.Keyed("shard"), java.util.UUID.randomUUID().toString)
+      TsvLayout.Keyed("shard", org.apache.spark.sql.types.LongType),
+      java.util.UUID.randomUUID().toString)
     val e = intercept[UnsupportedOperationException] {
       b.build().toStreaming
     }

@@ -366,7 +366,7 @@ class TsvSourceSpec extends AnyFunSuite {
       s"unexpected rows: $got")
     // pruning is physical: only shard=1's file plans splits
     val pruned = new TsvScan(keyedSchema, keyedSchema, Array.empty, dir,
-      1L << 20, -1, Some("shard"),
+      1L << 20, -1, TsvLayout.of(keyedSchema, Some("shard")),
       keyFilters = Array(org.apache.spark.sql.sources.EqualTo("shard", 1L)))
       .planInputPartitions()
     assert(pruned.length == 1 &&
@@ -375,6 +375,25 @@ class TsvSourceSpec extends AnyFunSuite {
     // range and set shapes evaluate exactly on the dir key
     assert(readKeyed(dir).filter(col("shard") >= 1).count() == 20)
     assert(readKeyed(dir).filter(col("shard").isin(0, 2)).count() == 20)
+  }
+
+  test("keyed layout: a non-BIGINT key directory fails planning and DELETE, naming dir, column and path") {
+    val dir = writeKeyedTsv()
+    new java.io.File(dir, "shard=tmp").mkdir()
+    val layout = TsvLayout.of(keyedSchema, Some("shard"))
+    def check(e: IllegalArgumentException): Unit =
+      assert(e.getMessage.contains("'shard=tmp'") &&
+        e.getMessage.contains("partition column shard") &&
+        e.getMessage.contains(dir), e.getMessage)
+    check(intercept[IllegalArgumentException] {
+      new TsvScan(keyedSchema, keyedSchema, Array.empty, dir, 1L << 20, -1,
+        layout).planInputPartitions()
+    })
+    check(intercept[IllegalArgumentException] {
+      new TsvTable(keyedSchema, dir, layout).deleteWhere(
+        Array[org.apache.spark.sql.sources.Filter](
+          org.apache.spark.sql.sources.EqualTo("shard", 1L)))
+    })
   }
 
   test("keyed layout: byte-range splits group back into key partitions, results exact") {
@@ -429,7 +448,7 @@ class TsvSourceSpec extends AnyFunSuite {
     // equality/IN prune physically (split planning never lists pruned
     // dirs); ranges are declined and stay exact via Spark's residual
     val pruned = new TsvScan(sSchema, sSchema, Array.empty, root,
-      1L << 20, -1, Some("country"),
+      1L << 20, -1, TsvLayout.of(sSchema, Some("country")),
       keyFilters = Array(org.apache.spark.sql.sources.In("country",
         Array[Any]("US", "de x"))))
       .planInputPartitions()
@@ -496,7 +515,8 @@ class TsvSourceSpec extends AnyFunSuite {
     val root = deletableLayout()
     loadDeletable(root).createOrReplaceTempView("graft_del_t")
     // the empty-IN edge first (while data still exists): no-op
-    val table = new TsvTable(delSchema, root, Some("shard"))
+    val table = new TsvTable(delSchema, root,
+      TsvLayout.of(delSchema, Some("shard")))
     table.deleteWhere(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.In("shard", Array.empty)))
     assert(loadDeletable(root).count() == 12, "IN () must delete nothing")
@@ -550,7 +570,7 @@ class TsvSourceSpec extends AnyFunSuite {
   private def mkStream(dir: String, cp: String,
       limits: TsvStreamLimits = TsvStreamLimits.none) =
     new TsvMicroBatchStream(schema, schema, Array.empty, dir, 1L << 20,
-      None, Array.empty, limits, cp)
+      TsvLayout.Flat, Array.empty, limits, cp)
 
   private def addShard(dir: String, name: String, ids: Range): Unit = {
     java.nio.file.Files.write(
@@ -640,7 +660,7 @@ class TsvSourceSpec extends AnyFunSuite {
     val dir = writeKeyedTsv() // shard=0/1/2, one file each
     val cp = java.nio.file.Files.createTempDirectory("graft_tsv_cp").toString
     val s1 = new TsvMicroBatchStream(keyedSchema, keyedSchema,
-      Array.empty, dir, 1L << 20, Some("shard"),
+      Array.empty, dir, 1L << 20, TsvLayout.of(keyedSchema, Some("shard")),
       Array(org.apache.spark.sql.sources.GreaterThanOrEqual("shard", 1L)),
       TsvStreamLimits(maxFiles = Some(1), maxBytes = None), cp)
     var off = s1.initialOffset()
@@ -1044,8 +1064,8 @@ class TsvSourceSpec extends AnyFunSuite {
     // (keyed on the shared name, a single bucket).
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.unsafe.types.UTF8String
-    for (layout <- Seq(TsvWriteLayout.Flat, TsvWriteLayout.Keyed("name"),
-        TsvWriteLayout.Bucketed("id", 1))) {
+    for (layout <- Seq(TsvLayout.Flat, TsvLayout.of(schema, Some("name")),
+        TsvLayout.Bucketed("id", 1))) {
       val dir = java.nio.file.Files.createTempDirectory("graft_tsv_sink").toString
       def writeJob(id: Long): Unit = {
         val bw = new TsvBatchWrite(schema, dir, layout, truncateFirst = false)
@@ -1056,12 +1076,18 @@ class TsvSourceSpec extends AnyFunSuite {
       }
       writeJob(1L)
       writeJob(2L)
-      val back = layout match {
-        case TsvWriteLayout.Keyed(c) => readKeyed(dir, c)
-        case _ => readTsv(dir)
+      // read back through a scan of the SAME layout value
+      val batch = new TsvScanBuilder(schema, dir, 1L << 20, layout).build()
+        .toBatch
+      val readers = batch.createReaderFactory()
+      val back = batch.planInputPartitions().toSeq.flatMap { p =>
+        val r = readers.createReader(p)
+        try Iterator.continually(r).takeWhile(_.next())
+          .map(_.get().getLong(0)).toList
+        finally r.close()
       }
-      assert(back.orderBy("id").collect().map(_.getLong(0)).toSeq ==
-        Seq(1L, 2L), s"$layout: the second job must not replace the first job's file")
+      assert(back.sorted == Seq(1L, 2L),
+        s"$layout: the second job must not replace the first job's file")
     }
   }
 
@@ -1094,7 +1120,7 @@ class TsvSourceSpec extends AnyFunSuite {
     import org.apache.spark.sql.sources.{EqualTo => SEq, In => SIn}
     val dir = writeKeyedTsv() // shards 0, 1, 2
     def freshScan() = new TsvScanBuilder(keyedSchema, dir,
-      32L * 1024 * 1024, Some("shard")).build()
+      32L * 1024 * 1024, TsvLayout.of(keyedSchema, Some("shard"))).build()
       .asInstanceOf[TsvScan]
     val unfiltered = freshScan()
     assert(unfiltered.planInputPartitions().length == 3)
@@ -1119,13 +1145,39 @@ class TsvSourceSpec extends AnyFunSuite {
     assert(ignored.planInputPartitions().length == 3)
   }
 
-  test("only keyed layouts offer runtime-filter attributes") {
+  test("bucketed scan stats size only the buckets a pushed point lookup keeps") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    val dir = java.nio.file.Files.createTempDirectory("graft_tsv_bks").toString
+    val layout = TsvLayout.Bucketed("id", 4)
+    val bw = new TsvBatchWrite(schema, dir, layout, truncateFirst = false)
+    val w = bw.createBatchWriterFactory(null).createWriter(0, 0L)
+    (1L to 40L).sortBy(TsvLayout.bucketOf(_, 4)).foreach(i =>
+      w.write(InternalRow(i, UTF8String.fromString(s"n$i"), 1.5, null)))
+    bw.commit(Array(w.commit()))
+    def bytes(filters: org.apache.spark.sql.sources.Filter*): Long = {
+      val b = new TsvScanBuilder(schema, dir, 1L << 20, layout)
+      b.pushFilters(filters.toArray)
+      b.build().asInstanceOf[TsvScan].estimateStatistics().sizeInBytes()
+        .getAsLong
+    }
+    val all = bytes()
+    val one = bytes(org.apache.spark.sql.sources.EqualTo("id", 7L))
+    assert(one < all, s"a point lookup keeps one bucket of four: $one vs $all bytes")
+  }
+
+  test("only keyed and bucketed layouts offer runtime-filter attributes") {
     val plain = new TsvScanBuilder(schema,
       writeTsv(Seq("1\ta\t1.0\tx")), 1024L).build().asInstanceOf[TsvScan]
     assert(plain.filterAttributes().isEmpty)
     val keyed = new TsvScanBuilder(keyedSchema, writeKeyedTsv(),
-      1024L, Some("shard")).build().asInstanceOf[TsvScan]
+      1024L, TsvLayout.of(keyedSchema, Some("shard"))).build()
+      .asInstanceOf[TsvScan]
     assert(keyed.filterAttributes().map(_.describe()).toSeq == Seq("shard"))
+    val bucketed = new TsvScanBuilder(schema,
+      java.nio.file.Files.createTempDirectory("graft_tsv_bk").toString,
+      1024L, TsvLayout.Bucketed("id", 4)).build().asInstanceOf[TsvScan]
+    assert(bucketed.filterAttributes().map(_.describe()).toSeq == Seq("id"))
   }
 
   // ---- aggregate pushdown (SupportsPushDownAggregates, partial) ----
