@@ -1,14 +1,20 @@
 package graft.core
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
+
 import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
+import scala.util.Using
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, ExpressionEncoder}
 import org.apache.spark.sql.catalyst.encoders.AgnosticEncoders.{IterableEncoder, ProductEncoder}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, input_file_block_start, input_file_name}
 import org.apache.spark.util.SizeEstimator
 
 /** The generic user-function-driven MapReduce surface of the reference
@@ -40,8 +46,9 @@ import org.apache.spark.util.SizeEstimator
   * `.toSeq`, accepting the same memory profile). Bundling only decides
   * which values travel together; `reduceFcn` is still called once per
   * key with all of its values. When the reduce function is
-  * associative+commutative, use [[runAssociative]] to get map-side
-  * partial aggregation (the reference has none — SURVEY.md §2.1 O8).
+  * associative+commutative, use [[runAssociative]]: the same budgeted
+  * map-side fold merges each key's values into one partial before the
+  * shuffle (the reference has no combiner — SURVEY.md §2.1 O8).
   */
 object MapReduce {
 
@@ -97,8 +104,9 @@ object MapReduce {
     }
   }
 
-  /** Byte budget of one map task's bundling buffer in [[run]]. Spark's
-    * own in-memory shuffle collections first check for a spill at 5 MB
+  /** Byte budget of one map task's per-key fold: [[run]]'s bundling
+    * buffer and [[runAssociative]]'s combiner. Spark's own in-memory
+    * shuffle collections first check for a spill at 5 MB
     * (`spark.shuffle.spill.initialMemoryThreshold`); this stays under it.
     */
   private[core] final val BundleBytes: Long = 4L << 20
@@ -106,35 +114,55 @@ object MapReduce {
   /** Estimated bytes a buffered value adds beyond the value itself (its
     * slot in the key's buffer), and a new key beyond the key itself (the
     * hash-map entry and an empty buffer). */
-  private val ValueSlotBytes = 8L
+  private[core] val ValueSlotBytes = 8L
   private val KeyEntryBytes = 96L
 
-  /** Groups one map task's `(k, v)` pairs into `(k, values)` chunks. The
-    * pairs fill a hash map of per-key buffers until their estimated size
-    * reaches `budget`; then every buffer is emitted as one chunk and the
-    * map starts over. So a task emits at most one chunk per key per
-    * flush, and holds at most about `budget` bytes of pairs. */
+  /** Groups one map task's `(k, v)` pairs into `(k, values)` chunks:
+    * [[foldByKey]] appending to a per-key buffer. */
   private[core] def bundle[K, V](kvs: Iterator[(K, V)],
-      budget: Long): Iterator[(K, Seq[V])] = {
+      budget: Long): Iterator[(K, Seq[V])] =
+    foldByKey(kvs, budget)(ArraySeq.untagged.newBuilder[V] += _,
+      (buf: mutable.Builder[V, ArraySeq[V]], v: V) => buf += v)
+      .map { case (k, buf) => (k, buf.result()) }
+
+  /** Merges one map task's `(k, v)` pairs into `(k, partial)` pairs:
+    * [[foldByKey]] with `merge`, which must be associative and
+    * commutative. */
+  private[core] def combine[K, V](kvs: Iterator[(K, V)], budget: Long,
+      merge: (V, V) => V): Iterator[(K, V)] =
+    foldByKey(kvs, budget)(identity[V], merge)
+
+  /** Folds one map task's `(k, v)` pairs per key: a key's first value
+    * starts its partial through `first`, each later one is folded in by
+    * `add`. The partials fill a hash map until the estimated size of the
+    * pairs taken in reaches `budget`; then every partial is emitted and
+    * the map starts over. So a task emits at most one partial per key per
+    * flush. Every pair counts against the budget, not only a new key, so
+    * a partial that grows with its values (a buffer, a set union) keeps
+    * the task at about `budget` bytes. */
+  private def foldByKey[K, V, A](kvs: Iterator[(K, V)], budget: Long)(
+      first: V => A, add: (A, V) => A): Iterator[(K, A)] = {
     val keySize, valueSize = new SampledSize
-    def flush(): Iterator[(K, Seq[V])] = {
-      val groups = new java.util.HashMap[K, mutable.Builder[V, ArraySeq[V]]]()
+    def flush(): Iterator[(K, A)] = {
+      val partials = new java.util.HashMap[K, Partial[A]]()
       var bytes = 0L
       while (bytes < budget && kvs.hasNext) {
         val (k, v) = kvs.next()
-        var buf = groups.get(k)
-        if (buf == null) {
-          buf = ArraySeq.untagged.newBuilder[V]
-          groups.put(k, buf)
+        val p = partials.get(k)
+        if (p == null) {
+          partials.put(k, new Partial(first(v)))
           bytes += keySize.of(k) + KeyEntryBytes
-        }
-        buf += v
+        } else p.acc = add(p.acc, v)
         bytes += valueSize.of(v) + ValueSlotBytes
       }
-      groups.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue.result()))
+      partials.entrySet.iterator.asScala.map(e => (e.getKey, e.getValue.acc))
     }
     Iterator.continually(flush()).takeWhile(_.hasNext).flatten
   }
+
+  /** One key's partial in [[foldByKey]], boxed so that a null partial is
+    * not taken for a missing key. */
+  private final class Partial[A](var acc: A)
 
   /** Size of each object of a stream, estimated the way Spark's
     * `SizeTracker` does: `SizeEstimator` on a sample (the first 16
@@ -219,9 +247,13 @@ object MapReduce {
   }
 
   /** Associative fast path: when `reduceFcn` is a commutative monoid fold,
-    * Spark can partially aggregate map-side before the shuffle — the
-    * optimization the reference lacks entirely (SURVEY.md §4.1). Semantics
-    * equal `run` with `reduceFcn = (k, vs) => out(vs.reduce(merge))`.
+    * each map task combines before the shuffle — the optimization the
+    * reference lacks entirely (SURVEY.md §4.1). One `mapPartitions` runs
+    * `mapFcn` and merges each key's values into a partial (the fold
+    * [[run]] bundles with, under the same [[BundleBytes]] budget), so the
+    * pairs are encoded once, as partials; Spark's `reduceGroups` then
+    * merges the partials. Semantics equal `run` with
+    * `reduceFcn = (k, vs) => out(vs.reduce(merge))`.
     */
   def runAssociative[D, K, V](
       ds: Dataset[D],
@@ -230,7 +262,8 @@ object MapReduce {
       kvEnc: Encoder[(K, V)],
       kEnc: Encoder[K],
       vEnc: Encoder[V]): Dataset[(K, V)] =
-    ds.flatMap(mapFcn).groupByKey(_._1).mapValues(_._2).reduceGroups(merge)
+    ds.mapPartitions(it => combine(it.flatMap(mapFcn), BundleBytes, merge))
+      .groupByKey(_._1).mapValues(_._2).reduceGroups(merge)
 
   /** Single-text-file API — analog of `MapReduceWithOneFileInput`
     * (mapreduce.py:167-173). Unlike the reference, the file does NOT
@@ -240,6 +273,10 @@ object MapReduce {
     * Reference line semantics: lines keep their trailing `\n` there;
     * Spark strips terminators — documented delta (SURVEY.md §1.1), no
     * observable difference for the reference's own workloads.
+    *
+    * `ignoreFirstLine` drops the first line of every file `path` names
+    * (a directory or glob of headered files loses each header), without
+    * a pass of its own: see [[dropFileHeaders]].
     */
   def runOnTextFile[K, V, R](
       spark: SparkSession,
@@ -251,22 +288,34 @@ object MapReduce {
       kvEnc: Encoder[(K, V)],
       kEnc: Encoder[K],
       rEnc: Encoder[R]): Dataset[R] = {
-    import spark.implicits._
-    val lines0 = spark.read.textFile(path)
-    val lines =
-      if (!ignoreFirstLine) lines0
-      else {
-        // Drop the first line of the (single) file without collecting it:
-        // zipWithIndex is a narrow pass over already-ordered text splits.
-        lines0.rdd.zipWithIndex().filter(_._2 > 0L).map(_._1).toDS()
-      }
-    run(lines, mapFcn, reduceFcn, numPartitions)
+    val lines = spark.read.textFile(path)
+    run(if (ignoreFirstLine) dropFileHeaders(lines) else lines,
+      mapFcn, reduceFcn, numPartitions)
   }
 
+  /** `lines` of a text scan without each file's first line. That line is
+    * the first row of the file's split at byte offset 0, and a task reads
+    * a split's rows in order, so a row is dropped when it starts the
+    * offset-0 split of its file within its partition. A narrow filter in
+    * the scan's own tasks: nothing runs before the caller's action. */
+  private def dropFileHeaders(lines: Dataset[String]): Dataset[String] =
+    lines.select(col("value"), input_file_name(), input_file_block_start())
+      .as(Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaLong))
+      .mapPartitions { rows =>
+        var inFirstSplitOf: String = null // file of the previous row, if at offset 0
+        rows.filter { case (_, file, start) =>
+          val header = start == 0L && file != inFirstSplitOf
+          inFirstSplitOf = if (start == 0L) file else null
+          !header
+        }.map(_._1)
+      }(Encoders.STRING)
+
   /** Multi-file API — analog of `MapReduceWithMultipleFiles`
-    * (mapreduce.py:176-187): an index file lists one data-file URI per
-    * line. The reference round-robins whole files to mappers; Spark goes
-    * further and splits every file into byte-range tasks.
+    * (mapreduce.py:176-187): an index file lists one data-file URI (or
+    * glob) per line. As in the reference, the driver reads the index
+    * itself, one file, with no Spark job (see [[readIndex]]). The
+    * reference round-robins whole files to mappers; Spark goes further
+    * and splits every file into byte-range tasks.
     */
   def runOnFileIndex[K, V, R](
       spark: SparkSession,
@@ -277,8 +326,30 @@ object MapReduce {
       kvEnc: Encoder[(K, V)],
       kEnc: Encoder[K],
       rEnc: Encoder[R]): Dataset[R] = {
-    val files = spark.read.textFile(indexPath)
-      .collect().map(_.trim).filter(_.nonEmpty) // index file is small: file list only
-    run(spark.read.textFile(files.toIndexedSeq: _*), mapFcn, reduceFcn, numPartitions)
+    val files = readIndex(spark, indexPath)
+    run(spark.read.textFile(files: _*), mapFcn, reduceFcn, numPartitions)
+  }
+
+  /** The trimmed non-empty lines of the index file at `indexPath`, read
+    * on the driver through the session's Hadoop conf — the one Spark's
+    * own file reads use, so Hadoop keys set on the session and scheme
+    * routing apply — and decompressed by extension (`.gz`, ...). The
+    * index is one file: a directory fails with an
+    * `IllegalArgumentException`, a missing path or a glob with a
+    * `FileNotFoundException`, each naming the path. */
+  private def readIndex(spark: SparkSession, indexPath: String): Seq[String] = {
+    val conf = GraftPlanBridge.newHadoopConf(spark)
+    val path = new Path(indexPath)
+    val fs = path.getFileSystem(conf)
+    require(!fs.getFileStatus(path).isDirectory,
+      s"MapReduce index $indexPath is a directory; it must be one file " +
+        "listing one data-file path per line")
+    val codec = new CompressionCodecFactory(conf).getCodec(path)
+    Using.Manager { use =>
+      val raw = use(fs.open(path))
+      val in = if (codec == null) raw else use(codec.createInputStream(raw))
+      use(new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8)))
+        .lines.iterator.asScala.map(_.trim).filter(_.nonEmpty).toVector
+    }.get
   }
 }

@@ -311,12 +311,12 @@ object TextAnalysis extends QueryPack {
 
   /** q85: word count through the ASSOCIATIVE MapReduce fast path — same
     * semantics and oracle as q72, but via [[graft.core.MapReduce
-    * .runAssociative]], which lets Spark partially aggregate map-side
-    * before the shuffle (the optimization the reference engine lacks
-    * entirely: its reducers receive every raw (word, 1) pair). At scale
-    * the shuffle carries O(distinct words) per partition instead of
-    * O(total words) — the difference between a wordcount that ships 100
-    * TB and one that ships megabytes. */
+    * .runAssociative]], whose map tasks merge each word's counts before
+    * the shuffle (the combiner the reference engine lacks entirely: its
+    * reducers receive every raw (word, 1) pair). At scale the shuffle
+    * carries O(distinct words) per map task and per flush of the
+    * combiner's 4 MiB budget instead of O(total words) — the difference
+    * between a wordcount that ships 100 TB and one that ships megabytes. */
   private def q85(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val texts = Tables.documents(s, dir).select("text").as[String]

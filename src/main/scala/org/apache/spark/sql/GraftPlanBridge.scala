@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SparkStrategy
 
@@ -29,6 +30,12 @@ object GraftPlanBridge {
     * with stable exprIds, safe to reference from a parent node. */
   def analyzed(df: Dataset[_]): LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
+
+  /** A fresh Hadoop conf of the session, as Spark's own file reads get
+    * it: the context's conf (where `spark.hadoop.*` keys land) plus every
+    * key set on the session, such as an `fs.s3a.*` one. */
+  def newHadoopConf(s: SparkSession): Configuration =
+    s.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
 
   /** Idempotently add a planner strategy to a live session. */
   def addStrategy(s: SparkSession, st: SparkStrategy): Unit = {

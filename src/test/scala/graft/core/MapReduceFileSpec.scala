@@ -1,8 +1,17 @@
 package graft.core
 
-import graft.TestSpark
+import graft.{SessionConfs, TestSpark}
+import org.apache.hadoop.fs.RawLocalFileSystem
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
+import java.io.FileNotFoundException
+import java.net.URI
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
+import java.util.UUID
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import java.util.zip.GZIPOutputStream
 
 /** Ports of the reference's file-input tests (mapreduce_unittest.py:58-70)
   * with regenerated fixtures: a file with "header" + 0..999 and one with
@@ -44,22 +53,131 @@ class MapReduceFileSpec extends AnyFunSuite {
     assert(out === golden)
   }
 
-  test("multi-file index path (MapReduceWithMultipleFiles)") {
+  /** The Spark jobs `body` starts from this thread. The listener bus
+    * delivers events in order, so once a marker job run after `body` has
+    * been seen, every job `body` started has been seen too. */
+  def jobsStartedBy[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"probe-${UUID.randomUUID}"
+    val jobs = new AtomicInteger
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-end" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "probe")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-end", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marker.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  def headered(f: Path, xs: Seq[Int]): Path =
+    Files.writeString(f, "header\n" + xs.mkString("", "\n", "\n"))
+
+  def maxByKey(ds: org.apache.spark.sql.Dataset[(Long, Long)]): Seq[(Long, Long)] =
+    ds.collect().toSeq.sortBy(_._1)
+
+  test("ignoreFirstLine over several splits starts no job before the action") {
+    import spark.implicits._
+    val f = headered(tmpDir().resolve("file_with_header"), 0 until 1000)
+    SessionConfs.withConfs(spark, "spark.sql.files.maxPartitionBytes" -> "1024") {
+      assert(spark.read.textFile(f.toString).rdd.getNumPartitions >= 2)
+      val (ds, jobs) = jobsStartedBy(MapReduce.runOnTextFile[Long, Long, (Long, Long)](
+        spark, f.toString, mapLine, (k, vs) => (k, vs.max), ignoreFirstLine = true))
+      assert(jobs === 0, "building the Dataset ran a Spark job")
+      assert(maxByKey(ds) === golden)
+    }
+  }
+
+  test("ignoreFirstLine drops the header of every file a glob names") {
     import spark.implicits._
     val dir = tmpDir()
-    val chunks = (0 until 1000).grouped(334).zipWithIndex.toSeq
-    val files = chunks.map { case (xs, i) =>
+    headered(dir.resolve("part-0"), 0 until 500)
+    headered(dir.resolve("part-1"), 500 until 1000)
+    val out = MapReduce.runOnTextFile[Long, Long, (Long, Long)](
+      spark, s"$dir/part-*", mapLine, (k, vs) => (k, vs.max), ignoreFirstLine = true)
+    assert(maxByKey(out) === golden)
+  }
+
+  /** Three data files holding 0..999 and an index file listing them,
+    * written by `writeIndex` from the list of their paths. */
+  def indexedShards(writeIndex: (Path, Seq[String]) => Path): String = {
+    val dir = tmpDir()
+    val files = (0 until 1000).grouped(334).zipWithIndex.toSeq.map { case (xs, i) =>
       val f = dir.resolve(s"data_$i.txt")
       Files.writeString(f, xs.mkString("", "\n", "\n"))
       f.toString
     }
-    val index = dir.resolve("index.txt")
-    Files.writeString(index, files.mkString("", "\n", "\n"))
-    val out = MapReduce.runOnFileIndex[Long, Long, (Long, Long)](
-      spark, index.toString, mapLine, (k, vs) => (k, vs.max))
-      .collect().toSeq.sortBy(_._1)
-    assert(out === golden)
+    writeIndex(dir, files).toString
   }
+
+  def runIndex(index: String): org.apache.spark.sql.Dataset[(Long, Long)] = {
+    import spark.implicits._
+    MapReduce.runOnFileIndex[Long, Long, (Long, Long)](
+      spark, index, mapLine, (k, vs) => (k, vs.max))
+  }
+
+  val plainIndex: (Path, Seq[String]) => Path =
+    (dir, files) => Files.writeString(dir.resolve("index.txt"), files.mkString("", "\n", "\n"))
+
+  test("runOnFileIndex reads its index without a Spark job") {
+    val (ds, jobs) = jobsStartedBy(runIndex(indexedShards(plainIndex)))
+    assert(jobs === 0, "building the Dataset ran a Spark job")
+    assert(maxByKey(ds) === golden)
+  }
+
+  test("index forms: CRLF endings, blank and padded lines, gzip") {
+    val forms: Seq[(String, (Path, Seq[String]) => Path)] = Seq(
+      "CRLF, blank and padded lines" -> ((dir, files) => Files.writeString(
+        dir.resolve("index.txt"),
+        files.map(f => s"  $f\t").mkString("\r\n", "\r\n\r\n", "\r\n  \r\n"))),
+      "gzip, by extension" -> { (dir, files) =>
+        val gz = dir.resolve("index.txt.gz")
+        val out = new GZIPOutputStream(Files.newOutputStream(gz))
+        try out.write(files.mkString("\n").getBytes(StandardCharsets.UTF_8)) finally out.close()
+        gz
+      })
+    for ((form, write) <- forms)
+      assert(maxByKey(runIndex(indexedShards(write))) === golden, form)
+  }
+
+  test("Hadoop keys set on the session reach the index read") {
+    val routed = s"graftidx://${indexedShards(plainIndex)}"
+    intercept[org.apache.hadoop.fs.UnsupportedFileSystemException](runIndex(routed))
+    SessionConfs.withConfs(spark,
+        "fs.graftidx.impl" -> classOf[IndexSchemeFileSystem].getName,
+        "fs.graftidx.impl.disable.cache" -> "true") {
+      assert(maxByKey(runIndex(routed)) === golden)
+    }
+  }
+
+  test("a missing index or a directory index fails, naming the path") {
+    val missing = tmpDir().resolve("no_such_index.txt").toString
+    val e = intercept[FileNotFoundException](runIndex(missing))
+    assert(e.getMessage.contains(missing), e.getMessage)
+    val dir = tmpDir().toString
+    val d = intercept[IllegalArgumentException](runIndex(dir))
+    assert(d.getMessage.contains(dir), d.getMessage)
+  }
+
+  test("multi-file index path (MapReduceWithMultipleFiles)") {
+    assert(maxByKey(runIndex(indexedShards(plainIndex))) === golden)
+  }
+}
+
+/** A local file system under its own scheme, `graftidx:`, which a
+  * session reaches only through an `fs.graftidx.impl` key. */
+class IndexSchemeFileSystem extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("graftidx:///")
 }
 
 object MapReduceFileSpec {

@@ -105,4 +105,33 @@ class MapReducePropertySpec extends AnyFunSuite {
       }
     }
   }
+
+  test("combine merges every pair and emits at most one partial per key per flush") {
+    val rnd = new Random(13)
+    for (caseNo <- 1 to 8) {
+      val kvs = List.fill(rnd.nextInt(500))((rnd.nextInt(9), rnd.nextInt(1000).toLong))
+      val oracle = kvs.groupBy(_._1).map { case (k, vs) => (k, vs.map(_._2).sum) }
+      // budget 1 flushes after every pair; a huge one never flushes early
+      for (budget <- Seq(1L, 1L << 40)) {
+        val partials = MapReduce.combine[Int, Long](kvs.iterator, budget, _ + _).toList
+        val sums = partials.groupBy(_._1).map { case (k, ps) => (k, ps.map(_._2).sum) }
+        assert(sums === oracle, s"case $caseNo budget=$budget")
+        val expected = if (budget == 1L) kvs.size else oracle.size
+        assert(partials.size === expected, s"case $caseNo budget=$budget")
+      }
+    }
+  }
+
+  test("a growing set-union partial still flushes within the budget") {
+    val (n, keys, budget) = (30000, 3, 16L << 10)
+    val kvs = Iterator.range(0, n).map(i => (i % keys, Set(i)))
+    val partials = MapReduce.combine[Int, Set[Int]](kvs, budget, _ ++ _).toList
+    val unions = partials.groupBy(_._1).map { case (k, ps) => (k, ps.map(_._2).reduce(_ ++ _)) }
+    assert(unions === (0 until n).toSet.groupBy((i: Int) => i % keys))
+    // every pair counts at least its slot against the budget, however
+    // little its key adds, so the fold flushes at least this often
+    val minFlushes = n * MapReduce.ValueSlotBytes / budget
+    assert(partials.size >= minFlushes, s"${partials.size} partials for $n pairs")
+    assert(partials.map(_._2.size).max <= budget / MapReduce.ValueSlotBytes)
+  }
 }

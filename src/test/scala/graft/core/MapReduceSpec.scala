@@ -148,6 +148,18 @@ class MapReduceSpec extends AnyFunSuite {
       s"$written shuffle records for $n values in $tasks tasks")
   }
 
+  test("associative exchange writes at most one partial per (map task, key)") {
+    import spark.implicits._
+    val (tasks, keys, n) = (4, 5, 20000L)
+    val (rows, written) = collectWithShuffleRecords(
+      MapReduce.runAssociative[java.lang.Long, Long, Long](
+        longs(n, tasks), x => Iterator((x % keys, x.longValue)), _ + _))
+    val oracle = (0L until n).groupBy(_ % keys).map { case (k, xs) => (k, xs.sum) }
+    assert(rows.sortBy(_._1) === oracle.toSeq.sortBy(_._1))
+    // 5,000 longs per task fit one flush of the combiner
+    assert(written <= tasks * keys, s"$written shuffle records for $n values")
+  }
+
   test("nullable values (String with nulls) survive bundling") {
     import spark.implicits._
     val kvs = Seq(("a", "x"), ("a", null), ("b", null), ("b", null), ("c", "y"))
