@@ -2,6 +2,29 @@ package graft
 
 import scala.util.control.NonFatal
 
+/** How the mains record a failure in their artifacts. */
+private[graft] object Report {
+
+  /** The error class and the first line of its message (many
+    * exceptions carry a null message; the class still names them). */
+  def cause(e: Throwable): String =
+    Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+      .fold(e.getClass.getName)(m => s"${e.getClass.getName}: $m")
+
+  /** A JSON string literal: backslash, quote, and ALL control chars
+    * (<0x20) escaped, since a tab or CR in a message or in an oracle's
+    * SQL would otherwise make a reader's json.load fail. */
+  def json(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+}
+
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -68,11 +91,11 @@ object Bench {
       named.filter { case (name, _) => only(name) }
         .map { case (name, fn) =>
           val t0 = System.nanoTime()
-          val ok = try { fn(spark, sfDir).count(); true }
-            catch { case NonFatal(_) => false }
+          val failure = try { fn(spark, sfDir).count(); None }
+            catch { case NonFatal(e) => Some(Report.cause(e)) }
           val dt = (System.nanoTime() - t0) / 1e9
           clearState()
-          (name, dt, ok)
+          (name, dt, failure)
         }
     val samples = (1 to repeats).flatMap(_ => pass(_ => true)) ++
       (1 to streamExtra).flatMap(_ => pass(streamingNames))
@@ -80,10 +103,15 @@ object Bench {
       val mine = samples.filter(_._1 == name).map(_._2).sorted
       val med = mine(mine.size / 2)
       (name, med, mine.head, mine.last,
-        samples.filter(_._1 == name).forall(_._3))
+        samples.filter(_._1 == name).flatMap(_._3).headOption)
     }
-    val failed = results.collect { case (k, _, _, _, false) => "\"" + k + "\"" }
+    val failed = results.collect { case (k, _, _, _, Some(_)) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
+    // why each failed query failed (its first failing sample), so the
+    // artifact answers without a rerun
+    val failedCauses = results
+      .collect { case (k, _, _, _, Some(c)) => Report.json(k) + ":" + Report.json(c) }
+      .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // NOISE metadata (VERDICT r15 item 1): the per-query sample spread
     // makes run-to-run noise VISIBLE in the snapshot itself — total_min
@@ -106,7 +134,7 @@ object Bench {
     val fullMins = results.map { case (k, _, mn, _, _) => "\"" + k + "\":" + fmt(mn) }
       .mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$fullQs,"query_mins":$fullMins,"failed":$failed,"sf":"$sfDir","n_queries":${results.size},"repeats":$repeats,"stream_repeats":${repeats + streamExtra},"total_min":${fmt(totalMin)},"total_max":${fmt(totalMax)},"noise_pct":${fmt(noisePct)},"protocol":"per-query median of $repeats interleaved passes (+$streamExtra for streaming); total_min = sum of best samples"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$fullQs,"query_mins":$fullMins,"failed":$failed,"failed_causes":$failedCauses,"sf":"$sfDir","n_queries":${results.size},"repeats":$repeats,"stream_repeats":${repeats + streamExtra},"total_min":${fmt(totalMin)},"total_max":${fmt(totalMax)},"noise_pct":${fmt(noisePct)},"protocol":"per-query median of $repeats interleaved passes (+$streamExtra for streaming); total_min = sum of best samples"}"""
     // a failed artifact write is reported and fails the run (exit 1
     // after the summary line), never silently dropped
     def write(file: String, line: String,

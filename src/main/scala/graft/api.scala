@@ -109,6 +109,112 @@ private[graft] object SessionConfs {
   }
 }
 
+/** The transient session state of one gate call: temp views, catalog
+  * tables, scratch paths and any other release (an `unpersist`), each
+  * registered on the scope [[CallScope.local]] hands the gate's body.
+  *
+  * `local` owns the one rule every such gate needs: collect the result
+  * while the state exists, then release all of it, also when the body
+  * threw. Releases run in reverse order of registration and every one
+  * is attempted. Under a body failure a failing release is added to it
+  * as suppressed; after a successful body the first release failure is
+  * thrown. Like [[SessionConfs]], it assumes gates run sequentially on
+  * the session.
+  */
+final class CallScope private (s: SparkSession) {
+  private var releases = List.empty[() => Unit]
+
+  /** `df` as temp view `name` for the rest of the call. */
+  def view(name: String, df: DataFrame): Unit = {
+    df.createOrReplaceTempView(name)
+    defer(s.catalog.dropTempView(name))
+  }
+
+  /** Catalog table `ident`, dropped if it exists now and again on
+    * release; returns `ident`. */
+  def table(ident: String): String = {
+    val drop = () => { s.sql(s"DROP TABLE IF EXISTS $ident"); () }
+    drop()
+    defer(drop())
+    ident
+  }
+
+  /** A scratch path unique to this call, `<tag>_<uuid>` under
+    * [[graft.operators.FileIO.scratch]] for `dir`, deleted on release
+    * (see [[CallScope.rmrfAll]]). */
+  def path(dir: String, tag: String): String = {
+    val p = graft.operators.FileIO.scratch(dir,
+      s"${tag}_" + java.util.UUID.randomUUID().toString.replace("-", ""))
+    defer(CallScope.rmrfAll(s, p))
+    p
+  }
+
+  /** Run `action` on release. */
+  def defer(action: => Unit): Unit = releases ::= (() => action)
+
+  private def release(failure: Option[Throwable]): Unit = {
+    val errors = releases.flatMap(r =>
+      try { r(); None }
+      catch { case scala.util.control.NonFatal(e) => Some(e) })
+    releases = Nil
+    def suppressInto(e: Throwable, others: List[Throwable]): Unit =
+      others.filter(_ ne e).foreach(e.addSuppressed)
+    (failure, errors) match {
+      case (Some(f), _) => suppressInto(f, errors)
+      case (None, first :: rest) => suppressInto(first, rest); throw first
+      case (None, Nil) =>
+    }
+  }
+}
+
+object CallScope {
+
+  /** Run `body` with `confs` scoped, collect the frame it returns into a
+    * driver-local frame with the same schema, then release the scope. */
+  def local(s: SparkSession, confs: (String, String)*)(
+      body: CallScope => DataFrame): DataFrame =
+    SessionConfs.withConfs(s, confs: _*) {
+      val scope = new CallScope(s)
+      var failure: Option[Throwable] = None
+      try {
+        val df = body(scope)
+        df.sparkSession.createDataFrame(
+          java.util.Arrays.asList(df.collect(): _*), df.schema)
+      } catch { case e: Throwable => failure = Some(e); throw e }
+      finally scope.release(failure)
+    }
+
+  /** Remove every scratch path, attempting EACH delete even when an
+    * earlier one throws (so one failure can't leak the rest). Never
+    * throws: this runs as a release, where a rethrow would mask the
+    * failure that is the actual root cause. The danger a rethrow would
+    * guard — a silently-leaked sentinel day corrupting later replays of
+    * a SHARED shard dump — is neutralized structurally instead: any
+    * dump the failed path lives under is forgotten
+    * ([[graft.Memo.forgetUnder]]), so the next gate rewrites the whole
+    * dump (mode overwrite deletes the directory first, leftover
+    * included). Plain scratch dirs (uuid-named sinks/checkpoints) leak
+    * at worst a temp dir; the failure is logged to stderr either way. */
+  private[graft] def rmrfAll(s: SparkSession, paths: String*): Unit =
+    paths.foreach { p =>
+      // Hadoop's local delete reports most failures (e.g. EACCES inside
+      // FileUtil.fullyDelete) by returning false, not throwing — so
+      // success is "the path is gone afterwards", not "no exception".
+      val gone = scala.util.Try {
+        val hp = new org.apache.hadoop.fs.Path(p)
+        val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
+        fs.delete(hp, true)
+        !fs.exists(hp)
+      }
+      if (gone != scala.util.Success(true)) {
+        Memo.forgetUnder(p)
+        System.err.println(s"[graft] scratch cleanup failed for $p " +
+          s"(dump invalidated if shared): " +
+          gone.failed.toOption.getOrElse("delete returned false"))
+      }
+    }
+}
+
 /** Registry of PROCESS-PINNED localCheckpoint blocks, and the pinned
   * checkpoint frames query packs reuse through [[Memo]].
   *

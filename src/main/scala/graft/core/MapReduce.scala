@@ -251,19 +251,20 @@ object MapReduce {
     * reference lacks entirely (SURVEY.md §4.1). One `mapPartitions` runs
     * `mapFcn` and merges each key's values into a partial (the fold
     * [[run]] bundles with, under the same [[BundleBytes]] budget), so the
-    * pairs are encoded once, as partials; Spark's `reduceGroups` then
-    * merges the partials. Semantics equal `run` with
-    * `reduceFcn = (k, vs) => out(vs.reduce(merge))`.
+    * pairs are encoded once, as partials; the partials shuffle straight
+    * to one `mapGroups` per key that merges them, the reduce shape [[run]]
+    * uses, with no second partial aggregation before the exchange.
+    * Semantics equal `run` with `reduceFcn = (k, vs) => out(vs.reduce(merge))`.
     */
   def runAssociative[D, K, V](
       ds: Dataset[D],
       mapFcn: D => IterableOnce[(K, V)],
       merge: (V, V) => V)(implicit
       kvEnc: Encoder[(K, V)],
-      kEnc: Encoder[K],
-      vEnc: Encoder[V]): Dataset[(K, V)] =
+      kEnc: Encoder[K]): Dataset[(K, V)] =
     ds.mapPartitions(it => combine(it.flatMap(mapFcn), BundleBytes, merge))
-      .groupByKey(_._1).mapValues(_._2).reduceGroups(merge)
+      .groupByKey(_._1)
+      .mapGroups((k, ps) => (k, ps.map(_._2).reduce(merge)))
 
   /** Single-text-file API — analog of `MapReduceWithOneFileInput`
     * (mapreduce.py:167-173). Unlike the reference, the file does NOT

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryPack}
+import graft.{CallScope, Q, QueryPack}
 import graft.Materialize.MaterializeOps
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
@@ -139,22 +139,15 @@ object AdvancedAggs extends QueryPack {
     * tax over the typed path — shuffle volume stays O(groups). Gate runs
     * the aggregation entirely through `spark.sql(...)` over a temp view
     * and must equal q38's typed result (same oracle). */
-  private def q179(s: SparkSession, dir: String): DataFrame = {
+  private def q179(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
     s.udf.register("graft_cent_avg", udaf(CentAvg))
-    Tables.lineitem(s, dir)
-      .select(col("l_returnflag"), col("l_quantity"))
-      .createOrReplaceTempView("graft_q179_lineitem")
-    val result = s.sql(
+    cs.view("graft_q179_lineitem", Tables.lineitem(s, dir)
+      .select(col("l_returnflag"), col("l_quantity")))
+    s.sql(
       """SELECT l_returnflag,
         |  round(graft_cent_avg(l_quantity), 6) AS avg_qty
         |FROM graft_q179_lineitem
         |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
-    // materialize (3 rows) so the temp view can be dropped — same
-    // leave-the-session-pristine discipline as the memory-sink gates
-    // (createOrReplaceTempView already makes reruns safe)
-    val rows = result.collect()
-    s.catalog.dropTempView("graft_q179_lineitem")
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
   }
 
   /** q178: `flatMapSortedGroups` — the engine-provided secondary sort

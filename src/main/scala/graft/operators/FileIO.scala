@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Memo, Q, QueryPack}
+import graft.{CallScope, Memo, Q, QueryPack}
 import graft.core.MapReduce
 import graft.sources.Tables
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -1089,38 +1089,32 @@ object FileIO extends QueryPack {
     * mutates it), deletes four cohort shards through SQL, and
     * re-aggregates the survivors; the oracle states the same exclusion
     * over the parquet events. */
-  /** Recursive copy/delete for cloning cached layouts into mutable gate
+  /** Recursive copy for cloning cached layouts into mutable gate
     * targets (bench-pruning: a filesystem copy of an already-built
     * layout beats re-running its Spark job every pass). Goes through
     * the Hadoop FileSystem API — same as q75/driveRestartHalves over
     * the same scratch roots — so a scratch root resolving to a
     * non-local FS copies correctly instead of java.io silently
-    * no-opping and leaving the gate a stale layout. */
-  private def rmTree(s: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    ()
-  }
+    * no-opping and leaving the gate a stale layout. `dst` must not
+    * exist: FileUtil then copies src AS dst (an existing dst dir would
+    * instead nest src under it). */
   private def copyTree(s: SparkSession, src: String, dst: String): Unit = {
     val conf = s.sparkContext.hadoopConfiguration
     val sp = new org.apache.hadoop.fs.Path(src)
     val dp = new org.apache.hadoop.fs.Path(dst)
-    // dst was rmTree'd just before, so FileUtil copies src AS dst (an
-    // existing dst dir would instead nest src under it)
     org.apache.hadoop.fs.FileUtil.copy(sp.getFileSystem(conf), sp,
       dp.getFileSystem(conf), dp, false, true, conf)
     ()
   }
 
-  private def q280(s: SparkSession, dir: String): DataFrame = {
-    val out = scratch(dir, "tsv_delete_target")
+  private def q280(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val out = cs.path(dir, "tsv_delete_target")
     // the gate MUTATES its layout (DELETE drops shard dirs), so it
-    // needs a fresh copy every run — but the copy is cloned from the
+    // needs a fresh copy every call — but the copy is cloned from the
     // cached spj clicks layout (IDENTICAL derivation: click events →
     // per-user count + exact cents, shard = user_id % 16) with a
     // filesystem copy instead of a per-pass scan+shuffle+write job
     val (clicks, _) = spjLayout(s, dir)
-    rmTree(s, out)
     copyTree(s, clicks, out)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "user_id BIGINT, n BIGINT, cents BIGINT, shard BIGINT")
@@ -1128,15 +1122,12 @@ object FileIO extends QueryPack {
       .format(classOf[graft.sources.TsvSourceProvider].getName)
       .schema(schema).option("path", out)
       .option("partition_col", "shard").load()
-    load().createOrReplaceTempView("graft_q280")
+    cs.view("graft_q280", load())
     s.sql("DELETE FROM graft_q280 WHERE shard IN (0, 4, 8, 12)")
-    val result = load()
+    load()
       .groupBy("shard")
       .agg(count(lit(1)).as("n_users"), sum("cents").as("cents"))
       .orderBy("shard")
-    val rows = result.collect()
-    s.catalog.dropTempView("graft_q280")
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
   }
 
   /** q268 layout: the fact table partitioned by ship month — the layout
@@ -1316,11 +1307,7 @@ object FileIO extends QueryPack {
     * conf scope; PlanSpec pins zero hash exchanges under the gate's
     * confs and their return when v2 bucketing is off. */
   private def q270(s: SparkSession, dir: String): DataFrame =
-    graft.SessionConfs.withConfs(s, spjConfs: _*) {
-      val result = spjFrame(s, dir)
-      val rows = result.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-    }
+    CallScope.local(s, spjConfs: _*)(_ => spjFrame(s, dir))
 
   /** q287: SCAN-REPORTED ORDERING (`SupportsReportOrdering`) — the last
     * rung of the DSv2 scan-report ladder (stats q247 → key grouping
@@ -1337,11 +1324,7 @@ object FileIO extends QueryPack {
     * fact every query and sorting 16 rows; PlanSpec pins the
     * asymmetry. */
   private def q287(s: SparkSession, dir: String): DataFrame =
-    graft.SessionConfs.withConfs(s, spjConfs: _*) {
-      val result = orderedScanFrame(s, dir)
-      val rows = result.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-    }
+    CallScope.local(s, spjConfs: _*)(_ => orderedScanFrame(s, dir))
 
   private[graft] def orderedScanFrame(s: SparkSession, dir: String): DataFrame = {
     val (clicks, _) = spjLayout(s, dir)
@@ -1403,28 +1386,20 @@ object FileIO extends QueryPack {
     * identifiers, not path strings. TsvCatalogSpec pins DDL semantics
     * (exists/list/rename/drop, partitioned-create and ALTER refusals,
     * cascade rules, sidecar survival under INSERT OVERWRITE). */
-  private def q290(s: SparkSession, dir: String): DataFrame = {
-    val cat = ensureCatalog(s, dir)
-    s.sql(s"DROP TABLE IF EXISTS $cat.lake.orders_t")
-    s.sql(s"""CREATE TABLE $cat.lake.orders_t (
+  private def q290(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val t = cs.table(s"${ensureCatalog(s, dir)}.lake.orders_t")
+    s.sql(s"""CREATE TABLE $t (
              |  o_orderkey BIGINT, o_custkey BIGINT,
              |  o_totalprice DOUBLE, o_orderpriority STRING)""".stripMargin)
-    Tables.orders(s, dir)
-      .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
-      .createOrReplaceTempView("graft_src290")
-    s.sql(s"INSERT INTO $cat.lake.orders_t " +
-      "SELECT * FROM graft_src290 WHERE o_orderkey % 2 = 0")
-    s.sql(s"INSERT INTO $cat.lake.orders_t " +
-      "SELECT * FROM graft_src290 WHERE o_orderkey % 2 = 1")
-    val result = s.sql(
+    cs.view("graft_src290", Tables.orders(s, dir)
+      .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"))
+    s.sql(s"INSERT INTO $t SELECT * FROM graft_src290 WHERE o_orderkey % 2 = 0")
+    s.sql(s"INSERT INTO $t SELECT * FROM graft_src290 WHERE o_orderkey % 2 = 1")
+    s.sql(
       s"""SELECT o_orderpriority AS priority, count(*) AS n,
          |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2)
          |    AS revenue
-         |FROM $cat.lake.orders_t GROUP BY 1 ORDER BY 1""".stripMargin)
-    val rows = result.collect()
-    s.sql(s"DROP TABLE $cat.lake.orders_t")
-    s.catalog.dropTempView("graft_src290")
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+         |FROM $t GROUP BY 1 ORDER BY 1""".stripMargin)
   }
 
   /** q302: catalog `PARTITIONED BY identity(col)` — the keyed
@@ -1447,33 +1422,27 @@ object FileIO extends QueryPack {
     * mechanics, refusals (non-identity transforms, NULL keys, streaming
     * epochs), partitioned CTAS, the PushedPartitionFilters pruned plan,
     * and runtime filtering on the catalog-resolved fact. */
-  private def q302(s: SparkSession, dir: String): DataFrame = {
-    val cat = ensureCatalog(s, dir)
-    s.sql(s"DROP TABLE IF EXISTS $cat.lake.clicks302")
-    s.sql(s"CREATE TABLE $cat.lake.clicks302 " +
+  private def q302(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val t = cs.table(s"${ensureCatalog(s, dir)}.lake.clicks302")
+    s.sql(s"CREATE TABLE $t " +
       "(user_id BIGINT, cents BIGINT, shard BIGINT) PARTITIONED BY (shard)")
-    Tables.events(s, dir)
+    cs.view("graft_src302", Tables.events(s, dir)
       .filter(col("event_type") === "click" && col("user_id").isNotNull)
       .select(col("user_id"),
         round(col("value") * 100).cast("long").as("cents"),
-        (col("user_id") % 8).as("shard"))
-      .createOrReplaceTempView("graft_src302")
+        (col("user_id") % 8).as("shard")))
     // no REPARTITION hint needed: the keyed write DECLARES clustered-
     // by-key distribution (RequiresDistributionAndOrdering), so Spark
     // plans the exchange itself and each key lands as ONE file — the
     // small-files discipline lives in the table, not the query text
-    s.sql(s"INSERT INTO $cat.lake.clicks302 SELECT * FROM graft_src302")
-    s.sql(s"DELETE FROM $cat.lake.clicks302 WHERE shard IN (2, 5)")
-    val result = s.sql(
+    s.sql(s"INSERT INTO $t SELECT * FROM graft_src302")
+    s.sql(s"DELETE FROM $t WHERE shard IN (2, 5)")
+    s.sql(
       s"""SELECT shard, count(*) AS n_rows,
          |  count(DISTINCT user_id) AS n_users,
          |  CAST(sum(cents) AS BIGINT) AS cents
-         |FROM $cat.lake.clicks302 WHERE shard >= 1
+         |FROM $t WHERE shard >= 1
          |GROUP BY shard ORDER BY shard""".stripMargin)
-    val rows = result.collect()
-    s.sql(s"DROP TABLE $cat.lake.clicks302")
-    s.catalog.dropTempView("graft_src302")
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
   }
 
   /** q305: PARTITION DDL on the keyed catalog table
@@ -1495,35 +1464,29 @@ object FileIO extends QueryPack {
     * TsvCatalogSpec pins duplicate-ADD refusal, missing-DROP loudness,
     * the partial-spec SHOW, flat-table refusals, and keyed/flat
     * TRUNCATE. */
-  private def q305(s: SparkSession, dir: String): DataFrame = {
-    val cat = ensureCatalog(s, dir)
-    s.sql(s"DROP TABLE IF EXISTS $cat.lake.pt305")
-    s.sql(s"CREATE TABLE $cat.lake.pt305 " +
+  private def q305(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val t = cs.table(s"${ensureCatalog(s, dir)}.lake.pt305")
+    s.sql(s"CREATE TABLE $t " +
       "(user_id BIGINT, cents BIGINT, shard BIGINT) PARTITIONED BY (shard)")
-    Tables.events(s, dir)
+    cs.view("graft_src305", Tables.events(s, dir)
       .filter(col("event_type") === "click" && col("user_id").isNotNull)
       .select(col("user_id"),
         round(col("value") * 100).cast("long").as("cents"),
-        (col("user_id") % 8).as("shard"))
-      .createOrReplaceTempView("graft_src305")
-    s.sql(s"INSERT INTO $cat.lake.pt305 SELECT * FROM graft_src305")
-    s.sql(s"ALTER TABLE $cat.lake.pt305 ADD PARTITION (shard = 99)")
-    s.sql(s"ALTER TABLE $cat.lake.pt305 DROP PARTITION (shard = 3)")
-    val listed = s.sql(s"SHOW PARTITIONS $cat.lake.pt305")
+        (col("user_id") % 8).as("shard")))
+    s.sql(s"INSERT INTO $t SELECT * FROM graft_src305")
+    s.sql(s"ALTER TABLE $t ADD PARTITION (shard = 99)")
+    s.sql(s"ALTER TABLE $t DROP PARTITION (shard = 3)")
+    val listed = s.sql(s"SHOW PARTITIONS $t")
       .select(regexp_extract(col("partition"), "shard=(-?\\d+)", 1)
         .cast("long").as("shard"))
-    val counts = s.table(s"$cat.lake.pt305")
+    val counts = s.table(t)
       .groupBy("shard")
       .agg(count(lit(1)).as("cnt"), sum("cents").as("sum_c"))
-    val result = listed.join(counts, Seq("shard"), "left")
+    listed.join(counts, Seq("shard"), "left")
       .select(col("shard"),
         coalesce(col("cnt"), lit(0L)).as("n"),
         coalesce(col("sum_c"), lit(0L)).as("cents"))
       .orderBy("shard")
-    val rows = result.collect()
-    s.sql(s"DROP TABLE $cat.lake.pt305")
-    s.catalog.dropTempView("graft_src305")
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
   }
 
   /** q306: STRING identity partition keys — the keyed `<col>=<v>/`
@@ -1549,24 +1512,22 @@ object FileIO extends QueryPack {
     * exclusions over parquet. TsvSourceSpec/TsvCatalogSpec pin the
     * mechanics (pruned split planning, partition DDL on string keys,
     * refusal shapes). */
-  private def q306(s: SparkSession, dir: String): DataFrame = {
-    val cat = ensureCatalog(s, dir)
-    s.sql(s"DROP TABLE IF EXISTS $cat.lake.ord306")
-    s.sql(s"CREATE TABLE $cat.lake.ord306 " +
+  private def q306(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val t = cs.table(s"${ensureCatalog(s, dir)}.lake.ord306")
+    s.sql(s"CREATE TABLE $t " +
       "(o_orderkey BIGINT, cents BIGINT, priority STRING) " +
       "PARTITIONED BY (priority)")
-    Tables.orders(s, dir)
+    cs.view("graft_src306", Tables.orders(s, dir)
       .select(col("o_orderkey"),
         round(col("o_totalprice") * 100).cast("long").as("cents"),
-        col("o_orderpriority").as("priority"))
-      .createOrReplaceTempView("graft_src306")
-    s.sql(s"INSERT INTO $cat.lake.ord306 SELECT * FROM graft_src306")
+        col("o_orderpriority").as("priority")))
+    s.sql(s"INSERT INTO $t SELECT * FROM graft_src306")
     // retention by STRING key: a metadata-only directory drop
-    s.sql(s"DELETE FROM $cat.lake.ord306 WHERE priority = '2-HIGH'")
+    s.sql(s"DELETE FROM $t WHERE priority = '2-HIGH'")
     // gate-side pin 1: key equality prunes STATICALLY (the scan's own
     // description carries the accepted partition filter — a pruned dir
     // is never listed, split, or sized)
-    val prunedPlan = s.table(s"$cat.lake.ord306")
+    val prunedPlan = s.table(t)
       .filter(col("priority") === "1-URGENT")
       .queryExecution.executedPlan.toString
     require(prunedPlan.contains("PushedPartitionFilters"),
@@ -1582,19 +1543,15 @@ object FileIO extends QueryPack {
         case _ => false
       }
     val hostileRefused =
-      try { s.sql(s"INSERT INTO $cat.lake.ord306 VALUES (0, 0, 'a/b')"); false }
+      try { s.sql(s"INSERT INTO $t VALUES (0, 0, 'a/b')"); false }
       catch { case e: Throwable if isRefusal(e) => true }
     require(hostileRefused,
       "q306: path-hostile partition value must refuse the write")
-    val result = s.sql(
+    s.sql(
       s"""SELECT priority, count(*) AS n, CAST(sum(cents) AS BIGINT) AS cents,
          |  min(o_orderkey) AS min_key
-         |FROM $cat.lake.ord306 WHERE priority != '3-MEDIUM'
+         |FROM $t WHERE priority != '3-MEDIUM'
          |GROUP BY priority ORDER BY priority""".stripMargin)
-    val rows = result.collect()
-    s.sql(s"DROP TABLE $cat.lake.ord306")
-    s.catalog.dropTempView("graft_src306")
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
   }
 
   /** q307: `PARTITIONED BY (bucket(n, col))` in the catalog — the
@@ -1619,43 +1576,36 @@ object FileIO extends QueryPack {
     * bucketing off. */
   private def q307(s: SparkSession, dir: String): DataFrame = {
     val cat = ensureCatalog(s, dir)
-    s.sql(s"DROP TABLE IF EXISTS $cat.lake.bkc307")
-    s.sql(s"DROP TABLE IF EXISTS $cat.lake.bkp307")
-    def mk(t: String): Unit = s.sql(
-      s"""CREATE TABLE $cat.lake.$t (user_id BIGINT, n BIGINT,
-         |  cents BIGINT) PARTITIONED BY (bucket(16, user_id))"""
-        .stripMargin)
-    mk("bkc307"); mk("bkp307")
-    def side(evType: String, view: String): Unit = {
-      Tables.events(s, dir)
-        .filter(col("event_type") === evType && col("user_id").isNotNull)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("value") * 100).cast("long")).as("cents"))
-        .createOrReplaceTempView(view)
-      ()
-    }
-    side("click", "graft_src307c"); side("purchase", "graft_src307p")
-    s.sql(s"INSERT INTO $cat.lake.bkc307 SELECT * FROM graft_src307c")
-    s.sql(s"INSERT INTO $cat.lake.bkp307 SELECT * FROM graft_src307p")
-    graft.SessionConfs.withConfs(s, spjConfs: _*) {
-      val joined = s.table(s"$cat.lake.bkc307").as("c")
-        .join(s.table(s"$cat.lake.bkp307").as("p"), "user_id")
+    CallScope.local(s, spjConfs: _*) { cs =>
+      def mk(t: String): String = {
+        val ident = cs.table(s"$cat.lake.$t")
+        s.sql(s"""CREATE TABLE $ident (user_id BIGINT, n BIGINT,
+                 |  cents BIGINT) PARTITIONED BY (bucket(16, user_id))"""
+          .stripMargin)
+        ident
+      }
+      val (clicks, purchases) = (mk("bkc307"), mk("bkp307"))
+      def side(evType: String, view: String): Unit =
+        cs.view(view, Tables.events(s, dir)
+          .filter(col("event_type") === evType && col("user_id").isNotNull)
+          .groupBy(col("user_id"))
+          .agg(count(lit(1)).as("n"),
+            sum(round(col("value") * 100).cast("long")).as("cents")))
+      side("click", "graft_src307c"); side("purchase", "graft_src307p")
+      s.sql(s"INSERT INTO $clicks SELECT * FROM graft_src307c")
+      s.sql(s"INSERT INTO $purchases SELECT * FROM graft_src307p")
+      val joined = s.table(clicks).as("c")
+        .join(s.table(purchases).as("p"), "user_id")
         .select(col("user_id"),
           col("c.n").as("n_clicks"), col("c.cents").as("click_cents"),
           col("p.n").as("n_purchases"), col("p.cents").as("purchase_cents"))
         .orderBy("user_id")
-      val rows = joined.collect()
       // gate-side pin: the co-bucketed join planned with no shuffle on
       // either side (the orderBy's range exchange is above the join)
       val plan = joined.queryExecution.executedPlan.toString
       require(!plan.contains("Exchange hashpartitioning"),
         s"q307: co-bucketed catalog join must elide both exchanges:\n$plan")
-      s.sql(s"DROP TABLE $cat.lake.bkc307")
-      s.sql(s"DROP TABLE $cat.lake.bkp307")
-      s.catalog.dropTempView("graft_src307c")
-      s.catalog.dropTempView("graft_src307p")
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), joined.schema)
+      joined
     }
   }
 
@@ -1674,26 +1624,24 @@ object FileIO extends QueryPack {
     * final snapshot, whose oracle is the full aggregate over parquet.
     * TsvCatalogSpec pins the layout (one generation + pointer after N
     * replaces) and the rename/drop composition. */
-  private def q309(s: SparkSession, dir: String): DataFrame = {
-    val cat = ensureCatalog(s, dir)
-    s.sql(s"DROP TABLE IF EXISTS $cat.lake.snap309")
-    Tables.orders(s, dir)
+  private def q309(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val t = cs.table(s"${ensureCatalog(s, dir)}.lake.snap309")
+    cs.view("graft_src309", Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_orderpriority"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-      .createOrReplaceTempView("graft_src309")
+        round(col("o_totalprice") * 100).cast("long").as("cents")))
     def snapSql(keyMod: Int): String =
       s"""SELECT o_orderpriority AS priority, count(*) AS n,
          |  CAST(sum(cents) AS BIGINT) AS total_cents
          |FROM graft_src309 WHERE o_orderkey % 16 < $keyMod
          |GROUP BY 1""".stripMargin
-    s.sql(s"CREATE TABLE $cat.lake.snap309 AS ${snapSql(2)}")
+    s.sql(s"CREATE TABLE $t AS ${snapSql(2)}")
     val reads = new java.util.concurrent.atomic.AtomicLong(0L)
     @volatile var stop = false
     @volatile var readerFailure: Throwable = null
     val reader = new Thread(() => {
       while (!stop && readerFailure == null) {
         try {
-          require(s.table(s"$cat.lake.snap309").count() > 0,
+          require(s.table(t).count() > 0,
             "q309: the served snapshot answered empty")
           reads.incrementAndGet()
           ()
@@ -1718,7 +1666,7 @@ object FileIO extends QueryPack {
       // eight successive rebuilds, the last covering every key (% 16 <
       // 16) so the final snapshot states the full aggregate
       (1 to 8).foreach { i =>
-        s.sql(s"REPLACE TABLE $cat.lake.snap309 AS ${snapSql(2 * i)}")
+        s.sql(s"REPLACE TABLE $t AS ${snapSql(2 * i)}")
       }
     } finally {
       stop = true
@@ -1729,11 +1677,7 @@ object FileIO extends QueryPack {
     require(reads.get() >= 5,
       s"q309: the reader must observe the table continuously under " +
         s"rebuilds (got ${reads.get()} reads)")
-    val result = s.table(s"$cat.lake.snap309").orderBy("priority")
-    val rows = result.collect()
-    s.sql(s"DROP TABLE $cat.lake.snap309")
-    s.catalog.dropTempView("graft_src309")
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+    s.table(t).orderBy("priority")
   }
 
   /** q294: catalog SCHEMA EVOLUTION — `ALTER TABLE … ADD COLUMN` on the
@@ -1751,31 +1695,25 @@ object FileIO extends QueryPack {
     * aggregates across both populations; the oracle rebuilds the union
     * with explicit NULLs. TsvCatalogSpec pins the DDL lifecycle and the
     * positional-field refusals (only trailing nullable ADDs are legal). */
-  private def q294(s: SparkSession, dir: String): DataFrame = {
-    val cat = ensureCatalog(s, dir)
-    s.sql(s"DROP TABLE IF EXISTS $cat.lake.orders_ev")
-    s.sql(s"""CREATE TABLE $cat.lake.orders_ev (
+  private def q294(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val t = cs.table(s"${ensureCatalog(s, dir)}.lake.orders_ev")
+    s.sql(s"""CREATE TABLE $t (
              |  o_orderkey BIGINT, o_orderpriority STRING)""".stripMargin)
-    Tables.orders(s, dir)
-      .select("o_orderkey", "o_orderpriority", "o_totalprice")
-      .createOrReplaceTempView("graft_src294")
-    s.sql(s"INSERT INTO $cat.lake.orders_ev " +
+    cs.view("graft_src294", Tables.orders(s, dir)
+      .select("o_orderkey", "o_orderpriority", "o_totalprice"))
+    s.sql(s"INSERT INTO $t " +
       "SELECT o_orderkey, o_orderpriority FROM graft_src294 " +
       "WHERE o_orderkey % 2 = 0")
-    s.sql(s"ALTER TABLE $cat.lake.orders_ev ADD COLUMN price_c BIGINT")
-    s.sql(s"INSERT INTO $cat.lake.orders_ev " +
+    s.sql(s"ALTER TABLE $t ADD COLUMN price_c BIGINT")
+    s.sql(s"INSERT INTO $t " +
       "SELECT o_orderkey, o_orderpriority, " +
       "cast(round(o_totalprice * 100) AS BIGINT) FROM graft_src294 " +
       "WHERE o_orderkey % 2 = 1")
-    val result = s.sql(
+    s.sql(
       s"""SELECT o_orderpriority AS priority, count(*) AS n_rows,
          |  count(price_c) AS n_with_price,
          |  CAST(sum(price_c) AS BIGINT) AS price_c_new
-         |FROM $cat.lake.orders_ev GROUP BY 1 ORDER BY 1""".stripMargin)
-    val rows = result.collect()
-    s.sql(s"DROP TABLE $cat.lake.orders_ev")
-    s.catalog.dropTempView("graft_src294")
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+         |FROM $t GROUP BY 1 ORDER BY 1""".stripMargin)
   }
 
   /** q297: ATOMIC CTAS/RTAS through the DSv2 catalog
@@ -1796,33 +1734,26 @@ object FileIO extends QueryPack {
     * oracle states the second SELECT directly. TsvCatalogSpec pins
     * atomicity (failed CTAS leaves nothing, failed RTAS preserves the
     * old table, staging dirs never leak). */
-  private def q297(s: SparkSession, dir: String): DataFrame = {
-    val cat = ensureCatalog(s, dir)
-    s.sql(s"DROP TABLE IF EXISTS $cat.lake.ord_sum")
-    Tables.orders(s, dir)
+  private def q297(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val t = cs.table(s"${ensureCatalog(s, dir)}.lake.ord_sum")
+    cs.view("graft_src297", Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_orderpriority"),
         col("o_orderstatus"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-      .createOrReplaceTempView("graft_src297")
+        round(col("o_totalprice") * 100).cast("long").as("cents")))
     s.sql(
-      s"""CREATE TABLE $cat.lake.ord_sum AS
+      s"""CREATE TABLE $t AS
          |SELECT o_orderpriority AS priority, o_orderstatus AS status,
          |  count(*) AS n, CAST(sum(cents) AS BIGINT) AS total_cents
          |FROM graft_src297 GROUP BY 1, 2""".stripMargin)
     // the nightly re-publish: REPLACE through the staged path — the
     // name serves the old summary until this commit's rename
     s.sql(
-      s"""CREATE OR REPLACE TABLE $cat.lake.ord_sum AS
+      s"""CREATE OR REPLACE TABLE $t AS
          |SELECT o_orderpriority AS priority, o_orderstatus AS status,
          |  count(*) AS n, CAST(sum(cents) AS BIGINT) AS total_cents
          |FROM graft_src297 WHERE o_orderkey % 4 != 0
          |GROUP BY 1, 2""".stripMargin)
-    val result = s.table(s"$cat.lake.ord_sum")
-      .orderBy("priority", "status")
-    val rows = result.collect()
-    s.sql(s"DROP TABLE $cat.lake.ord_sum")
-    s.catalog.dropTempView("graft_src297")
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+    s.table(t).orderBy("priority", "status")
   }
 
   /** q265 setup: stats'd catalog tables for the CBO gate, built once per
@@ -1878,11 +1809,7 @@ object FileIO extends QueryPack {
     * oracle checks the reordered plan computes the same answer. */
   private def q265(s: SparkSession, dir: String): DataFrame = {
     val db = cboSetup(s, dir)
-    graft.SessionConfs.withConfs(s, cboConfs: _*) {
-      val result = s.sql(cboSql(db))
-      val rows = result.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-    }
+    CallScope.local(s, cboConfs: _*)(_ => s.sql(cboSql(db)))
   }
 
   override def queries: Seq[Q] = Seq(

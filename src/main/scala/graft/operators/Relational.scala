@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryPack}
+import graft.{CallScope, Q, QueryPack}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -523,13 +523,14 @@ object Relational extends QueryPack {
     // then every pass scans the cache cluster-wide — the cache-once/
     // probe-k-times profile the scaladoc already claims. Parallelism
     // derives from the cluster width, not a constant.
-    val cents = Tables.orders(s, dir)
-      .select(round(col("o_totalprice") * 100).cast("long").as("cents"))
-      .repartition(s.sparkContext.defaultParallelism)
-    cents.cache()
-    try {
-      cents.createOrReplaceTempView("graft_cents263")
-      val result = s.sql(
+    CallScope.local(s) { cs =>
+      val cents = Tables.orders(s, dir)
+        .select(round(col("o_totalprice") * 100).cast("long").as("cents"))
+        .repartition(s.sparkContext.defaultParallelism)
+      cents.cache()
+      cs.defer(cents.unpersist(false))
+      cs.view("graft_cents263", cents)
+      s.sql(
         """BEGIN
           |  DECLARE lo BIGINT;
           |  DECLARE hi BIGINT;
@@ -570,10 +571,7 @@ object Relational extends QueryPack {
           |  END WHILE;
           |  SELECT hi AS median_cents, n AS n_rows;
           |END""".stripMargin)
-      val rows = result.collect()
-      s.catalog.dropTempView("graft_cents263")
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-    } finally cents.unpersist(false)
+    }
   }
 
   /** q264: PARAMETERIZED SQL — the injection-safe query surface next to
@@ -589,9 +587,10 @@ object Relational extends QueryPack {
     * parameter itself is data-derived (the corpus median price from a
     * 1-row aggregate) — the realistic shape where one query's result
     * feeds the next query's binding. */
-  private def q264(s: SparkSession, dir: String): DataFrame = {
-    Tables.orders(s, dir).createOrReplaceTempView("graft_orders264")
+  private def q264(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    cs.view("graft_orders264", Tables.orders(s, dir))
     s.sql("DECLARE OR REPLACE VARIABLE graft_cut264 DOUBLE")
+    cs.defer(s.sql("DROP TEMPORARY VARIABLE IF EXISTS graft_cut264"))
     s.sql("""SET VAR graft_cut264 =
             |  (SELECT percentile_disc(0.5) WITHIN GROUP
             |     (ORDER BY o_totalprice) FROM graft_orders264)""".stripMargin)
@@ -606,13 +605,10 @@ object Relational extends QueryPack {
         "USING graft_cut264 AS cut")
     val cut = s.sql("SELECT graft_cut264").head().getDouble(0)
     val viaArgs = s.sql(template, Map("cut" -> cut))
-    val out = viaExec.unionByName(viaArgs)
+    viaExec.unionByName(viaArgs)
       .groupBy("priority", "n", "revenue")
       .agg(count(lit(1)).as("paths_agreeing"))
       .orderBy("priority")
-    val rows = out.collect()
-    s.catalog.dropTempView("graft_orders264")
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 
   /** q286: IDENTIFIER() binding — the IDENTIFIER half of injection-safe
@@ -628,9 +624,9 @@ object Relational extends QueryPack {
     * stays oracle-comparable). At 100 TB this is how a metric layer
     * fans one audited template across a catalog of tables without
     * per-table SQL generation. */
-  private def q286(s: SparkSession, dir: String): DataFrame = {
-    Tables.customer(s, dir).createOrReplaceTempView("graft_cust286")
-    Tables.orders(s, dir).createOrReplaceTempView("graft_ord286")
+  private def q286(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    cs.view("graft_cust286", Tables.customer(s, dir))
+    cs.view("graft_ord286", Tables.orders(s, dir))
     val template =
       """SELECT CAST(IDENTIFIER(:grp) AS STRING) AS grp, count(*) AS n
         |FROM IDENTIFIER(:tbl) GROUP BY 1""".stripMargin
@@ -640,12 +636,8 @@ object Relational extends QueryPack {
     val ord = s.sql(template,
       Map("tbl" -> "graft_ord286", "grp" -> "o_orderpriority"))
       .withColumn("report", lit("orders_by_priority"))
-    val out = cust.unionByName(ord)
+    cust.unionByName(ord)
       .select("report", "grp", "n").orderBy("report", "grp")
-    val rows = out.collect()
-    s.catalog.dropTempView("graft_cust286")
-    s.catalog.dropTempView("graft_ord286")
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 
   /** q279: SQL PIPE SYNTAX (Spark 4 `|>` operators) — the third modern
@@ -664,9 +656,9 @@ object Relational extends QueryPack {
     * integer-cents division (`div`) — round-on-double diverges across
     * engines on boundary cells (the r13 red row), so the gate stays in
     * exact integer arithmetic end to end. */
-  private def q279(s: SparkSession, dir: String): DataFrame = {
-    Tables.lineitem(s, dir).createOrReplaceTempView("graft_li279")
-    val out = s.sql(
+  private def q279(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    cs.view("graft_li279", Tables.lineitem(s, dir))
+    s.sql(
       """FROM graft_li279
         ||> WHERE l_shipdate <= DATE'1998-09-02'
         ||> AGGREGATE count(*) AS n,
@@ -676,9 +668,6 @@ object Relational extends QueryPack {
         ||> EXTEND price_c div n AS avg_cents
         ||> SELECT l_returnflag, l_linestatus, n, price_c, avg_cents
         ||> ORDER BY l_returnflag, l_linestatus""".stripMargin)
-    val rows = out.collect()
-    s.catalog.dropTempView("graft_li279")
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 
   /** q299: ANSI-MODE gate — the round-14 full-board ANSI sweep
@@ -696,23 +685,19 @@ object Relational extends QueryPack {
     * whose gates only ever ran legacy-mode semantics would be one
     * `.cast` away from a production surprise. */
   private def q299(s: SparkSession, dir: String): DataFrame =
-    graft.SessionConfs.withConfs(s, "spark.sql.ansi.enabled" -> "true") {
-      Tables.lineitem(s, dir).createOrReplaceTempView("graft_li299")
-      // finally-paired: an ANSI execution throw (the failure mode this
-      // gate exists to catch) must not leak the view into the session
-      try {
-        val result = s.sql(
-          """SELECT l_returnflag, count(*) AS n,
-            |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-            |    AS BIGINT) AS price_c,
-            |  CAST(sum(CAST(CAST(l_quantity AS STRING) AS DECIMAL(18,2)))
-            |    AS BIGINT) AS qty_via_str,
-            |  try_add(9223372036854775807, count(*)) AS overflow_is_null
-            |FROM graft_li299
-            |GROUP BY 1 ORDER BY 1""".stripMargin)
-        val rows = result.collect()
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-      } finally s.catalog.dropTempView("graft_li299")
+    CallScope.local(s, "spark.sql.ansi.enabled" -> "true") { cs =>
+      // the scope drops the view even when an ANSI execution throw (the
+      // failure mode this gate exists to catch) fails the collect
+      cs.view("graft_li299", Tables.lineitem(s, dir))
+      s.sql(
+        """SELECT l_returnflag, count(*) AS n,
+          |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
+          |    AS BIGINT) AS price_c,
+          |  CAST(sum(CAST(CAST(l_quantity AS STRING) AS DECIMAL(18,2)))
+          |    AS BIGINT) AS qty_via_str,
+          |  try_add(9223372036854775807, count(*)) AS overflow_is_null
+          |FROM graft_li299
+          |GROUP BY 1 ORDER BY 1""".stripMargin)
     }
 
   /** q238: COLLATION-aware grouping (Spark 4 surface) — case-insensitive

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryPack}
+import graft.{CallScope, Q, QueryPack}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -651,11 +651,7 @@ object ScaleOps extends QueryPack {
     * pins the injected probe in the optimized plan under these confs
     * and its absence under production defaults. */
   private def q266(s: SparkSession, dir: String): DataFrame =
-    graft.SessionConfs.withConfs(s, runtimeBloomConfs: _*) {
-      val result = runtimeBloomFrame(s, dir)
-      val rows = result.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-    }
+    CallScope.local(s, runtimeBloomConfs: _*)(_ => runtimeBloomFrame(s, dir))
 
   /** q267's scoped confs + frame, shared with PlanSpec's pins.
     *
@@ -738,11 +734,7 @@ object ScaleOps extends QueryPack {
     * execution); PlanSpec pins `skew=true` on the executed sort-merge
     * join under these confs and its absence with skew handling off. */
   private def q267(s: SparkSession, dir: String): DataFrame =
-    graft.SessionConfs.withConfs(s, skewJoinConfs: _*) {
-      val result = skewJoinFrame(s, dir)
-      val rows = result.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-    }
+    CallScope.local(s, skewJoinConfs: _*)(_ => skewJoinFrame(s, dir))
 
   /** q271's scoped confs + frame, shared with PlanSpec's pins.
     *
@@ -788,11 +780,7 @@ object ScaleOps extends QueryPack {
     * scope; PlanSpec pins SortMergeJoin in the initial plan and
     * BroadcastHashJoin in the final one. */
   private def q271(s: SparkSession, dir: String): DataFrame =
-    graft.SessionConfs.withConfs(s, joinSwitchConfs: _*) {
-      val result = joinSwitchFrame(s, dir)
-      val rows = result.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-    }
+    CallScope.local(s, joinSwitchConfs: _*)(_ => joinSwitchFrame(s, dir))
 
   /** q274's frame, shared with PlanSpec's reuse pins. */
   private[graft] def exchangeReuseFrame(s: SparkSession, dir: String): DataFrame = {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.connector.catalog.{Identifier, NamespaceChange, Stag
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import GraftTsvCatalog.schemaFile
 
 /** A DSv2 [[TableCatalog]] over a directory of TSV tables — the
   * NAME-BASED front door to the store the path-based gates drive with
@@ -110,8 +111,6 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
     else None
   private def tableDir(ident: Identifier): java.io.File =
     new java.io.File(nsDir(ident.namespace()), ident.name())
-  private def schemaFile(dir: java.io.File): java.io.File =
-    new java.io.File(dir, "_graft_schema")
 
   // ---- the current-generation pointer ----
   // A table REPLACEd at least once lives in an invisible generation
@@ -153,13 +152,6 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
     * never creatable as table names. One rule, same as the store's
     * file-hiding rule. */
   private def internalName(n: String): Boolean = n.startsWith("_")
-  /** Sidecar writes are TEMP + ATOMIC_MOVE: a plain truncate-then-write
-    * that crashes mid-flush leaves a partial DDL string and bricks the
-    * table (loadTable throws from fromDDL forever) — the single source
-    * of schema truth must flip whole or not at all. */
-  private[sources] def writeSidecarAtomic(dir: java.io.File,
-      schema: StructType): Unit =
-    GraftTsvCatalog.writeSidecarAtomic(dir, schema)
 
   // ---- tables ----
 
@@ -348,7 +340,7 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
     // silently inherit it (accidentally-keyed writes, or a bricked
     // table if the new schema lacks the old key column).
     GraftTsvCatalog.writeLayoutSidecar(dir, layout)
-    writeSidecarAtomic(dir, schema)
+    TsvWritePaths.writeAtomically(schemaFile(dir), schema.toDDL.getBytes("UTF-8"))
     new TsvTable(schema, dir.getPath, layout, requireDir = true)
   }
 
@@ -502,7 +494,7 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
             "positional; drops/renames/type changes would re-map " +
             "existing bytes. Evolve by recreate.")
     }
-    writeSidecarAtomic(dir, schema)
+    TsvWritePaths.writeAtomically(schemaFile(dir), schema.toDDL.getBytes("UTF-8"))
     new TsvTable(schema, dir.getPath,
       GraftTsvCatalog.readLayoutSidecar(dir, schema), requireDir = true)
   }
@@ -613,18 +605,14 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
 }
 
 object GraftTsvCatalog {
-  /** Temp-file + ATOMIC_MOVE sidecar write — the schema flips whole or
-    * not at all (shared by create, ALTER, and the staged commit). */
-  private[sources] def writeSidecarAtomic(dir: java.io.File,
-      schema: StructType): Unit = {
-    val tmp = new java.io.File(dir, s"_graft_schema.tmp")
-    java.nio.file.Files.write(tmp.toPath, schema.toDDL.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp.toPath,
-      new java.io.File(dir, "_graft_schema").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
+  /** The `_graft_schema` sidecar: the table's schema as DDL text, the
+    * file whose presence makes a directory a table. Written through
+    * [[TsvWritePaths.writeAtomically]] by create, ALTER and the staged
+    * commit: a plain truncate-then-write that crashes mid-flush would
+    * leave a partial DDL string and brick the table (loadTable throws
+    * from fromDDL forever). */
+  private[sources] def schemaFile(dir: java.io.File): java.io.File =
+    new java.io.File(dir, "_graft_schema")
 
   /** The `_graft_partition` sidecar: the table's LAYOUT — a bare
     * column name for identity partitioning (the legacy format, still
@@ -640,13 +628,7 @@ object GraftTsvCatalog {
       case TsvLayout.Flat => None
     }
     content match {
-      case Some(text) =>
-        val tmp = new java.io.File(dir, s"_graft_partition.tmp")
-        java.nio.file.Files.write(tmp.toPath, text.getBytes("UTF-8"))
-        java.nio.file.Files.move(tmp.toPath, f.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        ()
+      case Some(text) => TsvWritePaths.writeAtomically(f, text.getBytes("UTF-8"))
       case None =>
         // a FLAT create must not inherit a crashed earlier create's
         // layout sidecar (accidentally-keyed writes)
@@ -712,15 +694,6 @@ object GraftTsvCatalog {
            _: java.io.FileNotFoundException => None
     }
   }
-  private[sources] def writeGenPointerAtomic(ns: java.io.File,
-      table: String, genName: String): Unit = {
-    val tmp = new java.io.File(ns, GenPtrPrefix + table + ".tmp")
-    java.nio.file.Files.write(tmp.toPath, genName.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp.toPath, genPtrFile(ns, table).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
 }
 
 /** The staged table behind atomic CTAS/RTAS: a normal [[TsvTable]] over
@@ -770,11 +743,11 @@ final class TsvStagedTable(tableSchema: StructType,
 
   override def commitStagedChanges(): Unit = {
     GraftTsvCatalog.writeLayoutSidecar(stagingDir, layout)
-    GraftTsvCatalog.writeSidecarAtomic(stagingDir, tableSchema)
+    TsvWritePaths.writeAtomically(schemaFile(stagingDir),
+      tableSchema.toDDL.getBytes("UTF-8"))
     val ns = finalDir.getParentFile
     val table = finalDir.getName
-    def live(d: java.io.File): Boolean =
-      new java.io.File(d, "_graft_schema").isFile
+    def live(d: java.io.File): Boolean = schemaFile(d).isFile
     // the CURRENT generation at commit time: a valid pointer target,
     // else the plain table dir if it holds a schema
     val current: Option[java.io.File] =
@@ -794,7 +767,8 @@ final class TsvStagedTable(tableSchema: StructType,
           throw new java.io.IOException(
             s"graft tsv catalog: staged replace could not promote " +
               s"$stagingDir -> $gen")
-        GraftTsvCatalog.writeGenPointerAtomic(ns, table, gen.getName)
+        TsvWritePaths.writeAtomically(GraftTsvCatalog.genPtrFile(ns, table),
+          gen.getName.getBytes("UTF-8"))
         // SNAPSHOT GRACE: the SUPERSEDED generation survives until the
         // NEXT publish. A reader that resolved it just before the flip
         // finishes its scan against a complete directory (a one-behind

@@ -60,7 +60,8 @@ object Tables {
     * regeneration never fails analysis and the caller's session comes
     * back unchanged; with µs data it is a no-op. Executing a nanos
     * regeneration needs the conf too, so its callers run the query inside
-    * `SessionConfs.withConfs(s, nanosAsLong)`, as the streaming gates do.
+    * `SessionConfs.withConfs(s, nanosAsLong)`, as the streaming gates'
+    * confs do.
     */
   def events(s: SparkSession, d: String): DataFrame =
     graft.SessionConfs.withConfs(s, nanosAsLong) {

@@ -947,16 +947,11 @@ final class TsvMicroBatchStream(fullSchema: StructType,
 
   private def writeList(f: java.io.File, files: Seq[String]): Unit = {
     logDir.mkdirs()
-    val tmp = new java.io.File(logDir, f.getName + ".tmp")
-    java.nio.file.Files.write(tmp.toPath,
+    TsvWritePaths.writeAtomically(f,
       org.json4s.jackson.JsonMethods.compact(
         org.json4s.jackson.JsonMethods.render(
           org.json4s.JsonDSL.seq2jvalue(files.map(
             org.json4s.JsonDSL.string2jvalue)))).getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp.toPath, f.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
   }
   private def readList(f: java.io.File): Seq[String] = {
     import org.json4s.DefaultFormats
@@ -2265,6 +2260,19 @@ private[sources] object TsvBucketFunction
   * same `path` option to the same directory, and one copy of the
   * sink's rename, temp-dir and delete steps. */
 private[sources] object TsvWritePaths {
+  /** Write `bytes` to `<target>.tmp`, then move it over `target` with
+    * `ATOMIC_MOVE` + `REPLACE_EXISTING`: a reader sees the old file or
+    * the new one, never a partial write. Every small metadata file of
+    * the store (catalog sidecars, the generation pointer, the stream's
+    * seen-files log) is written this way. */
+  def writeAtomically(target: java.io.File, bytes: Array[Byte]): Unit = {
+    val tmp = new java.io.File(target.getPath + ".tmp")
+    java.nio.file.Files.write(tmp.toPath, bytes)
+    java.nio.file.Files.move(tmp.toPath, target.toPath,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    ()
+  }
   /** Remote filesystem schemes refused even WITHOUT the `//` (an
     * `hdfs:/x` single-slash URI is legal and would silently go local
     * otherwise). Kept to schemes that are unambiguously remote so a

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.CallScope
 import graft.SessionConfs.withConfs
 import graft.sources.Tables
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -103,16 +104,17 @@ object Replay {
     * under `Trigger.AvailableNow`, whose contract IS self-termination: a
     * query still running after that bound fails the gate loudly — and
     * return `readBack(sink table, progress)` collected into a local
-    * frame. The sink view is dropped in a `finally`, so repeated
-    * invocations (bench warm + measured passes) and failing read-backs
-    * leave no driver-side tables behind. */
+    * frame through [[graft.CallScope.local]], which drops the sink view
+    * afterwards, so repeated invocations (bench warm + measured passes)
+    * and failing read-backs leave no driver-side tables behind. */
   private[streaming] def drain(s: SparkSession, gate: String, df: DataFrame,
       mode: String, confs: Seq[(String, String)] = Nil,
       between: Seq[StreamingQuery => Unit] = Nil, availableNowMs: Long = 0L)(
-      readBack: (DataFrame, Array[StreamingQueryProgress]) => DataFrame): DataFrame = {
-    val name = s"graft_${gate}_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val writer = df.writeStream.outputMode(mode).format("memory").queryName(name)
-    try {
+      readBack: (DataFrame, Array[StreamingQueryProgress]) => DataFrame): DataFrame =
+    CallScope.local(s) { scope =>
+      val name = s"graft_${gate}_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      scope.defer(s.catalog.dropTempView(name))
+      val writer = df.writeStream.outputMode(mode).format("memory").queryName(name)
       val query = withConfs(s, confs: _*)((if (availableNowMs > 0)
         writer.trigger(Trigger.AvailableNow()) else writer).start())
       if (availableNowMs <= 0) run(query, gate, between: _*)
@@ -121,14 +123,8 @@ object Replay {
           sys.error(s"$gate: AvailableNow query did not self-terminate")
         record(gate, query)
       } finally query.stop()
-      local(readBack(s.table(name), query.recentProgress))
-    } finally s.catalog.dropTempView(name)
-  }
-
-  /** Collect `df` into a driver-local frame with the same schema —
-    * detaches a read-back from the sink or scratch files it came from. */
-  private[streaming] def local(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+      readBack(s.table(name), query.recentProgress)
+    }
 
   /** `max(unix_micros(ts))` over the events table, once per process per
     * dir — the sentinel-flushing gates need it and the scan is pure input
@@ -161,39 +157,8 @@ object Replay {
     val appended = scala.collection.mutable.ListBuffer[String]()
     try body(sets.map(rows => (_: StreamingQuery) =>
       appended += appendRowsFile(s, shards, schema, rows)))
-    finally rmrfAll(s, appended.toSeq: _*)
+    finally CallScope.rmrfAll(s, appended.toSeq: _*)
   }
-
-  /** Remove every scratch path, attempting EACH delete even when an
-    * earlier one throws (so one failure can't leak the rest). Never
-    * throws: this runs in `finally` blocks, where a rethrow would mask
-    * the drain exception that is the actual root cause (ADVICE r9). The
-    * danger the old rethrow guarded — a silently-leaked sentinel day
-    * corrupting later replays of a SHARED shard dump — is neutralized
-    * structurally instead: any dump the failed path lives under is
-    * forgotten ([[graft.Memo.forgetUnder]]), so the next gate rewrites
-    * the whole dump (mode overwrite deletes the directory first,
-    * leftover included).
-    * Plain scratch dirs (uuid-named sinks/checkpoints) leak at worst a
-    * temp dir; the failure is logged to stderr either way. */
-  private[streaming] def rmrfAll(s: SparkSession, paths: String*): Unit =
-    paths.foreach { p =>
-      // Hadoop's local delete reports most failures (e.g. EACCES inside
-      // FileUtil.fullyDelete) by returning false, not throwing — so
-      // success is "the path is gone afterwards", not "no exception".
-      val gone = scala.util.Try {
-        val hp = new Path(p)
-        val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(hp, true)
-        !fs.exists(hp)
-      }
-      if (gone != scala.util.Success(true)) {
-        graft.Memo.forgetUnder(p)
-        System.err.println(s"[graft] scratch cleanup failed for $p " +
-          s"(dump invalidated if shared): " +
-          gone.failed.toOption.getOrElse("delete returned false"))
-      }
-    }
 
   /** The single part file of a one-file parquet write, asserted (ADVICE
     * r17): the flatten/rename sites take "the" part file of a dir the
@@ -417,9 +382,10 @@ object Replay {
     * to a microsecond TimestampType whichever way the driver generated
     * the parquet (nanos-as-long LongType or native timestamp[us] /
     * TIMESTAMP_NTZ — see [[graft.sources.Tables.events]] for the full
-    * story). Callers must invoke this inside `withConfs(s, nanosAsLong)`
-    * and drain the query within that scope, so a nanos-generation scan
-    * still sees the conf at execution time. */
+    * story). Callers must invoke this with `nanosAsLong` set and drain
+    * the query within that scope, so a nanos-generation scan still sees
+    * the conf at execution time: every streaming gate runs under
+    * [[StreamingQueries]]' gate confs, which carry it. */
   private[graft] def eventsStream(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampType}
     // raw FILE schema through the Tables relation cache (r17): the bare

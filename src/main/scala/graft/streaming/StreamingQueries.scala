@@ -1,10 +1,10 @@
 package graft.streaming
 
-import graft.{Q, QueryPack}
+import graft.{CallScope, Q, QueryPack}
 import graft.SessionConfs.withConfs
 import graft.sources.Tables
 import graft.sources.Tables.nanosAsLong
-import graft.streaming.Replay.{drain, eventsStream, rmrfAll, run}
+import graft.streaming.Replay.{drain, eventsStream, run}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,9 @@ import org.apache.spark.sql.functions._
   * records the final `batchId` under the gate's key, stops it, and
   * collects the read-back of the sink table and its progress into a
   * local frame before dropping the sink view. File, `foreachBatch` and
-  * `toTable` sinks use the lower-level [[Replay.run]]. Watermark/append-
+  * `toTable` sinks use the lower-level [[Replay.run]] inside a
+  * [[graft.CallScope]], which holds their scratch paths, catalog tables
+  * and source views until the read-back is collected. Watermark/append-
   * mode late-data semantics not expressible as a finite-input oracle are
   * pinned in StreamingSpec instead.
   */
@@ -63,7 +65,7 @@ object StreamingQueries extends QueryPack {
       .join(Replay.joinSide(s, dir, "click", "c"), withinHour, how)
 
   /** q70: month-count as a streaming aggregation. */
-  private def q70(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
+  private def q70(s: SparkSession, dir: String): DataFrame = {
     // The file-stream source wants a directory; eventsStream selects just
     // the events table out of the sf dir with a glob filter.
     val agg = eventsStream(s, dir)
@@ -79,7 +81,7 @@ object StreamingQueries extends QueryPack {
     * regardless of arrival order. At scale the state store bounds memory;
     * `dropDuplicatesWithinWatermark` is the knob when keys outlive the
     * retention window (pinned in StreamingDedupSpec). */
-  private def q78(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
+  private def q78(s: SparkSession, dir: String): DataFrame = {
     val stream = eventsStream(s, dir)
       .select(col("event_type"), col("user_id"))
       .dropDuplicates("event_type", "user_id")
@@ -100,7 +102,7 @@ object StreamingQueries extends QueryPack {
     * (40 days) exceeds the corpus span, so on this finite replay the
     * result is exactly global first-seen-per-key and the batch DISTINCT
     * oracle applies. */
-  private def q106(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
+  private def q106(s: SparkSession, dir: String): DataFrame = {
     val stream = eventsStream(s, dir)
       .withWatermark("ts", "40 days")
       .select(col("event_type"), col("user_id"), col("ts"))
@@ -125,7 +127,7 @@ object StreamingQueries extends QueryPack {
     * pattern), where state holds just the open windows per type
     * (windows × types, independent of event volume). Decimal-cast sum
     * keeps the value aggregation order-independent and hash-exact. */
-  private def q109(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
+  private def q109(s: SparkSession, dir: String): DataFrame = {
     val agg = eventsStream(s, dir)
       .groupBy(window(col("ts"), "2 days", "1 day"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -145,7 +147,7 @@ object StreamingQueries extends QueryPack {
     * precision on both engines (eventsStream normalizes `ts` to µs
     * TimestampType whatever the parquet generation; the oracle compares
     * `epoch_us(ts)`), so boundary rows land identically. */
-  private def q84(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
+  private def q84(s: SparkSession, dir: String): DataFrame = {
     def side(eventType: String, prefix: String) = eventsStream(s, dir)
       // deterministic 50% user stratum: the join's state cost grows with
       // Σ_user (purchases × clicks), so the GATE runs a bounded slice —
@@ -361,10 +363,9 @@ object StreamingQueries extends QueryPack {
     * flush-semantics regression surfaces as missing/extra rows against
     * the batch oracle. Scale: state = open windows × event types, file
     * manifest grows with emitted windows only. */
-  private def q100(s: SparkSession, dir: String): DataFrame = {
-    val uid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val sinkOut = graft.operators.FileIO.scratch(dir, s"q100_sink_$uid")
-    val cp = graft.operators.FileIO.scratch(dir, s"q100_cp_$uid")
+  private def q100(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val sinkOut = cs.path(dir, "q100_sink")
+    val cp = cs.path(dir, "q100_cp")
     // day shards carrying (event_type, us) — richer than q87's
     // (user_id, us) shards, same dump-once contract; 2 main batches +
     // the sentinel flush batches
@@ -380,31 +381,29 @@ object StreamingQueries extends QueryPack {
     // own far-future windows never close, so the sink holds exactly the
     // real windows
     val flush = Replay.flushUs(s, dir)
-    try {
-      Replay.withSentinels(s, dir, "events_stream_days_typed",
-          Seq(Replay.sentinel(flush, "__flush")),
-          Seq(Replay.sentinel(flush + 600L * 1000000L, "__flush"))) { steps =>
-        // scope stateful parallelism down while the finite replay drains —
-        // per-partition state-store + sink-manifest commits dominate
-        // otherwise (same sizing note as q84/q87); no-data batches off:
-        // the two-flush discipline puts every window emission in a REAL
-        // data batch (q87/q173's discipline)
-        run(withConfs(s, twoParts, noDataOff) {
-          agg.writeStream
-            .outputMode("append")
-            .format("parquet")
-            .option("path", sinkOut)
-            .option("checkpointLocation", cp)
-            .start()
-        }, "q100", steps: _*)
-      }
-      // detach from the sink files before the dirs are removed (the dump
-      // stays pristine and cached for repeated passes)
-      Replay.local(s.read.parquet(sinkOut)
-        .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
-          col("event_type"), col("n"))
-        .orderBy("day", "event_type"))
-    } finally rmrfAll(s, sinkOut, cp)
+    Replay.withSentinels(s, dir, "events_stream_days_typed",
+        Seq(Replay.sentinel(flush, "__flush")),
+        Seq(Replay.sentinel(flush + 600L * 1000000L, "__flush"))) { steps =>
+      // scope stateful parallelism down while the finite replay drains —
+      // per-partition state-store + sink-manifest commits dominate
+      // otherwise (same sizing note as q84/q87); no-data batches off:
+      // the two-flush discipline puts every window emission in a REAL
+      // data batch (q87/q173's discipline)
+      run(withConfs(s, twoParts, noDataOff) {
+        agg.writeStream
+          .outputMode("append")
+          .format("parquet")
+          .option("path", sinkOut)
+          .option("checkpointLocation", cp)
+          .start()
+      }, "q100", steps: _*)
+    }
+    // collected before the dirs are removed (the dump stays pristine and
+    // cached for repeated passes)
+    s.read.parquet(sinkOut)
+      .select(date_format(col("window.start"), "yyyy-MM-dd").as("day"),
+        col("event_type"), col("n"))
+      .orderBy("day", "event_type")
   }
 
   /** q222: the watermark's NEGATIVE contract — late data is actually
@@ -426,9 +425,8 @@ object StreamingQueries extends QueryPack {
     * ordering); the two-sentinel flush then closes the real windows
     * (q100's discipline — sentinel windows never close, so they never
     * surface). State: open windows only; dropped rows never enter it. */
-  private def q222(s: SparkSession, dir: String): DataFrame = {
-    val uid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val src = graft.operators.FileIO.scratch(dir, s"q222_src_$uid")
+  private def q222(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val src = cs.path(dir, "q222_src")
     val ev = Tables.events(s, dir)
       .select(unix_micros(col("ts")).as("us"), dayofmonth(col("ts")).as("dom"))
     // phase slices and sentinels are pure functions of the source dir —
@@ -475,7 +473,7 @@ object StreamingQueries extends QueryPack {
     // filtering yet), and it is exactly the engine's no-data micro-batch
     // after each drain that commits it. Disable them and phase B would be
     // planned with the pre-A watermark — nothing would drop.
-    try drain(s, "q222", agg, "append", Seq(twoParts), Seq(
+    drain(s, "q222", agg, "append", Seq(twoParts), Seq(
         query => { // batch 0 drained: wm → max(A) − 1 h, once committed
           awaitCommittedWatermark(query, maxUs / 1000L - 3600L * 1000)
           writeSlice("b", col("dom") <= 9) // phase B: all late — dropped, counted
@@ -490,7 +488,7 @@ object StreamingQueries extends QueryPack {
       t.select(date_format(col("window.start"), "yyyy-MM-dd").as("day"), col("n"))
         .union(s.range(1).select(lit("DROPPED").as("day"), lit(dropped).as("n")))
         .orderBy("day")
-    } finally rmrfAll(s, src)
+    }
   }
 
   /** State rows remaining after the most recent q87 drain, read off the
@@ -624,11 +622,10 @@ object StreamingQueries extends QueryPack {
       col("m.last_ts_us").as("last_ts_us"),
       col("m.last_value").as("last_value"))
 
-  private def q118(s: SparkSession, dir: String): DataFrame = {
-    val uid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val target = graft.operators.FileIO.scratch(dir, s"q118_target_$uid")
-    val tmp = graft.operators.FileIO.scratch(dir, s"q118_tmp_$uid")
-    val cp = graft.operators.FileIO.scratch(dir, s"q118_cp_$uid")
+  private def q118(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val target = cs.path(dir, "q118_target")
+    val tmp = cs.path(dir, "q118_tmp")
+    val cp = cs.path(dir, "q118_cp")
     val fs = new org.apache.hadoop.fs.Path(target)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     def exists(p: String) = fs.exists(new org.apache.hadoop.fs.Path(p))
@@ -637,32 +634,30 @@ object StreamingQueries extends QueryPack {
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("event_type").as("last_event_type"), col("us").as("last_ts_us"),
         col("value").as("last_value"))
-    try {
-      run(withConfs(s, twoParts) {
-        stream.writeStream
-          .option("checkpointLocation", cp)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val sp = batch.sparkSession
-            val merged =
-              if (exists(target))
-                latestPerUser(sp.read.parquet(target).unionByName(batch))
-              else latestPerUser(batch)
-            // write-then-swap: the target is never half-written, and the
-            // read above finished before the old copy is dropped
-            merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-            rmrf(target)
-            if (!fs.rename(new org.apache.hadoop.fs.Path(tmp),
-                new org.apache.hadoop.fs.Path(target)))
-              sys.error(s"q118: rename $tmp -> $target failed")
-            ()
-          }
-          .start()
-      }, "q118")
-      Replay.local(s.read.parquet(target)
-        .select("user_id", "last_event_id", "last_event_type",
-          "last_ts_us", "last_value")
-        .orderBy("user_id"))
-    } finally rmrfAll(s, target, tmp, cp)
+    run(withConfs(s, twoParts) {
+      stream.writeStream
+        .option("checkpointLocation", cp)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val sp = batch.sparkSession
+          val merged =
+            if (exists(target))
+              latestPerUser(sp.read.parquet(target).unionByName(batch))
+            else latestPerUser(batch)
+          // write-then-swap: the target is never half-written, and the
+          // read above finished before the old copy is dropped
+          merged.coalesce(1).write.mode("overwrite").parquet(tmp)
+          rmrf(target)
+          if (!fs.rename(new org.apache.hadoop.fs.Path(tmp),
+              new org.apache.hadoop.fs.Path(target)))
+            sys.error(s"q118: rename $tmp -> $target failed")
+          ()
+        }
+        .start()
+    }, "q118")
+    s.read.parquet(target)
+      .select("user_id", "last_event_id", "last_event_type",
+        "last_ts_us", "last_value")
+      .orderBy("user_id")
   }
 
   /** q125: `transformWithState` — Spark 4's arbitrary-state API (the
@@ -836,25 +831,22 @@ object StreamingQueries extends QueryPack {
     * and all three must equal the batch aggregation over the full table.
     * The pipeline itself is a stateless projection, so this isolates the
     * source/sink transactional machinery from state-store semantics. */
-  private def q175(s: SparkSession, dir: String): DataFrame = {
-    val uid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val src = graft.operators.FileIO.scratch(dir, s"q175_src_$uid")
-    val sink = graft.operators.FileIO.scratch(dir, s"q175_sink_$uid")
-    val cp = graft.operators.FileIO.scratch(dir, s"q175_cp_$uid")
-    try {
-      driveRestartHalves(s, dir, "q175", src, stream => stream
-        .writeStream
-        .format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", cp)
-        .start())
-      Replay.local(s.read.parquet(sink)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("event_id")).as("n_distinct"),
-          sum(col("event_id")).as("id_sum"))
-        .orderBy("event_type"))
-    } finally rmrfAll(s, src, sink, cp)
+  private def q175(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val src = cs.path(dir, "q175_src")
+    val sink = cs.path(dir, "q175_sink")
+    val cp = cs.path(dir, "q175_cp")
+    driveRestartHalves(s, dir, "q175", src, stream => stream
+      .writeStream
+      .format("parquet")
+      .option("path", sink)
+      .option("checkpointLocation", cp)
+      .start())
+    s.read.parquet(sink)
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("n"),
+        countDistinct(col("event_id")).as("n_distinct"),
+        sum(col("event_id")).as("id_sum"))
+      .orderBy("event_type")
   }
 
   /** q176: `Trigger.AvailableNow` — the production batch-drain trigger
@@ -911,7 +903,7 @@ object StreamingQueries extends QueryPack {
     * legs deliberately select DIFFERENT slices of the same table so a
     * leg-drop or double-replay of either side breaks a different output
     * row; result ≡ the batch union oracle. */
-  private def q180(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
+  private def q180(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Exact.dec
     def leg(eventType: String, tag: String) = eventsStream(s, dir)
       .filter(col("event_type") === eventType)
@@ -943,7 +935,7 @@ object StreamingQueries extends QueryPack {
     * aggregates in complete mode. LEFT join + UNKNOWN default keeps
     * the gate deterministic at every scale factor regardless of key
     * coverage. Money sums go through the exact-DECIMAL discipline. */
-  private def q168(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
+  private def q168(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Exact.dec
     val stream = eventsStream(s, dir)
     val dim = Tables.customer(s, dir)
@@ -973,9 +965,8 @@ object StreamingQueries extends QueryPack {
     * input split); complete-mode counts must equal the batch oracle
     * over the full table. This closes the reference's own gap: its TSV
     * front door is batch-only (SURVEY §1), ours streams. */
-  private def q289(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
-    val root = graft.operators.FileIO.scratch(dir, "stream_tsv_src")
-    rmrfAll(s, root)
+  private def q289(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val root = cs.path(dir, "stream_tsv_src")
     val base = Tables.events(s, dir)
       .select(col("event_id"), col("event_type"),
         pmod(col("user_id"), lit(4)).as("g"))
@@ -991,10 +982,9 @@ object StreamingQueries extends QueryPack {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("g").as("sum_g"))
     // second wave: a later micro-batch
-    try drain(s, "q289", agg, "complete",
+    drain(s, "q289", agg, "complete",
         between = Seq(_ => dump(col("event_id") % 2 === 1)))(
       (t, _) => t.orderBy("event_type"))
-    finally rmrfAll(s, root)
   }
 
   /** q303: ADMISSION CONTROL on the TSV micro-batch source
@@ -1015,9 +1005,8 @@ object StreamingQueries extends QueryPack {
     * aggregate must equal the batch oracle. TsvSourceSpec pins the
     * per-batch file cap, the O(1) offset payload, log compaction, and
     * restart recovery at the unit level. */
-  private def q303(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
-    val root = graft.operators.FileIO.scratch(dir, "stream_tsv_admit")
-    rmrfAll(s, root)
+  private def q303(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val root = cs.path(dir, "stream_tsv_admit")
     Tables.events(s, dir)
       .select(col("event_id"), col("event_type"),
         pmod(col("user_id"), lit(4)).as("g"))
@@ -1033,14 +1022,14 @@ object StreamingQueries extends QueryPack {
       .load()
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("g").as("sum_g"))
-    try drain(s, "q303", agg, "complete", availableNowMs = 180000L) { (t, progress) =>
+    drain(s, "q303", agg, "complete", availableNowMs = 180000L) { (t, progress) =>
       val dataBatches = progress.count(_.numInputRows > 0)
       require(dataBatches >= 5,
         s"q303: cold start must drain in bounded micro-batches " +
           s"(expected >= 5 with data, got $dataBatches) — admission " +
           "control did not bound the drain")
       t.orderBy("event_type")
-    } finally rmrfAll(s, root)
+    }
   }
 
   /** q308: STREAMING RETENTION HORIZON (`maxFileAgeMs`) — the
@@ -1059,9 +1048,8 @@ object StreamingQueries extends QueryPack {
     * stratum only — physically-present archive shards contribute
     * nothing. TsvSourceSpec pins the mechanics (never-admitted old
     * shard, seen-set expiry in the compact snapshot). */
-  private def q308(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
-    val root = graft.operators.FileIO.scratch(dir, "stream_tsv_retention")
-    rmrfAll(s, root)
+  private def q308(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val root = cs.path(dir, "stream_tsv_retention")
     val fmt = classOf[graft.sources.TsvSourceProvider].getName
     val base = Tables.events(s, dir)
       .select(col("event_id"), col("event_type"),
@@ -1085,7 +1073,7 @@ object StreamingQueries extends QueryPack {
       .load()
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("cents").as("total_cents"))
-    try drain(s, "q308", agg, "complete", availableNowMs = 180000L) { (t, progress) =>
+    drain(s, "q308", agg, "complete", availableNowMs = 180000L) { (t, progress) =>
       // the drain stayed bounded (6 live shards at 2/trigger = 3 data
       // batches); the VALUE check is the horizon itself — the oracle
       // excludes the archive stratum the store physically holds
@@ -1093,7 +1081,7 @@ object StreamingQueries extends QueryPack {
       require(dataBatches >= 3,
         s"q308: bounded drain expected >= 3 data batches, got $dataBatches")
       t.orderBy("event_type")
-    } finally rmrfAll(s, root)
+    }
   }
 
   /** q293: stream PIT against a BUCKETED interval table — q285's
@@ -1108,7 +1096,7 @@ object StreamingQueries extends QueryPack {
     * and the exchange-free dim branch on the real micro-batch plan.
     * Tier grain deliberately differs from q285 (25k vs 50k) so the two
     * gates state distinct results. */
-  private def q293(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
+  private def q293(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Exact.dec
     ensurePitDim(s, dir)
     val dim = s.table(pitDimTbl).hint("merge")
@@ -1169,30 +1157,23 @@ object StreamingQueries extends QueryPack {
     * nobody passes storage layout around. Second wave arrives as a
     * later micro-batch (same offset contract as q289); complete-mode
     * counts must equal the batch oracle over the full source. */
-  private def q292(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
-    val cat = graft.operators.FileIO.ensureCatalog(s, dir)
-    s.sql(s"DROP TABLE IF EXISTS $cat.lake.events_t")
-    s.sql(s"CREATE TABLE $cat.lake.events_t " +
-      "(event_id BIGINT, event_type STRING, g BIGINT)")
-    Tables.events(s, dir)
+  private def q292(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val tbl = cs.table(s"${graft.operators.FileIO.ensureCatalog(s, dir)}.lake.events_t")
+    s.sql(s"CREATE TABLE $tbl (event_id BIGINT, event_type STRING, g BIGINT)")
+    cs.view("graft_src292", Tables.events(s, dir)
       .select(col("event_id"), col("event_type"),
-        pmod(col("user_id"), lit(8)).as("g"))
-      .createOrReplaceTempView("graft_src292")
+        pmod(col("user_id"), lit(8)).as("g")))
     def insert(pred: String): Unit = {
-      s.sql(s"INSERT INTO $cat.lake.events_t SELECT * FROM graft_src292 WHERE $pred")
+      s.sql(s"INSERT INTO $tbl SELECT * FROM graft_src292 WHERE $pred")
       ()
     }
     insert("event_id % 2 = 0")
-    val agg = s.readStream.table(s"$cat.lake.events_t")
+    val agg = s.readStream.table(tbl)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("g").as("sum_g"))
-    try drain(s, "q292", agg, "complete",
+    drain(s, "q292", agg, "complete",
         between = Seq(_ => insert("event_id % 2 = 1")))(
       (t, _) => t.orderBy("event_type"))
-    finally {
-      s.catalog.dropTempView("graft_src292")
-      s.sql(s"DROP TABLE $cat.lake.events_t")
-    }
   }
 
   /** q295: STREAMING WRITE INTO THE CATALOG BY NAME — the write half of
@@ -1253,29 +1234,21 @@ object StreamingQueries extends QueryPack {
     runInstance() // instance 2: SAME checkpoint — must resume, not replay
   }
 
-  private def q295(s: SparkSession, dir: String): DataFrame = {
-    val uid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val src = graft.operators.FileIO.scratch(dir, s"q295_src_$uid")
-    val cp = graft.operators.FileIO.scratch(dir, s"q295_cp_$uid")
-    val cat = graft.operators.FileIO.ensureCatalog(s, dir)
-    s.sql(s"DROP TABLE IF EXISTS $cat.lake.events_sink")
-    s.sql(s"CREATE TABLE $cat.lake.events_sink " +
-      "(event_id BIGINT, user_id BIGINT, event_type STRING)")
-    try {
-      driveRestartHalves(s, dir, "q295", src, stream => stream
-        .writeStream
-        .option("checkpointLocation", cp)
-        .toTable(s"$cat.lake.events_sink"))
-      Replay.local(s.table(s"$cat.lake.events_sink")
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("event_id")).as("n_distinct"),
-          sum(col("event_id")).as("id_sum"))
-        .orderBy("event_type"))
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS $cat.lake.events_sink")
-      rmrfAll(s, src, cp)
-    }
+  private def q295(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val src = cs.path(dir, "q295_src")
+    val cp = cs.path(dir, "q295_cp")
+    val sink = cs.table(s"${graft.operators.FileIO.ensureCatalog(s, dir)}.lake.events_sink")
+    s.sql(s"CREATE TABLE $sink (event_id BIGINT, user_id BIGINT, event_type STRING)")
+    driveRestartHalves(s, dir, "q295", src, stream => stream
+      .writeStream
+      .option("checkpointLocation", cp)
+      .toTable(sink))
+    s.table(sink)
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("n"),
+        countDistinct(col("event_id")).as("n_distinct"),
+        sum(col("event_id")).as("id_sum"))
+      .orderBy("event_type")
   }
 
   /** q298: UPDATE-MODE CHANGELOG through the catalog sink — the third
@@ -1295,49 +1268,40 @@ object StreamingQueries extends QueryPack {
     * maxFilesPerTrigger over the day shards, so most groups update in
     * most epochs and the changelog is genuinely multi-version (the
     * sink spec pins that shape; this gate pins the values). */
-  private def q298(s: SparkSession, dir: String): DataFrame = {
-    val uid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val cp = graft.operators.FileIO.scratch(dir, s"q298_cp_$uid")
-    val cat = graft.operators.FileIO.ensureCatalog(s, dir)
-    s.sql(s"DROP TABLE IF EXISTS $cat.lake.metrics298")
-    s.sql(s"CREATE TABLE $cat.lake.metrics298 " +
-      "(event_type STRING, n BIGINT, cents BIGINT)")
-    try {
-      val agg = Replay.replayStream(s, dir, "events_stream_days_upsert", 8) // ~4 epochs → multi-version log
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("value") * 100).cast("long")).as("cents"))
-      run(agg.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", cp)
-        .toTable(s"$cat.lake.metrics298"), "q298")
-      // compact-on-read: the count only grows, so max(n) is the latest
-      // version and max_by(cents, n) its payload — one pass, no window
-      val compacted = s.table(s"$cat.lake.metrics298")
-        .groupBy("event_type")
-        .agg(max("n").as("n"),
-          expr("max_by(cents, n)").as("cents"),
-          count(lit(1)).as("n_versions"))
-      // changelog-ness is a gate-side INVARIANT, not an oracle column
-      // (an oracle can't predict epoch counts). Distribution-tolerant
-      // form: the TABLE as a whole must be multi-version (more rows
-      // than groups — at least one group re-emitted), not every group —
-      // file packing under maxFilesPerTrigger doesn't guarantee every
-      // event_type spans two epochs, and a group that legitimately
-      // arrives within one micro-batch must not turn into a gate error
-      val shape = compacted.agg(
-        sum("n_versions").as("versions"), count(lit(1)).as("groups"))
-        .head()
-      require(shape.getLong(0) > shape.getLong(1),
-        s"q298: ${shape.getLong(0)} changelog rows across " +
-          s"${shape.getLong(1)} groups — no group was ever re-emitted, " +
-          "so update mode did not produce a multi-version changelog")
-      Replay.local(compacted
-        .select("event_type", "n", "cents").orderBy("event_type"))
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS $cat.lake.metrics298")
-      rmrfAll(s, cp)
-    }
+  private def q298(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val cp = cs.path(dir, "q298_cp")
+    val metrics = cs.table(s"${graft.operators.FileIO.ensureCatalog(s, dir)}.lake.metrics298")
+    s.sql(s"CREATE TABLE $metrics (event_type STRING, n BIGINT, cents BIGINT)")
+    val agg = Replay.replayStream(s, dir, "events_stream_days_upsert", 8) // ~4 epochs → multi-version log
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("n"),
+        sum(round(col("value") * 100).cast("long")).as("cents"))
+    run(agg.writeStream
+      .outputMode("update")
+      .option("checkpointLocation", cp)
+      .toTable(metrics), "q298")
+    // compact-on-read: the count only grows, so max(n) is the latest
+    // version and max_by(cents, n) its payload — one pass, no window
+    val compacted = s.table(metrics)
+      .groupBy("event_type")
+      .agg(max("n").as("n"),
+        expr("max_by(cents, n)").as("cents"),
+        count(lit(1)).as("n_versions"))
+    // changelog-ness is a gate-side INVARIANT, not an oracle column
+    // (an oracle can't predict epoch counts). Distribution-tolerant
+    // form: the TABLE as a whole must be multi-version (more rows
+    // than groups — at least one group re-emitted), not every group —
+    // file packing under maxFilesPerTrigger doesn't guarantee every
+    // event_type spans two epochs, and a group that legitimately
+    // arrives within one micro-batch must not turn into a gate error
+    val shape = compacted.agg(
+      sum("n_versions").as("versions"), count(lit(1)).as("groups"))
+      .head()
+    require(shape.getLong(0) > shape.getLong(1),
+      s"q298: ${shape.getLong(0)} changelog rows across " +
+        s"${shape.getLong(1)} groups — no group was ever re-emitted, " +
+        "so update mode did not produce a multi-version changelog")
+    compacted.select("event_type", "n", "cents").orderBy("event_type")
   }
 
   /** q304: CHANGELOG COMPACTION as a catalog MAINTENANCE op — the
@@ -1360,45 +1324,38 @@ object StreamingQueries extends QueryPack {
     * oracle) — which transitively pins snapshot ≡ changelog
     * reconstruction, since the maintenance SELECT is exactly the
     * consumer's compact-on-read expression. */
-  private def q304(s: SparkSession, dir: String): DataFrame = {
-    val uid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val cp = graft.operators.FileIO.scratch(dir, s"q304_cp_$uid")
+  private def q304(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val cp = cs.path(dir, "q304_cp")
     val cat = graft.operators.FileIO.ensureCatalog(s, dir)
-    s.sql(s"DROP TABLE IF EXISTS $cat.lake.chg304")
-    s.sql(s"DROP TABLE IF EXISTS $cat.lake.snap304")
-    s.sql(s"CREATE TABLE $cat.lake.chg304 (g BIGINT, n BIGINT, cents BIGINT)")
+    val chg = cs.table(s"$cat.lake.chg304")
+    val snapTbl = cs.table(s"$cat.lake.snap304")
+    s.sql(s"CREATE TABLE $chg (g BIGINT, n BIGINT, cents BIGINT)")
     // yesterday's snapshot: exists (and is being served) BEFORE the
     // maintenance op — REPLACE, not CREATE, is the op under test
-    s.sql(s"CREATE TABLE $cat.lake.snap304 (g BIGINT, n BIGINT, cents BIGINT)")
-    try {
-      val agg = Replay.replayStream(s, dir, "events_stream_days_upsert", 8) // several epochs → multi-version
-        .filter(col("user_id").isNotNull)
-        .groupBy((col("user_id") % 4).as("g"))
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("value") * 100).cast("long")).as("cents"))
-      run(agg.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", cp)
-        .toTable(s"$cat.lake.chg304"), "q304")
-      val chgRows = s.table(s"$cat.lake.chg304").count()
-      // THE MAINTENANCE OP: one-shot latest-per-key (the count only
-      // grows, so max(n) is the latest version and max_by its payload),
-      // published through the staged atomic RTAS path
-      s.sql(
-        s"""REPLACE TABLE $cat.lake.snap304 AS
-           |SELECT g, max(n) AS n, max_by(cents, n) AS cents
-           |FROM $cat.lake.chg304 GROUP BY g""".stripMargin)
-      val snap = s.table(s"$cat.lake.snap304")
-      val nKeys = snap.count()
-      require(chgRows > nKeys,
-        s"q304: changelog must be multi-version ($chgRows rows over " +
-          s"$nKeys keys) — otherwise the compaction compacted nothing")
-      Replay.local(snap.orderBy("g"))
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS $cat.lake.chg304")
-      s.sql(s"DROP TABLE IF EXISTS $cat.lake.snap304")
-      rmrfAll(s, cp)
-    }
+    s.sql(s"CREATE TABLE $snapTbl (g BIGINT, n BIGINT, cents BIGINT)")
+    val agg = Replay.replayStream(s, dir, "events_stream_days_upsert", 8) // several epochs → multi-version
+      .filter(col("user_id").isNotNull)
+      .groupBy((col("user_id") % 4).as("g"))
+      .agg(count(lit(1)).as("n"),
+        sum(round(col("value") * 100).cast("long")).as("cents"))
+    run(agg.writeStream
+      .outputMode("update")
+      .option("checkpointLocation", cp)
+      .toTable(chg), "q304")
+    val chgRows = s.table(chg).count()
+    // THE MAINTENANCE OP: one-shot latest-per-key (the count only
+    // grows, so max(n) is the latest version and max_by its payload),
+    // published through the staged atomic RTAS path
+    s.sql(
+      s"""REPLACE TABLE $snapTbl AS
+         |SELECT g, max(n) AS n, max_by(cents, n) AS cents
+         |FROM $chg GROUP BY g""".stripMargin)
+    val snap = s.table(snapTbl)
+    val nKeys = snap.count()
+    require(chgRows > nKeys,
+      s"q304: changelog must be multi-version ($chgRows rows over " +
+        s"$nKeys keys) — otherwise the compaction compacted nothing")
+    snap.orderBy("g")
   }
 
   /** q296: TABLE-TO-TABLE streaming pipeline, no paths anywhere — the
@@ -1418,49 +1375,37 @@ object StreamingQueries extends QueryPack {
     * column), the only legal shape for append mode without a watermark
     * — and the right shape: per-row screens don't need state, and the
     * aggregate belongs to the consumer, not the pipe. */
-  private def q296(s: SparkSession, dir: String): DataFrame = {
-    val uid = java.util.UUID.randomUUID().toString.replace("-", "")
-    val cp = graft.operators.FileIO.scratch(dir, s"q296_cp_$uid")
+  private def q296(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    val cp = cs.path(dir, "q296_cp")
     val cat = graft.operators.FileIO.ensureCatalog(s, dir)
-    s.sql(s"DROP TABLE IF EXISTS $cat.lake.raw296")
-    s.sql(s"DROP TABLE IF EXISTS $cat.lake.screened296")
-    s.sql(s"CREATE TABLE $cat.lake.raw296 " +
+    val raw = cs.table(s"$cat.lake.raw296")
+    val out = cs.table(s"$cat.lake.screened296")
+    s.sql(s"CREATE TABLE $raw " +
       "(event_id BIGINT, event_type STRING, user_id BIGINT, cents BIGINT)")
-    s.sql(s"CREATE TABLE $cat.lake.screened296 " +
+    s.sql(s"CREATE TABLE $out " +
       "(event_id BIGINT, user_id BIGINT, g BIGINT, cents BIGINT)")
-    Tables.events(s, dir)
+    cs.view("graft_src296", Tables.events(s, dir)
       .select(col("event_id"), col("event_type"), col("user_id"),
-        round(col("value") * 100).cast("long").as("cents"))
-      .createOrReplaceTempView("graft_src296")
+        round(col("value") * 100).cast("long").as("cents")))
     def ingest(pred: String): Unit = {
-      s.sql(s"INSERT INTO $cat.lake.raw296 " +
-        s"SELECT * FROM graft_src296 WHERE $pred")
+      s.sql(s"INSERT INTO $raw SELECT * FROM graft_src296 WHERE $pred")
       ()
     }
     ingest("event_id % 2 = 0")
-    val screened = s.readStream.table(s"$cat.lake.raw296")
+    val screened = s.readStream.table(raw)
       .filter(col("event_type") === "click" && col("cents") >= 100)
       .select(col("event_id"), col("user_id"),
         pmod(col("user_id"), lit(8)).as("g"), col("cents"))
-    // cleanup in finally (q175/q295 discipline): a failing drain must
-    // not leak the uuid checkpoint dir or the session-wide tables/view
-    try {
-      run(screened.writeStream
-        .option("checkpointLocation", cp)
-        .toTable(s"$cat.lake.screened296"), "q296",
-        _ => ingest("event_id % 2 = 1")) // second wave through the LIVE stream
-      Replay.local(s.table(s"$cat.lake.screened296")
-        .groupBy("g")
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("event_id")).as("n_distinct"),
-          sum(col("cents")).as("total_cents"))
-        .orderBy("g"))
-    } finally {
-      s.sql(s"DROP TABLE IF EXISTS $cat.lake.raw296")
-      s.sql(s"DROP TABLE IF EXISTS $cat.lake.screened296")
-      s.catalog.dropTempView("graft_src296")
-      rmrfAll(s, cp)
-    }
+    run(screened.writeStream
+      .option("checkpointLocation", cp)
+      .toTable(out), "q296",
+      _ => ingest("event_id % 2 = 1")) // second wave through the LIVE stream
+    s.table(out)
+      .groupBy("g")
+      .agg(count(lit(1)).as("n"),
+        countDistinct(col("event_id")).as("n_distinct"),
+        sum(col("cents")).as("total_cents"))
+      .orderBy("g")
   }
 
   /** q285: streaming POINT-IN-TIME enrichment — each in-flight event is
@@ -1507,7 +1452,7 @@ object StreamingQueries extends QueryPack {
         .select("o_custkey", "vf", "vt", "tier")
     }
 
-  private def q285(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
+  private def q285(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Exact.dec
     // SCD2 compaction: adjacent versions with the SAME tier merge into
     // one interval (classic run-collapse). Oracle-neutral — every event
@@ -1545,7 +1490,7 @@ object StreamingQueries extends QueryPack {
     * why Spark permits it in append mode. Blocklist = customers with
     * negative balance; survivors aggregate per type so the output is
     * small and deterministic. */
-  private def q258(s: SparkSession, dir: String): DataFrame = withConfs(s, nanosAsLong) {
+  private def q258(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Exact.dec
     val blocked = Tables.customer(s, dir)
       .filter(col("c_acctbal") < 0)
@@ -1681,7 +1626,8 @@ object StreamingQueries extends QueryPack {
     * exact-Jaccard verify on candidates; the id-ordered shards
     * guarantee a doc's smaller-id peers are never in a LATER batch, so
     * one pass is exact for the policy. Per-run scratch (index, results)
-    * is UUID-fresh and reclaimed; only the input shards are the shared
+    * lives in the call's [[graft.CallScope]] and is reclaimed after the
+    * result is collected; only the input shards are the shared
     * process-cached dump. Oracle: the policy is closed-form in SQL —
     * admitted(d) ⇔ ∄ p < d with round(J(p,d),4) ≥ 0.7 — no recursion,
     * no batch-boundary knowledge needed (that independence is the
@@ -1702,7 +1648,7 @@ object StreamingQueries extends QueryPack {
     *     `prev_id < doc_id` policy filter makes that harmless (a doc
     *     never dups against itself or a larger id), so replay output
     *     is bit-identical, not just row-deduped. */
-  private def q261(s: SparkSession, dir: String): DataFrame = {
+  private def q261(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
     import s.implicits._
     import graft.functions.TextHash
     import org.apache.hadoop.fs.{FileSystem, Path}
@@ -1730,10 +1676,9 @@ object StreamingQueries extends QueryPack {
         fs.delete(new Path(tmp), true)
       }
     }
-    val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val idxShPath = graft.operators.FileIO.scratch(dir, s"seq_idx_sh_$runId")
-    val idxTbl = s"graft_q261_idx_$runId"
-    val resPath = graft.operators.FileIO.scratch(dir, s"seq_result_$runId")
+    val idxShPath = cs.path(dir, "seq_idx_sh")
+    val idxTbl = cs.table("graft_q261_idx")
+    val resPath = cs.path(dir, "seq_result")
     def shingle(df: DataFrame): DataFrame = df.as[(Long, String)]
       .map { case (id, t) =>
         (id, TextHash.shingles(t.split(" ", -1).toSeq, 3).toSeq) }
@@ -1767,7 +1712,7 @@ object StreamingQueries extends QueryPack {
       .option("maxFilesPerTrigger", "2")
       .parquet(shards)
     val query = stream.writeStream
-      .queryName("graft_q261_" + runId)
+      .queryName("graft_q261")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         // batch-local pin: sh feeds five consumers (both sides of the
         // local join, the verify join, the result projection, the index
@@ -1855,15 +1800,9 @@ object StreamingQueries extends QueryPack {
         ()
       }
       .start()
-    try {
-      run(query, "q261")
-      Replay.local(s.read.schema(resSchema).parquet(resPath)
-        .select("doc_id", "dup_of", "admitted").orderBy("doc_id"))
-    } finally {
-      try s.sql(s"DROP TABLE IF EXISTS $idxTbl")
-      catch { case scala.util.control.NonFatal(_) => () }
-      rmrfAll(s, idxShPath, resPath)
-    }
+    run(query, "q261")
+    s.read.schema(resSchema).parquet(resPath)
+      .select("doc_id", "dup_of", "admitted").orderBy("doc_id")
   }
 
   /** Harness-scale execution confs applied around every streaming GATE
@@ -1902,7 +1841,12 @@ object StreamingQueries extends QueryPack {
     // count — same batch-size-honesty argument as the codegen pair.
     "spark.sql.shuffle.partitions" -> "4",
     "spark.sql.streaming.checkpointFileManagerClass" ->
-      classOf[LocalCheckpointFileManager].getName)
+      classOf[LocalCheckpointFileManager].getName,
+    // a TIMESTAMP(NANOS) events generation reads only with this conf
+    // set, at analysis AND execution (see Tables.events); the drain
+    // runs inside this scope, so eventsStream and the events reads of
+    // every gate see it. With µs data it is a no-op.
+    nanosAsLong)
 
   /** Queries whose fn is pure batch (streaming-semantics twins gated
     * batch-side) — these keep codegen: they scan the real corpus. */

@@ -160,6 +160,25 @@ class MapReduceSpec extends AnyFunSuite {
     assert(written <= tasks * keys, s"$written shuffle records for $n values")
   }
 
+  test("associative partials shuffle straight to the per-key merge: no partial aggregate before the exchange") {
+    import spark.implicits._
+    val ds = MapReduce.runAssociative[java.lang.Long, Long, Long](
+      longs(1000L, 2), x => Iterator((x % 5L, x.longValue)), _ + _)
+    assert(ds.collect().toSeq.sortBy(_._1) ===
+      (0L until 1000L).groupBy(_ % 5L).map { case (k, xs) => (k, xs.sum) }.toSeq.sortBy(_._1))
+    val helper = new AdaptiveSparkPlanHelper {}
+    val plan = ds.queryExecution.executedPlan
+    val exchanges = helper.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size === 1, s"expected one exchange:\n$plan")
+    // the map side below the exchange: the combiner's MapPartitions and
+    // the key column, with no aggregate of any kind re-merging partials
+    val mapSide = helper.collect(exchanges.head.child) { case p => p }
+    assert(!mapSide.exists(_.isInstanceOf[org.apache.spark.sql.execution.aggregate.BaseAggregateExec]),
+      s"a partial aggregate re-merges the combined partials:\n$plan")
+    assert(!mapSide.exists(_.nodeName == "AppendColumns"),
+      s"mapValues re-encodes every partial:\n$plan")
+  }
+
   test("nullable values (String with nulls) survive bundling") {
     import spark.implicits._
     val kvs = Seq(("a", "x"), ("a", null), ("b", null), ("b", null), ("c", "y"))
