@@ -482,8 +482,8 @@ object AdvancedAggs extends QueryPack {
     * spelling — so this also gates the SQL parser path. Group count is
     * tiny (status × priority); the heavy side pre-aggregates first, so
     * the string build never sees raw rows. */
-  private def q236(s: SparkSession, dir: String): DataFrame = {
-    Tables.orders(s, dir).createOrReplaceTempView("graft_orders236")
+  private def q236(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    cs.view("graft_orders236", Tables.orders(s, dir))
     s.sql(
       """WITH pc AS (SELECT o_orderstatus AS status,
         |    o_orderpriority AS priority, count(*) AS n
@@ -526,10 +526,9 @@ object AdvancedAggs extends QueryPack {
     * distribution ≥ p" — a VALUE FROM THE SET, never interpolated,
     * which is the variant a percentile-of-categorical-codes pipeline
     * must use. Both partial-aggregate on (group, value) cells. */
-  private def q255(s: SparkSession, dir: String): DataFrame = {
-    Tables.lineitem(s, dir)
-      .select(col("l_returnflag"), col("l_quantity"))
-      .createOrReplaceTempView("graft_q255_lineitem")
+  private def q255(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    cs.view("graft_q255_lineitem", Tables.lineitem(s, dir)
+      .select(col("l_returnflag"), col("l_quantity")))
     s.sql(
       """SELECT l_returnflag,
         |  round(percentile_cont(0.25) WITHIN GROUP (ORDER BY l_quantity),

@@ -254,9 +254,9 @@ object Relational extends QueryPack {
 
   /** q68: correlated scalar subquery through the SQL entry point — each
     * customer with the totalprice of their single largest order. */
-  private def q68(s: SparkSession, dir: String): DataFrame = {
-    Tables.orders(s, dir).createOrReplaceTempView("graft_orders68")
-    Tables.customer(s, dir).createOrReplaceTempView("graft_customer68")
+  private def q68(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    cs.view("graft_orders68", Tables.orders(s, dir))
+    cs.view("graft_customer68", Tables.customer(s, dir))
     s.sql(
       """SELECT c_custkey,
         |  (SELECT max(o_totalprice) FROM graft_orders68
@@ -273,9 +273,9 @@ object Relational extends QueryPack {
     * survivors). Spark plans the single-column case as a broadcast
     * null-aware anti join (isNullAware=true) rather than a nested-loop
     * — the streamed side stays one scan at any scale. */
-  private def q119(s: SparkSession, dir: String): DataFrame = {
-    Tables.part(s, dir).createOrReplaceTempView("graft_part119")
-    Tables.lineitem(s, dir).createOrReplaceTempView("graft_lineitem119")
+  private def q119(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    cs.view("graft_part119", Tables.part(s, dir))
+    cs.view("graft_lineitem119", Tables.lineitem(s, dir))
     s.sql(
       """SELECT variant, n_survivors FROM (
         |  SELECT 'no_nulls' AS variant, count(*) AS n_survivors
@@ -319,8 +319,8 @@ object Relational extends QueryPack {
     * floor on exactly-representable products is unambiguous across
     * engines, where half-way decimal rounding of a halved value would
     * sit on .005 boundaries every other step. */
-  private def q124(s: SparkSession, dir: String): DataFrame = {
-    Tables.orders(s, dir).createOrReplaceTempView("graft_orders124")
+  private def q124(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    cs.view("graft_orders124", Tables.orders(s, dir))
     s.sql(
       """WITH RECURSIVE pay(o_orderkey, k, remaining) AS (
         |  SELECT o_orderkey, 0, floor(o_totalprice * 100) / 100
@@ -335,8 +335,8 @@ object Relational extends QueryPack {
   }
 
   /** GROUPING SETS via SQL (only surface Spark's Dataset API lacks). */
-  private def q28(s: SparkSession, dir: String): DataFrame = {
-    Tables.orders(s, dir).createOrReplaceTempView("graft_orders")
+  private def q28(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    cs.view("graft_orders", Tables.orders(s, dir))
     s.sql(
       """SELECT coalesce(o_orderstatus, 'ALL') AS status,
         |       coalesce(o_orderpriority, 'ALL') AS priority,
@@ -417,10 +417,10 @@ object Relational extends QueryPack {
     * with the ORDER BY + LIMIT scoped INSIDE the lateral. Catalyst
     * plans it via DecorrelateInnerQuery into a ranked join — no
     * per-region re-scan survives into the physical plan. */
-  private def q166(s: SparkSession, dir: String): DataFrame = {
-    Tables.region(s, dir).createOrReplaceTempView("graft_region166")
-    Tables.nation(s, dir).createOrReplaceTempView("graft_nation166")
-    Tables.customer(s, dir).createOrReplaceTempView("graft_customer166")
+  private def q166(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    cs.view("graft_region166", Tables.region(s, dir))
+    cs.view("graft_nation166", Tables.nation(s, dir))
+    cs.view("graft_customer166", Tables.customer(s, dir))
     s.sql(
       """SELECT r_name, n_name, n_cust
         |FROM graft_region166 r,
@@ -442,9 +442,10 @@ object Relational extends QueryPack {
     * string-spliced literals would defeat both safety and caching at
     * 100 TB orchestration scale). The oracle is the identical query
     * with the values inlined — binding must be semantically invisible. */
-  private def q171(s: SparkSession, dir: String): DataFrame = {
-    Tables.orders(s, dir).createOrReplaceTempView("graft_orders171")
+  private def q171(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    cs.view("graft_orders171", Tables.orders(s, dir))
     s.sql("DECLARE OR REPLACE VARIABLE graft_prio STRING DEFAULT '1-URGENT'")
+    cs.defer(s.sql("DROP TEMPORARY VARIABLE IF EXISTS graft_prio"))
     s.sql("SET VAR graft_prio = '2-HIGH'")
     s.sql(
       """SELECT o_orderpriority, count(*) AS n,
@@ -469,16 +470,24 @@ object Relational extends QueryPack {
     * captured driver state — the bloom-probe single-writer concern
     * doesn't apply). Oracle: the same query with both bodies inlined,
     * which is exactly what the inlining contract promises. */
-  private def q213(s: SparkSession, dir: String): DataFrame = {
-    Tables.lineitem(s, dir).createOrReplaceTempView("graft_li213")
+  private def q213(s: SparkSession, dir: String): DataFrame =
+    CallScope.local(s)(sqlFunctionsFrame(s, dir, _))
+
+  /** q213's frame before the collect, shared with PlanSpec's inlining
+    * pin: its view and both functions live until `cs` releases them. */
+  private[graft] def sqlFunctionsFrame(s: SparkSession, dir: String,
+      cs: CallScope): DataFrame = {
+    cs.view("graft_li213", Tables.lineitem(s, dir))
     s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_disc_price(
             |  p DOUBLE, d DOUBLE) RETURNS DOUBLE
             |RETURN p * (1.0 - d)""".stripMargin)
+    cs.defer(s.sql("DROP TEMPORARY FUNCTION IF EXISTS graft_disc_price"))
     s.sql("""CREATE OR REPLACE TEMPORARY FUNCTION graft_qty_bands()
             |  RETURNS TABLE(band STRING, lo DOUBLE, hi DOUBLE)
             |RETURN SELECT * FROM VALUES
             |  ('low', 0.0D, 10.0D), ('mid', 10.0D, 30.0D),
             |  ('high', 30.0D, 51.0D)""".stripMargin)
+    cs.defer(s.sql("DROP TEMPORARY FUNCTION IF EXISTS graft_qty_bands"))
     s.sql(
       """SELECT l_returnflag, b.band, count(*) AS n,
         |  round(CAST(sum(CAST(graft_disc_price(l_extendedprice, l_discount)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryPack}
+import graft.{CallScope, Q, QueryPack}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -148,17 +148,17 @@ object Reshape extends QueryPack {
     * happen on the value-count cells (cnt·clamped, exact int64 — cents
     * ×100 ≤ 1e8 so even 2^43 rows/cell fit), one broadcast join of the
     * 5-row bounds frame. */
-  private def q211(s: SparkSession, dir: String): DataFrame = {
+  private def q211(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
     // persist(): the value-count frame is referenced three times below
     // (two order-statistic passes + the clamp join); without the cache
-    // each reference re-runs the corpus scan AND the groupBy shuffle
-    // (review r11). The frame is value-domain-sized, Bench/Verify's
-    // clearUnpinned reclaims it between queries.
+    // each reference re-runs the corpus scan AND the groupBy shuffle.
+    // The frame is value-domain-sized and released after the collect.
     val vc = Tables.customer(s, dir)
       .select(col("c_mktsegment").as("grp"),
         round(col("c_acctbal") * 100).cast("long").as("v"))
       .groupBy("grp", "v").agg(count(lit(1)).as("cnt"))
       .persist()
+    cs.defer(vc.unpersist(false))
     // both bounds through the shared integer R-7 order-statistic helper
     // (q217 factored it out of this query's original inline form); the
     // extra window pass over the CACHED value-count frame costs nothing
@@ -278,16 +278,17 @@ object Reshape extends QueryPack {
     * and the median frames re-enter as broadcasts. The same shape holds
     * at any scale — MAD's cost is the cost of the two value-count
     * aggregations. */
-  private def q217(s: SparkSession, dir: String): DataFrame = {
+  private def q217(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
     // persist(): vc feeds the median pass, the deviation build, and
     // (through med) the final join — uncached, each reference re-runs
     // the lineitem scan + shuffle (review r11); cached, the corpus is
-    // touched exactly once
+    // touched exactly once, and released after the collect
     val vc = Tables.lineitem(s, dir)
       .select(col("l_returnflag").as("grp"),
         col("l_quantity").cast("long").as("v"))
       .groupBy("grp", "v").agg(count(lit(1)).as("cnt"))
       .persist()
+    cs.defer(vc.unpersist(false))
     val med = orderStat100(vc, 50)
       .select(col("grp"), col("n"), col("stat100").as("med100"))
     val devVc = vc.join(broadcast(med), "grp")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryPack}
+import graft.{CallScope, Q, QueryPack}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -184,8 +184,8 @@ object ScalarFunctions extends QueryPack {
     * to_json (engine-neutral scalar text: numbers print canonically),
     * and the numeric leg re-parses under try_cast so non-numeric keys
     * aggregate as NULL instead of failing the scan. */
-  private def q251(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir).createOrReplaceTempView("graft_events251")
+  private def q251(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    cs.view("graft_events251", Tables.events(s, dir))
     s.sql(
       """SELECT t.key,
         |  count(*) AS n,

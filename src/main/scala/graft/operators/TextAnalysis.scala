@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryPack}
+import graft.{CallScope, Q, QueryPack}
 import graft.Materialize.MaterializeOps
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -765,7 +765,7 @@ object TextAnalysis extends QueryPack {
     * space, empties kept). Output: the 20 highest-df shingles with
     * occurrence counts and earliest position — the boilerplate-
     * detection prefilter (q182's family) as one generator + aggregate. */
-  private def q291(s: SparkSession, dir: String): DataFrame = {
+  private def q291(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
     graft.functions.TextFunctions.ensureShingles(s)
     // spread the corpus before the generator (r18, same fix as the dedup
     // pack's shingle frame): the documents parquet is a single row group,
@@ -773,9 +773,8 @@ object TextAnalysis extends QueryPack {
     // (measured 0.47 s of the gate's 0.84 s at sf0.1); one (id, text)
     // shuffle parallelizes it, and at 100 TB the scan splits naturally
     // so the repartition is a local-fixture no-op by shape.
-    Tables.documents(s, dir).select("doc_id", "text")
-      .repartition(s.sparkContext.defaultParallelism)
-      .createOrReplaceTempView("graft_docs291")
+    cs.view("graft_docs291", Tables.documents(s, dir).select("doc_id", "text")
+      .repartition(s.sparkContext.defaultParallelism))
     s.sql(
       """SELECT t.shingle, count(*) AS n, count(DISTINCT doc_id) AS df,
         |  CAST(min(t.pos) AS BIGINT) AS first_pos

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryPack}
+import graft.{CallScope, Q, QueryPack}
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -54,9 +54,9 @@ object TpchLike extends QueryPack {
     * SQL so Catalyst's RewritePredicateSubquery turns it into a LEFT SEMI
     * join (the scale-correct plan: lineitem never duplicates orders, and
     * the semi join build side is the filtered one-year order slice). */
-  private def q135(s: SparkSession, dir: String): DataFrame = {
-    Tables.orders(s, dir).createOrReplaceTempView("graft_orders135")
-    Tables.lineitem(s, dir).createOrReplaceTempView("graft_lineitem135")
+  private def q135(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    cs.view("graft_orders135", Tables.orders(s, dir))
+    cs.view("graft_lineitem135", Tables.lineitem(s, dir))
     s.sql(
       """SELECT o_orderpriority, count(*) AS n_orders
         |FROM graft_orders135
@@ -77,8 +77,8 @@ object TpchLike extends QueryPack {
     * `avg` = exact-integer-sum / count is bit-identical in any engine
     * regardless of summation order; the revenue sum goes through
     * DECIMAL like every other TPC-H money aggregate here. */
-  private def q136(s: SparkSession, dir: String): DataFrame = {
-    Tables.lineitem(s, dir).createOrReplaceTempView("graft_lineitem136")
+  private def q136(s: SparkSession, dir: String): DataFrame = CallScope.local(s) { cs =>
+    cs.view("graft_lineitem136", Tables.lineitem(s, dir))
     s.sql(
       """SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)))
         |    AS DOUBLE) / 7.0, 2) AS avg_yearly,

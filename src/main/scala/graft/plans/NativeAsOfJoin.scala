@@ -12,6 +12,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
 
 /** Native Catalyst AS-OF JOIN — the whole-operator rung (preference (c))
   * of the custom-operator ladder: a [[LogicalPlan]] node, a planner
@@ -69,6 +70,19 @@ case class AsOfJoinNode(
     forward: Boolean = false,
     tolerance: Option[Long] = None) extends BinaryNode {
 
+  // the one check of the node's contract: a public case class, so a
+  // hand-built node is refused here with the API's messages rather than
+  // failing mid-merge
+  require(leftKey.dataType == rightKey.dataType,
+    s"key types differ: ${leftKey.dataType} vs ${rightKey.dataType}")
+  require(leftTime.dataType == rightTime.dataType,
+    s"time types differ: ${leftTime.dataType} vs ${rightTime.dataType}")
+  tolerance.foreach { t =>
+    require(t >= 0, s"tolerance must be non-negative, got $t")
+    require(AsOfMerger.physLong(leftTime.dataType),
+      s"tolerance needs a physically-long time column, got ${leftTime.dataType}")
+  }
+
   override def output: Seq[Attribute] =
     left.output ++ right.output.map(_.withNullability(true))
 
@@ -93,9 +107,11 @@ object AsOfJoinStrategy extends SparkStrategy {
 
 /** Physical as-of join: requires both children hash-clustered on their
   * key and sorted by (key, time); executes a per-partition streaming merge
-  * that holds at most one candidate right row (backward) or none at all
-  * (forward — the lookahead row IS the candidate). Non-codegen (iterator
-  * based, like full-outer SMJ); the children's sorts and exchanges are
+  * ([[AsOfMerger]]) that holds at most one candidate right row (backward)
+  * or none at all (forward — the lookahead row IS the candidate). The
+  * merge runs inside whole-stage codegen for every key and time type;
+  * `doExecute` (codegen off, or a codegen fallback) drives the same
+  * merger from an iterator. The children's sorts and exchanges are
   * ordinary codegen'd operators inserted by EnsureRequirements.
   *
   * `forward=false`: latest right with `rt <= lt`; `forward=true`:
@@ -137,14 +153,17 @@ case class AsOfJoinExec(
       newLeft: SparkPlan, newRight: SparkPlan): AsOfJoinExec =
     copy(left = newLeft, right = newRight)
 
-  /** Physically-long types (stored as a primitive long in InternalRow):
-    * the common as-of shapes — bigint keys, epoch-micros / timestamp
-    * times — take a boxing-free merge path. */
-  private def physLong(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-    case org.apache.spark.sql.types.LongType |
-         org.apache.spark.sql.types.TimestampType |
-         org.apache.spark.sql.types.TimestampNTZType => true
-    case _ => false
+  /** The merge's column ordinals and types, resolved on the driver for
+    * both execution modes. */
+  private def mergeSpec: AsOfMergeSpec = {
+    def ordinal(child: SparkPlan, a: Attribute): Int = {
+      val i = child.output.indexWhere(_.exprId == a.exprId)
+      require(i >= 0, "as-of key/time must be output attributes of their child")
+      i
+    }
+    AsOfMergeSpec(ordinal(left, leftKey), ordinal(left, leftTime),
+      ordinal(right, rightKey), ordinal(right, rightTime),
+      leftKey.dataType, leftTime.dataType, forward, tolerance)
   }
 
   // ---- whole-stage codegen (the r13 A/B's named cost: the interpreted
@@ -157,12 +176,7 @@ case class AsOfJoinExec(
   // JIT-inlined — state machines gain nothing from Janino), and hands
   // the joined columns to the consumer AS VARIABLES, so a downstream
   // aggregate/projection fuses into the same generated loop with no
-  // intermediate row at all. Codegen covers the physically-long
-  // (bigint/timestamp) key+time shapes — the same set as the
-  // interpreted fast path; generic types stay on doExecute. ----
-
-  override def supportCodegen: Boolean =
-    physLong(leftKey.dataType) && physLong(leftTime.dataType)
+  // intermediate row at all. ----
 
   override def inputRDDs(): Seq[RDD[InternalRow]] =
     left.execute() :: right.execute() :: Nil
@@ -173,18 +187,12 @@ case class AsOfJoinExec(
   override def needCopyResult: Boolean = true
 
   override protected def doProduce(ctx: CodegenContext): String = {
-    val lkOrd = left.output.indexWhere(_.exprId == leftKey.exprId)
-    val ltOrd = left.output.indexWhere(_.exprId == leftTime.exprId)
-    val rkOrd = right.output.indexWhere(_.exprId == rightKey.exprId)
-    val rtOrd = right.output.indexWhere(_.exprId == rightTime.exprId)
-    require(lkOrd >= 0 && ltOrd >= 0 && rkOrd >= 0 && rtOrd >= 0,
-      "as-of key/time must be output attributes of their child")
     val leftInput = ctx.addMutableState("scala.collection.Iterator",
       "asofLeftInput", v => s"$v = inputs[0];")
+    val spec = ctx.addReferenceObj("asofSpec", mergeSpec)
     val mergerCls = classOf[AsOfMerger].getName
     val merger = ctx.addMutableState(mergerCls, "asofMerger",
-      v => s"$v = new $mergerCls(inputs[1], $rkOrd, $rtOrd, $forward, " +
-        s"${tolerance.isDefined}, ${tolerance.getOrElse(Long.MaxValue)}L);")
+      v => s"$v = new $mergerCls($spec, inputs[1]);")
     val numOutput = metricTerm(ctx, "numOutputRows")
     val leftRow = ctx.freshName("asofLeftRow")
     val matched = ctx.freshName("asofMatched")
@@ -214,11 +222,7 @@ case class AsOfJoinExec(
     s"""
        |while ($leftInput.hasNext()) {
        |  InternalRow $leftRow = (InternalRow) $leftInput.next();
-       |  InternalRow $matched = null;
-       |  if (!$leftRow.isNullAt($lkOrd) && !$leftRow.isNullAt($ltOrd)) {
-       |    $matched = $merger.advance(
-       |      $leftRow.getLong($lkOrd), $leftRow.getLong($ltOrd));
-       |  }
+       |  InternalRow $matched = $merger.advance($leftRow);
        |  $numOutput.add(1);
        |  ${consume(ctx, leftVars ++ rightVars)}
        |  if (shouldStop()) return;
@@ -227,241 +231,138 @@ case class AsOfJoinExec(
   }
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val lOut = left.output
-    val rOut = right.output
-    val allOut = output
+    val spec = mergeSpec
+    val rWidth = right.output.size
+    val outSchema = schema
     val numOutputRows = longMetric("numOutputRows")
-    val lkOrd = lOut.indexWhere(_.exprId == leftKey.exprId)
-    val ltOrd = lOut.indexWhere(_.exprId == leftTime.exprId)
-    val rkOrd = rOut.indexWhere(_.exprId == rightKey.exprId)
-    val rtOrd = rOut.indexWhere(_.exprId == rightTime.exprId)
-    require(lkOrd >= 0 && ltOrd >= 0 && rkOrd >= 0 && rtOrd >= 0,
-      "as-of key/time must be output attributes of their child")
-    // re-validate the leftAsOf contract: AsOfJoinNode is a public case
-    // class, so a caller constructing it directly could pair a
-    // tolerance with a non-physically-long time type — fail with the
-    // API's message here rather than a ClassCastException mid-merge
-    tolerance.foreach { t =>
-      require(t >= 0, s"tolerance must be non-negative, got $t")
-      require(physLong(leftTime.dataType) && physLong(rightTime.dataType),
-        s"tolerance needs a physically-long time column, got ${leftTime.dataType}")
-    }
-    val fastPath = physLong(leftKey.dataType) && physLong(leftTime.dataType)
-    val keyType = leftKey.dataType
-    val timeType = leftTime.dataType
-
     left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
-      val nullRight = new GenericInternalRow(rOut.size)
+      val merger = new AsOfMerger(spec, rIter)
+      val nullRight = new GenericInternalRow(rWidth)
       val joined = new JoinedRow
-      val proj = UnsafeProjection.create(allOut, lOut ++ rOut)
-
-      // tolerance as a plain long; `bounded` gates the check entirely
-      // when unset. Qualifying diffs are mathematically >= 0 (the merge
-      // only tests candidates on the right side of the inequality), so
-      // a NEGATIVE computed diff can only mean Long overflow — i.e. the
-      // true diff exceeds Long.MaxValue >= tol — and must REJECT, not
-      // falsely match (extreme-time hardening; epoch-micros never hits it)
-      val bounded = tolerance.isDefined
-      val tol = tolerance.getOrElse(Long.MaxValue)
-
-      if (fastPath && forward) {
-        // forward merge needs NO held state: rows before lt can never
-        // match a later left row (left times ascend), and the first
-        // same-key row at rt >= lt — the lookahead itself — is the
-        // unique earliest candidate, left unconsumed for the next left
-        var rHead: InternalRow = if (rIter.hasNext) rIter.next() else null
-        def advance(): Unit = rHead = if (rIter.hasNext) rIter.next() else null
-        lIter.map { l =>
-          val out =
-            if (l.isNullAt(lkOrd) || l.isNullAt(ltOrd)) joined(l, nullRight)
-            else {
-              val lk = l.getLong(lkOrd)
-              val lt = l.getLong(ltOrd)
-              while (rHead != null &&
-                  (rHead.isNullAt(rkOrd) || rHead.getLong(rkOrd) < lk)) advance()
-              while (rHead != null && rHead.getLong(rkOrd) == lk &&
-                  (rHead.isNullAt(rtOrd) || rHead.getLong(rtOrd) < lt)) advance()
-              if (rHead != null && rHead.getLong(rkOrd) == lk && {
-                    val d = rHead.getLong(rtOrd) - lt
-                    !bounded || (d >= 0 && d <= tol) })
-                joined(l, rHead)
-              else joined(l, nullRight)
-            }
-          numOutputRows += 1
-          proj(out)
-        }
-      } else if (fastPath) {
-        // backward primitive merge: getLong + Long compares, zero boxing
-        var rHead: InternalRow = if (rIter.hasNext) rIter.next() else null
-        var held: InternalRow = null      // copied — shuffle readers reuse buffers
-        var heldKey: Long = 0L
-        var heldTime: Long = 0L
-        var hasHeld = false
-        def advance(): Unit = rHead = if (rIter.hasNext) rIter.next() else null
-        lIter.map { l =>
-          val out =
-            if (l.isNullAt(lkOrd) || l.isNullAt(ltOrd)) joined(l, nullRight)
-            else {
-              val lk = l.getLong(lkOrd)
-              val lt = l.getLong(ltOrd)
-              var scanning = true
-              while (scanning && rHead != null &&
-                  (rHead.isNullAt(rkOrd) || rHead.getLong(rkOrd) < lk)) advance()
-              while (scanning && rHead != null && rHead.getLong(rkOrd) == lk) {
-                if (rHead.isNullAt(rtOrd)) advance() // nulls sort first, never match
-                else if (rHead.getLong(rtOrd) <= lt) {
-                  held = rHead.copy(); heldKey = lk
-                  heldTime = held.getLong(rtOrd); hasHeld = true
-                  advance()
-                } else scanning = false
-              }
-              if (hasHeld && heldKey == lk && {
-                    val d = lt - heldTime
-                    !bounded || (d >= 0 && d <= tol) }) joined(l, held)
-              else joined(l, nullRight)
-            }
-          numOutputRows += 1
-          proj(out)
-        }
-      } else if (forward) {
-        // generic forward merge; tolerance (when set) is guaranteed by
-        // the API to come with a physically-long time, so the bound
-        // check unboxes the already-fetched values
-        val keyOrd = TypeUtils.getInterpretedOrdering(keyType)
-        val timeOrd = TypeUtils.getInterpretedOrdering(timeType)
-        val unbounded = tolerance.isEmpty
-        var rHead: InternalRow = if (rIter.hasNext) rIter.next() else null
-        def advance(): Unit = rHead = if (rIter.hasNext) rIter.next() else null
-        lIter.map { l =>
-          val lk = l.get(lkOrd, keyType)
-          val lt = l.get(ltOrd, timeType)
-          val out =
-            if (lk == null || lt == null) joined(l, nullRight)
-            else {
-              var scanning = true
-              while (scanning && rHead != null) {
-                val rk = rHead.get(rkOrd, keyType)
-                if (rk == null || keyOrd.compare(rk, lk) < 0) advance()
-                else if (keyOrd.compare(rk, lk) == 0) {
-                  val rt = rHead.get(rtOrd, timeType)
-                  if (rt == null || timeOrd.compare(rt, lt) < 0) advance()
-                  else scanning = false
-                } else scanning = false
-              }
-              if (rHead != null && {
-                  val rk = rHead.get(rkOrd, keyType)
-                  rk != null && keyOrd.compare(rk, lk) == 0 } &&
-                  (unbounded || {
-                    val d =
-                      rHead.get(rtOrd, timeType).asInstanceOf[java.lang.Long] -
-                        lt.asInstanceOf[java.lang.Long]
-                    d >= 0 && d <= tol }))
-                joined(l, rHead)
-              else joined(l, nullRight)
-            }
-          numOutputRows += 1
-          proj(out)
-        }
-      } else {
-        // generic backward merge: interpreted ordering over boxed values;
-        // tolerance (when set) comes with a physically-long time (API
-        // contract), so the bound check unboxes
-        val keyOrd = TypeUtils.getInterpretedOrdering(keyType)
-        val timeOrd = TypeUtils.getInterpretedOrdering(timeType)
-        val unbounded = tolerance.isEmpty
-        var rHead: InternalRow = if (rIter.hasNext) rIter.next() else null
-        var held: InternalRow = null
-        var heldKey: Any = null  // derived from the COPIED row, never the buffer
-        var heldTime: Any = null
-        def advance(): Unit = rHead = if (rIter.hasNext) rIter.next() else null
-        lIter.map { l =>
-          val lk = l.get(lkOrd, keyType)
-          val lt = l.get(ltOrd, timeType)
-          val out =
-            if (lk == null || lt == null) joined(l, nullRight)
-            else {
-              var scanning = true
-              while (scanning && rHead != null) {
-                val rk = rHead.get(rkOrd, keyType)
-                if (rk == null || keyOrd.compare(rk, lk) < 0) advance()
-                else if (keyOrd.compare(rk, lk) == 0) {
-                  val rt = rHead.get(rtOrd, timeType)
-                  if (rt == null) advance() // nulls sort first, never match
-                  else if (timeOrd.compare(rt, lt) <= 0) {
-                    held = rHead.copy()
-                    heldKey = held.get(rkOrd, keyType)
-                    heldTime = held.get(rtOrd, timeType)
-                    advance()
-                  } else scanning = false
-                } else scanning = false
-              }
-              if (held != null && heldKey != null &&
-                  keyOrd.compare(heldKey, lk) == 0 &&
-                  (unbounded || {
-                    val d = lt.asInstanceOf[java.lang.Long] -
-                      heldTime.asInstanceOf[java.lang.Long]
-                    d >= 0 && d <= tol }))
-                joined(l, held)
-              else joined(l, nullRight)
-            }
-          numOutputRows += 1
-          proj(out)
-        }
+      // bound to the exec's own schema, where right columns are nullable:
+      // a miss reads null even from a right column its child declares
+      // non-nullable
+      val proj = UnsafeProjection.create(outSchema)
+      lIter.map { l =>
+        val m = merger.advance(l)
+        numOutputRows += 1
+        proj(joined(l, if (m == null) nullRight else m))
       }
     }
   }
 }
 
-/** The per-partition right-side state machine behind [[AsOfJoinExec]]'s
-  * generated loop — the SAME merge as the interpreted fast paths
-  * (doExecute), factored so whole-stage codegen can call it per left
-  * row: O(1) held state, one forward pass, overflow-safe tolerance.
+/** What [[AsOfMerger]] needs to know about the two sides: the key and
+  * time ordinals in each child's output, their (shared) types, the
+  * direction and the tolerance. Built once on the driver; serializable,
+  * so whole-stage codegen ships it as a reference object. */
+final case class AsOfMergeSpec(lkOrd: Int, ltOrd: Int, rkOrd: Int, rtOrd: Int,
+    keyType: DataType, timeType: DataType, forward: Boolean,
+    tolerance: Option[Long])
+
+/** The per-partition right-side state machine behind [[AsOfJoinExec]]:
+  * the one as-of merge, called once per left row by both the generated
+  * loop and `doExecute`. O(1) held state, one forward pass,
+  * overflow-safe tolerance.
+  *
+  * Physically-long key and time columns (bigint, timestamp,
+  * timestamp_ntz) compare with primitive `getLong` — no boxing, and the
+  * branch on the final `longKey`/`longTime` flags is constant per
+  * instance, so the long shapes keep a monomorphic, JIT-inlined merge.
+  * Every other orderable type compares through Spark's interpreted
+  * ordering.
+  *
   * Caller contract (guaranteed by the exec's required orderings): left
-  * probes arrive in ascending (key, time); lk/lt are non-null. The
-  * returned row is valid only until the next `advance` call — forward
-  * matches are the iterator's live row (the generated consumer reads
-  * its columns immediately; buffering consumers copy via
-  * `needCopyResult`). */
-final class AsOfMerger(rIterRaw: Object, rkOrd: Int, rtOrd: Int,
-    forward: Boolean, bounded: Boolean, tol: Long) {
-  private[this] val rIter =
-    rIterRaw.asInstanceOf[Iterator[InternalRow]]
-  private[this] var rHead: InternalRow =
-    if (rIter.hasNext) rIter.next() else null
+  * rows arrive in ascending (key, time), right rows in ascending (key,
+  * time) with nulls first. The returned row is valid only until the
+  * next `advance` call — forward matches are the iterator's live row
+  * (the generated consumer reads its columns immediately; buffering
+  * consumers copy via `needCopyResult`). */
+final class AsOfMerger(spec: AsOfMergeSpec, rIter: Iterator[InternalRow]) {
+  import spec._
+  private[this] val longKey = AsOfMerger.physLong(keyType)
+  private[this] val longTime = AsOfMerger.physLong(timeType)
+  private[this] val keyOrd =
+    if (longKey) null else TypeUtils.getInterpretedOrdering(keyType)
+  private[this] val timeOrd =
+    if (longTime) null else TypeUtils.getInterpretedOrdering(timeType)
+  // tolerance as a plain long; `bounded` gates the check entirely when
+  // unset. Qualifying diffs are mathematically >= 0 (the merge only
+  // tests candidates on the right side of the inequality), so a
+  // NEGATIVE computed diff can only mean Long overflow — the true diff
+  // exceeds Long.MaxValue >= tol — and must REJECT, not falsely match
+  private[this] val bounded = tolerance.isDefined
+  private[this] val tol = tolerance.getOrElse(Long.MaxValue)
+  private[this] var rHead: InternalRow = next()
   private[this] var held: InternalRow = null // copied — buffers get reused
-  private[this] var heldKey = 0L
-  private[this] var heldTime = 0L
-  private[this] var hasHeld = false
-  private def adv(): Unit =
-    rHead = if (rIter.hasNext) rIter.next() else null
-  private def inBand(d: Long): Boolean = !bounded || (d >= 0 && d <= tol)
+  // the current left row's key and time, read once per advance: as a
+  // primitive long on the long path, as a value for the ordering
+  // otherwise (valid while `advance` runs, the only place it is read)
+  private[this] var lk = 0L
+  private[this] var lt = 0L
+  private[this] var lkV: Any = null
+  private[this] var ltV: Any = null
+
+  private def next(): InternalRow = if (rIter.hasNext) rIter.next() else null
+
+  /** Right row `r`'s key against the left row's (both non-null). */
+  private def keyCmp(r: InternalRow): Int =
+    if (longKey) java.lang.Long.compare(r.getLong(rkOrd), lk)
+    else keyOrd.compare(r.get(rkOrd, keyType), lkV)
+
+  /** Right row `r`'s time against the left row's (both non-null). */
+  private def timeCmp(r: InternalRow): Int =
+    if (longTime) java.lang.Long.compare(r.getLong(rtOrd), lt)
+    else timeOrd.compare(r.get(rtOrd, timeType), ltV)
+
+  /** `r` is within tolerance of the left row (a tolerance implies long
+    * times). */
+  private def inBand(r: InternalRow): Boolean = !bounded || {
+    val d = if (forward) r.getLong(rtOrd) - lt else lt - r.getLong(rtOrd)
+    d >= 0 && d <= tol
+  }
 
   /** Latest same-key right row with rt <= lt (backward) / earliest with
-    * rt >= lt (forward) within tolerance, or null. */
-  def advance(lk: Long, lt: Long): InternalRow =
-    if (forward) {
-      while (rHead != null &&
-        (rHead.isNullAt(rkOrd) || rHead.getLong(rkOrd) < lk)) adv()
-      while (rHead != null && rHead.getLong(rkOrd) == lk &&
-        (rHead.isNullAt(rtOrd) || rHead.getLong(rtOrd) < lt)) adv()
-      if (rHead != null && rHead.getLong(rkOrd) == lk &&
-        inBand(rHead.getLong(rtOrd) - lt)) rHead
-      else null
-    } else {
-      var scanning = true
-      while (scanning && rHead != null &&
-        (rHead.isNullAt(rkOrd) || rHead.getLong(rkOrd) < lk)) adv()
-      while (scanning && rHead != null && rHead.getLong(rkOrd) == lk) {
-        if (rHead.isNullAt(rtOrd)) adv() // nulls sort first, never match
-        else if (rHead.getLong(rtOrd) <= lt) {
-          held = rHead.copy(); heldKey = lk
-          heldTime = held.getLong(rtOrd); hasHeld = true
-          adv()
-        } else scanning = false
+    * rt >= lt (forward) within tolerance, or null — also when the left
+    * key or time is null. */
+  def advance(l: InternalRow): InternalRow =
+    if (l.isNullAt(lkOrd) || l.isNullAt(ltOrd)) null
+    else {
+      if (longKey) lk = l.getLong(lkOrd) else lkV = l.get(lkOrd, keyType)
+      if (longTime) lt = l.getLong(ltOrd) else ltV = l.get(ltOrd, timeType)
+      // null keys sort first and never match; smaller keys never match
+      // again, since left keys ascend
+      while (rHead != null && (rHead.isNullAt(rkOrd) || keyCmp(rHead) < 0))
+        rHead = next()
+      if (forward) {
+        // no held state: rows before lt can never match a later left row
+        // (left times ascend), and the first same-key row at rt >= lt —
+        // the lookahead itself — is the unique earliest candidate, left
+        // unconsumed for the next left row
+        while (rHead != null && keyCmp(rHead) == 0 &&
+            (rHead.isNullAt(rtOrd) || timeCmp(rHead) < 0)) rHead = next()
+        if (rHead != null && keyCmp(rHead) == 0 && inBand(rHead)) rHead
+        else null
+      } else {
+        while (rHead != null && keyCmp(rHead) == 0 &&
+            (rHead.isNullAt(rtOrd) || timeCmp(rHead) <= 0)) {
+          if (!rHead.isNullAt(rtOrd)) held = rHead.copy() // null times never match
+          rHead = next()
+        }
+        if (held != null && keyCmp(held) == 0 && inBand(held)) held
+        else null
       }
-      if (hasHeld && heldKey == lk && inBand(lt - heldTime)) held
-      else null
     }
+}
+
+object AsOfMerger {
+  /** Physically-long types (stored as a primitive long in InternalRow):
+    * the common as-of shapes — bigint keys, epoch-micros / timestamp
+    * times — and the only time types a tolerance applies to. */
+  private[plans] def physLong(dt: DataType): Boolean = dt match {
+    case LongType | TimestampType | TimestampNTZType => true
+    case _ => false
+  }
 }
 
 /** Optimizer hygiene for the custom node. A LogicalPlan Catalyst does
@@ -574,19 +475,6 @@ object NativeAsOfJoin {
     val rk = attr(rPlan, rightKey, "right")
     val lt = attr(lPlan, leftTime, "left")
     val rt = attr(rPlan, rightTime, "right")
-    require(lk.dataType == rk.dataType,
-      s"key types differ: ${lk.dataType} vs ${rk.dataType}")
-    require(lt.dataType == rt.dataType,
-      s"time types differ: ${lt.dataType} vs ${rt.dataType}")
-    tolerance.foreach { t =>
-      require(t >= 0, s"tolerance must be non-negative, got $t")
-      require(lt.dataType match {
-        case org.apache.spark.sql.types.LongType |
-             org.apache.spark.sql.types.TimestampType |
-             org.apache.spark.sql.types.TimestampNTZType => true
-        case _ => false
-      }, s"tolerance needs a physically-long time column, got ${lt.dataType}")
-    }
     GraftPlanBridge.ofRows(s,
       AsOfJoinNode(lPlan, rPlan, lk, rk, lt, rt, forward, tolerance))
   }

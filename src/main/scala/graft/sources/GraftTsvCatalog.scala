@@ -226,6 +226,23 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
     * layout, recorded in the `_graft_partition` sidecar. */
   private def layoutOf(partitions: Array[Transform], schema: StructType)
       : TsvLayout = partitions.toSeq match {
+    case Seq() => TsvLayout.Flat
+    case Seq(t) if t.name() == "identity" &&
+        t.references().length == 1 &&
+        t.references()(0).fieldNames().length == 1 =>
+      val col = t.references()(0).fieldNames()(0)
+      val field = schema.fields.find(_.name == col).getOrElse(
+        throw new IllegalArgumentException(
+          s"graft tsv catalog: partition column $col is not in the schema"))
+      if (field.dataType != LongType &&
+          field.dataType != org.apache.spark.sql.types.StringType)
+        throw new UnsupportedOperationException(
+          s"graft tsv catalog: partition column must be BIGINT or " +
+            s"STRING, got $col ${field.dataType.sql} — directory keys " +
+            "encode as the column's text (the keyed-layout contract); " +
+            "dates/timestamps partition via a derived STRING or BIGINT " +
+            "column")
+      TsvLayout.Keyed(col, field.dataType)
     case Seq(t) if t.name() == "bucket" &&
         t.references().length == 1 &&
         t.references()(0).fieldNames().length == 1 =>
@@ -252,28 +269,6 @@ final class GraftTsvCatalog extends TableCatalog with SupportsNamespaces
           "— each bucket is a directory, and a write task holds one " +
           "open stream per bucket it touches")
       TsvLayout.Bucketed(col, n)
-    case other => TsvLayout.of(schema, partitionColOf0(other, schema))
-  }
-
-  private def partitionColOf0(partitions: Seq[Transform],
-      schema: StructType): Option[String] = partitions match {
-    case Seq() => None
-    case Seq(t) if t.name() == "identity" &&
-        t.references().length == 1 &&
-        t.references()(0).fieldNames().length == 1 =>
-      val col = t.references()(0).fieldNames()(0)
-      val field = schema.fields.find(_.name == col).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft tsv catalog: partition column $col is not in the schema"))
-      if (field.dataType != LongType &&
-          field.dataType != org.apache.spark.sql.types.StringType)
-        throw new UnsupportedOperationException(
-          s"graft tsv catalog: partition column must be BIGINT or " +
-            s"STRING, got $col ${field.dataType.sql} — directory keys " +
-            "encode as the column's text (the keyed-layout contract); " +
-            "dates/timestamps partition via a derived STRING or BIGINT " +
-            "column")
-      Some(col)
     case other => throw new UnsupportedOperationException(
       "graft tsv catalog: only PARTITIONED BY (<one BIGINT or STRING " +
         s"column>) is supported, got " +

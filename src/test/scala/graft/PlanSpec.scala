@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.sql.ExecutedPlans
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, LeftSemi}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+import org.apache.spark.sql.execution.window.WindowGroupLimitExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan pins: the properties that make these queries scale —
@@ -14,6 +20,17 @@ class PlanSpec extends AnyFunSuite {
 
   private def executedPlan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+
+  /** The returned frame's plan and every plan the gate's call executed
+    * — the only plans of a gate that collects inside its call scope. */
+  private def plansOf(name: String): Seq[SparkPlan] = {
+    val (df, ran) = ExecutedPlans.during(spark)(SparkEntry.queries(name)(spark, sf))
+    df.queryExecution.executedPlan +: ran
+  }
+
+  /** Every join node of `plans`, through adaptive stages and subqueries. */
+  private def joins(plans: Seq[SparkPlan]): Seq[BaseJoinExec] =
+    plans.flatMap(AdaptiveNodes.collectWithSubqueries(_) { case j: BaseJoinExec => j })
 
   private def formatted(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution
@@ -111,14 +128,19 @@ class PlanSpec extends AnyFunSuite {
     // The whole point of a SQL UDF over a Scala UDF at 100 TB: Catalyst
     // inlines the body, so the plan must contain NO black-box function
     // node and the aggregate must still combine map-side THROUGH the
-    // inlined arithmetic.
-    val qe = SparkEntry.queries("q213_sql_functions")(spark, sf).queryExecution
-    val udfs = qe.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
-      case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u
-    }))
-    assert(udfs.isEmpty, s"q213 plan contains ScalaUDF: $udfs")
-    assert(qe.executedPlan.toString.contains("partial_sum"),
-      "q213 aggregation must stay partial through the inlined SQL function")
+    // inlined arithmetic. The gate collects inside its call scope, so
+    // the pin plans the gate's frame while its functions are registered.
+    CallScope.local(spark) { cs =>
+      val qe = graft.operators.Relational.sqlFunctionsFrame(spark, sf, cs)
+        .queryExecution
+      val udfs = qe.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u
+      }))
+      assert(udfs.isEmpty, s"q213 plan contains ScalaUDF: $udfs")
+      assert(qe.executedPlan.toString.contains("partial_sum"),
+        "q213 aggregation must stay partial through the inlined SQL function")
+      spark.range(1).toDF()
+    }
   }
 
   test("q224 OHLC plans as one-pass aggregates, never a per-bar window sort") {
@@ -559,6 +581,35 @@ class PlanSpec extends AnyFunSuite {
     spark.catalog.dropTempView("graft_li279t")
   }
 
+  // The SQL-surface subquery gates collect inside their call scope; their
+  // scale-correct decorrelations are pinned on the plans the call ran.
+  test("q119 NOT IN plans as a broadcast null-aware anti join, never a nested loop") {
+    val nullAware = joins(plansOf("q119_not_in_nulls")).collect {
+      case j: BroadcastHashJoinExec if j.isNullAwareAntiJoin => j
+    }
+    assert(nullAware.nonEmpty, "q119 NOT IN must plan a null-aware anti join")
+  }
+
+  test("q166 LATERAL top-k decorrelates into a ranked equi-join") {
+    val plans = plansOf("q166_lateral_topk")
+    assert(joins(plans).exists(j => j.joinType == Inner && j.leftKeys.nonEmpty),
+      "q166 lateral must join regions to ranked nations on the region key")
+    assert(plans.exists(AdaptiveNodes.find(_)(_.isInstanceOf[WindowGroupLimitExec]).isDefined),
+      "q166 LIMIT inside the lateral must plan as a per-region rank limit")
+  }
+
+  test("q68 correlated scalar subquery decorrelates into an aggregate outer join") {
+    assert(joins(plansOf("q68_scalar_subquery"))
+      .exists(j => j.joinType == LeftOuter && j.leftKeys.nonEmpty),
+      "q68 subquery must plan as a keyed LEFT OUTER join to its aggregate")
+  }
+
+  test("q135 EXISTS plans as a keyed LEFT SEMI join") {
+    assert(joins(plansOf("q135_exists_priority"))
+      .exists(j => j.joinType == LeftSemi && j.leftKeys.nonEmpty),
+      "q135 EXISTS must be rewritten to a keyed semi join")
+  }
+
   test("NO query plans a cartesian / nested-loop join (bounded-broadcast baselines exempt)") {
     // Repo-wide scale pin: every join must be an equi-join (hash/sort) —
     // a CartesianProduct or BroadcastNestedLoopJoin node anywhere else is
@@ -633,8 +684,12 @@ class PlanSpec extends AnyFunSuite {
       //        pattern); the only other exchange is the user_id agg.
       // q262 — quantile rollup: the same 1-row day-bounds broadcast
       //        (q234/q257 pattern); histogram merge + cumsum are equi.
+      // q263 — scripted k-ary median search: each pass broadcasts its
+      //        63-row probe frame into conditional counts over the one
+      //        cached price column (a bounded probe set by design).
       "q234_stickiness", "q244_skew_forecast", "q257_sketch_rollup",
-      "q256_array_set_algebra", "q262_quantile_rollup")
+      "q256_array_set_algebra", "q262_quantile_rollup",
+      "q263_sql_scripting_bisect")
     // Streaming queries execute a full drain in fn() and return a
     // collected local frame whose "plan" pins nothing; their batch-side
     // shapes are pinned by their own specs — skip the expensive drains.
@@ -646,12 +701,15 @@ class PlanSpec extends AnyFunSuite {
       "q70_.*|q71_.*|q78_.*|q84_.*|q87_.*|q100_.*|q106_.*|q109_.*|q118_.*|q125_.*" +
         "|q165_.*|q168_.*|q173_.*|q175_.*|q176_.*|q177_.*|q180_.*|q184_.*|q191_.*" +
         "|q240_.*|q254_.*|q258_.*")).toSet
-    for (q <- SparkEntry.all.map(_.name) if !exempt(q) && !skip(q)) {
-      val plan = SparkEntry.queries(q)(spark, sf)
-        .queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct") &&
-        !plan.contains("BroadcastNestedLoopJoin"),
-        s"$q plans an all-pairs join:\n$plan")
-    }
+    // A gate that collects inside its call (CallScope.local) returns a
+    // local frame, so the plans its call executed are checked as well.
+    val allPairs = for (q <- SparkEntry.all.map(_.name) if !exempt(q) && !skip(q);
+         plan <- plansOf(q).map(_.toString)
+         if plan.contains("CartesianProduct") || plan.contains("BroadcastNestedLoopJoin"))
+      yield s"$q plans an all-pairs join:\n$plan"
+    assert(allPairs.isEmpty, allPairs.mkString("\n"))
   }
 }
+
+/** Plan traversal through adaptive query stages. */
+private object AdaptiveNodes extends AdaptiveSparkPlanHelper

@@ -180,6 +180,75 @@ class AsOfJoinNativeSpec extends AnyFunSuite {
       s"AsOfJoin not codegen'd:\n$plan")
   }
 
+  private val day0 = java.time.LocalDate.of(2024, 1, 1)
+
+  test("randomized STRING key + DATE time vs brute force, codegen on and off") {
+    // the non-long shapes compare through Spark's interpreted ordering;
+    // nulls, duplicate left (key, time) pairs and misses all occur
+    val rnd = new scala.util.Random(283)
+    def key(n: Int): String = if (rnd.nextInt(10) == 0) null else s"k${rnd.nextInt(n)}"
+    def day(): java.time.LocalDate =
+      if (rnd.nextInt(12) == 0) null else day0.plusDays(rnd.nextInt(40).toLong)
+    val l = (1 to 300).map(i => (key(12), day(), s"l$i"))
+    val r = (1 to 200).map(i => (key(15), day(), s"r$i"))
+      .groupBy(x => (x._1, x._2)).map(_._2.head).toSeq
+    assert(l.groupBy(x => (x._1, x._2)).exists(_._2.size > 1), "no duplicate left rows")
+    def brute(fwd: Boolean): Seq[String] = l.map { case (k, t, tag) =>
+      val m =
+        if (k == null || t == null) None
+        else {
+          val cands = r.filter(x => x._1 == k && x._2 != null &&
+            (if (fwd) !x._2.isBefore(t) else !x._2.isAfter(t)))
+            .sortBy(_._2.toEpochDay)
+          if (fwd) cands.headOption else cands.lastOption
+        }
+      tag + "|" + m.map(_._3).getOrElse("∅")
+    }.sorted
+    for (fwd <- Seq(true, false); wholeStage <- Seq("true", "false")) {
+      val got = graft.SessionConfs.withConfs(spark,
+          "spark.sql.codegen.wholeStage" -> wholeStage) {
+        NativeAsOfJoin.leftAsOf(l.toDF("k", "t", "l_tag"),
+            r.toDF("rk", "rt", "payload"), "k", "rk", "t", "rt", forward = fwd)
+          .select($"l_tag", $"payload").collect()
+          .map(x => x.getString(0) + "|" + Option(x.getString(1)).getOrElse("∅"))
+          .sorted.toSeq
+      }
+      assert(got.count(!_.endsWith("∅")) > 0 && got.count(_.endsWith("∅")) > 0,
+        "both matches and misses")
+      assert(got === brute(fwd), s"fwd=$fwd wholeStage=$wholeStage")
+    }
+  }
+
+  test("a miss null-extends a NON-nullable right column, codegen on and off") {
+    // the right child declares rv non-nullable; the exec's output marks
+    // it nullable, and a miss must read null there in both modes, never
+    // the primitive default
+    val l = spark.range(0, 4).select($"id".as("k"), lit(10L).as("t"))
+    val r = spark.range(1, 3)
+      .select($"id".as("rk"), lit(5L).as("rt"), ($"id" * 100).as("rv"))
+    for (wholeStage <- Seq("true", "false")) {
+      val got = graft.SessionConfs.withConfs(spark,
+          "spark.sql.codegen.wholeStage" -> wholeStage) {
+        NativeAsOfJoin.leftAsOf(l, r, "k", "rk", "t", "rt").select($"k", $"rv")
+          .collect().map(x => x.getLong(0) -> Option(x.get(1))).sortBy(_._1).toSeq
+      }
+      assert(got === Seq(0L -> None, 1L -> Some(100L), 2L -> Some(200L), 3L -> None),
+        s"wholeStage=$wholeStage")
+    }
+  }
+
+  test("whole-stage codegen engages on a STRING key and DATE time too") {
+    val j = NativeAsOfJoin.leftAsOf(
+      Seq(("a", day0.plusDays(2), "l1")).toDF("k", "t", "l_tag"),
+      Seq(("a", day0, "r1")).toDF("rk", "rt", "payload"),
+      "k", "rk", "t", "rt")
+    // collecting finalizes the AQE plan
+    assert(j.collect().map(_.getAs[String]("payload")).toSeq === Seq("r1"))
+    val plan = j.queryExecution.executedPlan.toString
+    assert("""\*\(\d+\) AsOfJoin""".r.findFirstIn(plan).isDefined,
+      s"AsOfJoin not codegen'd:\n$plan")
+  }
+
   test("randomized: native == compositional == brute force (nulls, dups, misses)") {
     val rnd = new scala.util.Random(281)
     for (round <- 1 to 3) {
