@@ -16,9 +16,13 @@ where it is strictly better; ties count for neither side), whether the
 change's median is worse than the parent's by more than the metric's
 bound, and whether a gain would hold: at least nine tenths of the pairs
 won and a median gap, in the better direction, larger than the distance
-between the parent's quartiles. ``--out`` also writes every run and the
-table as JSON. Reads ``perfbench/`` and ``BENCHMARK.json``; writes
-nothing under ``perfbench/``.
+between the parent's quartiles. After each run it also reads that run's
+``target/perfbench/runs/<workload>-s<seed>-t0/record.json`` and prints
+each call's median timed wall; at the end, per call, both sides' medians
+of those and the change's wins, so a change shows which calls moved.
+``--out`` also writes every run and both tables as JSON. Reads
+``perfbench/``, ``BENCHMARK.json`` and the run records; writes nothing
+under ``perfbench/``.
 """
 import argparse
 import json
@@ -44,6 +48,19 @@ def run(checkout, workload, seed, seconds):
     if proc.returncode != 0:
         sys.exit(f"{checkout} seed {seed}: run.py exited with {proc.returncode}")
     return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def call_walls(checkout, workload, seed):
+    """Each call's median wall (s) over the timed passes of the run just made."""
+    path = os.path.join(checkout, "target", "perfbench", "runs",
+                        f"{workload}-s{seed}-t0", "record.json")
+    with open(path) as f:
+        samples = json.load(f)["samples"]
+    walls = {}
+    for s in samples:
+        if s["pass"] > 0:
+            walls.setdefault(s["call"], []).append(s["wall_s"])
+    return {call: statistics.median(w) for call, w in walls.items()}
 
 
 def quartiles(values):
@@ -88,9 +105,12 @@ def main():
         for side in order:
             res = run(sides[side], a.workload, seed, a.seconds)
             pair[side] = res
+            res["call_wall_s"] = call_walls(sides[side], a.workload, seed)
             vals = " ".join(f"{m['name']}={res['metrics'][m['name']]['value']:.4g}"
                             for m in metrics)
             print(f"seed {seed} {side:6s} failed {res['failed']}/{res['attempted']} {vals}",
+                  flush=True)
+            print("  calls: " + " ".join(f"{c}={w:.3f}" for c, w in res["call_wall_s"].items()),
                   flush=True)
         pairs.append(pair)
     table = {}
@@ -113,10 +133,21 @@ def main():
               + f"{c['median']:9.4g} [{c['q1']:.4g}, {c['q3']:.4g}]".ljust(29)
               + f"{rel:>7s} {t['wins']:>2d}/{t['pairs']:<3d}  {str(t['beyond_bound']):12s}  "
               + str(t["gain_holds"]))
+    calls = {}
+    for call in pairs[0]["change"]["call_wall_s"]:
+        calls[call] = judge([p["parent"]["call_wall_s"][call] for p in pairs],
+                            [p["change"]["call_wall_s"][call] for p in pairs],
+                            "lower", float("inf"))
+    print(f"\n{'call (median timed wall, s)':32s} {'parent':>8s} {'change':>8s} {'rel':>7s} {'wins':>6s}")
+    for call, t in calls.items():
+        rel = f"{100 * t['rel_change']:+.1f}%" if t["rel_change"] is not None else "n/a"
+        print(f"{call:32s} {t['parent']['median']:8.3f} {t['change']['median']:8.3f} "
+              f"{rel:>7s} {t['wins']:>2d}/{t['pairs']}")
     if a.out:
         with open(a.out, "w") as f:
             json.dump({"workload": a.workload, "seeds": a.seeds, "seconds": a.seconds,
-                       "sides": sides, "table": table, "pairs": pairs}, f, indent=1)
+                       "sides": sides, "table": table, "calls": calls, "pairs": pairs},
+                      f, indent=1)
 
 
 if __name__ == "__main__":

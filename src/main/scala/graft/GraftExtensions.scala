@@ -31,10 +31,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (exprs: Seq[Expression]) => SquaredL2(exprs(0), exprs(1))))
     // the native as-of join's planner strategy + its optimizer hygiene
     // rules (predicate pushdown / column pruning through the custom
-    // node — preference (c) of the custom-operator ladder);
-    // NativeAsOfJoin.install is the runtime route for sessions built
-    // without extensions
+    // node — preference (c) of the custom-operator ladder), and the
+    // one-task plan of small global sorts; graft.plans.Plans.install is
+    // the runtime route for sessions built without extensions
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    e.injectPlannerStrategy(_ => graft.plans.SmallSortStrategy)
     e.injectOptimizerRule(_ => graft.plans.AsOfJoinRules)
     e.injectFunction((
       new FunctionIdentifier("graft_shingles"),

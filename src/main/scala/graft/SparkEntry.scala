@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
+import graft.plans.Plans
 import graft.streaming.StreamingQueries
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -24,11 +25,15 @@ object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    RefWorkload.q07(spark, "/root/testdata/sf0.001")
+    queries("q07_month_count")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(q => q.name -> q.fn).toMap
+  /** One entry per implemented operator from SURVEY.md §2. Each call
+    * first installs graft's planner additions on its session
+    * ([[graft.plans.Plans.install]]). */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map { q =>
+      q.name -> { (s: SparkSession, dir: String) => Plans.install(s); q.fn(s, dir) }
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */

@@ -17,6 +17,8 @@ import org.apache.spark.sql.catalyst.encoders.AgnosticEncoders.{IterableEncoder,
 import org.apache.spark.sql.functions.{col, input_file_block_start, input_file_name}
 import org.apache.spark.util.SizeEstimator
 
+import graft.plans.Plans
+
 /** The generic user-function-driven MapReduce surface of the reference
   * engine (`/root/reference/mapreduce.py:139-187`), re-expressed on Spark.
   *
@@ -68,6 +70,9 @@ object MapReduce {
       kvEnc: Encoder[(K, V)],
       kEnc: Encoder[K],
       rEnc: Encoder[R]): Dataset[R] = {
+    // every front door ends here or in runAssociative: a caller's sort of
+    // the (small) result then plans in one task
+    Plans.install(ds.sparkSession)
     numPartitions match {
       case None =>
         val chunkEnc = chunkEncoder(kvEnc)
@@ -261,10 +266,12 @@ object MapReduce {
       mapFcn: D => IterableOnce[(K, V)],
       merge: (V, V) => V)(implicit
       kvEnc: Encoder[(K, V)],
-      kEnc: Encoder[K]): Dataset[(K, V)] =
+      kEnc: Encoder[K]): Dataset[(K, V)] = {
+    Plans.install(ds.sparkSession)
     ds.mapPartitions(it => combine(it.flatMap(mapFcn), BundleBytes, merge))
       .groupByKey(_._1)
       .mapGroups((k, ps) => (k, ps.map(_._2).reduce(merge)))
+  }
 
   /** Single-text-file API — analog of `MapReduceWithOneFileInput`
     * (mapreduce.py:167-173). Unlike the reference, the file does NOT

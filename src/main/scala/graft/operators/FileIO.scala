@@ -293,16 +293,12 @@ object FileIO extends QueryPack {
     * fails the hash. */
   private def q101(s: SparkSession, dir: String): DataFrame = {
     val out = scratch(dir, "orders_json")
-    Memo.layout(out, dir) {
-      Tables.orders(s, dir)
-        .select("o_orderkey", "o_orderpriority", "o_totalprice")
-        .write.mode("overwrite").json(out)
-    }
-    val schema = StructType(Seq(
-      StructField("o_orderkey", LongType),
-      StructField("o_orderpriority", StringType),
-      StructField("o_totalprice", DoubleType)))
-    s.read.schema(schema).json(out)
+    val written = Tables.orders(s, dir)
+      .select("o_orderkey", "o_orderpriority", "o_totalprice")
+    Memo.layout(out, dir)(written.write.mode("overwrite").json(out))
+    // the read-back declares its writer's schema: a column renamed there
+    // fails this query's references loudly instead of reading null
+    s.read.schema(written.schema).json(out)
       .filter(col("o_orderkey") % 3 === 0)
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"),
@@ -321,18 +317,15 @@ object FileIO extends QueryPack {
     * the oracle reads the original parquet. */
   private def q131(s: SparkSession, dir: String): DataFrame = {
     val out = scratch(dir, "customer_csv_gz")
+    val written = Tables.customer(s, dir)
+      .select("c_custkey", "c_mktsegment", "c_nationkey")
     Memo.layout(out, dir) {
-      Tables.customer(s, dir)
-        .select("c_custkey", "c_mktsegment", "c_nationkey")
+      written
         .repartition(4) // shard count = read parallelism for .gz
         .write.mode("overwrite").option("codec", "gzip")
         .csv(out)
     }
-    val schema = StructType(Seq(
-      StructField("c_custkey", LongType),
-      StructField("c_mktsegment", StringType),
-      StructField("c_nationkey", LongType)))
-    s.read.schema(schema).csv(out)
+    s.read.schema(written.schema).csv(out)
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("n"), sum("c_custkey").as("key_sum"),
         countDistinct("c_nationkey").as("n_nations"))
@@ -406,18 +399,16 @@ object FileIO extends QueryPack {
     val tricky = concat(col("c_name"), lit(",\""), col("c_mktsegment"),
       lit("\"\n"), col("c_nationkey"))
     val out = scratch(dir, "customer_csv_quoted")
+    val written = Tables.customer(s, dir)
+      .select(col("c_custkey"), tricky.as("tricky"))
     Memo.layout(out, dir) {
-      Tables.customer(s, dir)
-        .select(col("c_custkey"), tricky.as("tricky"))
+      written
         .repartition(4)
         .write.mode("overwrite")
         .option("escape", "\"").option("multiLine", "true")
         .csv(out)
     }
-    val schema = StructType(Seq(
-      StructField("c_custkey", LongType),
-      StructField("tricky", StringType)))
-    s.read.schema(schema)
+    s.read.schema(written.schema)
       .option("escape", "\"").option("multiLine", "true")
       .csv(out)
       .orderBy("c_custkey")

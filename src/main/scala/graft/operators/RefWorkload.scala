@@ -70,7 +70,7 @@ object RefWorkload extends QueryPack {
 
   /** Q8 (basic_mr_month_count.py:27-30): composite key + COUNT(*) — the
     * reference's one production-style job and our flagship entry query. */
-  private[graft] def q07(s: SparkSession, dir: String): DataFrame =
+  private def q07(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
       .groupBy(col("event_type"), date_format(col("ts"), "yyyy-MM").as("month"))
       .agg(count(lit(1)).as("n"))

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, AttributeSet, BoundReference, GenericInternalRow, JoinedRow, PredicateHelper, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
@@ -94,7 +94,7 @@ case class AsOfJoinNode(
 }
 
 /** Plans [[AsOfJoinNode]] → [[AsOfJoinExec]]; injected per session via
-  * [[NativeAsOfJoin.install]] (runtime) or [[graft.GraftExtensions]]
+  * [[Plans.install]] (runtime) or [[graft.GraftExtensions]]
   * (builder time). */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -428,14 +428,6 @@ object AsOfJoinRules extends Rule[LogicalPlan] with PredicateHelper {
 /** User-facing API for the native as-of join. */
 object NativeAsOfJoin {
 
-  /** Idempotently install [[AsOfJoinStrategy]] and [[AsOfJoinRules]] on
-    * a live session (the builder-time path is
-    * `.withExtensions(new GraftExtensions)`). */
-  def install(s: SparkSession): Unit = {
-    GraftPlanBridge.addStrategy(s, AsOfJoinStrategy)
-    GraftPlanBridge.addOptimization(s, AsOfJoinRules)
-  }
-
   /** Left as-of join via the native operator. Same contract as the
     * compositional [[graft.operators.AsOfJoin.leftAsOf]]: right unique
     * per (key, time) for determinism; output = left.* ++ right.* (right
@@ -461,7 +453,7 @@ object NativeAsOfJoin {
       forward: Boolean = false,
       tolerance: Option[Long] = None): DataFrame = {
     val s = left.sparkSession
-    install(s)
+    Plans.install(s)
     val lPlan = GraftPlanBridge.analyzed(left)
     val rPlan = GraftPlanBridge.analyzed(right)
     require(

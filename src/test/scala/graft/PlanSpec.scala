@@ -1,11 +1,17 @@
 package graft
 
+import scala.annotation.tailrec
+
 import org.apache.spark.sql.ExecutedPlans
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, LeftSemi}
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.execution.window.WindowGroupLimitExec
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan pins: the properties that make these queries scale —
@@ -403,7 +409,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("q287 scan-reported ordering elides the fact-side sort in the shard join") {
     import graft.operators.FileIO
-    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
@@ -690,24 +695,57 @@ class PlanSpec extends AnyFunSuite {
       "q234_stickiness", "q244_skew_forecast", "q257_sketch_rollup",
       "q256_array_set_algebra", "q262_quantile_rollup",
       "q263_sql_scripting_bisect")
-    // Streaming queries execute a full drain in fn() and return a
-    // collected local frame whose "plan" pins nothing; their batch-side
-    // shapes are pinned by their own specs — skip the expensive drains.
-    // q165 likewise: its eager localCheckpoints run real jobs during
-    // construction and leave only checkpointed-RDD scans in the final
-    // plan, so there is no executed-plan shape to pin here at all —
-    // FunnelSpec covers q165's results and stage latencies instead.
+    val allPairs = for ((q, plans, _) <- swept if !exempt(q);
+         plan <- plans
+         if plan.contains("CartesianProduct") || plan.contains("BroadcastNestedLoopJoin"))
+      yield s"$q plans an all-pairs join:\n$plan"
+    assert(allPairs.isEmpty, allPairs.mkString("\n"))
+  }
+
+  test("NO global sort of an input below minPartitionSize range-partitions") {
+    // graft.plans.SmallSortStrategy sorts such an input in one coalesced
+    // task; a range exchange here means a gate's sort missed it
+    val missed = for ((q, _, sorts) <- swept; sort <- sorts)
+      yield s"$q range-partitions a small sort:\n$sort"
+    assert(missed.isEmpty, missed.mkString("\n"))
+  }
+
+  /** Each gate's executed plans as strings, and its global sorts that
+    * read a range exchange over an input (the sort's logical child, as
+    * the planner estimated it) of at most minPartitionSize bytes. A gate
+    * that collects inside its call (CallScope.local) returns a local
+    * frame, so the plans its call executed count as well.
+    *
+    * Streaming queries execute a full drain in fn() and return a
+    * collected local frame whose "plan" pins nothing; their batch-side
+    * shapes are pinned by their own specs — skip the expensive drains.
+    * q165 likewise: its eager localCheckpoints run real jobs during
+    * construction and leave only checkpointed-RDD scans in the final
+    * plan, so there is no executed-plan shape to pin here at all —
+    * FunnelSpec covers q165's results and stage latencies instead. */
+  private lazy val swept: Seq[(String, Seq[String], Seq[String])] = {
     val skip = SparkEntry.all.map(_.name).filter(_.matches(
       "q70_.*|q71_.*|q78_.*|q84_.*|q87_.*|q100_.*|q106_.*|q109_.*|q118_.*|q125_.*" +
         "|q165_.*|q168_.*|q173_.*|q175_.*|q176_.*|q177_.*|q180_.*|q184_.*|q191_.*" +
         "|q240_.*|q254_.*|q258_.*")).toSet
-    // A gate that collects inside its call (CallScope.local) returns a
-    // local frame, so the plans its call executed are checked as well.
-    val allPairs = for (q <- SparkEntry.all.map(_.name) if !exempt(q) && !skip(q);
-         plan <- plansOf(q).map(_.toString)
-         if plan.contains("CartesianProduct") || plan.contains("BroadcastNestedLoopJoin"))
-      yield s"$q plans an all-pairs join:\n$plan"
-    assert(allPairs.isEmpty, allPairs.mkString("\n"))
+    val bound = SQLConf.get.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    @tailrec def rangeFed(p: SparkPlan): Boolean = p match {
+      case e: ShuffleExchangeLike => e.outputPartitioning.isInstanceOf[RangePartitioning]
+      case r: AQEShuffleReadExec => rangeFed(r.child)
+      case st: ShuffleQueryStageExec => rangeFed(st.plan)
+      case _ => false
+    }
+    def small(s: SortExec): Boolean = s.logicalLink.exists {
+      case l: Sort => l.child.stats.sizeInBytes <= bound
+      case _ => false
+    }
+    for (q <- SparkEntry.all.map(_.name) if !skip(q)) yield {
+      val plans = plansOf(q)
+      val sorts = plans.flatMap(AdaptiveNodes.collectWithSubqueries(_) {
+        case s: SortExec if s.global && rangeFed(s.child) && small(s) => s.toString
+      })
+      (q, plans.map(_.toString), sorts)
+    }
   }
 }
 

@@ -2,15 +2,11 @@ package graft.core
 
 import graft.{SessionConfs, TestSpark}
 import org.apache.hadoop.fs.RawLocalFileSystem
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import java.io.FileNotFoundException
 import java.net.URI
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
-import java.util.UUID
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import java.util.zip.GZIPOutputStream
 
 /** Ports of the reference's file-input tests (mapreduce_unittest.py:58-70)
@@ -53,33 +49,6 @@ class MapReduceFileSpec extends AnyFunSuite {
     assert(out === golden)
   }
 
-  /** The Spark jobs `body` starts from this thread. The listener bus
-    * delivers events in order, so once a marker job run after `body` has
-    * been seen, every job `body` started has been seen too. */
-  def jobsStartedBy[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"probe-${UUID.randomUUID}"
-    val jobs = new AtomicInteger
-    val marker = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(g) if g == s"$group-end" => marker.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "probe")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(marker.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   def headered(f: Path, xs: Seq[Int]): Path =
     Files.writeString(f, "header\n" + xs.mkString("", "\n", "\n"))
 
@@ -91,7 +60,7 @@ class MapReduceFileSpec extends AnyFunSuite {
     val f = headered(tmpDir().resolve("file_with_header"), 0 until 1000)
     SessionConfs.withConfs(spark, "spark.sql.files.maxPartitionBytes" -> "1024") {
       assert(spark.read.textFile(f.toString).rdd.getNumPartitions >= 2)
-      val (ds, jobs) = jobsStartedBy(MapReduce.runOnTextFile[Long, Long, (Long, Long)](
+      val (ds, jobs) = TestSpark.jobsStartedBy(MapReduce.runOnTextFile[Long, Long, (Long, Long)](
         spark, f.toString, mapLine, (k, vs) => (k, vs.max), ignoreFirstLine = true))
       assert(jobs === 0, "building the Dataset ran a Spark job")
       assert(maxByKey(ds) === golden)
@@ -130,7 +99,7 @@ class MapReduceFileSpec extends AnyFunSuite {
     (dir, files) => Files.writeString(dir.resolve("index.txt"), files.mkString("", "\n", "\n"))
 
   test("runOnFileIndex reads its index without a Spark job") {
-    val (ds, jobs) = jobsStartedBy(runIndex(indexedShards(plainIndex)))
+    val (ds, jobs) = TestSpark.jobsStartedBy(runIndex(indexedShards(plainIndex)))
     assert(jobs === 0, "building the Dataset ran a Spark job")
     assert(maxByKey(ds) === golden)
   }

@@ -186,6 +186,24 @@ class FileIOSpec extends AnyFunSuite {
       "every payload must retain its embedded newline")
   }
 
+  test("text round-trip: a renamed writer column fails loudly instead of reading null") {
+    import org.apache.spark.sql.functions._
+    val written = graft.sources.Tables.orders(spark, sf)
+      .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice").as("price"))
+    val out = java.nio.file.Files.createTempDirectory("graft_json_renamed").toString
+    written.write.mode("overwrite").json(out)
+    def revenue(schema: org.apache.spark.sql.types.StructType) =
+      spark.read.schema(schema).json(out)
+        .groupBy("o_orderpriority").agg(sum("o_totalprice")).collect()
+    // a read-back schema kept apart from its writer reads the renamed
+    // column as nulls, with no error
+    val literal = org.apache.spark.sql.types.StructType.fromDDL(
+      "o_orderkey BIGINT, o_orderpriority STRING, o_totalprice DOUBLE")
+    assert(revenue(literal).forall(_.isNullAt(1)))
+    // q101, q131 and q145 read back with their writer's schema: it fails
+    intercept[org.apache.spark.sql.AnalysisException](revenue(written.schema))
+  }
+
   test("q206 index mixes file: URI, plain path, and glob — all shards covered") {
     val got = SparkEntry.queries("q206_uri_glob_index")(spark, sf)
       .agg(org.apache.spark.sql.functions.sum("n")).collect().head.getLong(0)

@@ -425,8 +425,8 @@ class AsOfJoinNativeSpec extends AnyFunSuite {
   }
 
   test("install is idempotent; mismatched types and shared attributes are refused") {
-    NativeAsOfJoin.install(spark)
-    NativeAsOfJoin.install(spark)
+    Plans.install(spark)
+    Plans.install(spark)
     val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
     assert(exp.extraStrategies.count(_ eq AsOfJoinStrategy) === 1)
     val l = leftDf(Seq((1L, 1L, "a")))
