@@ -2,8 +2,15 @@ package graft
 
 import scala.util.control.NonFatal
 
-/** How the mains record a failure in their artifacts. */
+/** How the mains pick their queries and record a failure in their
+  * artifacts. */
 private[graft] object Report {
+
+  /** The optional selection `SPARK_GRAFT_ONLY` (comma-separated regexes
+    * over query names) for targeted runs: smoke-testing a touched gate,
+    * or the SCALING.md sf-step measurements. Unset, every query runs. */
+  private val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq.filter(_.nonEmpty))
+  def selected(name: String): Boolean = only.forall(_.exists(name.matches))
 
   /** The error class and the first line of its message (many
     * exceptions carry a null message; the class still names them). */
@@ -48,17 +55,12 @@ object Bench {
     // sf0.001, whose scratch root differs, so timed pass 1 paid each
     // layout write and the write became the reported median whenever one
     // read pass spiked (q86 0.137→0.866 s in r9 was exactly that).
-    // optional selection (comma-separated regexes over query names) for
-    // targeted runs: smoke-testing a touched gate, or the SCALING.md
-    // sf-step measurements — the driver never sets it, so the per-round
-    // bench is always the full set
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").toSeq.filter(_.nonEmpty))
-    def selected(name: String): Boolean =
-      only.forall(_.exists(name.matches))
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (selected(name))
-        try fn(spark, sfDir).count() catch { case NonFatal(_) => () }
+      if (Report.selected(name))
+        try fn(spark, sfDir).count()
+        catch { case NonFatal(e) =>
+          System.err.println(s"[bench] warm $name failed: ${Report.cause(e)}")
+        }
     }
     // free leaked cache/localCheckpoint blocks between queries (outside
     // the timers) so late queries aren't taxed by earlier ones' memory —
@@ -86,7 +88,7 @@ object Bench {
     val streamExtra = sys.env.getOrElse("SPARK_GRAFT_STREAM_EXTRA", "2").toInt
     val streamingNames = graft.streaming.StreamingQueries.queries.map(_.name).toSet
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => selected(name) }
+      .filter { case (name, _) => Report.selected(name) }
     def pass(only: String => Boolean) =
       named.filter { case (name, _) => only(name) }
         .map { case (name, fn) =>

@@ -7,12 +7,8 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = GraftSession("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // optional selection (comma-separated regexes) for targeted local
-    // re-verification; the driver never sets it → always the full dump
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").toSeq.filter(_.nonEmpty))
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.exists(name.matches)) }
+      .filter { case (name, _) => Report.selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.{CallScope, Q, QueryPack}
 import graft.SessionConfs.withConfs
-import graft.sources.Tables
+import graft.sources.{LocalFs, Tables}
 import graft.sources.Tables.nanosAsLong
 import graft.streaming.Replay.{drain, eventsStream, run}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -1690,13 +1690,13 @@ object StreamingQueries extends QueryPack {
       .toDF("doc_id", "band_idx", "band_val")
     val schema = new org.apache.spark.sql.types.StructType()
       .add("doc_id", "long").add("text", "string")
-    // read-back schemas of the per-batch outputs: each writer projects
-    // through its schema (`to`), so a renamed column fails the write
-    // loudly instead of reading back as silent nulls
-    val idxShSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, sh ARRAY<STRING>")
-    val resSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, dup_of BIGINT, admitted BOOLEAN")
+    // each per-batch output reads back with its writer frame's own
+    // schema, so a column renamed there fails the reader's references
+    // loudly instead of reading back as silent nulls. The result frame
+    // exists only inside a batch: the driver-side batch function hands
+    // its schema out for the read after the stream
+    val resSchema = new java.util.concurrent.atomic.AtomicReference[
+      org.apache.spark.sql.types.StructType]
     // the growing band index: a bucketed table (join-key buckets, one
     // file per bucket per batch partition) created EMPTY before the
     // stream starts so every batch takes the same insert path — plain
@@ -1756,7 +1756,7 @@ object StreamingQueries extends QueryPack {
           // footer-inference job every micro-batch for a schema the gate
           // itself wrote one line above; bid arrives via partition
           // discovery and is projected away
-          (if (haveIdx) s.read.schema(idxShSchema)
+          (if (haveIdx) s.read.schema(sh.schema)
             .parquet(idxShPath).select("doc_id", "sh")
            else sh.limit(0))
             .toDF("prev_id", "sh_p")
@@ -1776,15 +1776,15 @@ object StreamingQueries extends QueryPack {
         // every write below is an idempotent per-batch OVERWRITE of the
         // bid=batchId slice (foreachBatch is at-least-once; a plain
         // append would double-write on replay)
-        sh.select("doc_id")
+        val res = sh.select("doc_id")
           .join(dupOf, Seq("doc_id"), "left")
           .select(col("doc_id"), col("dup_of"),
             col("dup_of").isNull.as("admitted"))
-          .to(resSchema)
-          .write.mode("overwrite").parquet(s"$resPath/bid=$batchId")
+        resSchema.set(res.schema)
+        res.write.mode("overwrite").parquet(s"$resPath/bid=$batchId")
         // index extends with EVERY screened doc (the policy compares
         // against all smaller ids, admitted or not)
-        sh.to(idxShSchema).write.mode("overwrite").parquet(s"$idxShPath/bid=$batchId")
+        sh.write.mode("overwrite").parquet(s"$idxShPath/bid=$batchId")
         // session conf, not a writer option: insertInto's V1 command
         // reads partitionOverwriteMode from SQLConf only — a writer
         // option is silently ignored and STATIC overwrite would wipe
@@ -1801,7 +1801,7 @@ object StreamingQueries extends QueryPack {
       }
       .start()
     run(query, "q261")
-    s.read.schema(resSchema).parquet(resPath)
+    s.read.schema(resSchema.get).parquet(resPath)
       .select("doc_id", "dup_of", "admitted").orderBy("doc_id")
   }
 
@@ -1817,8 +1817,11 @@ object StreamingQueries extends QueryPack {
     * Janino) — the gates' warm floor was checkpoint file I/O, not
     * codegen: Hadoop's local filesystem spawned a `chmod` or `readlink`
     * per checkpoint file, 152 processes per q70 call (SCALING.md). The
-    * last conf below routes them through [[LocalCheckpointFileManager]],
-    * which spawns none. Codegen stays off because the direction is
+    * `fs.AbstractFileSystem.file.impl` conf below puts Spark's own
+    * checkpoint manager on [[graft.sources.LocalFs]], which spawns none;
+    * a scoped conf reaches it because `FileContext` makes a fresh
+    * filesystem per manager, so this holds in any caller's session, not
+    * only in `GraftSession`. Codegen stays off because the direction is
     * strictly right at this batch size and it compounds across 22
     * gates × 3 bench passes.
     * Scoped via `withConfs` around the gate body (streaming queries
@@ -1840,8 +1843,7 @@ object StreamingQueries extends QueryPack {
     // Production sizing is state volume / partition, never core
     // count — same batch-size-honesty argument as the codegen pair.
     "spark.sql.shuffle.partitions" -> "4",
-    "spark.sql.streaming.checkpointFileManagerClass" ->
-      classOf[LocalCheckpointFileManager].getName,
+    LocalFs.fileContext,
     // a TIMESTAMP(NANOS) events generation reads only with this conf
     // set, at analysis AND execution (see Tables.events); the drain
     // runs inside this scope, so eventsStream and the events reads of

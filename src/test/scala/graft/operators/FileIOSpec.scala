@@ -204,6 +204,19 @@ class FileIOSpec extends AnyFunSuite {
     intercept[org.apache.spark.sql.AnalysisException](revenue(written.schema))
   }
 
+  test("a one-file parquet write through the session's file: filesystem starts no chmod") {
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI("file:///"), spark.sparkContext.hadoopConfiguration)
+    assert(fs.isInstanceOf[graft.sources.LocalFs.Checksummed],
+      s"file: resolves to ${fs.getClass.getName}")
+    val out = java.nio.file.Files.createTempDirectory("graft_write_spawns").resolve("t").toString
+    // a Hadoop-committer write creates 5 dirs and 4 files (with `.crc`s)
+    val chmods = graft.TestSpark.programsStartedDuring(
+      spark.range(10).coalesce(1).write.parquet(out)).filter(_ == "chmod")
+    assert(chmods.isEmpty, s"${chmods.size} chmod spawns")
+    assert(spark.read.parquet(out).count() === 10)
+  }
+
   test("q206 index mixes file: URI, plain path, and glob — all shards covered") {
     val got = SparkEntry.queries("q206_uri_glob_index")(spark, sf)
       .agg(org.apache.spark.sql.functions.sum("n")).collect().head.getLong(0)

@@ -3,28 +3,37 @@ package graft.streaming
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path => NioPath}
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
-/** The process-free checkpoint manager: atomic publish semantics on the
-  * file level, exactly-once recovery of a stateful query written through
-  * it, and a guard that a streaming gate starts no `chmod`/`readlink`. */
+import graft.TestSpark.programsStartedDuring
+import graft.sources.LocalFs
+
+/** Local checkpoint files under Spark's default checkpoint file manager
+  * on graft's `file:` filesystem ([[LocalFs]], installed as the streaming
+  * gates install it): atomic publish semantics on the file level,
+  * exactly-once recovery of a stateful query, and a guard that a warm
+  * streaming gate starts no `chmod`/`readlink`. */
 class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   lazy val spark = graft.TestSpark.spark
   val sf = "/root/testdata/sf0.001"
 
   private def freshDir(tag: String): NioPath = Files.createTempDirectory(tag)
 
-  private def manager(dir: NioPath) =
-    new LocalCheckpointFileManager(new Path(dir.toUri), new Configuration())
+  private def manager(dir: NioPath) = {
+    // the session's Hadoop conf, under the streaming gates' conf
+    val conf = spark.sessionState.newHadoopConf()
+    conf.set(LocalFs.fileContext._1, LocalFs.fileContext._2)
+    new FileContextBasedCheckpointFileManager(new Path(dir.toUri), conf)
+  }
 
-  private def write(m: LocalCheckpointFileManager, f: NioPath, text: String,
+  private def write(m: FileContextBasedCheckpointFileManager, f: NioPath, text: String,
       overwrite: Boolean): Unit = {
     val out = m.createAtomic(new Path(f.toUri), overwrite)
     out.write(text.getBytes(UTF_8))
@@ -36,29 +45,37 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   private def names(dir: NioPath): Set[String] =
     Using.resource(Files.list(dir))(_.iterator().asScala.map(_.getFileName.toString).toSet)
 
+  private def chmodOrReadlink(programs: Seq[String]): Seq[String] =
+    programs.filter(p => p == "chmod" || p == "readlink")
+
   test("createAtomic without overwrite onto an existing file throws and keeps the old bytes") {
     val dir = freshDir("lcfm_excl")
     val m = manager(dir)
     val f = dir.resolve("0")
-    write(m, f, "first", overwrite = false)
+    // a publish through the manager goes through LocalFs: no process
+    val spawned = chmodOrReadlink(programsStartedDuring(write(m, f, "first", overwrite = false)))
+    assert(spawned.isEmpty, s"publish spawned: ${spawned.mkString("; ")}")
     intercept[FileAlreadyExistsException](write(m, f, "second", overwrite = false))
+    // the old bytes, still under their own checksum sidecar (Spark's
+    // manager leaves the losing writer's hidden temp file in place)
     assert(read(f) === "first")
-    assert(names(dir) === Set("0"), "the losing writer left a temp file behind")
+    assert(m.open(new Path(f.toUri)).readAllBytes().sameElements("first".getBytes(UTF_8)))
+    assert(names(dir).filterNot(_.contains(".tmp")) === Set("0", ".0.crc"))
   }
 
   test("createAtomic with overwrite replaces the file and its stale Hadoop .crc") {
     val dir = freshDir("lcfm_over")
     val m = manager(dir)
     val f = dir.resolve("1.delta")
-    // written by Hadoop's LocalFileSystem, as Spark's default manager does:
-    // the file gets a `.1.delta.crc` sidecar of the old bytes
-    val old = org.apache.hadoop.fs.FileSystem.getLocal(new Configuration())
+    // written through the session's FileSystem: the file gets a
+    // `.1.delta.crc` sidecar of the old bytes
+    val old = org.apache.hadoop.fs.FileSystem.get(f.toUri, spark.sparkContext.hadoopConfiguration)
       .create(new Path(f.toUri))
     old.write("old bytes".getBytes(UTF_8))
     old.close()
     assert(names(dir).contains(".1.delta.crc"))
     write(m, f, "new", overwrite = true)
-    assert(names(dir) === Set("1.delta"))
+    assert(names(dir) === Set("1.delta", ".1.delta.crc"))
     // the checksummed read path would reject the new bytes under the old sums
     assert(m.open(new Path(f.toUri)).readAllBytes().sameElements("new".getBytes(UTF_8)))
   }
@@ -67,12 +84,12 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     val dir = freshDir("lcfm_tmp")
     val m = manager(dir)
     write(m, dir.resolve("done"), "x", overwrite = false)
-    assert(names(dir) === Set("done"))
+    assert(names(dir) === Set("done", ".done.crc"))
     val out = m.createAtomic(new Path(dir.resolve("cancelled").toUri), overwriteIfPossible = true)
     out.write("partial".getBytes(UTF_8))
-    assert(names(dir).size === 2, "the open stream should write a temp sibling")
+    assert(names(dir).size > 2, "the open stream should write a temp sibling")
     out.cancel()
-    assert(names(dir) === Set("done"))
+    assert(names(dir) === Set("done", ".done.crc"))
   }
 
   test("a streaming aggregation under the manager resumes exactly-once after its latest commit is dropped") {
@@ -87,9 +104,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     def drain(): Unit = {
       val schema = new org.apache.spark.sql.types.StructType()
         .add("id", "long").add("grp", "string")
-      val q = graft.SessionConfs.withConfs(spark,
-          "spark.sql.streaming.checkpointFileManagerClass" ->
-            classOf[LocalCheckpointFileManager].getName) {
+      val q = graft.SessionConfs.withConfs(spark, LocalFs.fileContext) {
         spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1") // one epoch per wave
           .parquet(src)
@@ -106,18 +121,18 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     wave(0, 30); wave(30, 60)
     drain()
     assert(seen.asScala.map(_._1).toSeq === Seq(0L, 1L))
-    // the commit log went through the manager: no Hadoop `.N.crc` sidecars
     val commits = new java.io.File(cp, "commits")
-    assert(commits.list().sorted.toSeq === Seq("0", "1"))
+    assert(commits.list().toSet === Set("0", "1", ".0.crc", ".1.crc"))
     // Spark's checksum layer still wraps every state-store file: its
-    // sidecar is `<file>.crc` (Hadoop's would be the hidden `.<file>.crc`)
+    // sidecar is `<file>.crc` (Hadoop's is the hidden `.<file>.crc`)
     val stateFiles = Using.resource(Files.walk(java.nio.file.Paths.get(cp, "state")))(
       _.iterator().asScala.filter(Files.isRegularFile(_)).map(_.getFileName.toString).toList)
     val deltas = stateFiles.filter(_.endsWith(".delta"))
     assert(deltas.nonEmpty && deltas.forall(d => stateFiles.contains(d + ".crc")),
       s"state files without checksum sidecars: ${stateFiles.sorted.mkString(",")}")
-    // "sink committed, commit log did not": the restart must replay batch 1
-    assert(new java.io.File(commits, "1").delete())
+    // "sink committed, commit log did not": the restart must replay
+    // batch 1. A commit that never landed has no Hadoop sidecar either
+    assert(new java.io.File(commits, "1").delete() && new java.io.File(commits, ".1.crc").delete())
     seen.clear()
     wave(60, 90)
     drain()
@@ -128,31 +143,10 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     assert(seen.asScala.last._2 === expected, "the replayed batch was counted twice")
   }
 
-  /** The programs started while `body` runs, as a JFR recording of
-    * `jdk.ProcessStart` sees them (by file name). A positive control
-    * proves the recording sees a process this thread starts. */
-  private def programsStartedDuring(body: => Unit): Seq[String] = {
-    val rec = new jdk.jfr.Recording()
-    rec.enable("jdk.ProcessStart")
-    rec.start()
-    val dump = Files.createTempFile("lcfm_processes", ".jfr")
-    val commands = try {
-      body
-      new ProcessBuilder("true").start().waitFor()
-      rec.stop()
-      rec.dump(dump)
-      jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
-        .map(_.getString("command"))
-    } finally { rec.close(); Files.deleteIfExists(dump) }
-    val programs = commands.map(_.trim.split("\\s+").head.split('/').last)
-    assert(programs.contains("true"), s"recording saw no process start: $commands")
-    programs.filter(_ != "true")
-  }
-
   test("a streaming gate drain starts no chmod or readlink process") {
     val gate = graft.SparkEntry.queries("q70_stream_month_count")
-    val spawned = programsStartedDuring(assert(gate(spark, sf).count() > 0))
-      .filter(p => p == "chmod" || p == "readlink")
+    assert(gate(spark, sf).count() > 0)
+    val spawned = chmodOrReadlink(programsStartedDuring(assert(gate(spark, sf).count() > 0)))
     assert(spawned.isEmpty, s"${spawned.size} checkpoint spawns: ${spawned.mkString("; ")}")
   }
 
@@ -161,8 +155,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     // write jobs); a later call only copies library files into its source
     val gate = graft.SparkEntry.queries("q222_stream_late_drop")
     assert(gate(spark, sf).count() > 0)
-    val spawned = programsStartedDuring(assert(gate(spark, sf).count() > 0))
-      .filter(p => p == "chmod" || p == "readlink")
+    val spawned = chmodOrReadlink(programsStartedDuring(assert(gate(spark, sf).count() > 0)))
     assert(spawned.isEmpty, s"${spawned.size} publish spawns: ${spawned.mkString("; ")}")
   }
 }
