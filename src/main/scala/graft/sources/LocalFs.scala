@@ -1,11 +1,13 @@
 package graft.sources
 
 import java.net.URI
-import java.nio.file.Files
+import java.nio.file.{Files, Path => NioPath}
+import java.nio.file.LinkOption.NOFOLLOW_LINKS
+import java.nio.file.StandardCopyOption.ATOMIC_MOVE
 import java.nio.file.attribute.{PosixFileAttributes, PosixFilePermissions}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSLinkResolver, FileStatus, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSLinkResolver, FileAlreadyExistsException, FileStatus, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -15,7 +17,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   * `readlink` in `getFileLinkStatus` (every `FileContext.rename`), about
   * 1.6 ms each; [[Raw]] makes both calls through `java.nio`. `.crc`
   * sidecars, checksum-verified reads and Spark's checkpoint protocol
-  * stay as they are.
+  * stay as they are; [[Context]] only makes a publish exclusive.
   *
   * [[fileSystem]] installs it for the `FileSystem` API. Hadoop caches one
   * `file:` `FileSystem` per process and user, so it must be set before
@@ -76,13 +78,46 @@ object LocalFs {
   class Checksummed extends LocalFileSystem(new Raw)
 
   /** The `FileContext` API entry: Hadoop's `ChecksumFs` over [[Raw]], as
-    * Hadoop's own `LocalFs` is over its `RawLocalFs`. */
-  class Context(uri: URI, conf: Configuration)
-      extends ChecksumFs(new DelegateToFileSystem(uri, new Raw, conf, "file", false) {
+    * Hadoop's own `LocalFs` is over its `RawLocalFs`, except for renaming
+    * a file, which is how Spark's checkpoint manager publishes one.
+    * Hadoop checks that the target is absent, then renames over it, so
+    * two racing publishes can both win. It then renames the sidecar
+    * without overwrite, which fails after the file has landed when a file
+    * deleted alone left its sidecar at the target. Here:
+    *  - without overwrite, a hard link (atomic and exclusive), then an
+    *    unlink. The loser throws `FileAlreadyExistsException`, and its
+    *    file and sidecar are deleted: Spark's stream abandons them;
+    *  - with overwrite, one atomic move;
+    *  - then the sidecar moves over any stale one, or a stale one goes. */
+  class Context(uri: URI, conf: Configuration, raw: Raw)
+      extends ChecksumFs(new DelegateToFileSystem(uri, raw, conf, "file", false) {
         // as RawLocalFs: the OS judges names, and the defaults are local
         override def isValidName(src: String): Boolean = true
         override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults()
-      })
+      }) {
+    def this(uri: URI, conf: Configuration) = this(uri, conf, new Raw)
+
+    override def renameInternal(src: Path, dst: Path, overwrite: Boolean): Unit = {
+      val (from, to) = (nio(src), nio(dst))
+      if (!Files.isRegularFile(from, NOFOLLOW_LINKS)) super.renameInternal(src, dst, overwrite)
+      else {
+        if (overwrite) Files.move(from, to, ATOMIC_MOVE)
+        else {
+          try Files.createLink(to, from)
+          catch { case _: java.nio.file.FileAlreadyExistsException =>
+            if (!Files.isSameFile(from, to)) delete(src, false)
+            throw new FileAlreadyExistsException(s"Rename destination $dst already exists.")
+          }
+          Files.delete(from)
+        }
+        val (fromSums, toSums) = (nio(getChecksumFile(src)), nio(getChecksumFile(dst)))
+        if (Files.exists(fromSums)) Files.move(fromSums, toSums, ATOMIC_MOVE)
+        else Files.deleteIfExists(toSums)
+      }
+    }
+
+    private def nio(p: Path): NioPath = raw.pathToFile(p).toPath
+  }
 
   val fileSystem: (String, String) = "spark.hadoop.fs.file.impl" -> classOf[Checksummed].getName
   val fileContext: (String, String) = "fs.AbstractFileSystem.file.impl" -> classOf[Context].getName

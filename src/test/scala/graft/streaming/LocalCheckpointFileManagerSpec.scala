@@ -56,11 +56,47 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     val spawned = chmodOrReadlink(programsStartedDuring(write(m, f, "first", overwrite = false)))
     assert(spawned.isEmpty, s"publish spawned: ${spawned.mkString("; ")}")
     intercept[FileAlreadyExistsException](write(m, f, "second", overwrite = false))
-    // the old bytes, still under their own checksum sidecar (Spark's
-    // manager leaves the losing writer's hidden temp file in place)
+    // the old bytes, still under their own checksum sidecar
     assert(read(f) === "first")
     assert(m.open(new Path(f.toUri)).readAllBytes().sameElements("first".getBytes(UTF_8)))
-    assert(names(dir).filterNot(_.contains(".tmp")) === Set("0", ".0.crc"))
+    assert(names(dir) === Set("0", ".0.crc"), "the losing writer left a temp file behind")
+  }
+
+  test("of two racing publishes without overwrite exactly one wins") {
+    val dir = freshDir("lcfm_race")
+    val m = manager(dir)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try for (round <- 0 until 50) {
+      val f = dir.resolve(round.toString)
+      // both streams are written before either publishes
+      val written = new java.util.concurrent.CyclicBarrier(2)
+      val publishes = Seq("a", "b").map { text =>
+        pool.submit { () =>
+          val out = m.createAtomic(new Path(f.toUri), overwriteIfPossible = false)
+          out.write(text.getBytes(UTF_8))
+          written.await()
+          scala.util.Try(out.close()).map(_ => text)
+        }
+      }.map(_.get())
+      val won = publishes.flatMap(_.toOption)
+      assert(won.size === 1, s"round $round: ${publishes.mkString(", ")}")
+      assert(publishes.flatMap(_.failed.toOption).forall(_.isInstanceOf[FileAlreadyExistsException]))
+      assert(read(f) === won.head)
+    } finally pool.shutdown()
+    assert(names(dir) === (0 until 50).flatMap(r => Seq(s"$r", s".$r.crc")).toSet)
+  }
+
+  test("a publish without overwrite over a deleted file's stale .crc reads back the new bytes") {
+    val dir = freshDir("lcfm_stale")
+    val m = manager(dir)
+    val f = dir.resolve("1")
+    write(m, f, "old bytes", overwrite = false)
+    Files.delete(f)
+    assert(names(dir) === Set(".1.crc"))
+    write(m, f, "new", overwrite = false)
+    assert(names(dir) === Set("1", ".1.crc"))
+    // the checksummed read path would reject the new bytes under the old sums
+    assert(m.open(new Path(f.toUri)).readAllBytes().sameElements("new".getBytes(UTF_8)))
   }
 
   test("createAtomic with overwrite replaces the file and its stale Hadoop .crc") {
@@ -130,9 +166,8 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     val deltas = stateFiles.filter(_.endsWith(".delta"))
     assert(deltas.nonEmpty && deltas.forall(d => stateFiles.contains(d + ".crc")),
       s"state files without checksum sidecars: ${stateFiles.sorted.mkString(",")}")
-    // "sink committed, commit log did not": the restart must replay
-    // batch 1. A commit that never landed has no Hadoop sidecar either
-    assert(new java.io.File(commits, "1").delete() && new java.io.File(commits, ".1.crc").delete())
+    // "sink committed, commit log did not": the restart must replay batch 1
+    assert(new java.io.File(commits, "1").delete())
     seen.clear()
     wave(60, 90)
     drain()
